@@ -1,10 +1,15 @@
 package graft
 
 import java.lang.management.ManagementFactory
+import java.util.Locale
 import java.util.concurrent.atomic.LongAdder
+import scala.collection.immutable.VectorMap
+import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import graft.queries.Registry
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, expr, lit, pmod}
+import graft.BenchUtil.withTempDir
+import graft.queries.{Registry, TextQueries}
 
 /** Spark task-metrics accumulator: sums executor run/CPU/GC time and
   * shuffle bytes across all tasks. The CPU-vs-wall split is the bench's
@@ -45,24 +50,100 @@ object TaskMetricsListener {
   }
 }
 
-/** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Methodology (contention-robust by design):
+/** The one benchmark entry point: times the headline queries and the
+  * pipeline, streaming, curation and index sections on SPARK_GRAFT_SF_DIR
+  * and prints one JSON record, then a compact adjudication line.
+  *
+  * Usage: `graft.Bench [--only name,...]`. Without `--only` every default
+  * section runs and the record is also written to GRAFT_BENCH_OUT (default
+  * `BENCH_LOCAL.json` in the working directory). `--only` takes section
+  * names and registry query names (headline or not), runs exactly those by
+  * the same method, and only prints.
+  *
+  * The run is an ordered table of [[Section]]s; one runner times them,
+  * accounts for failures and renders the record, so a section cannot crash
+  * (or fail its gate) without being named in `failed_sections`. Methodology
+  * (contention-robust by design):
   *
   *  - each query is forced end-to-end through the noop sink (full plan
   *    execution — a bare count() could collapse to metadata);
-  *  - one untimed warmup run per query pays file-listing + codegen + JIT;
-  *  - then THREE timed runs, median reported (min-of-2 hid one slow run but
-  *    not a contended host; the median plus the run list exposes spread);
-  *  - every run also reports Spark-side task metrics (executor run/CPU/GC
+  *  - queries: one untimed warmup run (file listing + codegen + JIT), then
+  *    THREE timed runs, median reported (the median plus the run list
+  *    exposes spread); sections: one warm pass plus one timed pass;
+  *  - every query also reports Spark-side task metrics (executor run/CPU/GC
   *    seconds, shuffle bytes) and the OS load average, so a wall-clock
   *    blowup on a busy host is attributable: cpu_sec stable + load high ⇒
-  *    environment, cpu_sec grown ⇒ real regression.
+  *    environment, cpu_sec grown ⇒ real regression;
+  *  - sections run before the query loop, pipeline first: a heap full of
+  *    query-stage leftovers was observed to degrade the write-heavy
+  *    pipeline measurement several-fold.
   */
 object Bench {
 
-  final case class QStats(wall: Seq[Double], cpuSec: Double, gcSec: Double,
-      runSec: Double, shufMB: Double, loadAvg: Double) {
-    def median: Double = wall.sorted.apply(wall.size / 2)
+  /** A number rendered with an explicit format (`%s` = the full Double). */
+  final case class Fmt(v: Double, pattern: String)
+  def raw(v: Double): Fmt = Fmt(v, "%s")
+
+  /** num / den at two decimals, -1 when either side is missing or failed. */
+  def ratio(num: Double, den: Double): Any =
+    if (num >= 0 && den > 0) Fmt(num / den, "%.2f") else -1
+
+  /** One entry of the run table: `name` is what `--only` selects and what
+    * `failed_sections` reports; `fields` are the record fields the thunk
+    * returns values for, in order (a dotted name nests one level, e.g.
+    * `streaming.rows`); `gate` must hold over those values or the section
+    * counts as failed (its values are kept). An `onDemand` section runs only
+    * when `--only` names it. */
+  final case class Section(name: String, fields: Seq[String],
+      gate: (String => Double) => Boolean = _ => true,
+      onDemand: Boolean = false, isQuery: Boolean = false)(val run: Ctx => Seq[Any])
+
+  /** What a section thunk sees: the session, the corpus, the task-metrics
+    * listener, and every value recorded so far (for cross-section ratios). */
+  final class Ctx(val spark: SparkSession, val sfDir: String,
+      val listener: TaskMetricsListener, val loadStart: Double) {
+    private[Bench] val values = mutable.LinkedHashMap[String, Any]()
+    /** A recorded value as a number; -1 when absent. */
+    def num(field: String): Double = values.get(field).fold(-1.0)(Bench.num)
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    def runOnce(query: String): Double =
+      time(noop(Registry.byName(query).build(spark, sfDir)))
+  }
+
+  final case class Outcome(values: VectorMap[String, Any],
+      failedQueries: Seq[String], failedSections: Seq[String]) {
+    def failedCount: Int = failedQueries.size + failedSections.size
+    def exitStatus: Int = if (failedCount > 0) 1 else 0
+    /** Sum of the query medians; a failed query poisons it (-1, never a
+      * smaller sum that would read as a win). */
+    def total: Double =
+      if (failedQueries.nonEmpty) -1.0
+      else values.collect { case (k, v) if k.startsWith("queries.") => num(v) }.sum
+  }
+
+  private def num(v: Any): Double = v match {
+    case Fmt(d, _) => d
+    case d: Double => d
+    case n: Int => n.toDouble
+    case n: Long => n.toDouble
+    case b: Boolean => if (b) 1.0 else 0.0
+    case _ => -1.0
+  }
+
+  private def timed[T](body: => T): (Double, T) = {
+    val t0 = System.nanoTime()
+    val r = body
+    ((System.nanoTime() - t0) / 1e9, r)
+  }
+  private def time(body: => Any): Double = timed(body)._1
+  /** The section method: one warm pass, then the timed one. */
+  private def warmTimed(body: => Any): Double = { time(body); time(body) }
+  /** One warm pass, then three timed ones; walls + their task metrics. */
+  private def warmMedian3(c: Ctx)(body: => Any): (Seq[Double], TaskMetricsListener.Snap) = {
+    time(body)
+    val s0 = c.listener.settled()
+    val walls = Seq.fill(3)(time(body))
+    (walls, c.listener.settled() - s0)
   }
 
   private def loadAvg: Double =
@@ -76,840 +157,602 @@ object Bench {
     import scala.jdk.CollectionConverters._
     val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("CodeCache"))
-    val used = pools.map(_.getUsage.getUsed).sum / 1e6
-    val max = pools.map(_.getUsage.getMax).sum / 1e6
-    (used, max)
-  }
-
-  /** A swallowed failure poisons round-over-round comparison silently (a
-    * crashed suite LOWERS the reported total); every catch below routes
-    * through here so the sentinel is always paired with a diagnosable
-    * stack trace and a loud end-of-run failure record + nonzero exit. */
-  private def failed(section: String, e: Throwable): Unit = {
-    System.err.println(s"[bench] SUITE FAILED: $section — $e")
-    e.printStackTrace()
+    (pools.map(_.getUsage.getUsed).sum / 1e6, pools.map(_.getUsage.getMax).sum / 1e6)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val only = args.toList match {
+      case Nil => None
+      case "--only" :: names :: Nil =>
+        Some(names.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct)
+      case _ => sys.error("usage: graft.Bench [--only name,...]")
+    }
+    val problems = tableErrors(sections, Layout)
+    require(problems.isEmpty, problems.mkString("bench table: ", "; ", ""))
+    val table = select(only)
     val spark = GraftSession.localFromEnv("graft-bench")
     val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    val loadStart = loadAvg
+    val o = execute(table, new Ctx(spark, sfDir, listener, loadAvg))
+    val record = render(Layout, o, sfDir)
+    // Persist the full record where a repo snapshot finds it even if stdout
+    // capture truncates; GRAFT_BENCH_OUT redirects (an sf1 run must not
+    // clobber the sf0.1 record). `--only` runs never write it.
+    if (only.isEmpty) {
+      val out = sys.env.getOrElse("GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+      try java.nio.file.Files.write(java.nio.file.Paths.get(out), (record + "\n").getBytes("UTF-8"))
+      catch { case e: Throwable => System.err.println(s"[bench] could not write $out: $e") }
+    }
+    println(record)
+    println(render(CompactLayout, o, sfDir))
+    spark.stop()
+    if (o.exitStatus != 0) {
+      System.err.println(s"[bench] ${o.failedCount} section(s) failed: " +
+        (o.failedQueries ++ o.failedSections).mkString(", "))
+      sys.exit(o.exitStatus)
+    }
+  }
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      Registry.byName(name).build(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+  /** The per-query maps, in record order (each keyed by query name). */
+  private val QueryFields: Seq[String] = Seq("query_runs", "query_gc_sec_3runs",
+    "query_executor_run_sec_3runs", "query_shuffle_rw_mb_3runs", "query_load_avg",
+    "query_cpu_sec_3runs", "queries")
+
+  /** A registry query: one warm-up, median of three timed runs; cpu/gc/run
+    * seconds are summed over the three (per-run ≈ /3). */
+  private def querySection(name: String): Section =
+    Section(name, QueryFields.map(f => s"$f.$name"), isQuery = true) { c =>
+      c.runOnce(name) // warmup: file listing, codegen, JIT — outside timing
+      val la = loadAvg
+      val s0 = c.listener.settled()
+      val walls = Seq.fill(3)(c.runOnce(name))
+      val d = c.listener.settled() - s0
+      Seq(walls.map(raw), d.gcMs / 1e3, d.runMs / 1e3,
+        Fmt((d.shufReadB + d.shufWriteB) / 1e6, "%.1f"), Fmt(la, "%.1f"),
+        d.cpuNs / 1e9, raw(BenchUtil.median(walls)))
     }
 
-    // Pipeline rates vs BASELINE.md targets (ingest throughput; one
-    // incremental dedupe well inside the 5-min schedule). Measured before
-    // the query loop: a heap full of query-stage leftovers was observed to
-    // degrade the write-heavy pipeline measurement several-fold.
-    val rates = try PipelineBench.run(spark, sfDir, listener)
-    catch { case e: Throwable => failed("pipeline", e); PipelineBench.FailedRates }
+  /** A registry entry benched OUTSIDE the headline set (and its total):
+    * heavy curation ops whose build runs distributed jobs get one warm and
+    * one timed pass, recorded as a standalone field. */
+  private def extra(field: String, query: String): Section =
+    Section(field.stripSuffix("_sec"), Seq(field))(c => Seq(warmTimed(c.runOnce(query))))
 
+  /** r9 exact-substring dedup (SpanDedup): full span surgery under the
+    * PRODUCTION xxhash64 family. Stride 8 is the 100 TB operating point
+    * (content-defined anchors — the ~8× gram-frame cut); stride 1 is the
+    * exact kernel for reference. The registry twins (t_dup_spans /
+    * t_substring_dedup) pin the portable-md5 family for the oracle — these
+    * fields track the kernel users run, per the t_simhash precedent. */
+  private def spanDedup(name: String, stride: Int): Section =
+    Section(name, Seq(s"${name}_sec")) { c =>
+      def once(): Double = {
+        val docs = Tables.load(c.spark, c.sfDir, "documents")
+        time(c.noop(graft.dedup.SpanDedup.removeDuplicatedSpans(docs, "doc_id", "text",
+          k = 30, anchorStride = stride, portable = false)))
+      }
+      once()
+      Seq(once())
+    }
+
+  private val work: Seq[Section] = Seq(
+    // Pipeline rates vs BASELINE.md targets (ingest throughput; one
+    // incremental dedupe well inside the 5-min schedule).
+    Section("pipeline", Seq("ingest_rows", "ingest_cpu_sec", "dedupe_cpu_sec",
+        "dedupe_duplicates_removed", "ingest_rows_per_sec", "dedupe_incremental_sec",
+        "dedupe_windowed_sec")) { c =>
+      val r = PipelineBench.run(c.spark, c.sfDir, c.listener)
+      Seq(r.ingestRows, r.ingestCpuSec, r.dedupeCpuSec, r.dedupeDuplicates,
+        Fmt(r.ingestRowsPerSec, "%.0f"), raw(r.dedupeSec), r.windowedDedupeSec)
+    },
     // Adversarial-skew corpus (hot key ×10⁴, one day carrying 50% of rows),
     // measured by the same machinery — the uniform-vs-skew ratio is the
     // robustness number.
-    val skew = try GenSkew.bench(spark, sfDir, listener)
-    catch { case e: Throwable => failed("skew", e); PipelineBench.FailedRates }
-
+    Section("skew", Seq("skew_ingest_rows_per_sec", "skew_dedupe_sec",
+        "skew_dupes_removed", "skew_ingest_slowdown", "skew_dedupe_slowdown")) { c =>
+      val r = GenSkew.bench(c.spark, c.sfDir, c.listener)
+      Seq(Fmt(r.ingestRowsPerSec, "%.0f"), raw(r.dedupeSec), r.dedupeDuplicates,
+        ratio(c.num("ingest_rows_per_sec"), r.ingestRowsPerSec),
+        ratio(r.dedupeSec, c.num("dedupe_incremental_sec")))
+    },
     // Hot JOIN key (one customer = half of orders): skew-vs-uniform wall for
     // the join-chain and ranking-window headline shapes.
-    val joinSkew = try GenSkew.benchJoinSkew(spark, sfDir)
-    catch { case e: Throwable => failed("join_skew", e); GenSkew.JoinSkewFailed }
-
+    Section("join_skew", Seq("skew_join_q3_sec", "skew_join_q3_slowdown",
+        "skew_join_wrank_sec", "skew_join_wrank_slowdown")) { c =>
+      val j = GenSkew.benchJoinSkew(c.spark, c.sfDir)
+      Seq(j.q3Skew, ratio(j.q3Skew, j.q3Uniform), j.wrankSkew, ratio(j.wrankSkew, j.wrankUniform))
+    },
     // The engine as deployed: continuous-trigger streaming ingest with the
-    // dedupe job firing concurrently (EtlApp's shape).
-    val stream = try StreamBench.run(spark, sfDir)
-    catch { case e: Throwable => failed("streaming", e); StreamBench.Empty }
-
-    def ratio(num: Double, den: Double): String =
-      if (num >= 0 && den > 0) f"${num / den}%.2f" else "-1"
-
-    // Heavy curation ops benched OUTSIDE the headline set (and its total):
-    // their build step runs distributed jobs (connected-components
-    // fixpoint), so they get one warm + one timed pass each, recorded as
-    // standalone fields — round-over-round headline totals stay comparable.
-    def timedExtra(name: String): Double =
-      try { runOnce(name); runOnce(name) }
-      catch { case e: Throwable => failed(s"extra:$name", e); -1.0 }
-    // Median-of-3 variant with task-CPU capture, for the episode-tell pair
-    // (VERDICT r10 #7): the semdedup twins adjudicate host episodes, so a
-    // single wobbly wall draw must not fire the tell — the median absorbs
-    // one outlier and the CPU field gives the environment-immune basis.
-    def timedExtraMed3(name: String): (Double, Double) =
-      try {
-        runOnce(name) // warm
-        val s0 = listener.settled()
-        val walls = Seq.fill(3)(runOnce(name))
-        val d = listener.settled() - s0
-        (BenchUtil.median(walls), d.cpuNs / 1e9)
-      } catch { case e: Throwable => failed(s"extra:$name", e); (-1.0, -1.0) }
-    val ccSec = timedExtra("t_dup_clusters")
+    // dedupe job firing concurrently (EtlApp's shape). "Ran but did no
+    // dedupe work" fails too: the corpus always contains duplicates, so 0
+    // removed means the dedupe job never executed (r6 lesson); likewise a
+    // stateful phase with no output, and streamed-vs-batch attribution
+    // parity is a correctness gate.
+    Section("streaming", StreamBench.Fields.map("streaming." + _),
+        gate = v => Seq("batches", "quiet_runs", "dupes_removed", "funnel_batches",
+          "funnel_out_rows", "attribution_batches", "attribution_out_rows",
+          "attribution_parity").forall(f => v(s"streaming.$f") > 0)) { c =>
+      StreamBench.run(c.spark, c.sfDir, c.num("ingest_rows_per_sec"))
+    },
+    extra("cc_clusters_sec", "t_dup_clusters"),
     // The same clusters fixpoint with RELIABLE per-round checkpointing
-    // (ConnectedComponents' spot-executor mode): quantifies the
-    // localCheckpoint-vs-filesystem trade the scaladoc recommends — the
-    // delta is the per-round write+read of vertex-sized label state to
-    // the checkpoint filesystem (here local disk; on HDFS/object stores
-    // expect the gap to widen with round count, not data size).
-    val ccReliableSec = try {
-      val ck = java.nio.file.Files.createTempDirectory("graft-cc-ck").toString
-      try {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.queries.TextQueries
-            .clusteredDocsWithCheckpoint(spark, sfDir, Some(ck))
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once(); once() // warm + timed, like timedExtra
-      } finally BenchUtil.deleteRecursively(new java.io.File(ck))
-    } catch { case e: Throwable => failed("extra:cc_reliable", e); -1.0 }
-    val passageSec = timedExtra("t_passage_dedup")
-    // r7 curation additions: shard-writer permutation, mixture sampling,
-    // best-of-cluster survivor selection (re-runs the CC fixpoint — heavy).
-    val shardSec = timedExtra("t_shard_shuffle")
-    val mixSec = timedExtra("t_mix_sample")
-    val bestOfSec = timedExtra("t_best_of_cluster")
-    val trigramSec = timedExtra("t_trigram_lm")
-    // r8 retrieval + versioning additions: TF-IDF matrix, BM25 ranking,
-    // query-time text knn, content-addressed snapshot diff.
-    val tfidfSec = timedExtra("t_tfidf")
-    val bm25Sec = timedExtra("t_bm25")
-    val textKnnSec = timedExtra("t_text_knn")
-    val corpusDiffSec = timedExtra("t_corpus_diff")
-    // r9 DSIR importance resampling (bucket-bounded stats + broadcast
-    // scoring join — see DsirWeights).
-    val dsirSec = timedExtra("t_dsir_weights")
-    // r10 trained quality classifier (16-epoch distributed GD + score) and
-    // segment-blocked fuzzy linkage — iterative-training and edit-join
-    // workload classes.
-    val qualityLrSec = timedExtra("t_quality_lr")
-    val fuzzyLinkSec = timedExtra("t_fuzzy_link")
+    // (ConnectedComponents' spot-executor mode): the delta to cc_clusters
+    // is the per-round write+read of vertex-sized label state to the
+    // checkpoint filesystem (here local disk; on HDFS/object stores expect
+    // the gap to widen with round count, not data size).
+    Section("cc_clusters_reliable", Seq("cc_clusters_reliable_sec")) { c =>
+      withTempDir("graft-cc-ck") { ck =>
+        Seq(warmTimed(c.noop(TextQueries.clusteredDocsWithCheckpoint(c.spark, c.sfDir, Some(ck)))))
+      }
+    },
+    extra("passage_dedup_sec", "t_passage_dedup"),
+    extra("shard_shuffle_sec", "t_shard_shuffle"),
+    extra("mix_sample_sec", "t_mix_sample"),
+    extra("best_of_cluster_sec", "t_best_of_cluster"),
+    extra("trigram_lm_sec", "t_trigram_lm"),
+    extra("tfidf_sec", "t_tfidf"),
+    extra("bm25_sec", "t_bm25"),
+    extra("text_knn_sec", "t_text_knn"),
+    extra("corpus_diff_sec", "t_corpus_diff"),
+    extra("dsir_sec", "t_dsir_weights"),
+    extra("quality_lr_train_sec", "t_quality_lr"),
+    extra("fuzzy_link_sec", "t_fuzzy_link"),
     // r9 incremental cluster ledger: the OPERATING number is appending one
     // batch of match edges to a STANDING ledger (+ reading the resolved
     // labels) — never the from-scratch rebuild, which is cc_clusters_sec's
-    // job. Ledger seeded from the even ids once; the timed pass ingests
-    // the odd ids with every remaining edge (cross-parity merges exercise
-    // the remap path) after a warm-up replay.
-    val ccIncrementalSec = try {
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val base = java.nio.file.Files.createTempDirectory("graft-incc").toString
-      try {
-        val pairs = graft.queries.TextQueries.benchJaccardPairs(spark, sfDir)
-          .localCheckpoint(true)
-        val ids = Tables.load(spark, sfDir, "documents").select(col("doc_id"))
-        val bothEven =
-          pmod(col("a_id"), lit(2)) === 0 && pmod(col("b_id"), lit(2)) === 0
-        def seed(dir: String): Unit = graft.dedup.IncrementalClusters.addBatch(
-          spark, dir, ids.where(pmod(col("doc_id"), lit(2)) === 0), "doc_id",
+    // job. Ledger seeded from the even ids; the timed pass ingests the odd
+    // ids with every remaining edge (cross-parity merges exercise the remap
+    // path) after a warm-up replay on a second ledger.
+    Section("cc_incremental", Seq("cc_incremental_sec")) { c =>
+      import graft.dedup.IncrementalClusters
+      withTempDir("graft-incc") { base =>
+        val pairs = TextQueries.benchJaccardPairs(c.spark, c.sfDir).localCheckpoint(true)
+        val ids = Tables.load(c.spark, c.sfDir, "documents").select(col("doc_id"))
+        val bothEven = pmod(col("a_id"), lit(2)) === 0 && pmod(col("b_id"), lit(2)) === 0
+        def seed(dir: String): Unit = IncrementalClusters.addBatch(c.spark, dir,
+          ids.where(pmod(col("doc_id"), lit(2)) === 0), "doc_id",
           pairs.where(bothEven), "a_id", "b_id")
-        def append(dir: String): Double = {
-          val t0 = System.nanoTime()
-          graft.dedup.IncrementalClusters.addBatch(spark, dir,
-            ids.where(pmod(col("doc_id"), lit(2)) === 1), "doc_id",
-            pairs.where(!bothEven), "a_id", "b_id")
-          graft.dedup.IncrementalClusters.labels(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+        def append(dir: String): Double = time {
+          IncrementalClusters.addBatch(c.spark, dir, ids.where(pmod(col("doc_id"), lit(2)) === 1),
+            "doc_id", pairs.where(!bothEven), "a_id", "b_id")
+          c.noop(IncrementalClusters.labels(c.spark, dir))
         }
-        val warm = s"$base/warm"; val timed = s"$base/timed"
-        seed(warm); append(warm)
-        seed(timed); append(timed)
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)): Unit
+        seed(s"$base/warm"); append(s"$base/warm")
+        seed(s"$base/timed")
+        Seq(append(s"$base/timed"))
       }
-    } catch { case e: Throwable => failed("extra:cc_incremental", e); -1.0 }
-    // r9 syndication PageRank: source_pagerank_sec times the registry
-    // pipeline (cluster fixpoint + source-graph rank). pagerank_sec
-    // isolates the ITERATION ENGINE at corpus node scale instead — 10
-    // exact-integer power iterations over the doc-level near-dup graph,
-    // edge frame pre-built and checkpointed OUTSIDE the timer: the
-    // operating number for K rounds of node-sized rank shuffles against a
-    // standing edge partitioning.
-    val sourcePagerankSec = timedExtra("t_source_pagerank")
-    // r9 count-min heavy hitters: bounded 4×1024 sketch state + sampled
-    // candidate probes (CountMinSketch) — the stream scan dominates.
-    val cmsSec = timedExtra("t_heavy_hitters_cms")
-    // r9 top-PC eigensolve: one d²-cell covariance pass over the corpus +
-    // corpus-free integer power iterations (PrincipalComponent).
-    val topPcSec = timedExtra("e_top_pc")
-    // r9 late wave: spherical k-means (4 Lloyd's rounds, one corpus scan
-    // each), its trained-cell SemDedup composition, the composed curation
-    // run (gates → exact dedup → minhash dedup → split), IVF-PQ search,
-    // BPE corpus encoding (merges train + vocab-sized k-pass rewrite),
-    // fuzzy train/eval decontamination, feature hashing, and the
-    // histogram-quantile scale path.
-    val kmeansSec = timedExtra("e_kmeans")
-    // Production sizing for the trained clusterer (the semdedup_prod
-    // rule): k ≈ corpus/125 cells, 2 Lloyd's rounds — the configuration a
-    // SemDedup/IVF training pass actually runs. fit() executes its
-    // per-round jobs eagerly, so the timing brackets the whole train +
-    // final assignment.
-    val kmeansProdSec = try {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.load(spark, sfDir, "embeddings")
+    },
+    extra("source_pagerank_sec", "t_source_pagerank"),
+    extra("cms_heavy_hitters_sec", "t_heavy_hitters_cms"),
+    extra("top_pc_sec", "e_top_pc"),
+    extra("kmeans_sec", "e_kmeans"),
+    // Production sizing for the trained clusterer (the semdedup_prod rule):
+    // k ≈ corpus/125 cells, 2 Lloyd's rounds. fit() executes its per-round
+    // jobs eagerly, so the timing brackets the whole train + assignment.
+    Section("kmeans_prod", Seq("kmeans_prod_sec")) { c =>
+      import graft.similarity.KMeans
+      val emb = Tables.load(c.spark, c.sfDir, "embeddings")
       val k = math.max(16L, emb.count() / 125L).toInt
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        graft.similarity.KMeans.fit(emb, "vec_id", "embedding",
-            graft.similarity.KMeans.Config(k = k, iterations = 2))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once(); once()
-    } catch { case e: Throwable => failed("extra:kmeans_prod", e); -1.0 }
-    val semdedupKmSec = timedExtra("e_semdedup_km")
-    val curationPipelineSec = timedExtra("t_curation_pipeline")
-    val ivfpqSec = timedExtra("e_ivfpq_topk")
-    val bpeEncodeSec = timedExtra("t_bpe_encode")
-    val fuzzyDeconSec = timedExtra("t_decontaminate_fuzzy")
-    val hashingTfSec = timedExtra("t_hashing_tf")
-    val quantileHistSec = timedExtra("t_quantile_hist")
-    // r9 additions: rank-ensemble quality filter (histogram CDFs broadcast
-    // onto the probe scan) and the incremental additive rollup view (the
-    // registry entry replays its whole two-batch-plus-redelivery lifecycle
-    // including the swap writes, so this times MAINTENANCE, not a query).
-    val qualityEnsembleSec = timedExtra("t_quality_ensemble")
-    val rollupIncrementalSec = timedExtra("h_day_rollup_incremental")
-    // r9 tail wave: MMR rerank, matryoshka two-stage search, cross-source
-    // overlap audit, retrieval eval metrics, and the z-order layout key.
-    val mmrSec = timedExtra("e_mmr_topk")
-    val matryoshkaSec = timedExtra("e_matryoshka_topk")
-    val sourceOverlapSec = timedExtra("t_source_overlap")
-    val evalMetricsSec = timedExtra("e_eval_metrics")
-    val zorderKeySec = timedExtra("q_zorder_key")
-    val labelPropSec = timedExtra("t_label_prop")
-    val dataCardSec = timedExtra("t_data_card")
-    // r10 second-wave expensive entries promoted into the per-round record
-    // (VERDICT r10 #5): each hides a materialize-once discipline that a
-    // dropped localCheckpoint would silently regress — a recompute bug must
-    // move BENCH_rN, not wait for the next sf1 spot-run.
-    val prfRm3Sec = timedExtra("t_prf_rm3")
-    val triangleSec = timedExtra("t_triangle_count")
-    val jlProjectSec = timedExtra("e_jl_project")
-    val ccnetSec = timedExtra("t_ccnet_buckets")
-    val kneserNeySec = timedExtra("t_kneser_ney")
+      Seq(warmTimed(c.noop(KMeans.fit(emb, "vec_id", "embedding",
+        KMeans.Config(k = k, iterations = 2)))))
+    },
+    extra("semdedup_km_sec", "e_semdedup_km"),
+    extra("curation_pipeline_sec", "t_curation_pipeline"),
+    extra("ivfpq_sec", "e_ivfpq_topk"),
+    extra("bpe_encode_sec", "t_bpe_encode"),
+    extra("fuzzy_decon_sec", "t_decontaminate_fuzzy"),
+    extra("hashing_tf_sec", "t_hashing_tf"),
+    extra("quantile_hist_sec", "t_quantile_hist"),
+    extra("quality_ensemble_sec", "t_quality_ensemble"),
+    // replays the view's whole two-batch-plus-redelivery lifecycle including
+    // the swap writes: this times MAINTENANCE, not a query
+    extra("rollup_incremental_sec", "h_day_rollup_incremental"),
+    extra("mmr_sec", "e_mmr_topk"),
+    extra("matryoshka_sec", "e_matryoshka_topk"),
+    extra("source_overlap_sec", "t_source_overlap"),
+    extra("eval_metrics_sec", "e_eval_metrics"),
+    extra("zorder_key_sec", "q_zorder_key"),
+    extra("label_prop_sec", "t_label_prop"),
+    extra("data_card_sec", "t_data_card"),
+    // each hides a materialize-once discipline that a dropped
+    // localCheckpoint would silently regress (VERDICT r10 #5)
+    extra("prf_rm3_sec", "t_prf_rm3"),
+    extra("triangle_count_sec", "t_triangle_count"),
+    extra("jl_project_sec", "e_jl_project"),
+    extra("ccnet_buckets_sec", "t_ccnet_buckets"),
+    extra("kneser_ney_sec", "t_kneser_ney"),
     // The clustered WRITE plus the thing it buys: footer-measured fraction
     // of row groups a 1/8-of-domain predicate must read on EACH clustered
     // column (1.0 = no pruning; a linear sort would score ~1.0 on its
     // non-leading column). 32 output files ≈ one row group each at this SF.
-    val (zorderWriteSec, zorderPruneX, zorderPruneY) = try {
-      val li = Tables.load(spark, sfDir, "lineitem")
-      val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-      try {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.sources.ZOrderLayout.write(
-            li, Seq("l_partkey", "l_suppkey"), dir, numFiles = 32)
-          (System.nanoTime() - t0) / 1e9
-        }
-        once()
-        val t = once()
-        def frac(c: String): Double = {
-          // one footer sweep per column: derive the predicate bounds AND
-          // the overlap count from the same ranges
-          val rs = graft.sources.ZOrderLayout.rowGroupRanges(spark, dir, c)
+    Section("zorder_write", Seq("zorder_write_sec", "zorder_prune_frac_x",
+        "zorder_prune_frac_y")) { c =>
+      import graft.sources.ZOrderLayout
+      val li = Tables.load(c.spark, c.sfDir, "lineitem")
+      withTempDir("graft-zorder") { dir =>
+        val t = warmTimed(ZOrderLayout.write(li, Seq("l_partkey", "l_suppkey"), dir, numFiles = 32))
+        def frac(column: String): Double = {
+          // one footer sweep per column: the predicate bounds AND the
+          // overlap count come from the same ranges
+          val rs = ZOrderLayout.rowGroupRanges(c.spark, dir, column)
           val mn = rs.map(_._1).min
           val hi = mn + (rs.map(_._2).max - mn) / 8
           rs.count { case (a, b) => b >= mn && a <= hi }.toDouble / rs.size
         }
-        (t, frac("l_partkey"), frac("l_suppkey"))
-      } finally BenchUtil.deleteRecursively(new java.io.File(dir))
-    } catch { case e: Throwable => failed("zorder_write", e); (-1.0, -1.0, -1.0) }
-    val pagerankSec = try {
-      import org.apache.spark.sql.functions.{col, lit}
-      val pairs = graft.queries.TextQueries.benchJaccardPairs(spark, sfDir)
+        Seq(t, frac("l_partkey"), frac("l_suppkey"))
+      }
+    },
+    // The ITERATION ENGINE at corpus node scale: 10 exact-integer power
+    // iterations over the doc-level near-dup graph, edge frame pre-built
+    // and checkpointed OUTSIDE the timer (source_pagerank_sec times the
+    // whole registry pipeline instead).
+    Section("pagerank", Seq("pagerank_sec")) { c =>
+      val pairs = TextQueries.benchJaccardPairs(c.spark, c.sfDir)
       val edges = pairs
         .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
         .withColumn("w", lit(1L))
         .localCheckpoint(true)
-      val nodes = Tables.load(spark, sfDir, "documents").select(col("doc_id"))
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        graft.operators.PageRank.ranks(nodes, "doc_id", edges, "a_id", "b_id", "w", 10)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once(); once() // warm + timed, like timedExtra
-    } catch { case e: Throwable => failed("extra:pagerank", e); -1.0 }
-    // r9 exact-substring dedup (SpanDedup): full span surgery under the
-    // PRODUCTION xxhash64 family. `span_dedup_sec` is the 100 TB operating
-    // point (content-defined anchors, stride 8 — the ~8× gram-frame cut);
-    // `span_dedup_exact_sec` is the stride-1 exact kernel for reference.
-    // The registry twins (t_dup_spans / t_substring_dedup) pin the
-    // portable-md5 family for the oracle — these fields track the kernel
-    // users run, per the t_simhash precedent.
-    def spanOnce(stride: Int): Double = {
-      val docsDf = Tables.load(spark, sfDir, "documents")
-      val t0 = System.nanoTime()
-      graft.dedup.SpanDedup.removeDuplicatedSpans(docsDf, "doc_id", "text",
-        k = 30, anchorStride = stride, portable = false)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val spanDedupSec = try { spanOnce(8); spanOnce(8) }
-      catch { case e: Throwable => failed("extra:span_dedup", e); -1.0 }
-    val spanDedupExactSec = try { spanOnce(1); spanOnce(1) }
-      catch { case e: Throwable => failed("extra:span_dedup_exact", e); -1.0 }
-    // r7 vector-curation additions: SemDeDup cell dedup and cell-bounded
-    // hard-negative mining (both run the within-cell pair stage — the cost
-    // that scales with cell size, which is why they're standalone fields).
-    val (semdedupSec, semdedupCpuSec) = timedExtraMed3("e_semdedup")
-    val hardnegSec = timedExtra("x_pair_hardneg")
+      val nodes = Tables.load(c.spark, c.sfDir, "documents").select(col("doc_id"))
+      Seq(warmTimed(c.noop(
+        graft.operators.PageRank.ranks(nodes, "doc_id", edges, "a_id", "b_id", "w", 10))))
+    },
+    spanDedup("span_dedup", 8),
+    spanDedup("span_dedup_exact", 1),
+    // SemDeDup cell dedup: median-of-3 + task CPU, because the semdedup
+    // twins are the host-episode tell (VERDICT r10 #7) — one wobbly wall
+    // draw must not fire it.
+    Section("semdedup", Seq("semdedup_sec", "semdedup_cpu_sec")) { c =>
+      val (walls, d) = warmMedian3(c)(c.runOnce("e_semdedup"))
+      Seq(BenchUtil.median(walls), d.cpuNs / 1e9)
+    },
+    extra("hardneg_sec", "x_pair_hardneg"),
     // Production operating point (r8): the registry entries pin nCells=16
-    // so the oracle replays exactly — which makes the two fields above a
-    // DELIBERATE quadratic curve as the corpus grows past 16 cells' worth.
-    // These fields apply the documented sizing rule (nCells ≈ corpus /
-    // targetCellSize, SemDedup.scala) so the record demonstrates the knob:
-    // per-cell pair counts stay constant, the family scales ~linearly.
-    val (semdedupProdSec, semdedupProdCpuSec, hardnegProdSec, semdedupProdCells) = try {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.load(spark, sfDir, "embeddings")
-      val targetCellSize = 125L
-      val cells = math.max(16L, emb.count() / targetCellSize).toInt
-      def once(df: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      def semd() = once(graft.similarity.SemDedup.semDedup(
-        emb, "vec_id", "embedding",
-        graft.similarity.SemDedup.Config(nCells = cells, threshold = 0.4)))
-      def hardn() = once(graft.similarity.SemDedup.hardNegatives(
-        emb, "vec_id", "embedding", "label", cells))
-      // median-of-3 + CPU for the tell's RIGHT side, matching e_semdedup's
-      // LEFT side above (VERDICT r10 #7)
-      semd() // warm
-      val s0 = listener.settled()
-      val sWalls = Seq.fill(3)(semd())
-      val dCpu = (listener.settled() - s0).cpuNs / 1e9
-      hardn(); val h = hardn()
-      (BenchUtil.median(sWalls), dCpu, h, cells)
-    } catch { case e: Throwable =>
-      failed("extra:semdedup_prod", e); (-1.0, -1.0, -1.0, -1)
-    }
-
+    // so the oracle replays exactly — a DELIBERATE quadratic curve as the
+    // corpus grows. These fields apply the documented sizing rule (nCells ≈
+    // corpus / targetCellSize, SemDedup.scala): per-cell pair counts stay
+    // constant, the family scales ~linearly.
+    Section("semdedup_prod", Seq("semdedup_prod_sec", "semdedup_prod_cpu_sec",
+        "hardneg_prod_sec", "semdedup_prod_ncells")) { c =>
+      import graft.similarity.SemDedup
+      val emb = Tables.load(c.spark, c.sfDir, "embeddings")
+      val cells = math.max(16L, emb.count() / 125L).toInt
+      val (walls, d) = warmMedian3(c)(c.noop(SemDedup.semDedup(emb, "vec_id", "embedding",
+        SemDedup.Config(nCells = cells, threshold = 0.4))))
+      val hardneg = warmTimed(c.noop(
+        SemDedup.hardNegatives(emb, "vec_id", "embedding", "label", cells)))
+      Seq[Any](BenchUtil.median(walls), d.cpuNs / 1e9, hardneg, cells)
+    },
     // Persisted-ANN lifecycle: one-time quantizer train + inverted-file
-    // write (build), then the search-only latency a STANDING index gives —
-    // the operating number the transient registry query can't show. Plus
-    // the recall estimate the retrain-on-drift trigger acts on (measured
-    // every run so drift of the MONITOR itself would also be visible).
-    val (ivfBuildSec, ivfSearchSec, ivfRecallEst, vecCurateSec) = try {
-      import org.apache.spark.sql.functions.col
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-      try {
-        val emb = Tables.load(spark, sfDir, "embeddings")
-        val tb = System.nanoTime()
-        graft.similarity.IvfIndex.build(emb, "vec_id", "embedding", dir)
-        val build = (System.nanoTime() - tb) / 1e9
+    // write, the search-only latency a STANDING index gives, and the recall
+    // estimate the retrain-on-drift trigger acts on. Quality gate, not just
+    // latency: "ran fast but returns junk" fails the round (floor matches
+    // IvfSpec's random-embedding recall floor: 0.76 sf0.1 / 0.98 sf1).
+    Section("ivf_lifecycle", Seq("ivf_build_sec", "ivf_search_sec", "ivf_recall_est",
+        "vec_curate_batch_sec"), gate = v => v("ivf_recall_est") >= 0.5) { c =>
+      import graft.similarity.{IvfIndex, SimilaritySearch}
+      withTempDir("graft-ivf") { dir =>
+        val emb = Tables.load(c.spark, c.sfDir, "embeddings")
+        val build = time(IvfIndex.build(emb, "vec_id", "embedding", dir))
         val queries = emb.filter(col("vec_id") < 100)
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.similarity.IvfIndex.searchIndex(queries, dir, "vec_id", "embedding", 10)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+        val search = warmTimed(c.noop(
+          IvfIndex.searchIndex(queries, dir, "vec_id", "embedding", 10)))
+        val recall = IvfIndex.recallEstimate(c.spark, dir)
+        // continuous vector curation (r7): half exact re-crawls of indexed
+        // content (dropped by the standing-index match), half novel
+        // (negated vectors, cosine −1 to everything indexed — they SURVIVE
+        // and exercise the output + index append path)
+        val recrawl = emb.filter(col("vec_id") < 250)
+          .withColumn("vec_id", col("vec_id") + 20000000L)
+        val novel = emb.filter(col("vec_id") >= 250 && col("vec_id") < 500)
+          .withColumn("vec_id", col("vec_id") + 30000000L)
+          .withColumn("embedding", expr("transform(embedding, x -> -x)").cast("array<float>"))
+        val (curate, survivors) = withTempDir("graft-ivf-out") { out =>
+          timed(IvfIndex.curateBatch(recrawl.unionByName(novel), dir, out, "vec_id", "embedding",
+            SimilaritySearch.LshConfig(dim = 64)))
         }
-        once() // warm: listing + codegen
-        val search = once()
-        val recall = graft.similarity.IvfIndex.recallEstimate(spark, dir)
-        // continuous vector curation (r7): one batch of arriving vectors —
-        // half exact re-crawls of indexed content (dropped by the
-        // standing-index match), half genuinely novel (negated vectors,
-        // cosine −1 to everything indexed — they SURVIVE and exercise the
-        // output + index append path).
-        val outDir = java.nio.file.Files.createTempDirectory("graft-ivf-out").toString
-        val vecCurate = try {
-          val recrawl = emb.filter(col("vec_id") < 250)
-            .withColumn("vec_id", col("vec_id") + 20000000L)
-          val novel = emb.filter(col("vec_id") >= 250 && col("vec_id") < 500)
-            .withColumn("vec_id", col("vec_id") + 30000000L)
-            .withColumn("embedding",
-              org.apache.spark.sql.functions.expr(
-                "transform(embedding, x -> -x)").cast("array<float>"))
-          val batch = recrawl.unionByName(novel)
-          val t0 = System.nanoTime()
-          val survivors = graft.similarity.IvfIndex.curateBatch(batch, dir, outDir,
-            "vec_id", "embedding",
-            graft.similarity.SimilaritySearch.LshConfig(dim = 64))
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (survivors.isEmpty)
-            throw new IllegalStateException(
-              "vec curation batch produced no survivors — append path not exercised")
-          sec
-        } finally BenchUtil.deleteRecursively(new java.io.File(outDir))
-        (build, search, recall, vecCurate)
-      } finally BenchUtil.deleteRecursively(new java.io.File(dir))
-    } catch { case e: Throwable => failed("ivf_lifecycle", e); (-1.0, -1.0, -1.0, -1.0) }
-
-    // Production-sized ANN operating point (VERDICT r11 #1): √n cells +
-    // the MEASURED probe width — calibrateNProbe walks the dial until
-    // recall@10 clears 0.8 on the standing index, and the record carries
-    // the chosen width, the recall it delivers, and the search wall at
-    // that width. A quantizer/calibration regression now moves BENCH_rN.
-    val (ivfProdCells, ivfProdNProbe, ivfProdRecall, ivfProdSearchSec,
-        ivfProdCalibSec) = try {
-      import org.apache.spark.sql.functions.col
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivfprod").toString
-      try {
-        val emb = Tables.load(spark, sfDir, "embeddings")
-        val cfg = graft.similarity.IvfIndex.prodConfig(emb.count())
-        graft.similarity.IvfIndex.build(emb, "vec_id", "embedding", dir, cfg)
-        val tc = System.nanoTime()
-        val (np, recall) = graft.similarity.IvfIndex.calibrateNProbe(spark, dir)
-        val calib = (System.nanoTime() - tc) / 1e9
+        require(survivors.nonEmpty,
+          "vec curation batch produced no survivors — append path not exercised")
+        Seq(build, search, recall, curate)
+      }
+    },
+    // Production-sized ANN operating point (VERDICT r11 #1): √n cells + the
+    // MEASURED probe width — calibrateNProbe walks the dial until recall@10
+    // clears 0.8. It converges to exact search if nothing cheaper does, so
+    // a recall under 0.8 means the instrument itself broke.
+    Section("ivf_prod", Seq("ivf_prod_cells", "ivf_prod_nprobe", "ivf_prod_recall",
+        "ivf_prod_search_sec", "ivf_prod_calibrate_sec"),
+        gate = v => v("ivf_prod_recall") >= 0.8) { c =>
+      import graft.similarity.IvfIndex
+      withTempDir("graft-ivfprod") { dir =>
+        val emb = Tables.load(c.spark, c.sfDir, "embeddings")
+        val cfg = IvfIndex.prodConfig(emb.count())
+        IvfIndex.build(emb, "vec_id", "embedding", dir, cfg)
+        val (calib, (np, recall)) = timed(IvfIndex.calibrateNProbe(c.spark, dir))
         val queries = emb.filter(col("vec_id") < 100)
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.similarity.IvfIndex
-            .searchIndex(queries, dir, "vec_id", "embedding", 10, np)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once()
-        (cfg.nCentroids, np, recall, once(), calib)
-      } finally BenchUtil.deleteRecursively(new java.io.File(dir))
-    } catch { case e: Throwable =>
-      failed("ivf_prod", e); (-1, -1, -1.0, -1.0, -1.0) }
-
-    // Persisted text-dedup (MinHash-LSH) lifecycle: index the documents
-    // corpus once, then the incremental dedupe-new-against-corpus search —
-    // the daily-crawl operation a standing corpus runs (nothing is
-    // re-shingled on the corpus side).
-    val (lshBuildSec, lshSearchSec) = try {
-      import org.apache.spark.sql.functions.{col, concat, lit}
-      val dir = java.nio.file.Files.createTempDirectory("graft-lsh").toString
-      try {
-        val docs = Tables.load(spark, sfDir, "documents").select(col("doc_id"), col("text"))
-        val tb = System.nanoTime()
-        graft.dedup.TextDedupIndex.build(docs, "doc_id", "text", dir)
-        val build = (System.nanoTime() - tb) / 1e9
+        val search = warmTimed(c.noop(
+          IvfIndex.searchIndex(queries, dir, "vec_id", "embedding", 10, np)))
+        Seq[Any](cfg.nCentroids, np, recall, search, calib)
+      }
+    },
+    // Persisted text-dedup (MinHash-LSH) lifecycle: index the corpus once,
+    // then the incremental dedupe-new-against-corpus search — the
+    // daily-crawl operation (nothing is re-shingled on the corpus side).
+    Section("lsh_lifecycle", Seq("lsh_index_build_sec", "lsh_index_search_sec")) { c =>
+      import graft.dedup.TextDedupIndex
+      withTempDir("graft-lsh") { dir =>
+        val docs = Tables.load(c.spark, c.sfDir, "documents").select(col("doc_id"), col("text"))
+        val build = time(TextDedupIndex.build(docs, "doc_id", "text", dir))
         val fresh = docs.limit(500)
           .withColumn("doc_id", col("doc_id") + 10000000L)
           .withColumn("text", concat(col("text"), lit(" extra token")))
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.dedup.TextDedupIndex.searchNew(fresh, dir, "doc_id", "text")
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once() // warm
-        (build, once())
-      } finally BenchUtil.deleteRecursively(new java.io.File(dir))
-    } catch { case e: Throwable => failed("lsh_lifecycle", e); (-1.0, -1.0) }
-
-    // Persisted retrieval-statistics lifecycle (r9): one-time index build
-    // (the single corpus tokenize), then the score-only latency a STANDING
-    // corpus gives — BM25 against delta-summed df/N/avgdl with zero text
-    // re-tokenization (compare bm25_sec above, which pays the full
-    // recompute every run; at 100 TB that recompute is the dominant
-    // retrieval cost the index removes).
-    // The deletion lifecycle rides the same standing index (VERDICT r11
-    // #3): tombstone 10% of the corpus (O(batch)), score THROUGH the
-    // tombstones (the anti-join read path every query pays between delete
-    // and compaction), then the compaction that applies them physically —
-    // so a tombstone-path regression moves this round's record directly,
-    // not a SCALING.md spot-run.
-    val (retrievalBuildSec, retrievalScoreSec, retrievalDeleteSec,
-        retrievalScoreTombSec, retrievalCompactDelSec) = try {
-      val dir = java.nio.file.Files.createTempDirectory("graft-rindex-bench").toString
-      try {
-        val docs = Tables.load(spark, sfDir, "documents")
-        val tb = System.nanoTime()
-        graft.retrieval.RetrievalIndex.build(docs, "doc_id", "text", dir)
-        val build = (System.nanoTime() - tb) / 1e9
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.retrieval.RetrievalIndex.scoreBm25(spark, dir,
-              graft.retrieval.RetrievalIndex.topTerms(spark, dir, 3))
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once() // warm: listing + codegen
-        val score = once()
-        val t1 = System.nanoTime()
-        graft.retrieval.RetrievalIndex.deleteDocs(
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 === 0)
-            .select(org.apache.spark.sql.functions.col("doc_id")), dir, "doc_id")
-        val del = (System.nanoTime() - t1) / 1e9
-        val scoreTomb = once()
-        val t2 = System.nanoTime()
-        graft.retrieval.RetrievalIndex.compact(spark, dir)
-        val compactDel = (System.nanoTime() - t2) / 1e9
-        (build, score, del, scoreTomb, compactDel)
-      } finally BenchUtil.deleteRecursively(new java.io.File(dir))
-    } catch { case e: Throwable =>
-      failed("retrieval_lifecycle", e); (-1.0, -1.0, -1.0, -1.0, -1.0) }
-
+        Seq(build, warmTimed(c.noop(TextDedupIndex.searchNew(fresh, dir, "doc_id", "text"))))
+      }
+    },
+    // Persisted retrieval-statistics lifecycle (r9): one-time build (the
+    // single corpus tokenize), then BM25 against delta-summed df/N/avgdl
+    // with zero re-tokenization (bm25_sec pays the full recompute). The
+    // deletion lifecycle rides the same index (VERDICT r11 #3): tombstone
+    // 10% of the corpus (O(batch)), score THROUGH the tombstones, then the
+    // compaction that applies them physically.
+    Section("retrieval_lifecycle", Seq("retrieval_index_build_sec", "retrieval_score_sec",
+        "retrieval_delete_sec", "retrieval_score_tombstoned_sec",
+        "retrieval_compact_delete_sec")) { c =>
+      import graft.retrieval.RetrievalIndex
+      withTempDir("graft-rindex-bench") { dir =>
+        val docs = Tables.load(c.spark, c.sfDir, "documents")
+        val build = time(RetrievalIndex.build(docs, "doc_id", "text", dir))
+        def score(): Double =
+          time(c.noop(RetrievalIndex.scoreBm25(c.spark, dir,
+            RetrievalIndex.topTerms(c.spark, dir, 3))))
+        val scored = warmTimed(score())
+        val del = time(RetrievalIndex.deleteDocs(
+          docs.filter(col("doc_id") % 10 === 0).select(col("doc_id")), dir, "doc_id"))
+        val tombstoned = score()
+        Seq(build, scored, del, tombstoned, time(RetrievalIndex.compact(c.spark, dir)))
+      }
+    },
     // Sharded-corpus sink (r7): the terminal write of a curation pipeline —
     // placement map + one repartition + in-task sort + atomic swap, with
-    // the manifest computed in-job. Warm then timed, like the lifecycles.
-    val shardWriteSec = try {
-      val dir = java.nio.file.Files.createTempDirectory("graft-shardw").toString
-      try {
-        val docs = Tables.load(spark, sfDir, "documents")
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.sources.ShardWriter.write(docs, "doc_id", dir, 16)
-          (System.nanoTime() - t0) / 1e9
-        }
-        once() // warm (codegen + listing)
-        once()
-      } finally BenchUtil.deleteRecursively(new java.io.File(dir))
-    } catch { case e: Throwable => failed("shard_write", e); -1.0 }
-
+    // the manifest computed in-job.
+    Section("shard_write", Seq("shard_write_sec")) { c =>
+      val docs = Tables.load(c.spark, c.sfDir, "documents")
+      withTempDir("graft-shardw") { dir =>
+        Seq(warmTimed(graft.sources.ShardWriter.write(docs, "doc_id", dir, 16)))
+      }
+    },
     // Curation lifecycle — the DEPLOYED shape of the LSH index (VERDICT r5
     // #2): one leased curateBatch against a standing index (wall +
     // survivors/s), then a multi-batch curateStream feed with per-micro-
-    // batch latency p50/p95 — the number a user adopting continuous
-    // curation actually operates on (reference analog: the dedupe job's
-    // runtime metrics ride every run, AbstractDeduplication.java:128-160).
-    val (curateBatchSec, curateSurvPerSec, csBatches, csP50, csP95) = try {
-      import org.apache.spark.sql.functions.{col, concat, lit}
-      import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
-      val dir = java.nio.file.Files.createTempDirectory("graft-curate").toString
-      try {
-        val docs = Tables.load(spark, sfDir, "documents").select(col("doc_id"), col("text"))
+    // batch latency p50/p95 (reference analog: the dedupe job's runtime
+    // metrics ride every run, AbstractDeduplication.java:128-160).
+    Section("curation", Seq("curate_batch_sec", "curate_survivors_per_sec",
+        "curate_stream_batches", "curate_stream_p50_sec", "curate_stream_p95_sec"),
+        gate = v => v("curate_stream_batches") > 0) { c =>
+      import graft.dedup.TextDedupIndex
+      withTempDir("graft-curate") { dir =>
+        val docs = Tables.load(c.spark, c.sfDir, "documents").select(col("doc_id"), col("text"))
         val idx = s"$dir/idx"
         // standing corpus: the even half; the curated batch mixes near-dups
         // of indexed docs (must drop) with unindexed docs (mostly survive)
-        graft.dedup.TextDedupIndex.build(
-          docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
+        TextDedupIndex.build(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
         val dups = docs.filter(col("doc_id") % 2 === 0).limit(250)
           .withColumn("doc_id", col("doc_id") + 20000000L)
           .withColumn("text", concat(col("text"), lit(" extra token")))
         val novel = docs.filter(col("doc_id") % 2 === 1).limit(250)
           .withColumn("doc_id", col("doc_id") + 30000000L)
         val batch = dups.unionByName(novel).localCheckpoint()
-        val t0 = System.nanoTime()
-        val kept = graft.dedup.TextDedupIndex.curateBatch(
-          batch, idx, s"$dir/out", "doc_id", "text")
-        val cbWall = (System.nanoTime() - t0) / 1e9
-        val survPerSec = if (cbWall > 0) kept.length / cbWall else -1.0
-
+        val (cbWall, kept) =
+          timed(TextDedupIndex.curateBatch(batch, idx, s"$dir/out", "doc_id", "text"))
         // continuous shape: the full corpus re-identified, fed as 6 files,
         // one micro-batch each against the SAME standing index (each batch
         // dedupes against everything kept so far — the accumulation path)
         val feed = s"$dir/feed"
-        docs.withColumn("doc_id", col("doc_id") + 40000000L)
-          .repartition(6).write.parquet(feed)
-        val walls = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-        val listener = new StreamingQueryListener {
-          override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-          override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-            val p = e.progress
-            if (p.numInputRows > 0) {
-              val d = p.durationMs.get("triggerExecution")
-              if (d != null) walls.add(d.toDouble / 1e3): Unit
-            }
-          }
-        }
-        spark.streams.addListener(listener)
-        try {
-          val input = spark.readStream.schema("doc_id LONG, text STRING")
+        docs.withColumn("doc_id", col("doc_id") + 40000000L).repartition(6).write.parquet(feed)
+        val ws = ProgressRecorder.during(c.spark) { rec =>
+          val input = c.spark.readStream.schema("doc_id LONG, text STRING")
             .option("maxFilesPerTrigger", "1").parquet(feed)
-          val q = graft.dedup.TextDedupIndex.curateStream(input, idx,
-            s"$dir/out2", s"$dir/ckpt", "doc_id", "text",
-            trigger = Trigger.AvailableNow())
+          val q = TextDedupIndex.curateStream(input, idx, s"$dir/out2", s"$dir/ckpt",
+            "doc_id", "text", trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
           q.awaitTermination(300000)
           if (q.isActive) q.stop()
-        } finally spark.streams.removeListener(listener)
-        import scala.jdk.CollectionConverters._
-        val ws = walls.asScala.map(_.doubleValue).toSeq
-        (cbWall, survPerSec, ws.size, BenchUtil.median(ws), BenchUtil.p95(ws))
-      } finally BenchUtil.deleteRecursively(new java.io.File(dir))
-    } catch { case e: Throwable => failed("curation", e); (-1.0, -1.0, 0, -1.0, -1.0) }
-
-    val results: Seq[(String, QStats)] = Registry.headline.map { q =>
-      val st = try {
-        runOnce(q.name) // warmup: file listing, codegen, JIT — outside timing
-        val la = loadAvg
-        val s0 = listener.settled()
-        val walls = Seq.fill(3)(runOnce(q.name))
-        val d = listener.settled() - s0
-        QStats(walls, d.cpuNs / 1e9, d.gcMs / 1e3, d.runMs / 1e3,
-          (d.shufReadB + d.shufWriteB) / 1e6, la)
-      } catch { case e: Throwable =>
-        failed(s"query:${q.name}", e); QStats(Seq(-1.0, -1.0, -1.0), -1, -1, -1, -1, -1) }
-      q.name -> st
+          rec.batchSecs
+        }
+        Seq(cbWall, Fmt(if (cbWall > 0) kept.length / cbWall else -1.0, "%.1f"),
+          ws.size, BenchUtil.median(ws), BenchUtil.p95(ws))
+      }
+    },
+    // Recall-vs-cost OPERATING CURVE at production sizing (VERDICT r11 #1):
+    // one √n-cell build, then the nProbe dial swept — recall@10, search
+    // wall and scanned fraction per point (recorded per-SF in SCALING.md).
+    // For plain IVF the in-cell scores are exact cosines, so nProbe IS the
+    // recall dial.
+    Section("ivfcurve", Seq("ivf_curve_n", "ivf_curve_cells", "ivf_curve"),
+        onDemand = true) { c =>
+      import graft.similarity.IvfIndex
+      withTempDir("graft-ivfc") { dir =>
+        val emb = Tables.load(c.spark, c.sfDir, "embeddings")
+        val n = emb.count()
+        val cells = math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
+        IvfIndex.build(emb, "vec_id", "embedding", dir,
+          IvfIndex.Config(nCentroids = cells, sampleSize = math.max(800, 8 * cells)))
+        val queries = emb.filter(col("vec_id") < 100)
+        def search(np: Int): Double =
+          time(c.noop(IvfIndex.searchIndex(queries, dir, "vec_id", "embedding", 10, np)))
+        search(8) // warm: listing + codegen
+        val curve = Seq(1, 2, 4, 8, 16, 32, 64, 128, 256).filter(_ <= cells).map { np =>
+          val s = search(np)
+          VectorMap("nprobe" -> np,
+            "recall_at_10" -> IvfIndex.recallEstimate(c.spark, dir, 10, 64, np),
+            "search_sec" -> s, "scan_frac" -> Fmt(np.toDouble / cells, "%.4f"))
+        }
+        Seq(n, cells, curve)
+      }
+    },
+    // Append-path cost: build on the even doc ids, then ONE appendDocs of
+    // the odd half (GRAFT_RINDEX_TIMING=1 attributes the wall to the
+    // subtable steps: append:tf / dlen / df / ndocs / ntokens).
+    Section("retrievalappend", Seq("retrieval_append_sec"), onDemand = true) { c =>
+      import graft.retrieval.RetrievalIndex
+      withTempDir("graft-rapp") { dir =>
+        val docs = Tables.load(c.spark, c.sfDir, "documents")
+        RetrievalIndex.build(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", dir)
+        Seq(time(RetrievalIndex.appendDocs(
+          docs.filter(col("doc_id") % 2 =!= 0), dir, "doc_id", "text")))
+      }
     }
+  ) ++ Registry.headline.map(q => querySection(q.name))
 
-    def jmap(f: QStats => String): String =
-      results.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
-    // Failure accounting (ADVICE r6): a crashed suite must NEVER read as a
-    // win. Any failed headline query poisons the total (-1, not a smaller
-    // sum); every failed section is named in the record; any failure makes
-    // the run exit nonzero so exit-code round gating catches it.
-    val failedQueries = results.collect { case (n, s) if s.median < 0 => n }
-    val failedSections = Seq(
-      "pipeline" -> (rates.ingestSec < 0),
-      "skew" -> (skew.ingestSec < 0),
-      "join_skew" -> (joinSkew.q3Skew < 0 || joinSkew.wrankSkew < 0),
-      // streaming "ran but did no dedupe work" is a failure too: the corpus
-      // always contains duplicates, so 0 removed means the dedupe job never
-      // executed and rows/s is not comparable to a healthy round (r6 lesson).
-      "streaming" -> (stream.batches <= 0 || stream.quietRuns <= 0 || stream.dupesRemoved <= 0),
-      "extra:t_dup_clusters" -> (ccSec < 0),
-      "extra:cc_reliable" -> (ccReliableSec < 0),
-      "retrieval_lifecycle" -> (retrievalBuildSec < 0 || retrievalScoreSec < 0),
-      "retrieval_delete_lifecycle" -> (retrievalDeleteSec < 0 ||
-        retrievalScoreTombSec < 0 || retrievalCompactDelSec < 0),
-      "extra:t_passage_dedup" -> (passageSec < 0),
-      "extra:t_shard_shuffle" -> (shardSec < 0),
-      "extra:t_mix_sample" -> (mixSec < 0),
-      "extra:t_best_of_cluster" -> (bestOfSec < 0),
-      "extra:t_trigram_lm" -> (trigramSec < 0),
-      "extra:t_tfidf" -> (tfidfSec < 0),
-      "extra:t_bm25" -> (bm25Sec < 0),
-      "extra:t_text_knn" -> (textKnnSec < 0),
-      "extra:t_corpus_diff" -> (corpusDiffSec < 0),
-      "extra:t_dsir_weights" -> (dsirSec < 0),
-      "extra:t_quality_lr" -> (qualityLrSec < 0),
-      "extra:t_fuzzy_link" -> (fuzzyLinkSec < 0),
-      "extra:cc_incremental" -> (ccIncrementalSec < 0),
-      "extra:t_source_pagerank" -> (sourcePagerankSec < 0),
-      "extra:pagerank" -> (pagerankSec < 0),
-      "extra:t_heavy_hitters_cms" -> (cmsSec < 0),
-      "extra:e_top_pc" -> (topPcSec < 0),
-      "extra:e_kmeans" -> (kmeansSec < 0),
-      "extra:kmeans_prod" -> (kmeansProdSec < 0),
-      "extra:e_semdedup_km" -> (semdedupKmSec < 0),
-      "extra:t_curation_pipeline" -> (curationPipelineSec < 0),
-      "extra:e_ivfpq_topk" -> (ivfpqSec < 0),
-      "extra:t_bpe_encode" -> (bpeEncodeSec < 0),
-      "extra:t_decontaminate_fuzzy" -> (fuzzyDeconSec < 0),
-      "extra:t_hashing_tf" -> (hashingTfSec < 0),
-      "extra:t_quantile_hist" -> (quantileHistSec < 0),
-      "extra:t_quality_ensemble" -> (qualityEnsembleSec < 0),
-      "extra:h_day_rollup_incremental" -> (rollupIncrementalSec < 0),
-      "extra:t_prf_rm3" -> (prfRm3Sec < 0),
-      "extra:t_triangle_count" -> (triangleSec < 0),
-      "extra:e_jl_project" -> (jlProjectSec < 0),
-      "extra:t_ccnet_buckets" -> (ccnetSec < 0),
-      "extra:t_kneser_ney" -> (kneserNeySec < 0),
-      // the funnel phase "ran but produced nothing" must fail too: the
-      // events corpus always completes stages, so 0 output rows means the
-      // stateful operator never executed
-      "streaming_funnel" -> (stream.batches > 0 &&
-        (stream.funnelBatches <= 0 || stream.funnelOutRows <= 0)),
-      "extra:span_dedup" -> (spanDedupSec < 0 || spanDedupExactSec < 0),
-      "extra:e_semdedup" -> (semdedupSec < 0),
-      "extra:x_pair_hardneg" -> (hardnegSec < 0),
-      "extra:semdedup_prod" -> (semdedupProdSec < 0 || hardnegProdSec < 0),
-      "ivf_lifecycle" -> (ivfBuildSec < 0 || ivfSearchSec < 0 || vecCurateSec < 0),
-      // quality gate, not just latency: the production ANN path "ran fast
-      // but returns junk" must fail the round. Floor matches IvfSpec's
-      // random-embedding recall floor (measured 0.76 sf0.1 / 0.98 sf1).
-      "ivf_recall_floor" -> (ivfBuildSec >= 0 && ivfRecallEst < 0.5),
-      // the calibrated production point must exist AND deliver its target
-      // (calibrateNProbe converges to exact search if nothing cheaper does,
-      // so < 0.8 here means the instrument itself broke)
-      "ivf_prod" -> (ivfProdNProbe < 0 || ivfProdRecall < 0.8),
-      // parity is a correctness gate: the streamed attribution aggregate
-      // must equal the batch query over the same corpus
-      "streaming_attribution" -> (stream.batches > 0 &&
-        (stream.attributionBatches <= 0 || stream.attributionOutRows <= 0 ||
-          !stream.attributionParity)),
-      "lsh_lifecycle" -> (lshBuildSec < 0 || lshSearchSec < 0),
-      "shard_write" -> (shardWriteSec < 0),
-      "curation" -> (curateBatchSec < 0 || csBatches <= 0)
-    ).collect { case (n, true) => n }
-    val failedCount = failedQueries.size + failedSections.size
-    val total = if (failedQueries.nonEmpty) -1.0 else results.map(_._2.median).sum
-    // Environment-suspect gate for the streaming section (VERDICT r10 #1):
-    // `saturated_offered_rps` measures how fast the bench's OWN feed writer
-    // could drop files — pure host IO on unchanged code. On a healthy host
-    // it runs orders of magnitude above batch ingest capacity (r9: 5.58M vs
-    // 46.8k ≈ 119×); the r10 collapse rode it down to 0.47×. If the feed
-    // writer itself was IO-bound (< 20× measured batch capacity), every
-    // absolute latency in the section is disk-episode-contaminated and must
-    // not enter the round-over-round series as a code signal.
-    val streamEnvSuspect = stream.satOfferedRps >= 0 &&
-      rates.ingestRowsPerSec > 0 &&
-      stream.satOfferedRps < 20.0 * rates.ingestRowsPerSec
+  /** Host and JVM state, read after everything else ran. */
+  private val env = Section("env", Seq("load_avg_start", "load_avg_end",
+      "code_cache_used_mb", "code_cache_max_mb", "jit_compile_ms", "cores", "heap_max_gb")) { c =>
     val (ccUsed, ccMax) = codeCacheMb
-    // Field ORDER is load-bearing: the driver snapshots only the TAIL of the
-    // bench output, so the large per-run diagnostic dicts go FIRST and the
-    // adjudication fields (per-query medians, per-query CPU, pipeline rates,
-    // total) go LAST so a truncated capture still contains them.
-    // cpu seconds are summed over the 3 timed runs; per-run cpu ≈ /3.
-    val json = Seq(
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir",""",
-      s""""query_runs":${jmap(_.wall.mkString("[", ",", "]"))},""",
-      s""""query_gc_sec_3runs":${jmap(s => f"${s.gcSec}%.3f")},""",
-      s""""query_executor_run_sec_3runs":${jmap(s => f"${s.runSec}%.3f")},""",
-      s""""query_shuffle_rw_mb_3runs":${jmap(s => f"${s.shufMB}%.1f")},""",
-      s""""query_load_avg":${jmap(s => f"${s.loadAvg}%.1f")},""",
-      s""""load_avg_start":${f"$loadStart%.1f"},"load_avg_end":${f"$loadAvg%.1f"},""",
-      s""""code_cache_used_mb":${f"$ccUsed%.0f"},"code_cache_max_mb":${f"$ccMax%.0f"},""",
-      s""""jit_compile_ms":${ManagementFactory.getCompilationMXBean.getTotalCompilationTime},""",
-      s""""cores":${Runtime.getRuntime.availableProcessors},""",
-      s""""heap_max_gb":${f"${Runtime.getRuntime.maxMemory / 1e9}%.1f"},""",
-      s""""ingest_rows":${rates.ingestRows},""",
-      s""""ingest_cpu_sec":${f"${rates.ingestCpuSec}%.3f"},""",
-      s""""dedupe_cpu_sec":${f"${rates.dedupeCpuSec}%.3f"},""",
-      s""""dedupe_duplicates_removed":${rates.dedupeDuplicates},""",
-      s""""cc_clusters_sec":${f"$ccSec%.3f"},""",
-      s""""cc_clusters_reliable_sec":${f"$ccReliableSec%.3f"},""",
-      s""""retrieval_index_build_sec":${f"$retrievalBuildSec%.3f"},""",
-      s""""retrieval_score_sec":${f"$retrievalScoreSec%.3f"},""",
-      s""""retrieval_delete_sec":${f"$retrievalDeleteSec%.3f"},""",
-      s""""retrieval_score_tombstoned_sec":${f"$retrievalScoreTombSec%.3f"},""",
-      s""""retrieval_compact_delete_sec":${f"$retrievalCompactDelSec%.3f"},""",
-      s""""passage_dedup_sec":${f"$passageSec%.3f"},""",
-      s""""shard_shuffle_sec":${f"$shardSec%.3f"},""",
-      s""""mix_sample_sec":${f"$mixSec%.3f"},""",
-      s""""best_of_cluster_sec":${f"$bestOfSec%.3f"},""",
-      s""""trigram_lm_sec":${f"$trigramSec%.3f"},""",
-      s""""tfidf_sec":${f"$tfidfSec%.3f"},""",
-      s""""bm25_sec":${f"$bm25Sec%.3f"},""",
-      s""""text_knn_sec":${f"$textKnnSec%.3f"},""",
-      s""""corpus_diff_sec":${f"$corpusDiffSec%.3f"},""",
-      s""""dsir_sec":${f"$dsirSec%.3f"},""",
-      s""""quality_lr_train_sec":${f"$qualityLrSec%.3f"},""",
-      s""""fuzzy_link_sec":${f"$fuzzyLinkSec%.3f"},""",
-      s""""cc_incremental_sec":${f"$ccIncrementalSec%.3f"},""",
-      s""""source_pagerank_sec":${f"$sourcePagerankSec%.3f"},""",
-      s""""pagerank_sec":${f"$pagerankSec%.3f"},""",
-      s""""cms_heavy_hitters_sec":${f"$cmsSec%.3f"},""",
-      s""""top_pc_sec":${f"$topPcSec%.3f"},""",
-      s""""kmeans_sec":${f"$kmeansSec%.3f"},""",
-      s""""kmeans_prod_sec":${f"$kmeansProdSec%.3f"},""",
-      s""""semdedup_km_sec":${f"$semdedupKmSec%.3f"},""",
-      s""""curation_pipeline_sec":${f"$curationPipelineSec%.3f"},""",
-      s""""ivfpq_sec":${f"$ivfpqSec%.3f"},""",
-      s""""bpe_encode_sec":${f"$bpeEncodeSec%.3f"},""",
-      s""""fuzzy_decon_sec":${f"$fuzzyDeconSec%.3f"},""",
-      s""""hashing_tf_sec":${f"$hashingTfSec%.3f"},""",
-      s""""quantile_hist_sec":${f"$quantileHistSec%.3f"},""",
-      s""""quality_ensemble_sec":${f"$qualityEnsembleSec%.3f"},""",
-      s""""rollup_incremental_sec":${f"$rollupIncrementalSec%.3f"},""",
-      s""""mmr_sec":${f"$mmrSec%.3f"},""",
-      s""""matryoshka_sec":${f"$matryoshkaSec%.3f"},""",
-      s""""source_overlap_sec":${f"$sourceOverlapSec%.3f"},""",
-      s""""eval_metrics_sec":${f"$evalMetricsSec%.3f"},""",
-      s""""zorder_key_sec":${f"$zorderKeySec%.3f"},""",
-      s""""label_prop_sec":${f"$labelPropSec%.3f"},""",
-      s""""data_card_sec":${f"$dataCardSec%.3f"},""",
-      s""""prf_rm3_sec":${f"$prfRm3Sec%.3f"},""",
-      s""""triangle_count_sec":${f"$triangleSec%.3f"},""",
-      s""""jl_project_sec":${f"$jlProjectSec%.3f"},""",
-      s""""ccnet_buckets_sec":${f"$ccnetSec%.3f"},""",
-      s""""kneser_ney_sec":${f"$kneserNeySec%.3f"},""",
-      s""""zorder_write_sec":${f"$zorderWriteSec%.3f"},""",
-      s""""zorder_prune_frac_x":${f"$zorderPruneX%.3f"},""",
-      s""""zorder_prune_frac_y":${f"$zorderPruneY%.3f"},""",
-      s""""span_dedup_sec":${f"$spanDedupSec%.3f"},""",
-      s""""span_dedup_exact_sec":${f"$spanDedupExactSec%.3f"},""",
-      s""""semdedup_sec":${f"$semdedupSec%.3f"},""",
-      s""""semdedup_cpu_sec":${f"$semdedupCpuSec%.3f"},""",
-      s""""hardneg_sec":${f"$hardnegSec%.3f"},""",
-      s""""semdedup_prod_sec":${f"$semdedupProdSec%.3f"},""",
-      s""""semdedup_prod_cpu_sec":${f"$semdedupProdCpuSec%.3f"},""",
-      s""""hardneg_prod_sec":${f"$hardnegProdSec%.3f"},""",
-      s""""semdedup_prod_ncells":$semdedupProdCells,""",
-      s""""ivf_build_sec":${f"$ivfBuildSec%.3f"},""",
-      s""""ivf_search_sec":${f"$ivfSearchSec%.3f"},""",
-      s""""lsh_index_build_sec":${f"$lshBuildSec%.3f"},""",
-      s""""lsh_index_search_sec":${f"$lshSearchSec%.3f"},""",
-      s""""shard_write_sec":${f"$shardWriteSec%.3f"},""",
-      s""""ivf_recall_est":${f"$ivfRecallEst%.3f"},""",
-      s""""ivf_prod_cells":$ivfProdCells,""",
-      s""""ivf_prod_nprobe":$ivfProdNProbe,""",
-      s""""ivf_prod_recall":${f"$ivfProdRecall%.3f"},""",
-      s""""ivf_prod_search_sec":${f"$ivfProdSearchSec%.3f"},""",
-      s""""ivf_prod_calibrate_sec":${f"$ivfProdCalibSec%.3f"},""",
-      s""""vec_curate_batch_sec":${f"$vecCurateSec%.3f"},""",
-      s""""curate_batch_sec":${f"$curateBatchSec%.3f"},""",
-      s""""curate_survivors_per_sec":${f"$curateSurvPerSec%.1f"},""",
-      s""""curate_stream_batches":$csBatches,""",
-      s""""curate_stream_p50_sec":${f"$csP50%.3f"},""",
-      s""""curate_stream_p95_sec":${f"$csP95%.3f"},""",
-      s""""skew_ingest_rows_per_sec":${skew.ingestRowsPerSec.round},""",
-      s""""skew_dedupe_sec":${skew.dedupeSec},""",
-      s""""skew_dupes_removed":${skew.dedupeDuplicates},""",
-      s""""skew_ingest_slowdown":${ratio(rates.ingestRowsPerSec, skew.ingestRowsPerSec)},""",
-      s""""skew_dedupe_slowdown":${ratio(skew.dedupeSec, rates.dedupeSec)},""",
-      s""""skew_join_q3_sec":${f"${joinSkew.q3Skew}%.3f"},""",
-      s""""skew_join_q3_slowdown":${ratio(joinSkew.q3Skew, joinSkew.q3Uniform)},""",
-      s""""skew_join_wrank_sec":${f"${joinSkew.wrankSkew}%.3f"},""",
-      s""""skew_join_wrank_slowdown":${ratio(joinSkew.wrankSkew, joinSkew.wrankUniform)},""",
-      s""""streaming":{"rows":${stream.rows},"batches":${stream.batches},""",
-      s""""batch_p50_sec":${f"${stream.batchP50Sec}%.3f"},""",
-      s""""batch_p95_sec":${f"${stream.batchP95Sec}%.3f"},""",
-      s""""first_batch_sec":${f"${stream.firstBatchSec}%.3f"},""",
-      s""""steady_p50_sec":${f"${stream.steadyP50Sec}%.3f"},""",
-      s""""steady_p95_sec":${f"${stream.steadyP95Sec}%.3f"},""",
-      s""""rows_per_sec":${stream.rowsPerSec.round},""",
-      s""""dedupe_quiet_sec":${f"${stream.quietDedupeSec}%.3f"},""",
-      s""""dedupe_concurrent_sec":${f"${stream.concurrentDedupeSec}%.3f"},""",
-      s""""dedupe_concurrency_tax":${ratio(stream.concurrentDedupeSec, stream.quietDedupeSec)},""",
-      s""""quiet_runs":${stream.quietRuns},"concurrent_runs":${stream.concurrentRuns},""",
-      s""""dupes_removed":${stream.dupesRemoved},""",
-      s""""saturated_offered_rps":${stream.satOfferedRps.round},""",
-      s""""saturated_p95_sec":${f"${stream.satP95Sec}%.3f"},""",
-      s""""backlog_peak_rows":${stream.satBacklogPeakRows},""",
-      s""""backlog_recovery_sec":${f"${stream.satRecoverySec}%.3f"},""",
-      s""""recovered_p50_sec":${f"${stream.satRecoveredP50Sec}%.3f"},""",
-      s""""saturated_dedupe_runs":${stream.satDedupeRuns},""",
-      s""""environment_suspect":$streamEnvSuspect,""",
-      s""""funnel_rows":${stream.funnelRows},""",
-      s""""funnel_batches":${stream.funnelBatches},""",
-      s""""funnel_p50_sec":${f"${stream.funnelP50Sec}%.3f"},""",
-      s""""funnel_p95_sec":${f"${stream.funnelP95Sec}%.3f"},""",
-      s""""funnel_state_rows":${stream.funnelStateRows},""",
-      s""""funnel_out_rows":${stream.funnelOutRows},""",
-      s""""attribution_rows":${stream.attributionRows},""",
-      s""""attribution_batches":${stream.attributionBatches},""",
-      s""""attribution_p50_sec":${f"${stream.attributionP50Sec}%.3f"},""",
-      s""""attribution_p95_sec":${f"${stream.attributionP95Sec}%.3f"},""",
-      s""""attribution_state_rows":${stream.attributionStateRows},""",
-      s""""attribution_out_rows":${stream.attributionOutRows},""",
-      s""""attribution_parity":${stream.attributionParity}},""",
-      s""""query_cpu_sec_3runs":${jmap(s => f"${s.cpuSec}%.3f")},""",
-      s""""queries":${jmap(_.median.toString)},""",
-      s""""ingest_rows_per_sec":${rates.ingestRowsPerSec.round},""",
-      s""""dedupe_incremental_sec":${rates.dedupeSec},""",
-      s""""dedupe_windowed_sec":${f"${rates.windowedDedupeSec}%.3f"},""",
-      s""""failed_queries":${failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")},""",
-      s""""failed_sections":${failedSections.map("\"" + _ + "\"").mkString("[", ",", "]")},""",
-      s""""failed_count":$failedCount,""",
-      s""""total":$total,"value":$total}""").mkString
-    // Belt and braces: persist the full record where a repo snapshot finds it
-    // even if stdout capture truncates. GRAFT_BENCH_OUT redirects (e.g. an
-    // sf1 scale-evidence run must not clobber the sf0.1 record).
-    try {
-      val out = sys.env.getOrElse("GRAFT_BENCH_OUT", "/root/repo/BENCH_LOCAL.json")
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (json + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-    println(json)
-    // The driver snapshots only the TAIL of stdout (~2 KB) and the full
-    // record above has outgrown it (~6.7 KB by round 12 — `parsed: null` in
-    // every BENCH_rN.json, so the per-query comparison pipeline never had
-    // machine-readable ground truth). Emit a compact summary as the FINAL
-    // JSON line: same metric/value/unit/sf/queries contract, adjudication
-    // fields only, well under the tail window. The full record keeps
-    // printing above and in BENCH_LOCAL.json — nothing is removed.
-    val compact = Seq(
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir",""",
-      s""""cores":${Runtime.getRuntime.availableProcessors},""",
-      s""""queries":${jmap(_.median.toString)},""",
-      s""""query_cpu_sec_3runs":${jmap(s => f"${s.cpuSec}%.3f")},""",
-      s""""failed_queries":${failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")},""",
-      s""""failed_count":$failedCount,""",
-      s""""total":$total,"value":$total}""").mkString
-    println(compact)
-    spark.stop()
-    if (failedCount > 0) {
-      System.err.println(s"[bench] $failedCount suite(s) failed: " +
-        (failedQueries ++ failedSections).mkString(", "))
-      sys.exit(1)
+    Seq(Fmt(c.loadStart, "%.1f"), Fmt(loadAvg, "%.1f"), Fmt(ccUsed, "%.0f"), Fmt(ccMax, "%.0f"),
+      ManagementFactory.getCompilationMXBean.getTotalCompilationTime,
+      c.spark.sparkContext.defaultParallelism, Fmt(Runtime.getRuntime.maxMemory / 1e9, "%.1f"))
+  }
+
+  /** The full run table, in run order. */
+  val sections: Seq[Section] = work :+ env
+
+  /** Fields the runner itself writes: header and failure accounting. */
+  val RecordFields: Seq[String] = Seq("metric", "unit", "sf",
+    "failed_queries", "failed_sections", "failed_count", "total", "value")
+
+  /** Record field order. A capture may keep only the TAIL of the bench
+    * output, so the large per-run diagnostics go FIRST and the adjudication
+    * fields (per-query medians and CPU, pipeline rates, failure accounting,
+    * total) LAST, where a truncated capture still holds them. `prefix.*`
+    * places every recorded field under that prefix, in run order. */
+  val Layout: Seq[String] = Seq("metric", "unit", "sf") ++
+    QueryFields.take(5).map(_ + ".*") ++ Seq(
+    "load_avg_start", "load_avg_end", "code_cache_used_mb", "code_cache_max_mb",
+    "jit_compile_ms", "cores", "heap_max_gb",
+    "ingest_rows", "ingest_cpu_sec", "dedupe_cpu_sec", "dedupe_duplicates_removed",
+    "cc_clusters_sec", "cc_clusters_reliable_sec",
+    "retrieval_index_build_sec", "retrieval_score_sec", "retrieval_delete_sec",
+    "retrieval_score_tombstoned_sec", "retrieval_compact_delete_sec",
+    "passage_dedup_sec", "shard_shuffle_sec", "mix_sample_sec", "best_of_cluster_sec",
+    "trigram_lm_sec", "tfidf_sec", "bm25_sec", "text_knn_sec", "corpus_diff_sec",
+    "dsir_sec", "quality_lr_train_sec", "fuzzy_link_sec", "cc_incremental_sec",
+    "source_pagerank_sec", "pagerank_sec", "cms_heavy_hitters_sec", "top_pc_sec",
+    "kmeans_sec", "kmeans_prod_sec", "semdedup_km_sec", "curation_pipeline_sec",
+    "ivfpq_sec", "bpe_encode_sec", "fuzzy_decon_sec", "hashing_tf_sec",
+    "quantile_hist_sec", "quality_ensemble_sec", "rollup_incremental_sec",
+    "mmr_sec", "matryoshka_sec", "source_overlap_sec", "eval_metrics_sec",
+    "zorder_key_sec", "label_prop_sec", "data_card_sec", "prf_rm3_sec",
+    "triangle_count_sec", "jl_project_sec", "ccnet_buckets_sec", "kneser_ney_sec",
+    "zorder_write_sec", "zorder_prune_frac_x", "zorder_prune_frac_y",
+    "span_dedup_sec", "span_dedup_exact_sec", "semdedup_sec", "semdedup_cpu_sec",
+    "hardneg_sec", "semdedup_prod_sec", "semdedup_prod_cpu_sec", "hardneg_prod_sec",
+    "semdedup_prod_ncells", "ivf_build_sec", "ivf_search_sec",
+    "lsh_index_build_sec", "lsh_index_search_sec", "shard_write_sec", "ivf_recall_est",
+    "ivf_prod_cells", "ivf_prod_nprobe", "ivf_prod_recall", "ivf_prod_search_sec",
+    "ivf_prod_calibrate_sec", "vec_curate_batch_sec",
+    "curate_batch_sec", "curate_survivors_per_sec", "curate_stream_batches",
+    "curate_stream_p50_sec", "curate_stream_p95_sec",
+    "ivf_curve_n", "ivf_curve_cells", "ivf_curve", "retrieval_append_sec",
+    "skew_ingest_rows_per_sec", "skew_dedupe_sec", "skew_dupes_removed",
+    "skew_ingest_slowdown", "skew_dedupe_slowdown",
+    "skew_join_q3_sec", "skew_join_q3_slowdown", "skew_join_wrank_sec",
+    "skew_join_wrank_slowdown",
+    "streaming.*", "query_cpu_sec_3runs.*", "queries.*",
+    "ingest_rows_per_sec", "dedupe_incremental_sec", "dedupe_windowed_sec",
+    "failed_queries", "failed_sections", "failed_count", "total", "value")
+
+  /** The final stdout line: the adjudication fields only, sized for a
+    * ~2 KB stdout tail window (the full record outgrew it by round 12). */
+  val CompactLayout: Seq[String] = Seq("metric", "unit", "sf", "cores", "queries.*",
+    "failed_queries", "failed_count", "total", "value")
+
+  private def places(entry: String, field: String): Boolean =
+    entry == field || (entry.endsWith(".*") && field.startsWith(entry.dropRight(1)))
+
+  /** Everything that would make the record ambiguous: a section name that
+    * repeats or shadows a registry query (`--only` could not tell them
+    * apart), a field declared twice or by the runner too, a field the
+    * layout places zero or several times, a layout field nobody declares. */
+  def tableErrors(table: Seq[Section], layout: Seq[String]): Seq[String] = {
+    val names = table.filterNot(_.isQuery).map(_.name)
+    val declared = table.flatMap(_.fields) ++ RecordFields
+    names.diff(names.distinct).map(n => s"section $n repeats") ++
+      names.filter(Registry.byName.contains).map(n => s"section $n shadows a registry query") ++
+      declared.diff(declared.distinct).map(f => s"field $f declared twice") ++
+      declared.collect { case f if layout.count(places(_, f)) != 1 =>
+        s"field $f placed ${layout.count(places(_, f))} times" } ++
+      layout.filterNot(e => e.endsWith(".*") || declared.contains(e))
+        .map(e => s"layout field $e undeclared")
+  }
+
+  /** Run each section once, in order. A section that throws gets -1 for
+    * every declared field; one that throws or fails its gate is named in
+    * the outcome (queries apart from sections). */
+  def execute(table: Seq[Section], c: Ctx): Outcome = {
+    val failed = Seq.newBuilder[Section]
+    table.foreach { s =>
+      val ok = try {
+        val vs = s.run(c)
+        require(vs.size == s.fields.size, s"${vs.size} values for ${s.fields.size} fields")
+        c.values ++= s.fields.zip(vs)
+        s.gate(c.num) || {
+          System.err.println(s"[bench] GATE FAILED: ${s.name} — " +
+            s.fields.map(f => s"$f=${json(c.values(f))}").mkString(" "))
+          false
+        }
+      } catch { case e: Throwable =>
+        // a swallowed failure would LOWER the reported total: pair the -1
+        // sentinel with a stack trace, a named failure and a nonzero exit
+        System.err.println(s"[bench] SECTION FAILED: ${s.name} — $e")
+        e.printStackTrace()
+        c.values ++= s.fields.map(_ -> -1)
+        false
+      }
+      if (!ok) failed += s
     }
+    val (q, other) = failed.result().partition(_.isQuery)
+    Outcome(VectorMap.from(c.values), q.map(_.name), other.map(_.name))
+  }
+
+  /** The outcome as one JSON object, fields in `layout` order (absent ones
+    * skipped); dotted names become one nested object per prefix. */
+  def render(layout: Seq[String], o: Outcome, sfDir: String): String = {
+    val vals = o.values ++ Seq("metric" -> "total", "unit" -> "sec", "sf" -> sfDir,
+      "failed_queries" -> o.failedQueries, "failed_sections" -> o.failedSections,
+      "failed_count" -> o.failedCount, "total" -> raw(o.total), "value" -> raw(o.total))
+    val ordered = layout.flatMap { e =>
+      if (e.endsWith(".*")) vals.filter { case (k, _) => places(e, k) } else vals.get(e).map(e -> _)
+    }
+    json(ordered.foldLeft(VectorMap.empty[String, Any]) { case (m, (k, v)) =>
+      k.split("\\.", 2) match {
+        case Array(outer, inner) => m.updated(outer,
+          m.getOrElse(outer, VectorMap.empty[String, Any]).asInstanceOf[VectorMap[String, Any]]
+            .updated(inner, v))
+        case _ => m.updated(k, v)
+      }
+    })
+  }
+
+  private def json(v: Any): String = v match {
+    case Fmt(d, p) => if (d.isNaN || d.isInfinite) "-1" else p.formatLocal(Locale.ROOT, d)
+    case d: Double => json(Fmt(d, "%.3f"))
+    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => json(k.toString) + ":" + json(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(json).mkString("[", ",", "]")
+    case x => x.toString
+  }
+
+  /** The sections one run executes: every default section, or exactly the
+    * `--only` names (section names, or registry queries timed like the
+    * headline set), always followed by `env`. */
+  private def select(only: Option[Seq[String]]): Seq[Section] = only match {
+    case None => sections.filterNot(_.onDemand)
+    case Some(names) =>
+      val known = work.map(_.name).toSet
+      val unknown = names.filterNot(n => known(n) || n == env.name || Registry.byName.contains(n))
+      require(unknown.isEmpty, s"--only: unknown ${unknown.mkString(", ")}; sections are " +
+        sections.filterNot(_.isQuery).map(_.name).mkString(", ") + ", or any registry query")
+      work.filter(s => names.contains(s.name)) ++
+        names.filterNot(n => known(n) || n == env.name).map(querySection) :+ env
   }
 }

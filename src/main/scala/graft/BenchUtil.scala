@@ -12,6 +12,12 @@ object BenchUtil {
     if (xs.isEmpty) -1.0
     else xs.sorted.apply(math.min(xs.size - 1, (xs.size * 0.95).toInt))
 
+  /** `f` over a fresh temp dir that is deleted afterwards, thrown or not. */
+  def withTempDir[T](prefix: String)(f: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try f(dir) finally deleteRecursively(new java.io.File(dir))
+  }
+
   def deleteRecursively(f: java.io.File): Unit = {
     // NEVER traverse a symlink: listFiles() resolves links, so recursing
     // through a symlinked directory entry would enumerate — and delete —

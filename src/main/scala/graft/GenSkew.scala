@@ -62,13 +62,11 @@ object GenSkew {
   /** Ingest + incremental dedupe rates over the skewed corpus (same
     * measurement path as the uniform PipelineBench.run). */
   def bench(spark: SparkSession, sfDir: String,
-      listener: TaskMetricsListener = null): PipelineBench.Rates = {
-    val base = java.nio.file.Files.createTempDirectory("graft-skewbench").toString
-    val inDir = s"$base/in"
-    skewedJsonCorpus(spark, sfDir, inDir)
-    try PipelineBench.measure(spark, base, inDir, listener)
-    finally BenchUtil.deleteRecursively(new java.io.File(base))
-  }
+      listener: TaskMetricsListener): PipelineBench.Rates =
+    BenchUtil.withTempDir("graft-skewbench") { base =>
+      skewedJsonCorpus(spark, sfDir, s"$base/in")
+      PipelineBench.measure(spark, base, s"$base/in", listener)
+    }
 
   /** Hot-JOIN-key corpus: ONE customer owns half of all orders — the
     * adversarial shape for the customer⋈orders join and the per-customer
@@ -94,7 +92,6 @@ object GenSkew {
 
   final case class JoinSkew(q3Uniform: Double, q3Skew: Double,
       wrankUniform: Double, wrankSkew: Double)
-  val JoinSkewFailed: JoinSkew = JoinSkew(-1, -1, -1, -1)
 
   /** Skew-vs-uniform wall medians for the two skew-sensitive headline
     * shapes — the broadcast-dim join chain (`q3_shipping`) and the
@@ -102,9 +99,8 @@ object GenSkew {
     * both corpora (one warm + median of 3). AQE's skew handling and the
     * dims staying broadcast must hold the ratio near 1 even though one
     * customer owns half the orders. */
-  def benchJoinSkew(spark: SparkSession, sfDir: String): JoinSkew = {
-    val base = java.nio.file.Files.createTempDirectory("graft-joinskew").toString
-    try {
+  def benchJoinSkew(spark: SparkSession, sfDir: String): JoinSkew =
+    BenchUtil.withTempDir("graft-joinskew") { base =>
       skewedJoinDir(spark, sfDir, base)
       def timed(name: String, dir: String): Double = {
         def once(): Double = {
@@ -121,6 +117,5 @@ object GenSkew {
         q3Skew = timed("q3_shipping", base),
         wrankUniform = timed("q_window_rank", sfDir),
         wrankSkew = timed("q_window_rank", base))
-    } finally BenchUtil.deleteRecursively(new java.io.File(base))
-  }
+    }
 }

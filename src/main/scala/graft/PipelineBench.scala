@@ -21,8 +21,6 @@ object PipelineBench {
       ingestCpuSec: Double, dedupeCpuSec: Double,
       windowedDedupeSec: Double = -1)
 
-  val FailedRates: Rates = Rates(0, -1, -1, -1, 0, -1, -1)
-
   /** events columns → minimal hedera-shaped JSON payload struct (ns key,
     * nested body, transfer list). Shared by the uniform corpus here and the
     * adversarial-skew corpus (GenSkew). */
@@ -56,21 +54,18 @@ object PipelineBench {
     n
   }
 
-  def run(spark: SparkSession, sfDir: String,
-      listener: TaskMetricsListener = null): Rates = {
-    val base = java.nio.file.Files.createTempDirectory("graft-pipebench").toString
-    val inDir = s"$base/in"
-    jsonCorpus(spark, sfDir, inDir)
-    try measure(spark, base, inDir, listener)
-    finally BenchUtil.deleteRecursively(new java.io.File(base))
-  }
+  def run(spark: SparkSession, sfDir: String, listener: TaskMetricsListener): Rates =
+    BenchUtil.withTempDir("graft-pipebench") { base =>
+      jsonCorpus(spark, sfDir, s"$base/in")
+      measure(spark, base, s"$base/in", listener)
+    }
 
   /** Ingest + one incremental dedupe over a prepared JSONL corpus dir —
     * shared by the uniform run above and the skewed run (GenSkew.bench),
     * so the two rates are measured by identical machinery. */
   private[graft] def measure(spark: SparkSession, base: String, inDir: String,
       listener: TaskMetricsListener): Rates = {
-    def cpuNs: Long = if (listener == null) 0L else listener.settled().cpuNs
+    def cpuNs: Long = listener.settled().cpuNs
 
     val table = new TransactionsTable(spark, s"$base/transactions")
     val errors = new ErrorsTable(spark, s"$base/errors")

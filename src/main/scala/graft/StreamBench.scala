@@ -3,12 +3,49 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
+import graft.Bench.{Fmt, ratio}
 import graft.hedera._
+
+/** The bench's one streaming-progress path (progress events are Structured
+  * Streaming's monitoring contract): while registered, every progress event
+  * of the session's streams adds its input rows, each row-carrying batch
+  * its `triggerExecution` wall, and an event that reports state operators
+  * sets the state-row total. */
+final class ProgressRecorder private extends StreamingQueryListener {
+  private val walls = new ConcurrentLinkedQueue[java.lang.Double]()
+  private val rowsSeen = new AtomicLong(0)
+  private val stateRowsSeen = new AtomicLong(-1)
+  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+  override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+    val p = e.progress
+    if (p.numInputRows > 0) {
+      rowsSeen.addAndGet(p.numInputRows)
+      val d = p.durationMs.get("triggerExecution")
+      if (d != null) walls.add(d.toDouble / 1e3): Unit
+    }
+    val so = p.stateOperators
+    if (so != null && so.nonEmpty) stateRowsSeen.set(so.map(_.numRowsTotal).sum)
+  }
+  def rows: Long = rowsSeen.get()
+  def batchSecs: Seq[Double] = walls.asScala.map(_.doubleValue).toSeq
+  def stateRows: Long = stateRowsSeen.get()
+}
+
+object ProgressRecorder {
+  /** Record the session's streaming progress for the duration of `body`. */
+  def during[T](spark: SparkSession)(body: ProgressRecorder => T): T = {
+    val rec = new ProgressRecorder
+    spark.streams.addListener(rec)
+    try body(rec) finally spark.streams.removeListener(rec)
+  }
+}
 
 /** Streaming-mode measurement of the engine AS DEPLOYED — `EtlApp`'s
   * continuous shape (PubSubToBigQueryPipeline.java:37-56 + the Spring
@@ -16,9 +53,9 @@ import graft.hedera._
   * `Trigger.ProcessingTime` running WHILE the dedupe job fires repeatedly
   * against the same warehouse.
   *
-  * Reported (one record, folded into the Bench JSON):
-  *  - micro-batch latency p50/p95 and count (progress-listener
-  *    `triggerExecution` over batches that carried rows);
+  * Reported (the `streaming` object of the Bench record, [[Fields]]):
+  *  - micro-batch latency p50/p95 and count (`triggerExecution` over
+  *    batches that carried rows);
   *  - sustained ingest rows/s over the whole feed (offered at a fixed
   *    file-drop cadence — arrival is TIME-ORDERED by the consensus key,
   *    the reference's feed shape);
@@ -32,48 +69,36 @@ import graft.hedera._
   *
   * The dedupe window is pinned to 5 event-days per run
   * (`catchupIntervalUs`) — the 30-day test corpus then yields ~6 runs per
-  * phase, enough for a median. The feed cadence derives from a target
-  * offered rate (`GRAFT_STREAM_TARGET_RPS`, default 8000 rows/s — well
-  * inside the measured batch capacity, so latency reflects steady-state
-  * operation, not backlog drain; batch capacity itself is the separate
-  * `ingest_rows_per_sec` measurement).
+  * phase, enough for a median. The feed cadence derives from a fixed
+  * offered rate ([[TargetRps]] — well inside the measured batch capacity,
+  * so latency reflects steady-state operation, not backlog drain; batch
+  * capacity itself is the separate `ingest_rows_per_sec` measurement).
   */
 object StreamBench {
 
-  final case class Stats(
-      rows: Long, batches: Int,
-      batchP50Sec: Double, batchP95Sec: Double, rowsPerSec: Double,
-      quietDedupeSec: Double, concurrentDedupeSec: Double,
-      quietRuns: Int, concurrentRuns: Int, dupesRemoved: Long,
-      satOfferedRps: Double, satP95Sec: Double, satBacklogPeakRows: Long,
-      satRecoverySec: Double, satRecoveredP50Sec: Double, satDedupeRuns: Int,
-      // straggler attribution (VERDICT r5 #7): the stream's FIRST batch
-      // pays whole-stage codegen + state-store init inside its
-      // triggerExecution, so it is a warmup artifact, not a steady-state
-      // latency class. batch_p50/p95 keep including it (round-over-round
-      // comparability); these fields separate it out.
-      firstBatchSec: Double = -1, steadyP50Sec: Double = -1,
-      steadyP95Sec: Double = -1,
-      // streaming funnel (VERDICT r10 #8): the round-10 stateful operator's
-      // deployed shape — batches, latency distribution, state-store rows
-      // (the per-user progress vectors that bound executor memory), and
-      // completed-stage output rows.
-      funnelRows: Long = 0, funnelBatches: Int = 0,
-      funnelP50Sec: Double = -1, funnelP95Sec: Double = -1,
-      funnelStateRows: Long = -1, funnelOutRows: Long = -1,
-      // streaming last-touch attribution (VERDICT r11 #4): the second
-      // stateful operator's deployed shape, plus an IN-RUN parity check —
-      // the streamed per-touch-type conversion counts must equal the batch
-      // q_attribution_last_touch answer over the same events (the feed is
-      // event-time-ordered, where the two agree exactly by the operator's
-      // documented contract).
-      attributionRows: Long = 0, attributionBatches: Int = 0,
-      attributionP50Sec: Double = -1, attributionP95Sec: Double = -1,
-      attributionStateRows: Long = -1, attributionOutRows: Long = -1,
-      attributionParity: Boolean = false)
+  /** The `streaming` object's keys in record order; [[run]] returns their
+    * values in this order. The stream's FIRST batch pays whole-stage
+    * codegen + state-store init inside its triggerExecution, so `first_*`
+    * and `steady_*` separate that warmup artifact from steady state
+    * (VERDICT r5 #7); `batch_*` keep it for round-over-round comparability.
+    * `funnel_*` and `attribution_*` are the stateful operators' deployed
+    * shapes (VERDICT r10 #8, r11 #4). */
+  val Fields: Seq[String] = Seq(
+    "rows", "batches", "batch_p50_sec", "batch_p95_sec",
+    "first_batch_sec", "steady_p50_sec", "steady_p95_sec", "rows_per_sec",
+    "dedupe_quiet_sec", "dedupe_concurrent_sec", "dedupe_concurrency_tax",
+    "quiet_runs", "concurrent_runs", "dupes_removed",
+    "saturated_offered_rps", "saturated_p95_sec", "backlog_peak_rows",
+    "backlog_recovery_sec", "recovered_p50_sec", "saturated_dedupe_runs",
+    "environment_suspect",
+    "funnel_rows", "funnel_batches", "funnel_p50_sec", "funnel_p95_sec",
+    "funnel_state_rows", "funnel_out_rows",
+    "attribution_rows", "attribution_batches", "attribution_p50_sec",
+    "attribution_p95_sec", "attribution_state_rows", "attribution_out_rows",
+    "attribution_parity")
 
-  val Empty: Stats = Stats(0, 0, -1, -1, -1, -1, -1, 0, 0, -1,
-    -1, -1, -1, -1, -1, 0)
+  /** Offered ingest rate of the steady feed, rows/s. */
+  private val TargetRps = 8000L
 
   private val windowCfg =
     Deduplication.Config(catchupIntervalUs = 5L * 86400 * 1000000)
@@ -85,6 +110,59 @@ object StreamBench {
     * measures queue drain — not one giant catch-up batch's wall time. */
   private val IntakeBound = Some(4)
 
+  /** One warehouse under `dir`: table, ingest pipeline, windowed dedupe. */
+  private final class Warehouse(spark: SparkSession, val dir: String) {
+    val table = new TransactionsTable(spark, s"$dir/transactions")
+    val pipe = new IngestPipeline(spark, table,
+      new ErrorsTable(spark, s"$dir/errors"), preDedupe = false)
+    val job = new Deduplication.Job(spark, table,
+      new StateStore(spark, s"$dir/state"), windowCfg)
+    def startStream(feedDir: String): StreamingQuery = pipe.startStream(feedDir,
+      s"$dir/checkpoint", Trigger.ProcessingTime("250 milliseconds"), IntakeBound)
+  }
+
+  /** The dedupe job fired back to back against a live warehouse on a daemon
+    * thread (even a pathological hang must never pin the bench JVM).
+    * Records each work run's (wall, window span) and the duplicates it
+    * removed. A transient failure (e.g. listing races the very first
+    * commit) must not kill the loop — the scheduler's guarded() behaves the
+    * same way (retry next tick from saved state). */
+  private final class ConcurrentDedupe(wh: Warehouse) {
+    private val runs = new ConcurrentLinkedQueue[(Double, Long)]()
+    val removed = new AtomicLong(0)
+    private val stopped = new AtomicBoolean(false)
+    private def pause(): Unit =
+      try Thread.sleep(200) catch { case _: InterruptedException => stopped.set(true) }
+    private val thread = new Thread(() => {
+      while (!stopped.get()) {
+        try {
+          if (!wh.table.exists()) pause() // stream hasn't landed yet
+          else {
+            val t0 = System.nanoTime()
+            val r = wh.job.runIncremental()
+            if (r.windowEndUs > r.windowStartUs) {
+              runs.add(((System.nanoTime() - t0) / 1e9, r.windowEndUs - r.windowStartUs))
+              removed.addAndGet(r.duplicatesRemoved): Unit
+            } else pause() // caught up; wait for more ingest
+          }
+        } catch {
+          case _: InterruptedException => stopped.set(true)
+          case _: Throwable => pause()
+        }
+      }
+    }, "streambench-dedupe")
+    thread.setDaemon(true)
+    def start(): Unit = thread.start()
+    /** Stop the loop; true when the thread really ended. */
+    def stop(): Boolean = {
+      stopped.set(true)
+      thread.join(120000)
+      if (thread.isAlive) thread.interrupt()
+      !thread.isAlive
+    }
+    def walls: Seq[(Double, Long)] = runs.asScala.toSeq
+  }
+
   /** Land `src` in the watched feed dir ATOMICALLY: copy to a dot-prefixed
     * temp name (hidden from the file source) and rename into place. A plain
     * copy straight to the final name races the 250 ms trigger — the source
@@ -94,6 +172,17 @@ object StreamBench {
     val tmp = Paths.get(feedDir, s".$name.tmp")
     Files.copy(src, tmp, StandardCopyOption.REPLACE_EXISTING)
     Files.move(tmp, Paths.get(feedDir, name), StandardCopyOption.ATOMIC_MOVE): Unit
+  }
+
+  /** processAllAvailable has no timeout; a wedged stream must fail the
+    * MEASUREMENT (-1 latency), never hang the unattended bench run — drain
+    * on a daemon watchdog with a hard deadline. True only for a clean drain
+    * (thread done AND no query exception: a FAILED query ends it too). */
+  private def drainWithin(q: StreamingQuery): Boolean = {
+    val d = new Thread(() =>
+      try q.processAllAvailable() catch { case _: Throwable => () }, "streambench-drain")
+    d.setDaemon(true); d.start(); d.join(300000)
+    !d.isAlive && q.exception.isEmpty
   }
 
   /** Median over full-span windows only (see class doc); falls back to all
@@ -123,13 +212,13 @@ object StreamBench {
     (walls.result(), removed)
   }
 
-  def run(spark: SparkSession, sfDir: String): Stats = {
-    val base = Files.createTempDirectory("graft-streambench").toString
-    try runIn(spark, sfDir, base)
-    finally BenchUtil.deleteRecursively(new java.io.File(base))
-  }
+  /** The [[Fields]] values. `batchRowsPerSec` is the measured batch ingest
+    * capacity the saturation phase's environment check compares against. */
+  def run(spark: SparkSession, sfDir: String, batchRowsPerSec: Double): Seq[Any] =
+    BenchUtil.withTempDir("graft-streambench")(runIn(spark, sfDir, _, batchRowsPerSec))
 
-  private def runIn(spark: SparkSession, sfDir: String, base: String): Stats = {
+  private def runIn(spark: SparkSession, sfDir: String, base: String,
+      batchRowsPerSec: Double): Seq[Any] = {
     // Corpus, re-sorted so file order follows the consensus key: a file
     // stream fed in name order then replays the reference's arrival shape
     // (timestamps grow with wall clock; dedupe windows trail ingest).
@@ -147,170 +236,69 @@ object StreamBench {
       .write.text(corpusDir)
     val corpusFiles = new java.io.File(corpusDir).listFiles()
       .filter(f => f.isFile && f.getName.startsWith("part-")).map(_.toPath)
-      .sortBy(_.getFileName.toString)
+      .sortBy(_.getFileName.toString).toSeq
+    val feedMs = math.max(50L, corpusRows / corpusFiles.length * 1000 / TargetRps)
 
     // ---- quiet baseline: same corpus, batch-ingested, same dedupe windows
-    val quiet = s"$base/quiet"
-    val qTable = new TransactionsTable(spark, s"$quiet/transactions")
-    val qPipe = new IngestPipeline(spark, qTable,
-      new ErrorsTable(spark, s"$quiet/errors"), preDedupe = false)
-    qPipe.ingestBatch(corpusDir)
-    val qJob = new Deduplication.Job(spark, qTable,
-      new StateStore(spark, s"$quiet/state"), windowCfg)
-    val (quietWalls, _) = drainDedupe(qJob, maxRuns = 64)
+    val quiet = new Warehouse(spark, s"$base/quiet")
+    quiet.pipe.ingestBatch(corpusDir)
+    val (quietWalls, _) = drainDedupe(quiet.job, maxRuns = 64)
 
     // ---- streaming phase: feed files at a fixed cadence, dedupe concurrently
     val feedDir = s"$base/feed"
     Files.createDirectories(Paths.get(feedDir))
-    val wh = s"$base/stream"
-    val table = new TransactionsTable(spark, s"$wh/transactions")
-    val pipe = new IngestPipeline(spark, table,
-      new ErrorsTable(spark, s"$wh/errors"), preDedupe = false)
-    val job = new Deduplication.Job(spark, table,
-      new StateStore(spark, s"$wh/state"), windowCfg)
-
-    val batchSecs = new ConcurrentLinkedQueue[java.lang.Double]()
-    val rowsSeen = new AtomicLong(0)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.numInputRows > 0) {
-          rowsSeen.addAndGet(p.numInputRows)
-          val d = p.durationMs.get("triggerExecution")
-          if (d != null) batchSecs.add(d.toDouble / 1e3): Unit
+    val wh = new Warehouse(spark, s"$base/stream")
+    val deduper = new ConcurrentDedupe(wh)
+    val (rows, batchWalls, streamSec, deduperEnded) = ProgressRecorder.during(spark) { rec =>
+      val t0 = System.nanoTime()
+      val query = wh.startStream(feedDir)
+      var streamSec = -1.0
+      var ended = false
+      try {
+        deduper.start()
+        // copy (not move): the saturation phase below re-feeds the same corpus
+        corpusFiles.foreach { f =>
+          feedFile(f, feedDir, f.getFileName.toString)
+          Thread.sleep(feedMs)
         }
+        if (drainWithin(query)) streamSec = (System.nanoTime() - t0) / 1e9
+      } finally {
+        // unwind in all paths: a dead query or feeder exception must not
+        // leak the deduper loop or the query into the rest of the bench
+        ended = deduper.stop()
+        try query.stop() catch { case _: Throwable => () }
       }
+      (rec.rows, rec.batchSecs, streamSec, ended)
     }
-
-    val targetRps = sys.env.getOrElse("GRAFT_STREAM_TARGET_RPS", "8000").toLong
-    val feedMs = sys.env.get("GRAFT_STREAM_FEED_MS").map(_.toLong).getOrElse(
-      math.max(50L, corpusRows / corpusFiles.length * 1000 / targetRps))
-    val stop = new AtomicBoolean(false)
-    val concWalls = new ConcurrentLinkedQueue[(java.lang.Double, java.lang.Long)]()
-    val concRemoved = new AtomicLong(0)
-    val deduper = new Thread(() => {
-      while (!stop.get()) {
-        try {
-          if (!table.exists()) Thread.sleep(200) // stream hasn't landed yet
-          else {
-            val t0 = System.nanoTime()
-            val r = job.runIncremental()
-            if (r.windowEndUs > r.windowStartUs) {
-              concWalls.add(((System.nanoTime() - t0) / 1e9,
-                r.windowEndUs - r.windowStartUs))
-              concRemoved.addAndGet(r.duplicatesRemoved): Unit
-            } else Thread.sleep(200) // caught up; wait for more ingest
-          }
-        } catch {
-          case _: InterruptedException => stop.set(true)
-          // a transient failure (e.g. listing races the very first commit)
-          // must not kill the loop — the scheduler's guarded() behaves the
-          // same way (retry next tick from saved state)
-          case _: Throwable => try Thread.sleep(200) catch
-            { case _: InterruptedException => stop.set(true) }
-        }
-      }
-    }, "streambench-dedupe")
-    // Daemon: even a pathological hang here must never pin the bench JVM.
-    deduper.setDaemon(true)
-
-    spark.streams.addListener(listener)
-    val t0 = System.nanoTime()
-    val query = pipe.startStream(feedDir, s"$wh/checkpoint",
-      Trigger.ProcessingTime("250 milliseconds"), IntakeBound)
-    var streamSec = -1.0
-    try {
-      deduper.start()
-      // copy (not move): the saturation phase below re-feeds the same corpus
-      corpusFiles.foreach { f =>
-        feedFile(f, feedDir, f.getFileName.toString)
-        Thread.sleep(feedMs)
-      }
-      // processAllAvailable has no timeout; a wedged stream must fail the
-      // MEASUREMENT (Stats with -1 latency), never hang the unattended
-      // bench run — drain on a daemon watchdog with a hard deadline.
-      val drainer = new Thread(() =>
-        try query.processAllAvailable() catch { case _: Throwable => () },
-        "streambench-drain")
-      drainer.setDaemon(true)
-      drainer.start()
-      drainer.join(300000)
-      // a FAILED query also ends the drain instantly — only a clean drain
-      // (thread done AND no query exception) counts as a measurement
-      if (!drainer.isAlive && query.exception.isEmpty)
-        streamSec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      // Unwind in all paths (a dead query or feeder exception must not leak
-      // the deduper loop, the query, or the listener into the rest of the
-      // bench run).
-      stop.set(true)
-      try query.stop() catch { case _: Throwable => () }
-      deduper.join(120000)
-      if (deduper.isAlive) deduper.interrupt()
-      spark.streams.removeListener(listener)
-    }
-    // Drain the windows the concurrent loop did not reach, so dupesRemoved
+    // Drain the windows the concurrent loop did not reach, so dupes_removed
     // is comparable to the quiet run's total — but never concurrently with
     // a deduper that outlived its join timeout (shared StateStore/stage).
-    val (_, tailRemoved) =
-      if (deduper.isAlive) (Nil, 0L) else drainDedupe(job, maxRuns = 64)
+    val tailRemoved = if (deduperEnded) drainDedupe(wh.job, maxRuns = 64)._2 else 0L
+    val conc = deduper.walls
+    val quietSec = fullSpanMedian(quietWalls)
+    val concSec = fullSpanMedian(conc)
 
-    // ---- saturation phase: offered rate >> batch capacity. The whole
-    // corpus is dropped at once on a FRESH warehouse (offered rate = disk
-    // speed, far past the measured ~60k rows/s batch capacity) with the
-    // dedupe loop running concurrently throughout — the catch-up regime the
-    // reference's 6 h probe interval exists for. Measured: the offered
-    // burst rate, micro-batch p95 under saturation, the peak row backlog
-    // actually accumulated, wall time to absorb it, whether any dedupe run
-    // got through during the burst, and — after the offered rate drops back
-    // to the steady cadence — the post-burst batch median (latency
-    // recovery).
-    val satStats = saturationPhase(spark, base, corpusFiles, corpusRows, feedMs)
+    // ---- saturation phase: offered rate >> batch capacity (see below)
+    val saturated = saturationPhase(spark, base, corpusFiles, corpusRows, feedMs, batchRowsPerSec)
 
-    // ---- streaming funnel phase: the stateful flatMapGroupsWithState
-    // operator measured as deployed (VERDICT r10 #8)
-    val fun = try funnelPhase(spark, sfDir, base)
-    catch { case e: Throwable =>
-      System.err.println(s"[streambench] funnel phase failed: $e")
-      e.printStackTrace(); (0L, 0, -1.0, -1.0, -1L, -1L)
-    }
+    // ---- stateful operators as deployed; a failed phase reports empty
+    // values, which the streaming section's gate turns into a failure
+    def phase(name: String, empty: Seq[Any])(body: => Seq[Any]): Seq[Any] =
+      try body catch { case e: Throwable =>
+        System.err.println(s"[streambench] $name phase failed: $e")
+        e.printStackTrace(); empty
+      }
+    val funnel = phase("funnel", Seq[Any](0L, 0, -1.0, -1.0, -1L, -1L))(
+      funnelPhase(spark, sfDir, base))
+    val attribution = phase("attribution", Seq(0L, 0, -1.0, -1.0, -1L, -1L, false))(
+      attributionPhase(spark, sfDir, base))
 
-    // ---- streaming attribution phase: lastTouchAttribution as deployed,
-    // with batch-parity asserted inside the run (VERDICT r11 #4)
-    val attr = try attributionPhase(spark, sfDir, base)
-    catch { case e: Throwable =>
-      System.err.println(s"[streambench] attribution phase failed: $e")
-      e.printStackTrace(); (0L, 0, -1.0, -1.0, -1L, -1L, false)
-    }
-
-    import scala.jdk.CollectionConverters._
-    val batchWalls = batchSecs.asScala.map(_.doubleValue).toSeq
-    val conc = concWalls.asScala
-      .map(p => (p._1.doubleValue, p._2.longValue)).toSeq
-    Stats(
-      rows = rowsSeen.get(), batches = batchWalls.size,
-      batchP50Sec = BenchUtil.median(batchWalls),
-      batchP95Sec = BenchUtil.p95(batchWalls),
-      rowsPerSec = if (streamSec > 0) rowsSeen.get() / streamSec else -1,
-      quietDedupeSec = fullSpanMedian(quietWalls),
-      concurrentDedupeSec = fullSpanMedian(conc),
-      quietRuns = quietWalls.size, concurrentRuns = conc.size,
-      dupesRemoved = concRemoved.get() + tailRemoved,
-      satOfferedRps = satStats._1, satP95Sec = satStats._2,
-      satBacklogPeakRows = satStats._3, satRecoverySec = satStats._4,
-      satRecoveredP50Sec = satStats._5, satDedupeRuns = satStats._6,
-      firstBatchSec = batchWalls.headOption.getOrElse(-1.0),
-      steadyP50Sec = BenchUtil.median(batchWalls.drop(1)),
-      steadyP95Sec = BenchUtil.p95(batchWalls.drop(1)),
-      funnelRows = fun._1, funnelBatches = fun._2,
-      funnelP50Sec = fun._3, funnelP95Sec = fun._4,
-      funnelStateRows = fun._5, funnelOutRows = fun._6,
-      attributionRows = attr._1, attributionBatches = attr._2,
-      attributionP50Sec = attr._3, attributionP95Sec = attr._4,
-      attributionStateRows = attr._5, attributionOutRows = attr._6,
-      attributionParity = attr._7)
+    Seq(rows, batchWalls.size, BenchUtil.median(batchWalls), BenchUtil.p95(batchWalls),
+      batchWalls.headOption.getOrElse(-1.0), BenchUtil.median(batchWalls.drop(1)),
+      BenchUtil.p95(batchWalls.drop(1)), Fmt(if (streamSec > 0) rows / streamSec else -1, "%.0f"),
+      quietSec, concSec, ratio(concSec, quietSec),
+      quietWalls.size, conc.size, deduper.removed.get() + tailRemoved) ++
+      saturated ++ funnel ++ attribution
   }
 
   /** FileStreamSource orders files by MODIFICATION TIME, not name — and
@@ -329,55 +317,18 @@ object StreamBench {
     }
   }
 
-  /** Deployed shape of `StreamOps.lastTouchAttribution` (the r11 stateful
-    * operator): the events corpus replayed in event-time order as a
-    * bounded file stream against a real checkpoint and a parquet sink.
-    * Reported like the funnel phase, PLUS an in-run parity assertion: the
-    * streamed conversions aggregated by touch type must equal the batch
-    * `q_attribution_last_touch` answer over the same corpus (in-order
-    * delivery is exactly where the operator's contract promises batch
-    * equivalence — a silent drift here is a correctness regression, not a
-    * latency one). Returns (rows, batches, p50, p95, stateRows, outRows,
-    * parity). */
-  private def attributionPhase(spark: SparkSession, sfDir: String,
-      base: String): (Long, Int, Double, Double, Long, Long, Boolean) = {
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val feed = s"$base/attrfeed"
-    graft.Tables.load(spark, sfDir, "events")
-      .select(col("user_id").as("userId"), expr("ts div 1000").as("tsUs"),
-        col("event_id").as("eventId"), col("event_type").as("eventType"))
-      .repartitionByRange(12, col("tsUs"), col("eventId"))
-      .sortWithinPartitions(col("tsUs"), col("eventId"))
-      .write.parquet(feed)
+  /** Replay the event-time-ordered `feed` as a bounded file stream — one
+    * file per micro-batch — through `op` into a parquet sink against a real
+    * checkpoint under `dir`. Returns (rows, batches, p50, p95, state rows,
+    * sink rows) and the sink. */
+  private def replay(spark: SparkSession, feed: String, schema: String, dir: String)(
+      op: DataFrame => Dataset[_]): (Seq[Any], DataFrame) = {
     staggerFeedMtimes(feed)
-    val batchSecs = new ConcurrentLinkedQueue[java.lang.Double]()
-    val rowsSeen = new AtomicLong(0)
-    val stateRows = new AtomicLong(-1)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.numInputRows > 0) {
-          rowsSeen.addAndGet(p.numInputRows)
-          val d = p.durationMs.get("triggerExecution")
-          if (d != null) batchSecs.add(d.toDouble / 1e3): Unit
-        }
-        val so = p.stateOperators
-        if (so != null && so.nonEmpty) stateRows.set(so.map(_.numRowsTotal).sum)
-      }
-    }
-    spark.streams.addListener(listener)
-    try {
-      val src = spark.readStream
-        .schema("userId LONG, tsUs LONG, eventId LONG, eventType STRING")
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-        .as[StreamOps.TouchEvent]
-      val out = StreamOps.lastTouchAttribution(src, "purchase", 604800000000L)
-      val q = out.writeStream.format("parquet")
-        .option("path", s"$base/attrout")
-        .option("checkpointLocation", s"$base/attrckpt")
+    ProgressRecorder.during(spark) { rec =>
+      val q = op(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(feed))
+        .writeStream.format("parquet")
+        .option("path", s"$dir/out")
+        .option("checkpointLocation", s"$dir/ckpt")
         .outputMode("append")
         .trigger(Trigger.AvailableNow()).start()
       try {
@@ -386,187 +337,120 @@ object StreamBench {
         if (q.exception.isDefined) throw q.exception.get
       } finally { try q.stop() catch { case _: Throwable => () } }
       Thread.sleep(500) // listener delivery is async; let the tail land
-      import scala.jdk.CollectionConverters._
-      val walls = batchSecs.asScala.map(_.doubleValue).toSeq
-      val streamed = spark.read.parquet(s"$base/attrout")
-      val outRows = streamed.count()
-      val streamAgg = streamed.groupBy(col("touchType"))
-        .agg(count(lit(1)).as("n"))
-        .as[(String, Long)].collect().toMap
-      val batchAgg = graft.queries.Registry.byName("q_attribution_last_touch")
-        .build(spark, sfDir)
-        .as[(String, Long)].collect().toMap
-      val parity = streamAgg == batchAgg && streamAgg.nonEmpty
-      if (!parity)
-        System.err.println(s"[streambench] attribution parity MISMATCH: " +
-          s"stream=$streamAgg batch=$batchAgg")
-      (rowsSeen.get(), walls.size, BenchUtil.median(walls),
-        BenchUtil.p95(walls), stateRows.get(), outRows, parity)
-    } finally spark.streams.removeListener(listener)
+      val walls = rec.batchSecs
+      val sink = spark.read.parquet(s"$dir/out")
+      (Seq[Any](rec.rows, walls.size, BenchUtil.median(walls), BenchUtil.p95(walls),
+        rec.stateRows, sink.count()), sink)
+    }
   }
 
   /** Deployed shape of `StreamOps.funnel` (the round-10 stateful operator):
-    * the events corpus replayed in event-time order as a bounded file
-    * stream — one file per micro-batch against a real checkpoint and a
-    * parquet sink. Reported: rows fed, batch count, per-batch latency
-    * p50/p95 (`triggerExecution` over row-carrying batches), state-store
-    * rows after the drain (one FunnelProgress per user — the number that
-    * bounds executor state memory at scale), and completed-stage output
-    * rows. Returns (rows, batches, p50, p95, stateRows, outRows). */
-  private def funnelPhase(spark: SparkSession, sfDir: String,
-      base: String): (Long, Int, Double, Double, Long, Long) = {
+    * the events corpus replayed in event-time order. The state rows (one
+    * FunnelProgress per user) bound executor state memory at scale; the
+    * sink rows are completed stages. */
+  private def funnelPhase(spark: SparkSession, sfDir: String, base: String): Seq[Any] = {
     import spark.implicits._
     import graft.streaming.StreamOps
     val feed = s"$base/funnelfeed"
-    // event-time-ordered replay: range-partition on the µs key so each
-    // FILE covers one time range (same discipline as the ingest corpus)
-    graft.Tables.load(spark, sfDir, "events")
+    // range-partition on the µs key so each FILE covers one time range
+    // (same discipline as the ingest corpus)
+    Tables.load(spark, sfDir, "events")
       .select(col("user_id").as("userId"), expr("ts div 1000").as("tsUs"),
         col("event_type").as("eventType"))
       .repartitionByRange(12, col("tsUs")).sortWithinPartitions(col("tsUs"))
       .write.parquet(feed)
-    staggerFeedMtimes(feed)
-    val batchSecs = new ConcurrentLinkedQueue[java.lang.Double]()
-    val rowsSeen = new AtomicLong(0)
-    val stateRows = new AtomicLong(-1)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.numInputRows > 0) {
-          rowsSeen.addAndGet(p.numInputRows)
-          val d = p.durationMs.get("triggerExecution")
-          if (d != null) batchSecs.add(d.toDouble / 1e3): Unit
-        }
-        val so = p.stateOperators
-        if (so != null && so.nonEmpty) stateRows.set(so.map(_.numRowsTotal).sum)
-      }
-    }
-    spark.streams.addListener(listener)
-    try {
-      val src = spark.readStream
-        .schema("userId LONG, tsUs LONG, eventType STRING")
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-        .as[StreamOps.FunnelEvent]
-      val out = StreamOps.funnel(src,
+    replay(spark, feed, "userId LONG, tsUs LONG, eventType STRING", s"$base/funnel") { df =>
+      StreamOps.funnel(df.as[StreamOps.FunnelEvent],
         Seq("signup", "view", "click", "purchase"), 86400000000L)
-      val q = out.writeStream.format("parquet")
-        .option("path", s"$base/funnelout")
-        .option("checkpointLocation", s"$base/funnelckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try {
-        q.awaitTermination(300000)
-        if (q.isActive) q.stop()
-        if (q.exception.isDefined) throw q.exception.get
-      } finally { try q.stop() catch { case _: Throwable => () } }
-      Thread.sleep(500) // listener delivery is async; let the tail land
-      import scala.jdk.CollectionConverters._
-      val walls = batchSecs.asScala.map(_.doubleValue).toSeq
-      val outRows = spark.read.parquet(s"$base/funnelout").count()
-      (rowsSeen.get(), walls.size, BenchUtil.median(walls),
-        BenchUtil.p95(walls), stateRows.get(), outRows)
-    } finally spark.streams.removeListener(listener)
+    }._1
   }
 
-  /** See the call-site comment in [[runIn]]. Returns (offeredRps, p95 under
-    * saturation, peak backlog rows, backlog recovery sec, post-burst steady
-    * p50, dedupe runs during the phase). */
+  /** Deployed shape of `StreamOps.lastTouchAttribution` (the r11 stateful
+    * operator), reported like the funnel PLUS an in-run parity value: the
+    * streamed conversions by touch type must equal the batch
+    * `q_attribution_last_touch` answer over the same corpus (in-order
+    * delivery is exactly where the operator's contract promises batch
+    * equivalence — a silent drift here is a correctness regression). */
+  private def attributionPhase(spark: SparkSession, sfDir: String, base: String): Seq[Any] = {
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    val feed = s"$base/attrfeed"
+    Tables.load(spark, sfDir, "events")
+      .select(col("user_id").as("userId"), expr("ts div 1000").as("tsUs"),
+        col("event_id").as("eventId"), col("event_type").as("eventType"))
+      .repartitionByRange(12, col("tsUs"), col("eventId"))
+      .sortWithinPartitions(col("tsUs"), col("eventId"))
+      .write.parquet(feed)
+    val (stats, streamed) = replay(spark, feed,
+        "userId LONG, tsUs LONG, eventId LONG, eventType STRING", s"$base/attr") { df =>
+      StreamOps.lastTouchAttribution(df.as[StreamOps.TouchEvent], "purchase", 604800000000L)
+    }
+    val streamAgg = streamed.groupBy(col("touchType"))
+      .agg(count(lit(1)).as("n"))
+      .as[(String, Long)].collect().toMap
+    val batchAgg = graft.queries.Registry.byName("q_attribution_last_touch")
+      .build(spark, sfDir)
+      .as[(String, Long)].collect().toMap
+    val parity = streamAgg == batchAgg && streamAgg.nonEmpty
+    if (!parity)
+      System.err.println(s"[streambench] attribution parity MISMATCH: " +
+        s"stream=$streamAgg batch=$batchAgg")
+    stats :+ parity
+  }
+
+  /** Saturation: offered rate >> batch capacity. The whole corpus is
+    * dropped at once on a FRESH warehouse (offered rate = disk speed, far
+    * past the measured batch capacity) with the dedupe loop running
+    * concurrently throughout — the catch-up regime the reference's 6 h
+    * probe interval exists for. Returns the offered burst rate, micro-batch
+    * p95 under saturation, the peak row backlog actually accumulated, wall
+    * time to absorb it, the post-burst batch median once the offered rate
+    * drops back to the steady cadence (latency recovery), the dedupe runs
+    * that got through, and `environment_suspect`: the feed writer measures
+    * pure host IO on unchanged code, orders of magnitude above batch
+    * capacity on a healthy host (r9: 5.58M vs 46.8k ≈ 119×; the r10
+    * collapse rode it to 0.47×), so under 20× capacity every absolute
+    * latency here is disk-episode-contaminated (VERDICT r10 #1). */
   private def saturationPhase(spark: SparkSession, base: String,
-      corpusFiles: Seq[java.nio.file.Path], corpusRows: Long,
-      feedMs: Long): (Double, Double, Long, Double, Double, Int) = {
+      corpusFiles: Seq[java.nio.file.Path], corpusRows: Long, feedMs: Long,
+      batchRowsPerSec: Double): Seq[Any] = {
     val satFeed = s"$base/satfeed"
     Files.createDirectories(Paths.get(satFeed))
-    val wh = s"$base/sat"
-    val table = new TransactionsTable(spark, s"$wh/transactions")
-    val pipe = new IngestPipeline(spark, table,
-      new ErrorsTable(spark, s"$wh/errors"), preDedupe = false)
-    val job = new Deduplication.Job(spark, table,
-      new StateStore(spark, s"$wh/state"), windowCfg)
-
-    val batchSecs = new ConcurrentLinkedQueue[java.lang.Double]()
-    val rowsSeen = new AtomicLong(0)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.numInputRows > 0) {
-          rowsSeen.addAndGet(p.numInputRows)
-          val d = p.durationMs.get("triggerExecution")
-          if (d != null) batchSecs.add(d.toDouble / 1e3): Unit
-        }
-      }
-    }
-    val stop = new AtomicBoolean(false)
-    val runs = new AtomicLong(0)
-    val deduper = new Thread(() => {
-      while (!stop.get()) {
-        try {
-          if (!table.exists()) Thread.sleep(200)
-          else {
-            val r = job.runIncremental()
-            if (r.windowEndUs > r.windowStartUs) runs.incrementAndGet(): Unit
-            else Thread.sleep(200)
-          }
-        } catch {
-          case _: InterruptedException => stop.set(true)
-          case _: Throwable => try Thread.sleep(200) catch
-            { case _: InterruptedException => stop.set(true) }
-        }
-      }
-    }, "streambench-sat-dedupe")
-    deduper.setDaemon(true)
-
+    val wh = new Warehouse(spark, s"$base/sat")
+    val deduper = new ConcurrentDedupe(wh)
     var offered = -1.0; var satP95 = -1.0; var peak = -1L
     var recovery = -1.0; var recoveredP50 = -1.0
-    // A wedged stream must fail the measurement, never hang the bench: both
-    // drains run on daemon watchdogs with hard deadlines.
-    def drainWithDeadline(q: org.apache.spark.sql.streaming.StreamingQuery): Boolean = {
-      val d = new Thread(() =>
-        try q.processAllAvailable() catch { case _: Throwable => () },
-        "streambench-sat-drain")
-      d.setDaemon(true); d.start(); d.join(300000)
-      !d.isAlive && q.exception.isEmpty
-    }
-    spark.streams.addListener(listener)
-    val query = pipe.startStream(satFeed, s"$wh/checkpoint",
-      Trigger.ProcessingTime("250 milliseconds"), IntakeBound)
-    try {
-      deduper.start()
-      val t0 = System.nanoTime()
-      corpusFiles.foreach(f => feedFile(f, satFeed, f.getFileName.toString))
-      val dropSec = (System.nanoTime() - t0) / 1e9
-      offered = corpusRows / math.max(dropSec, 1e-9)
-      // backlog at the instant the offer ended: everything not yet processed
-      peak = corpusRows - rowsSeen.get()
-      if (drainWithDeadline(query)) {
-        recovery = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // listener delivery is async; let the tail land
-        import scala.jdk.CollectionConverters._
-        val burst = batchSecs.asScala.map(_.doubleValue).toSeq
-        satP95 = BenchUtil.p95(burst)
-        // offered rate back at the steady cadence (fresh names — the file
-        // source skips already-seen paths); the post-burst median shows
-        // whether latency actually recovered
-        corpusFiles.take(8).foreach { f =>
-          feedFile(f, satFeed, "tail-" + f.getFileName.toString)
-          Thread.sleep(feedMs)
+    ProgressRecorder.during(spark) { rec =>
+      val query = wh.startStream(satFeed)
+      try {
+        deduper.start()
+        val t0 = System.nanoTime()
+        corpusFiles.foreach(f => feedFile(f, satFeed, f.getFileName.toString))
+        offered = corpusRows / math.max((System.nanoTime() - t0) / 1e9, 1e-9)
+        // backlog at the instant the offer ended: everything not yet processed
+        peak = corpusRows - rec.rows
+        if (drainWithin(query)) {
+          recovery = (System.nanoTime() - t0) / 1e9
+          Thread.sleep(500) // listener delivery is async; let the tail land
+          val burst = rec.batchSecs
+          satP95 = BenchUtil.p95(burst)
+          // back at the steady cadence (fresh names — the file source
+          // skips already-seen paths)
+          corpusFiles.take(8).foreach { f =>
+            feedFile(f, satFeed, "tail-" + f.getFileName.toString)
+            Thread.sleep(feedMs)
+          }
+          if (drainWithin(query)) {
+            Thread.sleep(500)
+            recoveredP50 = BenchUtil.median(rec.batchSecs.drop(burst.size))
+          }
         }
-        if (drainWithDeadline(query)) {
-          Thread.sleep(500)
-          val all = batchSecs.asScala.map(_.doubleValue).toSeq
-          recoveredP50 = BenchUtil.median(all.drop(burst.size))
-        }
+      } finally {
+        deduper.stop()
+        try query.stop() catch { case _: Throwable => () }
       }
-    } finally {
-      stop.set(true)
-      try query.stop() catch { case _: Throwable => () }
-      deduper.join(120000)
-      if (deduper.isAlive) deduper.interrupt()
-      spark.streams.removeListener(listener)
     }
-    (offered, satP95, peak, recovery, recoveredP50, runs.get().toInt)
+    Seq(Fmt(offered, "%.0f"), satP95, peak, recovery, recoveredP50, deduper.walls.size,
+      offered >= 0 && batchRowsPerSec > 0 && offered < 20.0 * batchRowsPerSec)
   }
 }

@@ -37,6 +37,20 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
+  /** Fixed-count rounds checkpoint every 4th round instead of every round
+    * (r13): no action runs between rounds, so each skipped eager
+    * checkpoint removes one scheduler round-trip and one block-store write
+    * of the rank frame. The interval is deliberately SMALL — an interleaved
+    * A/B on the bench's own 10-round graph (`pagerank_sec`'s input)
+    * measured per-round 4.03 s / every-2 3.15 / every-4 2.88 / every-5
+    * 2.99 / fully-lazy 6.22 (medians): past a few unmaterialized rounds,
+    * Catalyst re-optimization over the growing join tree and AQE stage
+    * re-planning cost more on the driver than the checkpoints cost on the
+    * executors. The convergence-driven variant keeps its per-round
+    * checkpoint: it needs a per-round ACTION to read the delta metric
+    * anyway. */
+  private val MaterializeEvery = 4
+
   /** `(node, rank_e9)` for every row of `nodes` after `iterations` power
     * iterations over the weighted directed `edges`. Nodes absent from
     * `edges` keep the base rank 0.15e9 after the first iteration; edge
@@ -45,25 +59,11 @@ object PageRank {
     * honored as ordinary edges; `w` must be positive. */
   def ranks(nodes: DataFrame, nodeCol: String,
       edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-      iterations: Int = 10, materializeEvery: Int = 4): DataFrame = {
+      iterations: Int = 10): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(materializeEvery >= 1,
-      s"materializeEvery must be >= 1, got $materializeEvery")
     val (e, ranks) = prepare(nodes, nodeCol, edges, srcCol, dstCol, wCol)
-    // Fixed-count rounds checkpoint every `materializeEvery` rounds instead
-    // of every round (r13): no action runs between rounds, so each skipped
-    // eager checkpoint removes one scheduler round-trip and one block-store
-    // write of the rank frame. The interval is deliberately SMALL — the
-    // graft.PageRankAB interleaved A/B on the bench's own 10-round graph
-    // measured per-round 4.03 s / every-2 3.15 / every-4 2.88 / every-5
-    // 2.99 / fully-lazy 6.22 (medians): past a few unmaterialized rounds,
-    // Catalyst re-optimization over the growing join tree and AQE stage
-    // re-planning cost more on the driver than the checkpoints cost on the
-    // executors. The convergence-driven variant
-    // keeps its per-round checkpoint: it needs a per-round ACTION to read
-    // the delta metric anyway.
     (1 to iterations).foldLeft(ranks)((r, i) =>
-      step(e, r, materialize = i % materializeEvery == 0 || i == iterations)._1)
+      step(e, r, materialize = i % MaterializeEvery == 0 || i == iterations)._1)
   }
 
   /** [[ranks]] with CONVERGENCE-driven termination instead of a fixed
