@@ -590,8 +590,7 @@ object Bench {
       }
     },
     // Append-path cost: build on the even doc ids, then ONE appendDocs of
-    // the odd half (GRAFT_RINDEX_TIMING=1 attributes the wall to the
-    // subtable steps: append:tf / dlen / df / ndocs / ntokens).
+    // the odd half.
     Section("retrievalappend", Seq("retrieval_append_sec"), onDemand = true) { c =>
       import graft.retrieval.RetrievalIndex
       withTempDir("graft-rapp") { dir =>

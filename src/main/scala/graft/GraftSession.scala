@@ -44,7 +44,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.sql.parquet.compression.codec", sys.env.getOrElse("GRAFT_PARQUET_CODEC", "snappy"))
+      .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
 
   /** Local session sized for this machine; `cpus` doubles as the shuffle

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.{FileLease, SwapDir}
+import graft.util.{FileLease, Fs, SwapDir}
 
 /** Persisted, incrementally-maintained connected-component labels — the
   * cluster-membership LIFECYCLE that completes the dedup-index story: the
@@ -49,24 +49,14 @@ import graft.util.{FileLease, SwapDir}
   */
 object IncrementalClusters {
 
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readOr(spark: SparkSession, dir: String, sub: String,
-      schema: String): DataFrame = {
-    val f = fs(spark, dir)
-    val p = SwapDir.readPath(f, new Path(dir, sub))
-    if (f.exists(p)) spark.read.parquet(p.toString)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-  }
+  /** Compact once `labels/` or `remap/` holds more data files than this. */
+  private val CompactThreshold = 64
 
   private def labelsRaw(spark: SparkSession, dir: String): DataFrame =
-    readOr(spark, dir, "labels", "id BIGINT, label BIGINT")
+    SwapDir.read(spark, s"$dir/labels", Some("id BIGINT, label BIGINT"))
 
   private def remapRaw(spark: SparkSession, dir: String): DataFrame =
-    readOr(spark, dir, "remap", "old_label BIGINT, label BIGINT")
+    SwapDir.read(spark, s"$dir/remap", Some("old_label BIGINT, label BIGINT"))
 
   /** Fully-resolved merge map `(old_label, final_label)` for every label
     * that was ever superseded — min-reachability over the remap chains. */
@@ -105,9 +95,8 @@ object IncrementalClusters {
     * adopted as a new id). Runs under the ledger's [[FileLease]]. */
   def addBatch(spark: SparkSession, dir: String,
       vertices: DataFrame, idCol: String,
-      edges: DataFrame, aCol: String, bCol: String,
-      compactThreshold: Int = 64): Unit = {
-    val f = fs(spark, dir)
+      edges: DataFrame, aCol: String, bCol: String): Unit = {
+    val f = Fs.of(spark, dir)
     f.mkdirs(new Path(dir))
     new FileLease(dir).withLease(f) {
       val verts = vertices.select(col(idCol).cast("long").as("id")).distinct()
@@ -163,22 +152,18 @@ object IncrementalClusters {
           .parquet(new Path(dir, "labels").toString)
 
       val needCompact =
-        SwapDir.fileCount(f, new Path(dir, "remap")) > compactThreshold ||
-          SwapDir.fileCount(f, new Path(dir, "labels")) > compactThreshold
+        SwapDir.fileCount(f, new Path(dir, "remap")) > CompactThreshold ||
+          SwapDir.fileCount(f, new Path(dir, "labels")) > CompactThreshold
       if (needCompact) compactUnlocked(spark, dir)
     }
   }
 
   /** Fold the resolved remap into `labels/` and reset `remap/`. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    new FileLease(dir).withLease(f) {
-      compactUnlocked(spark, dir)
-    }
-  }
+  def compact(spark: SparkSession, dir: String): Unit =
+    new FileLease(dir).withLease(Fs.of(spark, dir)) { compactUnlocked(spark, dir) }
 
   private def compactUnlocked(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     val par = math.max(1, spark.sparkContext.defaultParallelism / 4)
     val flat = labels(spark, dir)
       .select(col("id"), col("cluster_id").as("label"))

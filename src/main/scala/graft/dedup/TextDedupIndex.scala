@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.fingerprint
-import graft.util.{FileLease, SwapDir}
+import graft.util.{BatchLedger, FileLease, Fs, SwapDir, Tombstones}
 
 /** Persisted MinHash-LSH dedup index — the operator LIFECYCLE for
   * incremental corpus curation, mirroring [[graft.similarity.IvfIndex]]'s
@@ -78,18 +78,6 @@ object TextDedupIndex {
 
   import TextDedup.MinHashConfig
 
-  /** One lease client per mutating call (fresh holder id — the lease file
-    * under `dir` is what serializes across processes and threads alike). */
-  private def leaseFor(dir: String) = new FileLease(dir)
-
-  /** Compaction threshold: rewrite a subtable once it holds more than this
-    * many data files. 8 appends' worth of splinter files (each append
-    * writes ≤ `defaultParallelism`) bounds both the rewrite amortization
-    * (one compaction per ~8 appends) and the worst-case open cost a search
-    * pays between compactions. */
-  private def maxIndexFiles(spark: SparkSession): Int =
-    8 * spark.sparkContext.defaultParallelism
-
   /** Shingle-less predicate by TOKEN COUNT (< shingleK tokens ⟺ empty
     * shingle set) — no hashing, so the short-doc passes stay cheap scans.
     * Null text coalesces to "" so null-text docs take the exact-fingerprint
@@ -103,39 +91,10 @@ object TextDedupIndex {
   private def shortFp(textCol: String) =
     fingerprint(coalesce(col(textCol), lit(""))).as("fp")
 
-  /** Reader-side subtable resolution: the live dir, or its backup when a
-    * crash between a [[SwapDir]] swap's renames left only the backup.
-    * Readers never repair (that is the leased writer's job on its next
-    * mutation) — they just read the surviving complete state. */
-  private def readSub(spark: SparkSession, dir: String, sub: String): DataFrame = {
-    val (f, live) = hadoopFs(spark, s"$dir/$sub")
-    spark.read.parquet(SwapDir.readPath(f, live).toString)
-  }
-
-  /** Committed tombstoned doc ids ([[deleteDocs]]); absent table reads as
-    * the empty set with zero FS cost beyond one exists(). */
-  private def readTombs(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val (fs, p) = hadoopFs(spark, s"$dir/tomb")
-    if (!fs.exists(p)) None
-    else Some(spark.read.schema("doc_id LONG").parquet(p.toString))
-  }
-
-  /** Tombstone sets past this row count stop broadcasting and trigger
-    * immediate compaction from [[deleteDocs]] — the RetrievalIndex cap. */
-  private val MaxTombBroadcast = 2000000L
-
-  /** `df` minus tombstoned ids — no-op for an index that has never seen a
-    * delete. The set is bounded between compactions by contract, but the
-    * bound is PROBED (bounded `limit(cap+1).count()`), not assumed: one
-    * large right-to-be-forgotten batch degrades the anti-join to
-    * shuffle-hash instead of exceeding the broadcast limit. */
-  private def minusTombs(spark: SparkSession, dir: String, df: DataFrame): DataFrame =
-    readTombs(spark, dir).fold(df) { tb =>
-      val oversized =
-        tb.limit(MaxTombBroadcast.toInt + 1).count() > MaxTombBroadcast
-      if (oversized) df.join(tb.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-      else df.join(broadcast(tb), Seq("doc_id"), "left_anti")
-    }
+  /** Tombstoned doc ids ([[deleteDocs]]). Every search and curation path
+    * anti-joins them out of the indexed side. */
+  private def tombs(spark: SparkSession, dir: String) =
+    new Tombstones(spark, dir, "doc_id")
 
   /** Tombstone-delete indexed documents — right-to-be-forgotten for the
     * standing dedup index, the [[graft.retrieval.RetrievalIndex.deleteDocs]]
@@ -151,28 +110,18 @@ object TextDedupIndex {
     * short re-crawl, never surface content. */
   def deleteDocs(ids: DataFrame, dir: String, idCol: String): Unit = {
     val spark = ids.sparkSession
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
-      ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-        .write.mode("append").parquet(s"$dir/tomb")
-      // enforce "bounded between compactions": a delete wave past the
-      // broadcast cap applies physically NOW (and clears the set) instead
-      // of taxing every subsequent search with an oversized anti-join
-      if (readTombs(spark, dir).exists(
-          _.limit(MaxTombBroadcast.toInt + 1).count() > MaxTombBroadcast))
-        compactUnlocked(spark, dir, maxIndexFiles(spark))
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
+      // a delete wave past the broadcast cap applies physically NOW (and
+      // clears the set) instead of taxing every later search
+      if (tombs(spark, dir).append(ids, idCol))
+        compactUnlocked(spark, dir, SwapDir.maxFiles(spark))
     }
   }
 
   /** The indexed short-doc fingerprints; an index persisted before the
     * shortfp table existed reads as empty instead of failing. */
-  private def readShortFp(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val (fs, p) = hadoopFs(spark, s"$dir/shortfp")
-    val resolved = SwapDir.readPath(fs, p)
-    if (fs.exists(resolved)) spark.read.parquet(resolved.toString)
-    else Seq.empty[String].toDF("fp")
-  }
+  private def readShortFp(spark: SparkSession, dir: String): DataFrame =
+    SwapDir.read(spark, s"$dir/shortfp", Some("fp STRING"))
 
   /** Band rows of `sigs`, hash-partitioned by band_key and materialized
     * ONCE (executor block storage, truncated lineage): the bands write and
@@ -200,16 +149,10 @@ object TextDedupIndex {
       cfg: MinHashConfig = MinHashConfig()): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
-      // a rebuild replaces the index: tombstones from the previous
-      // generation must not anti-join the new one (a reused/re-added id
-      // would silently read as not-indexed, and the next compact() would
-      // physically delete its legitimate rows)
-      locally {
-        val (tf, tp) = hadoopFs(spark, s"$dir/tomb")
-        if (tf.exists(tp)) tf.delete(tp, true): Unit
-      }
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
+      // a rebuild replaces the index: the previous generation's
+      // tombstones must not touch the new one
+      tombs(spark, dir).clear()
       TextDedup.signatures(corpus, idCol, textCol, cfg)
         .filter(size(col("sh")) > 0)
         .write.mode("overwrite").parquet(s"$dir/sets")
@@ -219,12 +162,10 @@ object TextDedupIndex {
         .write.mode("overwrite").parquet(s"$dir/bands")
       // census from the SAME partitioned frame — no bands re-read, no
       // second exchange (build-time equivalent of refreshCounts)
-      locally {
-        val (cf, clive) = hadoopFs(spark, s"$dir/counts")
-        SwapDir.swapIn(cf, clive) { tmp =>
-          banded.groupBy(col("band_key")).agg(count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(tmp)
-        }
+      val (cf, clive) = Fs(spark, s"$dir/counts")
+      SwapDir.swapIn(cf, clive) { tmp =>
+        banded.groupBy(col("band_key")).agg(count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(tmp)
       }
       corpus.filter(noShingles(textCol, cfg))
         .select(shortFp(textCol)).distinct()
@@ -246,9 +187,9 @@ object TextDedupIndex {
     * xxhash64 family, string for the portable one — the census preserves
     * whichever type the index uses. */
   private def refreshCounts(spark: SparkSession, dir: String): Unit = {
-    val (f, live) = hadoopFs(spark, s"$dir/counts")
+    val (f, live) = Fs(spark, s"$dir/counts")
     SwapDir.swapIn(f, live) { tmp =>
-      readSub(spark, dir, "bands")
+      SwapDir.read(spark, s"$dir/bands")
         .groupBy(col("band_key")).agg(count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(tmp)
     }
@@ -310,7 +251,7 @@ object TextDedupIndex {
     // (broadcast semi-join — the batch key set is batch-bounded), then sum
     // the surviving deltas, so the census read stays O(touched buckets)
     // regardless of how many appends have accumulated since compaction.
-    val corpusCounts = readSub(spark, dir, "counts")
+    val corpusCounts = SwapDir.read(spark, s"$dir/counts")
       .join(broadcast(newCounts.select(col("band_key"))), Seq("band_key"), "left_semi")
       .groupBy(col("band_key")).agg(sum(col("n")).as("n"))
     val hot = newCounts
@@ -319,14 +260,14 @@ object TextDedupIndex {
       .select(col("band_key"))
     // tombstoned docs drop at the band side (cheapest: pre-join); the sets
     // join is inner on corpus_id, so their signature rows can never rejoin
-    val corpusBands = minusTombs(spark, dir, readSub(spark, dir, "bands"))
+    val corpusBands = tombs(spark, dir).minus(SwapDir.read(spark, s"$dir/bands"))
       .join(broadcast(hot), Seq("band_key"), "left_anti")
     val cand = newBands.join(broadcast(hot), Seq("band_key"), "left_anti")
       .withColumnRenamed("doc_id", "new_id")
       .join(corpusBands.withColumnRenamed("doc_id", "corpus_id"), Seq("band_key"))
       .select(col("new_id"), col("corpus_id"))
       .distinct()
-    val corpusSets = readSub(spark, dir, "sets").select(col("doc_id"), col("sh"))
+    val corpusSets = SwapDir.read(spark, s"$dir/sets").select(col("doc_id"), col("sh"))
     cand
       .join(newSets.withColumnRenamed("doc_id", "new_id")
         .withColumnRenamed("sh", "sh_new"), "new_id")
@@ -349,8 +290,7 @@ object TextDedupIndex {
     * write-order analysis. */
   def appendDocs(newDocs: DataFrame, dir: String, idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): Unit = {
-    val (f, _) = hadoopFs(newDocs.sparkSession, dir)
-    leaseFor(dir).withLease(f) {
+    new FileLease(dir).withLease(Fs.of(newDocs.sparkSession, dir)) {
       appendDocsUnlocked(newDocs, dir, idCol, textCol, cfg)
     }
   }
@@ -378,8 +318,7 @@ object TextDedupIndex {
       idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): Unit = {
     val spark = batch.sparkSession
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
       val b = batch.localCheckpoint()
       // one signing per batch (r12) — intra pairs, the index search and
       // the append all read the same materialized frame
@@ -491,12 +430,10 @@ object TextDedupIndex {
     // the delta's groupBy rides its partitioning exchange-free. The delta
     // still LEADS the bands append (the lock-free-reader ordering above).
     val banded = bandedOnce(sigs, cfg)
-    locally {
-      val (cf, clive) = hadoopFs(spark, s"$dir/counts")
-      SwapDir.recover(cf, clive) // crash mid-compaction must not orphan history
-      banded.groupBy(col("band_key")).agg(count(lit(1)).as("n"))
-        .write.mode("append").parquet(clive.toString)
-    }
+    val (cf, clive) = Fs(spark, s"$dir/counts")
+    SwapDir.recover(cf, clive) // crash mid-compaction must not orphan history
+    banded.groupBy(col("band_key")).agg(count(lit(1)).as("n"))
+      .write.mode("append").parquet(clive.toString)
     banded.sortWithinPartitions(col("band_key"))
       .write.mode("append").parquet(s"$dir/bands")
     sigs.write.mode("append").parquet(s"$dir/sets")
@@ -504,7 +441,7 @@ object TextDedupIndex {
       .select(shortFp(textCol)).distinct()
       .join(readShortFp(spark, dir), Seq("fp"), "left_anti")
       .write.mode("append").parquet(s"$dir/shortfp")
-    compactUnlocked(spark, dir, maxIndexFiles(spark))
+    compactUnlocked(spark, dir, SwapDir.maxFiles(spark))
   }
 
   /** Compact any index subtable whose data-file count exceeds `maxFiles`
@@ -517,46 +454,34 @@ object TextDedupIndex {
     * re-clustered (bands re-sorted by band_key so row-group skipping
     * survives; shortfp re-distinct'ed, which also collapses any
     * historically duplicated fingerprints). */
-  def compact(spark: SparkSession, dir: String, maxFiles: Int = 0): Unit = {
-    val (f, _) = hadoopFs(spark, dir)
-    val mf = if (maxFiles > 0) maxFiles else maxIndexFiles(spark)
-    leaseFor(dir).withLease(f) { compactUnlocked(spark, dir, mf) }
-  }
+  def compact(spark: SparkSession, dir: String, maxFiles: Int = 0): Unit =
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
+      compactUnlocked(spark, dir, SwapDir.maxFiles(spark, maxFiles))
+    }
 
   private def compactUnlocked(spark: SparkSession, dir: String, maxFiles: Int): Unit = {
     val par = spark.sparkContext.defaultParallelism
+    val tb = tombs(spark, dir)
     // pending deletes force the doc-keyed rewrites regardless of file
     // count — compaction is where tombstones become physical removal
-    val hasTombs = readTombs(spark, dir)
-      .exists(tb => tb.limit(1).count() > 0)
-    def rewrite(sub: String, force: Boolean = false)(
-        arrange: DataFrame => DataFrame): Unit = {
-      val (f, live) = hadoopFs(spark, s"$dir/$sub")
-      if (!force && SwapDir.fileCount(f, SwapDir.readPath(f, live)) <= maxFiles) return
-      SwapDir.swapIn(f, live) { tmp =>
-        arrange(spark.read.parquet(SwapDir.readPath(f, live).toString))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    }
-    rewrite("bands", force = hasTombs)(df =>
-      minusTombs(spark, dir, df).repartition(par, col("band_key"))
+    val hasTombs = tb.pending
+    SwapDir.compact(spark, s"$dir/bands", maxFiles, force = hasTombs)(df =>
+      tb.minus(df).repartition(par, col("band_key"))
         .sortWithinPartitions(col("band_key")))
-    rewrite("sets", force = hasTombs)(df =>
-      minusTombs(spark, dir, df).repartition(par, col("doc_id")))
-    rewrite("shortfp")(_.distinct().repartition(math.max(1, par / 4)))
+    SwapDir.compact(spark, s"$dir/sets", maxFiles, force = hasTombs)(df =>
+      tb.minus(df).repartition(par, col("doc_id")))
+    SwapDir.compact(spark, s"$dir/shortfp", maxFiles)(
+      _.distinct().repartition(math.max(1, par / 4)))
     if (hasTombs) {
       // the census must forget the removed rows too — full rebuild from
       // the now-filtered bands (O(corpus), but compaction already is)
       refreshCounts(spark, dir)
-      // applied: clear the tombstone set (crash before this delete is
-      // benign — rows are already gone, the anti-join no-ops, and the
-      // next compaction clears again)
-      val (tf, tp) = hadoopFs(spark, s"$dir/tomb")
-      tf.delete(tp, true): Unit
+      tb.clear()
     } else {
       // collapse census deltas back to one row per bucket
-      rewrite("counts")(_.groupBy(col("band_key")).agg(sum(col("n")).as("n"))
-        .repartition(math.max(1, par / 4), col("band_key")))
+      SwapDir.compact(spark, s"$dir/counts", maxFiles)(
+        _.groupBy(col("band_key")).agg(sum(col("n")).as("n"))
+          .repartition(math.max(1, par / 4), col("band_key")))
     }
   }
 
@@ -626,11 +551,6 @@ object TextDedupIndex {
     (stage, stagedSigs)
   }
 
-  private def hadoopFs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
   /** One curation step in batch form: intra-batch collapse, drop docs
     * matching the standing index, append survivors to `outDir` AND to the
     * index — the whole read-decide-append cycle under ONE lease hold, so
@@ -642,8 +562,7 @@ object TextDedupIndex {
       textCol: String, cfg: MinHashConfig = MinHashConfig()): Array[Long] = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
       val (stage, stagedSigs) = stageSurvivors(batch, dir, idCol, textCol, cfg)
       val staged = spark.read.parquet(stage)
       staged.write.mode("append").parquet(outDir)
@@ -651,7 +570,7 @@ object TextDedupIndex {
       // the curation API reports survivor ids as longs (the engine's doc-id
       // type); build/searchNew/appendDocs themselves stay id-type agnostic
       val ids = staged.select(col(idCol).cast("long")).as[Long].collect()
-      val (sfs, p) = hadoopFs(spark, stage)
+      val (sfs, p) = Fs(spark, stage)
       sfs.delete(p, true)
       ids
     }
@@ -666,9 +585,9 @@ object TextDedupIndex {
     * synchronously and are unaffected. */
   private def sweepStaging(spark: SparkSession, dir: String,
       checkpointDir: String): Unit = {
-    val (ifs, stagingRoot) = hadoopFs(spark, s"$dir/staging")
+    val (ifs, stagingRoot) = Fs(spark, s"$dir/staging")
     if (!ifs.exists(stagingRoot)) return
-    val (cfs, ledger) = hadoopFs(spark, s"$checkpointDir/graft-curate-ledger")
+    val (cfs, ledger) = Fs(spark, s"$checkpointDir/graft-curate-ledger")
     val referenced: Set[String] =
       if (!cfs.exists(ledger)) Set.empty
       else cfs.listStatus(ledger).toSeq
@@ -683,7 +602,7 @@ object TextDedupIndex {
             else Some(new org.apache.hadoop.fs.Path(txt).getName)
           } catch { case _: java.io.IOException => None }
         }.toSet
-    leaseFor(dir).withLease(ifs) {
+    new FileLease(dir).withLease(ifs) {
       ifs.listStatus(stagingRoot).map(_.getPath)
         .filterNot(p => referenced.contains(p.getName))
         .foreach(p => try { ifs.delete(p, true): Unit }
@@ -737,9 +656,9 @@ object TextDedupIndex {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
-        val (fs, ledger) = hadoopFs(spark, s"$checkpointDir/graft-curate-ledger")
-        val idxMark = new org.apache.hadoop.fs.Path(ledger, f"idx-$id%020d")
-        val outMark = new org.apache.hadoop.fs.Path(ledger, f"out-$id%020d")
+        val (fs, ledger) = Fs(spark, s"$checkpointDir/graft-curate-ledger")
+        val idxMark = new org.apache.hadoop.fs.Path(ledger, BatchLedger.mark("idx-", id))
+        val outMark = new org.apache.hadoop.fs.Path(ledger, BatchLedger.mark("out-", id))
         // the staging dir lives under the INDEX dir, which may be a
         // different filesystem than the checkpoint — always derive the FS
         // from the path being touched
@@ -748,23 +667,9 @@ object TextDedupIndex {
           // the idx-mark alone short-circuits a replay; the out-mark is now
           // redundant — drop it so the ledger stays bounded
           fs.delete(outMark, false)
-          val (sfs, sp) = hadoopFs(spark, stage)
+          val (sfs, sp) = Fs(spark, stage)
           sfs.delete(sp, true)
         }
-        // Batches below `id` have committed their offsets (sequential
-        // delivery) and can never replay: their marks are dead weight.
-        def pruneLedger(): Unit =
-          if (fs.exists(ledger))
-            fs.listStatus(ledger).map(_.getPath).foreach { p =>
-              val n = p.getName
-              val digits = n.stripPrefix("idx-").stripPrefix("out-")
-                .stripSuffix(".tmp")
-              if ((n.startsWith("idx-") || n.startsWith("out-"))
-                  && digits.nonEmpty && digits.forall(_.isDigit)
-                  && digits.toLong < id)
-                try { fs.delete(p, false): Unit }
-                catch { case _: java.io.IOException => () }
-            }
         // Finish the index side from the stage recorded in the out-mark.
         // Returns false — degrading to a full recompute, whose only cost is
         // the documented duplicate-output residue — when the mark is
@@ -779,15 +684,14 @@ object TextDedupIndex {
               finally in.close()
             } catch { case _: java.io.IOException => "" }
           if (stage.isEmpty) return false
-          val (sfs, sp) = hadoopFs(spark, stage)
+          val (sfs, sp) = Fs(spark, stage)
           if (!sfs.exists(sp)) return false
           appendDocsUnlocked(spark.read.parquet(stage), dir, idCol, textCol, cfg)
           markIdx(stage)
           true
         }
-        val (lfs, _) = hadoopFs(spark, dir)
-        leaseFor(dir).withLease(lfs) {
-          pruneLedger()
+        new FileLease(dir).withLease(Fs.of(spark, dir)) {
+          BatchLedger.pruneBelow(fs, ledger, id, "idx-", "out-")
           if (!fs.exists(idxMark) && !replayFromOutMark()) {
             val (stage, stagedSigs) = stageSurvivors(batch, dir, idCol, textCol, cfg)
             spark.read.parquet(stage).write.mode("append").parquet(outDir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.metrics.{Metrics, MetricsRegistry}
+import graft.util.{BatchLedger, Fs}
 
 /** Ingest pipeline: JSON lines → transform → day-partitioned fact table +
   * dead-letter errors table. Batch and Structured Streaming entry points
@@ -169,16 +170,18 @@ final class IngestPipeline(
     * append its rows again. The ledger mark is written AFTER both appends,
     * so the remaining duplicate window is a crash between the last append
     * and the mark — exactly the reference's retried-insert window, repaired
-    * by the periodic dedupe jobs. */
+    * by the periodic dedupe jobs. Once the new mark lands, marks below it
+    * are pruned, so the ledger stays one mark deep (a 1 s trigger would
+    * otherwise leave 86,400 files a day). */
   def writeBatchOnce(raw: DataFrame, batchId: Long, ledgerDir: String): (Long, Long) = {
-    val dir = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mark = new org.apache.hadoop.fs.Path(dir, f"batch-$batchId%020d")
+    val (fs, dir) = Fs(spark, ledgerDir)
+    val mark = new org.apache.hadoop.fs.Path(dir, BatchLedger.mark("batch-", batchId))
     if (fs.exists(mark)) (0L, 0L)
     else {
       val r = writeRouted(raw)
       fs.mkdirs(dir)
       fs.create(mark, true).close()
+      BatchLedger.pruneBelow(fs, dir, batchId, "batch-")
       r
     }
   }

@@ -3,6 +3,7 @@ package graft.hedera
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Fs
 
 /** Parquet table layer for the warehouse: day-partitioned fact table,
   * append-only errors table, tiny crash-safe state table.
@@ -91,8 +92,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
     (df, listing)
   }
 
-  private def fs: FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  private def fs: FileSystem = Fs.of(spark, path)
 
   def exists(): Boolean = fs.exists(new Path(path))
 
@@ -376,8 +376,7 @@ class ErrorsTable(spark: SparkSession, path: String) {
 final class StateStore(spark: SparkSession, path: String) {
   import spark.implicits._
 
-  private def fs: FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  private def fs: FileSystem = Fs.of(spark, path)
   private def live = new Path(path)
   private def bak = new Path(path + ".bak")
 

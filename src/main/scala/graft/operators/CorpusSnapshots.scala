@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.util.FileLease
+import graft.util.{FileLease, Fs}
 
 /** Versioned corpus snapshot STORE — the lifecycle around [[CorpusDiff]]
   * (which diffs two frames the caller already has): commit each
@@ -36,15 +36,12 @@ import graft.util.FileLease
   */
 object CorpusSnapshots {
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def vDir(dir: String, v: Int) = new Path(dir, s"v=$v")
   private def marker(dir: String, v: Int) = new Path(new Path(dir, "commits"), v.toString)
 
   /** Committed version numbers, ascending (markers are the truth). */
   def versions(spark: SparkSession, dir: String): Seq[Int] = {
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     val c = new Path(dir, "commits")
     if (!f.exists(c)) Seq.empty
     else f.listStatus(c).toSeq.flatMap(s => s.getPath.getName.toIntOption).sorted
@@ -58,7 +55,7 @@ object CorpusSnapshots {
     * number it allocates before writing. */
   def commit(df: DataFrame, dir: String): Int = {
     val spark = df.sparkSession
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     f.mkdirs(new Path(dir, "commits"))
     new FileLease(dir).withLease(f) {
       val next = versions(spark, dir).lastOption.getOrElse(0) + 1
@@ -74,7 +71,7 @@ object CorpusSnapshots {
 
   /** Read one committed snapshot (immutable; no lease needed). */
   def read(spark: SparkSession, dir: String, version: Int): DataFrame = {
-    if (!fs(spark, dir).exists(marker(dir, version)))
+    if (!Fs.of(spark, dir).exists(marker(dir, version)))
       throw new IllegalArgumentException(
         s"version $version is not committed under $dir")
     spark.read.parquet(vDir(dir, version).toString)
@@ -91,7 +88,7 @@ object CorpusSnapshots {
     * readable half-version). Returns the dropped version numbers. */
   def retain(spark: SparkSession, dir: String, keepLast: Int): Seq[Int] = {
     require(keepLast >= 1, "keepLast must be >= 1")
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     new FileLease(dir).withLease(f) {
       val vs = versions(spark, dir)
       val drop = vs.dropRight(keepLast)
@@ -106,7 +103,7 @@ object CorpusSnapshots {
   /** Remove data directories whose marker is gone (torn commits, crashed
     * retains). Lease-held; safe to run any time. */
   def sweepOrphans(spark: SparkSession, dir: String): Seq[Int] = {
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     new FileLease(dir).withLease(f) {
       val committed = versions(spark, dir).toSet
       val p = new Path(dir)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.portableHash60
-import graft.util.{FileLease, SwapDir}
+import graft.util.{FileLease, Fs, SwapDir}
 
 /** Count-min sketch over an item stream — frequency estimation whose STATE
   * is a fixed `depth × width` grid of counters no matter how large the
@@ -91,7 +91,7 @@ object CountMinSketch {
       depth: Int = 4, width: Int = 1024,
       compactThreshold: Int = 64): Unit = {
     val spark = items.sparkSession
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     f.mkdirs(new Path(dir))
     new FileLease(dir).withLease(f) {
       sketch(items, itemCol, depth, width)
@@ -110,13 +110,7 @@ object CountMinSketch {
     * feed straight into [[estimate]]. Readers take no lease (any
     * completed prefix of appends is a consistent sketch; mid-compaction
     * they resolve through the swap backup). */
-  def readSketch(spark: SparkSession, dir: String): DataFrame = {
-    val f = fs(spark, dir)
-    val p = SwapDir.readPath(f, new Path(dir, "cells"))
-    spark.read.parquet(p.toString)
+  def readSketch(spark: SparkSession, dir: String): DataFrame =
+    SwapDir.read(spark, s"$dir/cells")
       .groupBy(col("j"), col("b")).agg(sum(col("cnt")).as("cnt"))
-  }
-
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

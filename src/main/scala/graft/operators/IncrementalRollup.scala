@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.util.{FileLease, SwapDir}
+import graft.util.{FileLease, Fs, SwapDir}
 
 /** Incrementally-maintained ADDITIVE aggregate view — materialized-view
   * maintenance for the commutative-monoid case (counts and exact decimal
@@ -45,9 +45,6 @@ object IncrementalRollup {
 
   private val Dec30 = DecimalType(30, 6)
   private val LedgerName = "_batches"
-
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The partial aggregate of one batch: group keys → (n, total). The same
     * expression shape as the one-shot rollup, so partials merge into
@@ -93,7 +90,7 @@ object IncrementalRollup {
       batchId: Long, keys: Seq[String], valueCol: String,
       outFiles: Int = 1): Boolean = {
     val live = statePath(dir)
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     new FileLease(dir).withLease(f) {
       SwapDir.recover(f, live)
       val applied = readLedger(f, live)
@@ -115,10 +112,8 @@ object IncrementalRollup {
     }
   }
 
-  private def stateFrame(spark: SparkSession, dir: String): DataFrame = {
-    val f = fs(spark, dir)
-    spark.read.parquet(SwapDir.readPath(f, statePath(dir)).toString)
-  }
+  private def stateFrame(spark: SparkSession, dir: String): DataFrame =
+    SwapDir.read(spark, statePath(dir).toString)
 
   /** The view, with the value total exposed as the batch query exposes it
     * (decimal → double through the string form — [[RelationalOps

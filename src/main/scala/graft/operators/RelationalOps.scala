@@ -57,6 +57,28 @@ object RelationalOps {
     state.join(broadcast(updates), Seq(key), "left_anti")
       .unionByName(updates)
 
+  /** The default row cap of every guarded broadcast (tombstone sets, query
+    * term/shingle sets, eval n-gram and LM model tables). */
+  val MaxBroadcastRows = 2000000L
+
+  /** Whether `df` holds more than `cap` rows. "This side is small" is an
+    * assumption, not an invariant, so a broadcast is decided by probing.
+    * The probe is BOUNDED: `limit(cap + 1).count()` stops scanning once the
+    * cap overflows, so it never costs more than cap + 1 rows of the input.
+    * A cap past limit()'s Int range falls back to a full count rather than
+    * skipping the guard. Probe a materialized frame, never a lazy
+    * aggregate: the probe would re-run the aggregation. */
+  def exceedsCap(df: DataFrame, cap: Long): Boolean =
+    if (cap < Int.MaxValue - 1) df.limit(cap.toInt + 1).count() > cap
+    else df.count() > cap
+
+  /** The build side of a guarded join: broadcast while small, a
+    * `shuffle_hash` hint past the cap (the frame stays the per-partition
+    * build side and AQE absorbs hot keys). Both branches return the same
+    * rows; only the plan differs. */
+  def guardedBroadcast(df: DataFrame, oversized: Boolean): DataFrame =
+    if (oversized) df.hint("shuffle_hash") else broadcast(df)
+
   /** Replace every row matching `window` with `replacement`, keep the rest —
     * the reference's MERGE ON FALSE ("delete window, insert replacement").
     * Both branches stay scan-native: the NOT(window) filter pushes to the

@@ -182,9 +182,8 @@ object HederaParity {
       (s, dir) => {
         val work = s"${sys.props("java.io.tmpdir")}/graft-rindex-rollup-" +
           java.lang.Integer.toHexString(dir.hashCode)
-        val f = new org.apache.hadoop.fs.Path(work)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        f.delete(new org.apache.hadoop.fs.Path(work), true)
+        val (f, wp) = graft.util.Fs(s, work)
+        f.delete(wp, true)
         val ev = events(s, dir).select(
           date_format(timestamp_micros(tsUs), "yyyy-MM-dd").as("day"),
           col("event_type"), col("value"), col("event_id"))

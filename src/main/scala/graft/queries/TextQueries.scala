@@ -6,6 +6,7 @@ import graft.Tables
 import graft.dedup.TextDedup
 import graft.expressions.MultiPatternHits
 import graft.functions.TextFunctions._
+import graft.operators.RelationalOps
 
 /** Text-analysis / corpus-dedup operators over the `documents` table — the
   * training-data-pipeline extension family. SQL-expressible members carry a
@@ -180,18 +181,11 @@ object TextQueries {
     * (DecontaminationGuardSpec). */
   private[queries] def contaminationCounts(trainG: org.apache.spark.sql.DataFrame,
       evalG: org.apache.spark.sql.DataFrame,
-      maxBroadcastRows: Long = 2000000L): org.apache.spark.sql.DataFrame = {
-    // A cap past limit()'s Int range can't use the bounded probe — fall
-    // back to the full count there rather than silently skipping the guard
-    // (which would broadcast an arbitrarily large eval side).
-    val oversized =
-      if (maxBroadcastRows < Int.MaxValue - 1)
-        evalG.limit(maxBroadcastRows.toInt + 1).count() > maxBroadcastRows
-      else evalG.count() > maxBroadcastRows
-    val ev = if (oversized) evalG.hint("shuffle_hash") else broadcast(evalG)
-    trainG.join(ev, Seq("g"))
+      maxBroadcastRows: Long = RelationalOps.MaxBroadcastRows)
+      : org.apache.spark.sql.DataFrame =
+    trainG.join(RelationalOps.guardedBroadcast(evalG,
+        RelationalOps.exceedsCap(evalG, maxBroadcastRows)), Seq("g"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contaminated"))
-  }
 
   /** Guarded trigram-LM scoring engine (t_trigram_lm's body, extracted so
     * the spec can force the fallback). Input: (doc_id, t) with t lowered
@@ -270,7 +264,7 @@ object TextQueries {
     }
 
   private[queries] def trigramFamiliarity(d: org.apache.spark.sql.DataFrame,
-      maxBroadcastRows: Long = 2000000L,
+      maxBroadcastRows: Long = RelationalOps.MaxBroadcastRows,
       sharedModel: Option[org.apache.spark.sql.DataFrame] = None)
       : org.apache.spark.sql.DataFrame = {
     // Deliberately TWO explode passes and ZERO corpus-sized shuffles: the
@@ -286,8 +280,9 @@ object TextQueries {
       explode(expr("transform(sequence(1, length(t) - 2), i -> substring(t, i, 3))")).as("g"))
     val counts = sharedModel.getOrElse(
       tri.groupBy(col("g")).agg(count(lit(1)).as("c")).localCheckpoint())
-    val oversized = counts.count() > maxBroadcastRows
-    val model = if (oversized) counts.hint("shuffle_hash") else broadcast(counts)
+    // counts is materialized: a full count is near-free, and the bounded
+    // probe's limit would only add jobs
+    val model = RelationalOps.guardedBroadcast(counts, counts.count() > maxBroadcastRows)
     tri.join(model, Seq("g"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_trigrams"), sum(col("c")).as("familiarity"))
@@ -1790,9 +1785,8 @@ object TextQueries {
     Q("t_dup_clusters_incremental",
       (s, dir) => {
         val work = rindexDir("incc", dir)
-        val f = new org.apache.hadoop.fs.Path(work)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        f.delete(new org.apache.hadoop.fs.Path(work), true)
+        val (f, wp) = graft.util.Fs(s, work)
+        f.delete(wp, true)
         val pairs = jaccardPairs(s, dir).select(col("a_id"), col("b_id"))
           .localCheckpoint(true)
         val ids = docs(s, dir).select(col("doc_id"))
@@ -3570,9 +3564,8 @@ object TextQueries {
       (s, dir) => {
         val work = s"${sys.props("java.io.tmpdir")}/graft-rindex-dcard-" +
           java.lang.Integer.toHexString(dir.hashCode)
-        val f = new org.apache.hadoop.fs.Path(work)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        f.delete(new org.apache.hadoop.fs.Path(work), true)
+        val (f, wp) = graft.util.Fs(s, work)
+        f.delete(wp, true)
         val d = docs(s, dir).select(col("source"), col("doc_id"),
           tokenCount(col("text")).as("tok"))
         val keys = Seq("source")
@@ -3600,9 +3593,8 @@ object TextQueries {
       (s, dir) => {
         val work = s"${sys.props("java.io.tmpdir")}/graft-rindex-dcardrel-" +
           java.lang.Integer.toHexString(dir.hashCode)
-        val f = new org.apache.hadoop.fs.Path(work)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        f.delete(new org.apache.hadoop.fs.Path(work), true)
+        val (f, wp) = graft.util.Fs(s, work)
+        f.delete(wp, true)
         val d = docs(s, dir).select(col("source"),
           pmod(col("doc_id"), lit(3)).as("release"),
           col("doc_id"), tokenCount(col("text")).as("tok"))
@@ -3746,7 +3738,8 @@ object TextQueries {
         val cxy = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_xy"))
         val uni = d.select(explode(col("ws")).as("w"))
           .groupBy(col("w")).agg(count(lit(1)).as("c")).localCheckpoint()
-        val u = if (uni.count() > 2000000L) uni.hint("shuffle_hash") else broadcast(uni)
+        val u = RelationalOps.guardedBroadcast(uni,
+          uni.count() > RelationalOps.MaxBroadcastRows)
         val nB = cxy.agg(sum(col("c_xy")).as("n_bigrams"))
         cxy
           .join(u.select(col("w").as("w1"), col("c").as("c1")), Seq("w1"))

@@ -1,11 +1,12 @@
 package graft.retrieval
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.TextFunctions.tokens
-import graft.util.{FileLease, SwapDir}
+import graft.operators.RelationalOps.{MaxBroadcastRows, exceedsCap, guardedBroadcast}
+import graft.util.{FileLease, Fs, SwapDir}
 
 /** Persisted sparse-retrieval statistics index — the TextDedupIndex /
   * IvfIndex lifecycle applied to the TF-IDF/BM25 family, so scoring a
@@ -93,47 +94,45 @@ object RetrievalIndex {
     * reader-side committed set and the partition-dir fan-out). */
   private val MaxCommittedBatches = 8
 
-  private def leaseFor(dir: String) = new FileLease(dir)
-
-  /** Step timer for the scale loop (stderr, only under
-    * GRAFT_RINDEX_TIMING=1): attributes build/compaction wall to the four
-    * subtable writes so a superlinear decade shows WHICH step bent. */
-  private def timed[T](what: String)(f: => T): T =
-    if (!sys.env.contains("GRAFT_RINDEX_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[rindex] $what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-  private def hadoopFs(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
   /** Committed batch ids, resolved through the swap-aware commits path. */
   private def committed(spark: SparkSession, dir: String): Seq[String] = {
-    val (f, live) = hadoopFs(spark, s"$dir/commits")
+    val (f, live) = Fs(spark, s"$dir/commits")
     val p = SwapDir.readPath(f, live)
     if (!f.exists(p)) Seq.empty
     else f.listStatus(p).filter(_.isFile).map(_.getPath.getName).toSeq
       .filterNot(n => n.startsWith(".") || n.startsWith("_")).sorted
   }
 
+  /** Parquet under `path` read with an explicit schema: an absent path (a
+    * subtable not yet written, or a batch whose frame was empty) reads as
+    * an empty typed frame, never a schema-inference failure. */
+  private def readTyped(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val (f, p) = Fs(spark, path)
+    if (f.exists(p)) spark.read.schema(schema).parquet(p.toString)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
+
   /** A subtable restricted to committed batches — the `batch` partition
-    * filter prunes uncommitted/orphan directories before any data read.
-    * Explicit schema: an empty or not-yet-written subtable reads as an
-    * empty typed frame, never a schema-inference failure. */
+    * filter prunes uncommitted/orphan directories before any data read. */
   private def readSub(spark: SparkSession, dir: String, sub: String,
-      batches: Seq[String]): DataFrame = {
-    val (f, p) = hadoopFs(spark, s"$dir/$sub")
-    val base = if (f.exists(p))
-      spark.read.schema(schemas(sub)).parquet(p.toString)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemas(sub))
-    base.filter(col("batch").isin(batches: _*))
-      .drop("batch")
+      batches: Seq[String]): DataFrame =
+    readTyped(spark, s"$dir/$sub", schemas(sub))
+      .filter(col("batch").isin(batches: _*)).drop("batch")
+
+  /** One batch partition of a subtable, without the partition column. */
+  private def readBatch(spark: SparkSession, dir: String, sub: String,
+      batch: String): DataFrame =
+    readTyped(spark, s"$dir/$sub/batch=$batch", StructType(schemas(sub).dropRight(1)))
+
+  /** Make `batch` visible: its marker lands in `commits/` after every
+    * subtable write of the batch. Past the threshold the committed deltas
+    * are compacted in the same lease hold. */
+  private def commitUnlocked(spark: SparkSession, dir: String, batch: String): Unit = {
+    val (cf, clive) = Fs(spark, s"$dir/commits")
+    cf.mkdirs(SwapDir.readPath(cf, clive))
+    cf.create(new Path(SwapDir.readPath(cf, clive), batch), true).close()
+    if (committed(spark, dir).size > MaxCommittedBatches)
+      compactUnlocked(spark, dir)
   }
 
   private def requireMatching(spark: SparkSession, dir: String): Unit = {
@@ -165,7 +164,7 @@ object RetrievalIndex {
   private def appendUnlocked(docs: DataFrame, dir: String, idCol: String,
       textCol: String): Unit = {
     val spark = docs.sparkSession
-    val (f, _) = hadoopFs(spark, dir)
+    val (f, _) = Fs(spark, dir)
     SwapDir.recover(f, new Path(s"$dir/commits")) // crash mid-compaction
     val batch = java.util.UUID.randomUUID().toString
     // Write STRAIGHT INTO the batch's partition directory instead of
@@ -178,23 +177,15 @@ object RetrievalIndex {
     // back identically (RetrievalIndexSpec unchanged).
     def writeSub(sub: String, df: DataFrame): Unit =
       df.write.mode("append").parquet(s"$dir/$sub/batch=$batch")
-    timed("append:tf")(writeSub("tf", tfStream(docs, idCol, textCol)))
+    writeSub("tf", tfStream(docs, idCol, textCol))
     // derive from the written partition: O(batch) columnar read-back,
     // never a second tokenize of the text (an all-empty batch writes no
     // partition dir at all — read back as a typed empty frame)
-    val tfBatch = new Path(s"$dir/tf/batch=$batch")
-    val tfBack =
-      if (f.exists(tfBatch))
-        spark.read.schema(StructType(TfSchema.dropRight(1))).parquet(tfBatch.toString)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(TfSchema.dropRight(1)))
-    timed("append:dlen")(writeSub("dlen",
-      tfBack.groupBy(col("doc_id")).agg(sum(col("tf")).as("n_d"))))
-    timed("append:df")(writeSub("df",
-      tfBack.groupBy(col("term")).agg(count(lit(1)).as("df"))))
+    val tfBack = readBatch(spark, dir, "tf", batch)
+    writeSub("dlen", tfBack.groupBy(col("doc_id")).agg(sum(col("tf")).as("n_d")))
+    writeSub("df", tfBack.groupBy(col("term")).agg(count(lit(1)).as("df")))
     // count(*) over the batch frame prunes every column at the source
-    val nDocs = timed("append:ndocs")(docs.count())
+    val nDocs = docs.count()
     // Σ n_d ≡ Σ tf, but the dlen partition is DOCS-sized (2 longs per doc)
     // where the postings are (docs · distinct terms) — summing the written
     // dlen is the cheaper third read-back. NOTE on the append cost shape
@@ -205,23 +196,11 @@ object RetrievalIndex {
     // batch's own size (a ×10 batch carries ×10 postings), with df/dlen/
     // stats stored as per-batch deltas that readers sum and compaction
     // collapses (the IncrementalRollup pattern).
-    val dlenBatch = new Path(s"$dir/dlen/batch=$batch")
-    val dlenBack =
-      if (f.exists(dlenBatch))
-        spark.read.schema(StructType(DlenSchema.dropRight(1))).parquet(dlenBatch.toString)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(DlenSchema.dropRight(1)))
-    val nTokens = timed("append:ntokens")(
-      dlenBack.agg(coalesce(sum(col("n_d")), lit(0L))).head().getLong(0))
+    val dlenBack = readBatch(spark, dir, "dlen", batch)
+    val nTokens = dlenBack.agg(coalesce(sum(col("n_d")), lit(0L))).head().getLong(0)
     import spark.implicits._
     writeSub("stats", Seq((nDocs, nTokens)).toDF("n_docs", "tot_tokens"))
-    // the batch becomes visible only now
-    val (cf, clive) = hadoopFs(spark, s"$dir/commits")
-    cf.mkdirs(SwapDir.readPath(cf, clive))
-    cf.create(new Path(SwapDir.readPath(cf, clive), batch), true).close()
-    if (committed(spark, dir).size > MaxCommittedBatches)
-      compactUnlocked(spark, dir)
+    commitUnlocked(spark, dir, batch) // the batch becomes visible only now
   }
 
   /** Index `corpus` under `dir`, replacing any previous index. One full
@@ -230,8 +209,8 @@ object RetrievalIndex {
   def build(corpus: DataFrame, idCol: String, textCol: String, dir: String): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (f, root) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
+    val (f, root) = Fs(spark, dir)
+    new FileLease(dir).withLease(f) {
       // tomb included: stale tombstone batches are already invisible once
       // commits/ is wiped, but leaving the dir costs every future read the
       // exists() probe and leaves dead data for compaction to sweep
@@ -252,8 +231,7 @@ object RetrievalIndex {
       textCol: String): Unit = {
     val spark = newDocs.sparkSession
     requireMatching(spark, dir)
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
       appendUnlocked(newDocs, dir, idCol, textCol)
     }
   }
@@ -277,17 +255,13 @@ object RetrievalIndex {
   def deleteDocs(ids: DataFrame, dir: String, idCol: String): Unit = {
     val spark = ids.sparkSession
     requireMatching(spark, dir)
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
+    val (f, _) = Fs(spark, dir)
+    new FileLease(dir).withLease(f) {
       SwapDir.recover(f, new Path(s"$dir/commits"))
       val batch = java.util.UUID.randomUUID().toString
       ids.select(col(idCol).cast("long").as("doc_id")).distinct()
         .write.mode("append").parquet(s"$dir/tomb/batch=$batch")
-      val (cf, clive) = hadoopFs(spark, s"$dir/commits")
-      cf.mkdirs(SwapDir.readPath(cf, clive))
-      cf.create(new Path(SwapDir.readPath(cf, clive), batch), true).close()
-      if (committed(spark, dir).size > MaxCommittedBatches)
-        compactUnlocked(spark, dir)
+      commitUnlocked(spark, dir, batch)
     }
   }
 
@@ -297,8 +271,8 @@ object RetrievalIndex {
     * compaction threshold by contract), shuffle-hash past the cap (the
     * correct response to which is compact()). */
   private def minusTombstones(spark: SparkSession, dir: String,
-      live: Seq[String], df: DataFrame, cap: Long = 2000000L): DataFrame = {
-    val (f, p) = hadoopFs(spark, s"$dir/tomb")
+      live: Seq[String], df: DataFrame): DataFrame = {
+    val (f, p) = Fs(spark, s"$dir/tomb")
     if (!f.exists(p)) df
     else {
       // short-circuit on COMMITTED-batch membership before any Spark job:
@@ -312,9 +286,8 @@ object RetrievalIndex {
           liveSet.contains(s.getPath.getName.stripPrefix("batch=")))
       if (!hasLive) return df
       val tb = readSub(spark, dir, "tomb", live)
-      val oversized = tb.limit(cap.toInt + 1).count() > cap
-      if (oversized) df.join(tb.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-      else df.join(broadcast(tb), Seq("doc_id"), "left_anti")
+      df.join(guardedBroadcast(tb, exceedsCap(tb, MaxBroadcastRows)),
+        Seq("doc_id"), "left_anti")
     }
   }
 
@@ -325,19 +298,17 @@ object RetrievalIndex {
     * superseded/orphan partitions deleted (a crash at any point leaves
     * readers a complete committed view — before the swap the old set,
     * after it the collapsed one). */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) { compactUnlocked(spark, dir) }
-  }
+  def compact(spark: SparkSession, dir: String): Unit =
+    new FileLease(dir).withLease(Fs.of(spark, dir)) { compactUnlocked(spark, dir) }
 
   private def compactUnlocked(spark: SparkSession, dir: String): Unit = {
-    val (f, _) = hadoopFs(spark, dir)
+    val (f, _) = Fs(spark, dir)
     val live = committed(spark, dir)
     val base = s"base-${java.util.UUID.randomUUID()}"
     val par = spark.sparkContext.defaultParallelism
     // Same direct-partition-dir discipline as appendUnlocked: the collapsed
     // batch id is a constant, so partitionBy would only buy a corpus-sized
-    // pre-write sort. Writing into `batch=<base>` keeps compact:tf's
+    // pre-write sort. Writing into `batch=<base>` keeps the tf rewrite's
     // repartition+sortWithinPartitions the ONLY postings-sized work here
     // (and that pair is a single hash exchange + per-partition sort — the
     // term clustering the scoring probes pay for once).
@@ -353,16 +324,16 @@ object RetrievalIndex {
     def writeSub(sub: String, df: DataFrame): Unit =
       df.write.mode("append").parquet(s"$dir/$sub/batch=$base")
     val hasTombs = {
-      val (tfs, tp) = hadoopFs(spark, s"$dir/tomb")
+      val (tfs, tp) = Fs(spark, s"$dir/tomb")
       tfs.exists(tp) && readSub(spark, dir, "tomb", live).limit(1).count() > 0
     }
     // tf re-clusters by term: scoring probes are term-keyed, so row-group
     // min/max stats skip unprobed terms after compaction (tombstoned docs
     // are physically dropped here — compactionTfFrame anti-joins them)
-    timed("compact:tf")(writeSub("tf", compactionTfFrame(spark, dir, live)))
-    timed("compact:dlen")(writeSub("dlen",
+    writeSub("tf", compactionTfFrame(spark, dir, live))
+    writeSub("dlen",
       minusTombstones(spark, dir, live, readSub(spark, dir, "dlen", live))
-        .repartition(math.max(1, par / 4), col("doc_id"))))
+        .repartition(math.max(1, par / 4), col("doc_id")))
     if (!hasTombs) {
       writeSub("df", readSub(spark, dir, "df", live)
         .groupBy(col("term")).agg(sum(col("df")).as("df"))
@@ -382,23 +353,17 @@ object RetrievalIndex {
       // with ≥ 1 token — the tokenizer emits a token for every non-null
       // text (split of "" is [""]), so this equals the appended doc count
       // for any real corpus.
-      def readBase(sub: String, schema: StructType): DataFrame = {
-        val bp = new Path(s"$dir/$sub/batch=$base")
-        if (f.exists(bp)) spark.read.schema(schema).parquet(bp.toString)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      }
-      val tfBase = readBase("tf", StructType(TfSchema.dropRight(1)))
+      val tfBase = readBatch(spark, dir, "tf", base)
       writeSub("df", tfBase.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .repartition(math.max(1, par / 4), col("term"))
         .sortWithinPartitions(col("term")))
-      val dlenBase = readBase("dlen", StructType(DlenSchema.dropRight(1)))
+      val dlenBase = readBatch(spark, dir, "dlen", base)
       writeSub("stats", dlenBase
         .agg(count(lit(1)).as("n_docs"),
           coalesce(sum(col("n_d")), lit(0L)).as("tot_tokens"))
         .coalesce(1))
     }
-    val (cf, clive) = hadoopFs(spark, s"$dir/commits")
+    val (cf, clive) = Fs(spark, s"$dir/commits")
     SwapDir.swapIn(cf, clive) { tmp =>
       cf.mkdirs(new Path(tmp))
       cf.create(new Path(tmp, base), true).close()
@@ -410,7 +375,7 @@ object RetrievalIndex {
     // now childless — drop the parent too, restoring the zero-cost
     // "never deleted" read path (one exists() instead of exists + listing)
     locally {
-      val (tf, tp) = hadoopFs(spark, s"$dir/tomb")
+      val (tf, tp) = Fs(spark, s"$dir/tomb")
       try {
         if (tf.exists(tp) && tf.listStatus(tp).forall(s =>
             !(s.isDirectory && s.getPath.getName.startsWith("batch="))))
@@ -489,7 +454,7 @@ object RetrievalIndex {
     * Results identical on both paths (RetrievalIndexSpec). */
   def scoreBm25(spark: SparkSession, dir: String, queryTerms: DataFrame,
       k1: Double = 1.2, b: Double = 0.75,
-      maxBroadcastTerms: Long = 2000000L): DataFrame = {
+      maxBroadcastTerms: Long = MaxBroadcastRows): DataFrame = {
     val qt = queryTerms.select(col("term")).distinct()
     contribs(spark, dir, qt, k1, b, maxBroadcastTerms)
       .groupBy(col("doc_id"))
@@ -506,12 +471,8 @@ object RetrievalIndex {
       k1: Double, b: Double, maxBroadcastTerms: Long): DataFrame = {
     requireMatching(spark, dir)
     val live = committed(spark, dir)
-    val oversized =
-      if (maxBroadcastTerms < Int.MaxValue - 1)
-        qt.limit(maxBroadcastTerms.toInt + 1).count() > maxBroadcastTerms
-      else qt.count() > maxBroadcastTerms
-    def guarded(df: DataFrame): DataFrame =
-      if (oversized) df.hint("shuffle_hash") else broadcast(df)
+    val oversized = exceedsCap(qt, maxBroadcastTerms)
+    def guarded(df: DataFrame): DataFrame = guardedBroadcast(df, oversized)
     // anti-join AFTER the term probe: the tombstone filter runs on the
     // candidate-sized frame, never the full postings
     val tfq = minusTombstones(spark, dir, live,
@@ -550,16 +511,12 @@ object RetrievalIndex {
     * query's terms alone (RetrievalIndexSpec). */
   def searchBm25(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int, k1: Double = 1.2, b: Double = 0.75,
-      maxBroadcastTerms: Long = 2000000L): DataFrame = {
+      maxBroadcastTerms: Long = MaxBroadcastRows): DataFrame = {
     require(k > 0, "k must be positive")
     val q = queries.select(col("query_id"), col("term")).distinct()
     val qt = q.select(col("term")).distinct()
-    val oversized =
-      if (maxBroadcastTerms < Int.MaxValue - 1)
-        q.limit(maxBroadcastTerms.toInt + 1).count() > maxBroadcastTerms
-      else q.count() > maxBroadcastTerms
-    def guarded(df: DataFrame): DataFrame =
-      if (oversized) df.hint("shuffle_hash") else broadcast(df)
+    val oversized = exceedsCap(q, maxBroadcastTerms)
+    def guarded(df: DataFrame): DataFrame = guardedBroadcast(df, oversized)
     val scored = contribs(spark, dir, qt, k1, b, maxBroadcastTerms)
       .join(guarded(q), Seq("term"))
       .groupBy(col("query_id"), col("doc_id"))

@@ -3,6 +3,7 @@ package graft.retrieval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.shingles
+import graft.operators.RelationalOps.{MaxBroadcastRows, exceedsCap, guardedBroadcast}
 
 /** Query-time text similarity search — "find the corpus documents most
   * like each of THESE" (near-dup triage, attribution, retrieval-ish
@@ -51,7 +52,7 @@ object TextSearch {
       corpusIdCol: String = "doc_id", corpusTextCol: String = "text",
       shingleK: Int = 3, maxDf: Int = 100,
       excludeSelf: Boolean = false,
-      maxBroadcastShingles: Long = 2000000L): DataFrame = {
+      maxBroadcastShingles: Long = MaxBroadcastRows): DataFrame = {
     require(k > 0, "k must be positive")
     val sh = corpus.select(col(corpusIdCol).as("cand_id"),
       explode(array_distinct(shingles(col(corpusTextCol), shingleK))).as("s"))
@@ -64,12 +65,8 @@ object TextSearch {
         explode(array_distinct(shingles(col(queryTextCol), shingleK))).as("s"))
       .join(broadcast(hot), Seq("s"), "left_anti")
     // bounded guard probe (see class doc); the scan stops at cap + 1 rows
-    val oversized =
-      if (maxBroadcastShingles < Int.MaxValue - 1)
-        shq.limit(maxBroadcastShingles.toInt + 1).count() > maxBroadcastShingles
-      else shq.count() > maxBroadcastShingles
-    def guarded(df: DataFrame): DataFrame =
-      if (oversized) df.hint("shuffle_hash") else broadcast(df)
+    val oversized = exceedsCap(shq, maxBroadcastShingles)
+    def guarded(df: DataFrame): DataFrame = guardedBroadcast(df, oversized)
     val nq = shq.groupBy(col("query_id")).agg(count(lit(1)).as("nq"))
     val self =
       if (excludeSelf) col("query_id") =!= col("cand_id") else lit(true)

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.expressions.NearestCentroids
+import graft.util.{FileLease, Fs, SwapDir, Tombstones}
 
 /** IVF (inverted-file) approximate nearest-neighbor index — the coarse-
   * quantizer alternative to hyperplane LSH:
@@ -236,46 +237,32 @@ object IvfIndex {
   // maintenance model (retrain only when drift degrades recall, measured —
   // not on every ingest).
 
-  /** One lease client per mutating call — [[graft.util.FileLease]], the
-    * same cross-process writer coordination as the fact table and the LSH
-    * index: a second maintainer process queues instead of interleaving
-    * appends and compactions. Readers never take it. */
-  private def leaseFor(dir: String) = new graft.util.FileLease(dir)
+  // Mutating entry points hold the index's [[FileLease]] (the fact
+  // table's cross-process writer coordination): a second maintainer
+  // process queues instead of interleaving appends and compactions.
+  // Readers never take it.
 
-  /** Compaction threshold for `cells/` — see
-    * [[graft.dedup.TextDedupIndex]]'s identical bound: ~8 appends' worth of
-    * `defaultParallelism`-file batches before one re-clustering rewrite. */
-  private def maxIndexFiles(spark: org.apache.spark.sql.SparkSession): Int =
-    8 * spark.sparkContext.defaultParallelism
+  /** Tombstoned vector ids ([[deleteVectors]]). */
+  private def tombs(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    new Tombstones(spark, dir, "cand_id")
 
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
-  /** Reader-side resolution through a mid-swap backup ([[graft.util.SwapDir]]). */
-  // Every reader resolves cells through here, so the tombstone anti-join
-  // ([[deleteVectors]]) covers search, recall estimation, and the curation
-  // replay guard uniformly — a deleted id reads as "not indexed", which is
-  // exactly what a re-crawl of forgotten content should see.
-  private def readCells(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val (f, live) = hadoopFs(spark, s"$dir/cells")
-    minusTombs(spark, dir,
-      spark.read.parquet(graft.util.SwapDir.readPath(f, live).toString))
-  }
+  /** The inverted file as of its last complete swap, minus tombstones.
+    * Every reader resolves cells through here, so the tombstone anti-join
+    * covers search, recall estimation, and the curation replay guard
+    * uniformly — a deleted id reads as "not indexed", which is exactly
+    * what a re-crawl of forgotten content should see. */
+  private def readCells(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    tombs(spark, dir).minus(SwapDir.read(spark, s"$dir/cells"))
 
   /** Train on `corpus` and persist the index under `dir` (overwrites). */
   def build(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
       cfg: Config = Config()): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
-      // a rebuild REPLACES the index: pending tombstones refer to the old
-      // generation and must not anti-join (or be physically applied
-      // against) the new one — a reused id would otherwise read as
-      // not-indexed until a compaction deleted its legitimate rows
-      clearTombs(spark, dir)
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
+      // a rebuild REPLACES the index: the old generation's tombstones
+      // must not touch the new one
+      tombs(spark, dir).clear()
       val centroids = trainCentroids(corpus, vecCol, cfg)
       centroids.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
@@ -299,9 +286,7 @@ object IvfIndex {
     * batch), it is re-clustered and swapped in the same hold. */
   def appendVectors(newDocs: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
-    val spark = newDocs.sparkSession
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
+    new FileLease(dir).withLease(Fs.of(newDocs.sparkSession, dir)) {
       appendVectorsUnlocked(newDocs, idCol, vecCol, dir)
     }
   }
@@ -316,7 +301,7 @@ object IvfIndex {
       .repartition(spark.sparkContext.defaultParallelism, col("cell"))
       .sortWithinPartitions(col("cell"))
       .write.mode("append").parquet(s"$dir/cells")
-    compactUnlocked(spark, dir, maxIndexFiles(spark))
+    compactUnlocked(spark, dir, SwapDir.maxFiles(spark))
   }
 
   /** Compact `cells/` when its data-file count exceeds `maxFiles` (0 → the
@@ -326,69 +311,22 @@ object IvfIndex {
     * backup by the next leased writer; readers resolve through the backup
     * meanwhile. */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-      maxFiles: Int = 0): Unit = {
-    val (f, _) = hadoopFs(spark, dir)
-    val mf = if (maxFiles > 0) maxFiles else maxIndexFiles(spark)
-    leaseFor(dir).withLease(f) { compactUnlocked(spark, dir, mf) }
-  }
+      maxFiles: Int = 0): Unit =
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
+      compactUnlocked(spark, dir, SwapDir.maxFiles(spark, maxFiles))
+    }
 
   private def compactUnlocked(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxFiles: Int): Unit = {
+    val tb = tombs(spark, dir)
     // pending deletes force the rewrite regardless of file count —
     // compaction is where tombstones become physical removal
-    val hasTombs = readTombs(spark, dir).exists(_.limit(1).count() > 0)
-    val (f, live) = hadoopFs(spark, s"$dir/cells")
-    if (!hasTombs &&
-        graft.util.SwapDir.fileCount(f, graft.util.SwapDir.readPath(f, live)) <= maxFiles)
-      return
-    graft.util.SwapDir.swapIn(f, live) { tmp =>
-      minusTombs(spark, dir,
-          spark.read.parquet(graft.util.SwapDir.readPath(f, live).toString))
-        .repartition(spark.sparkContext.defaultParallelism, col("cell"))
-        .sortWithinPartitions(col("cell"))
-        .write.mode("overwrite").parquet(tmp)
-    }
-    if (hasTombs) {
-      // applied: clear the tombstone set (crash before this delete is
-      // benign — the anti-join no-ops and the next compaction re-clears)
-      clearTombs(spark, dir)
-    }
+    val hasTombs = tb.pending
+    SwapDir.compact(spark, s"$dir/cells", maxFiles, force = hasTombs)(df =>
+      tb.minus(df).repartition(spark.sparkContext.defaultParallelism, col("cell"))
+        .sortWithinPartitions(col("cell")))
+    if (hasTombs) tb.clear()
   }
-
-  private def clearTombs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val (tf, tp) = hadoopFs(spark, s"$dir/tomb")
-    if (tf.exists(tp)) tf.delete(tp, true): Unit
-  }
-
-  /** Committed tombstoned vector ids ([[deleteVectors]]); absent table is
-    * the empty set at the cost of one exists(). */
-  private def readTombs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] = {
-    val (fs, p) = hadoopFs(spark, s"$dir/tomb")
-    if (!fs.exists(p)) None
-    else Some(spark.read.schema("cand_id LONG").parquet(p.toString))
-  }
-
-  /** Tombstone sets past this row count stop broadcasting (executor/driver
-    * memory guard) and trigger immediate compaction from [[deleteVectors]]
-    * — the same cap as RetrievalIndex's minusTombstones. */
-  private val MaxTombBroadcast = 2000000L
-
-  /** `df` minus tombstoned ids (no-op when the index has never seen a
-    * delete). Broadcast anti-join while the set is provably small — the
-    * contract says it is bounded between compactions, but one large
-    * right-to-be-forgotten batch can exceed it, so the bound is PROBED
-    * (bounded `limit(cap+1).count()`), not assumed: past the cap the
-    * anti-join degrades to shuffle-hash instead of OOMing the driver. */
-  private def minusTombs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, df: DataFrame): DataFrame =
-    readTombs(spark, dir).fold(df) { tb =>
-      val oversized =
-        tb.limit(MaxTombBroadcast.toInt + 1).count() > MaxTombBroadcast
-      if (oversized) df.join(tb.hint("shuffle_hash"), Seq("cand_id"), "left_anti")
-      else df.join(broadcast(tb), Seq("cand_id"), "left_anti")
-    }
 
   /** Tombstone-delete indexed vectors — right-to-be-forgotten for the
     * standing ANN index, completing the pattern across all three persisted
@@ -402,16 +340,11 @@ object IvfIndex {
     * quantizer. */
   def deleteVectors(ids: DataFrame, dir: String, idCol: String): Unit = {
     val spark = ids.sparkSession
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
-      ids.select(col(idCol).cast("long").as("cand_id")).distinct()
-        .write.mode("append").parquet(s"$dir/tomb")
-      // enforce "bounded between compactions": a delete wave past the
-      // broadcast cap compacts NOW (physical removal + tomb clear) instead
-      // of taxing every subsequent read with an oversized anti-join
-      if (readTombs(spark, dir).exists(
-          _.limit(MaxTombBroadcast.toInt + 1).count() > MaxTombBroadcast))
-        compactUnlocked(spark, dir, maxIndexFiles(spark))
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
+      // a delete wave past the broadcast cap compacts NOW (physical
+      // removal + tomb clear) instead of taxing every later read
+      if (tombs(spark, dir).append(ids, idCol))
+        compactUnlocked(spark, dir, SwapDir.maxFiles(spark))
     }
   }
 
@@ -439,9 +372,8 @@ object IvfIndex {
   def buildPortable(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nCells: Int = 16): Unit = {
     val spark = corpus.sparkSession
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
-      clearTombs(spark, dir) // same rebuild contract as [[build]]
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
+      tombs(spark, dir).clear() // same rebuild contract as [[build]]
       val seeds = SemDedup.seeds(corpus, idCol, vecCol, nCells).localCheckpoint()
       seeds.coalesce(1).write.mode("overwrite").parquet(s"$dir/seeds")
       writePortableCells(corpus, idCol, vecCol, dir, seeds, "overwrite")
@@ -466,11 +398,10 @@ object IvfIndex {
   def appendVectorsPortable(newDocs: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
     val spark = newDocs.sparkSession
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
       val seeds = spark.read.parquet(s"$dir/seeds").localCheckpoint()
       writePortableCells(newDocs, idCol, vecCol, dir, seeds, "append")
-      compactUnlocked(spark, dir, maxIndexFiles(spark))
+      compactUnlocked(spark, dir, SwapDir.maxFiles(spark))
     }
   }
 
@@ -539,8 +470,7 @@ object IvfIndex {
       simThreshold: Double = 0.95, nProbe: Int = Config().nProbe): Array[Long] = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val (f, _) = hadoopFs(spark, dir)
-    leaseFor(dir).withLease(f) {
+    new FileLease(dir).withLease(Fs.of(spark, dir)) {
       val indexedIds = readCells(spark, dir).select(col("cand_id").as(idCol)).distinct()
       // Replay/re-crawl guard: exact id membership in the inverted file.
       // dropDuplicates FIRST: the same id arriving twice IN one batch (a

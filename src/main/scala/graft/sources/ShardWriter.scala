@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.portableHash60
-import graft.util.{FileLease, SwapDir}
+import graft.util.{FileLease, Fs, SwapDir}
 
 /** The training-corpus terminal sink: write a dataset as N deterministically
   * shuffled shards — the materialized form of the t_shard_shuffle operator.
@@ -48,9 +48,6 @@ object ShardWriter {
 
   private def shardsPath(dir: String) = new Path(dir, "shards")
 
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Shard + order + write + manifest, atomically. Returns the manifest. */
   def write(df: DataFrame, idCol: String, dir: String, nShards: Int,
       salt: String = "shard"): Manifest = {
@@ -65,7 +62,7 @@ object ShardWriter {
     val sharded = df
       .withColumn("__h", portableHash60(concat(lit(s"$salt:"), col(idCol).cast("string"))))
       .withColumn("shard", pmod(col("__h"), lit(nShards.toLong)).cast("int"))
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     val live = shardsPath(dir)
     var manifest: Manifest = null
     new FileLease(dir).withLease(f) {
@@ -165,12 +162,12 @@ object ShardWriter {
 
   /** Every shard; `shard` rides as a column (partition-discovered). */
   def readAll(spark: SparkSession, dir: String): DataFrame = {
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     spark.read.parquet(SwapDir.readPath(f, shardsPath(dir)).toString)
   }
 
   def readManifest(spark: SparkSession, dir: String): Manifest = {
-    val f = fs(spark, dir)
+    val f = Fs.of(spark, dir)
     val p = new Path(SwapDir.readPath(f, shardsPath(dir)), "_manifest.json")
     val in = f.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()

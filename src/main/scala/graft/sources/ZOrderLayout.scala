@@ -134,8 +134,7 @@ object ZOrderLayout {
   def rowGroupRanges(spark: org.apache.spark.sql.SparkSession, dir: String,
       column: String): Seq[(Long, Long)] = {
     import scala.jdk.CollectionConverters._
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, p) = graft.util.Fs(spark, dir)
     fs.listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .flatMap { s =>

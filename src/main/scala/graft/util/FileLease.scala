@@ -1,6 +1,8 @@
 package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Cross-process writer lease on a directory — extracted from the fact
   * table's writer coordination (reference analog: one dedupe job owns the
@@ -194,4 +196,39 @@ object SwapDir {
     if (!f.exists(dir)) 0
     else f.listStatus(dir).count(s => s.isFile &&
       !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+
+  /** Read the subtable at `live` as of its last complete swap (the backup,
+    * mid-swap — see [[readPath]]). An absent subtable reads as an empty
+    * frame of the DDL schema `ifAbsent` when one is given; without one the
+    * read fails as parquet does. */
+  def read(spark: SparkSession, live: String,
+      ifAbsent: Option[String] = None): DataFrame = {
+    val (f, p) = Fs(spark, live)
+    val resolved = readPath(f, p)
+    if (ifAbsent.isEmpty || f.exists(resolved)) spark.read.parquet(resolved.toString)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType.fromDDL(ifAbsent.get))
+  }
+
+  /** The index compaction threshold: a subtable is rewritten once it holds
+    * more than 8 appends' worth of splinter files (each append writes at
+    * most `defaultParallelism`). That bounds both the rewrite amortization
+    * (one compaction per ~8 appends) and the open cost a search pays
+    * between compactions. A positive `requested` overrides it. */
+  def maxFiles(spark: SparkSession, requested: Int = 0): Int =
+    if (requested > 0) requested else 8 * spark.sparkContext.defaultParallelism
+
+  /** The compaction step: when the subtable at `live` holds more than
+    * `maxFiles` data files, or when `force`, rewrite it through [[swapIn]].
+    * `arrange` receives the current rows and returns the frame to write
+    * (the same rows, re-clustered, minus whatever the caller removes). */
+  def compact(spark: SparkSession, live: String, maxFiles: Int,
+      force: Boolean = false)(arrange: DataFrame => DataFrame): Unit = {
+    val (f, p) = Fs(spark, live)
+    if (force || fileCount(f, readPath(f, p)) > maxFiles)
+      swapIn(f, p) { tmp =>
+        arrange(spark.read.parquet(readPath(f, p).toString))
+          .write.mode("overwrite").parquet(tmp)
+      }
+  }
 }

@@ -57,11 +57,34 @@ class StreamingSpec extends AnyFunSuite {
       maxFilesPerTrigger = Some(3))
     q.awaitTermination(120000)
     assert(table.read().count() === 10, "every backlogged row lands exactly once")
-    // the ledger records one mark per committed batch: 10 files at ≤3 per
-    // trigger must have drained as ≥4 bounded batches, not one giant one
+    // 10 files at ≤3 per trigger must have drained as ≥4 bounded batches,
+    // not one giant one
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    assert(batches >= 4, s"expected a bounded multi-batch drain, saw $batches batches")
+  }
+
+  test("the batch-id ledger keeps only the newest mark after a multi-batch drain") {
+    val dir = GraftTestSpark.tmpDir("stream-ledger-prune")
+    val in = s"$dir/in"
+    new java.io.File(in).mkdirs()
+    val ts0 = 1600000000L * 1000000000L
+    (0 until 3).foreach { i =>
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(f"$in/f$i%02d.jsonl"),
+        s"""{"consensusTimestamp":${ts0 + i * 1000000L},"transactionType":14}\n""")
+    }
+    val table = new TransactionsTable(spark, s"$dir/transactions")
+    val pipe = new IngestPipeline(spark, table, new ErrorsTable(spark, s"$dir/errors"))
+    val q = pipe.startStream(in, s"$dir/ckpt", Trigger.AvailableNow(),
+      maxFilesPerTrigger = Some(1))
+    q.awaitTermination(120000)
+    assert(table.read().count() === 3)
+    val withData = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+    assert(withData.length === 3)
+    // batches arrive in order, so every mark below the newest is dead
     val marks = new java.io.File(s"$dir/ckpt/graft-batch-ledger").listFiles()
-      .count(_.getName.startsWith("batch-"))
-    assert(marks >= 4, s"expected a bounded multi-batch drain, saw $marks batches")
+      .map(_.getName).filter(_.startsWith("batch-")).toSeq
+    assert(marks === Seq(f"batch-${withData.max}%020d"))
   }
 
   test("batch-id ledger makes a replayed micro-batch a no-op") {
