@@ -146,8 +146,4 @@ object Tables {
     * amortize one extra pass over the rows when the layout is degenerate. */
   def loadSpread(spark: SparkSession, dir: String, name: String): DataFrame =
     spread(spark, s"$dir/$name.parquet", name, load(spark, dir, name))
-
-  /** Register every table as a temp view (for spark.sql entry points). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

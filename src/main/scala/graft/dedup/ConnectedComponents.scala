@@ -56,6 +56,14 @@ object ConnectedComponents {
     * from the ALREADY-materialized edge checkpoint, so the expensive
     * upstream pair pipeline never runs twice.
     *
+    * `maxIter` bounds the distributed fixpoint's rounds only: past it that
+    * engine throws (non-convergence is an error, never a partial
+    * labeling). The driver fast path has no rounds and ignores `maxIter` —
+    * union-find always finishes, so a graph that would need more than
+    * `maxIter` rounds still gets its complete labeling there. A caller
+    * that relies on the throw must stay off the fast path (set
+    * `checkpointDir`, or pass non-long ids).
+    *
     * `checkpointDir`: when set, per-round lineage truncation uses reliable
     * `checkpoint` into that directory (sets the SparkContext checkpoint dir
     * as a side effect) — survives executor loss, the correct mode under

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.RelationalOps
 import graft.util.{FileLease, Fs, SwapDir}
 
 /** Persisted, incrementally-maintained connected-component labels — the
@@ -49,9 +50,6 @@ import graft.util.{FileLease, Fs, SwapDir}
   */
 object IncrementalClusters {
 
-  /** Compact once `labels/` or `remap/` holds more data files than this. */
-  private val CompactThreshold = 64
-
   private def labelsRaw(spark: SparkSession, dir: String): DataFrame =
     SwapDir.read(spark, s"$dir/labels", Some("id BIGINT, label BIGINT"))
 
@@ -82,11 +80,12 @@ object IncrementalClusters {
   /** The remap table is merge-history-sized and usually tiny, but it is
     * not bounded by a parameter — guard the broadcast like the trigram
     * model: materialize once (the frame just ran a CC fixpoint, so it is
-    * already localCheckpoint-backed in practice), probe the size, and fall
-    * back to a plain shuffle join past the cap. */
-  private def broadcastIfSmall(df: DataFrame, cap: Long = 1000000L): DataFrame = {
+    * already localCheckpoint-backed in practice), probe the size, and
+    * shuffle-hash past [[RelationalOps.MaxBroadcastRows]]. */
+  private def broadcastIfSmall(df: DataFrame): DataFrame = {
     val mat = df.localCheckpoint(true)
-    if (mat.count() <= cap) broadcast(mat) else mat
+    RelationalOps.guardedBroadcast(mat,
+      RelationalOps.exceedsCap(mat, RelationalOps.MaxBroadcastRows))
   }
 
   /** Ingest one batch of vertices + match edges. `vertices` are the
@@ -151,9 +150,10 @@ object IncrementalClusters {
         newLabels.coalesce(1).write.mode("append")
           .parquet(new Path(dir, "labels").toString)
 
+      val maxFiles = SwapDir.maxFiles(spark)
       val needCompact =
-        SwapDir.fileCount(f, new Path(dir, "remap")) > CompactThreshold ||
-          SwapDir.fileCount(f, new Path(dir, "labels")) > CompactThreshold
+        SwapDir.fileCount(f, new Path(dir, "remap")) > maxFiles ||
+          SwapDir.fileCount(f, new Path(dir, "labels")) > maxFiles
       if (needCompact) compactUnlocked(spark, dir)
     }
   }

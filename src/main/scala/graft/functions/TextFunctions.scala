@@ -75,24 +75,11 @@ object TextFunctions {
     "de" -> Seq("der", "die", "das", "und", "ein", "eine", "zu", "von", "mit", "ist")
   )
 
-  /** Stopword-hit count for one language profile. */
-  def stopwordHits(text: Column, words: Seq[String]): Column =
-    size(filter(tokens(lower(text)), w => w.isin(words.map(lit(_)): _*))).cast("long")
-
   /** Argmax over language profiles; ties and all-zero break to "und"
     * (undetermined). Deterministic: profiles are scored in declared order and
-    * a strictly-greater hit count is required to take the lead.
-    *
-    * NOTE: the when-fold DUPLICATES each score subtree (score i appears in
-    * ~2^(langs-i) positions), and interpreted HOF evaluation re-runs every
-    * duplicate — prefer [[withLangGuess]] in hot paths, which stages the
-    * token array and hit counts as bound attributes first.
-    */
-  def langGuess(text: Column): Column = {
-    val scored = stopwordProfiles.map { case (lang, ws) => (lang, stopwordHits(text, ws)) }
-    langArgmax(scored)
-  }
-
+    * a strictly-greater hit count is required to take the lead. The
+    * when-fold duplicates each score subtree, so `scored` must be bound
+    * attribute reads, never token-scan subtrees (see [[withLangGuess]]). */
   private def langArgmax(scored: Seq[(String, Column)]): Column =
     scored.foldLeft((lit("und"), lit(0L))) { case ((bl, bs), (lang, s)) =>
       (when(s > bs, lit(lang)).otherwise(bl), when(s > bs, s).otherwise(bs))
@@ -214,11 +201,6 @@ object TextFunctions {
 
   /** Content fingerprint: md5 of the normalized text. Exact-dedup key. */
   def fingerprint(text: Column): Column = md5(normalized(text))
-
-  /** 64-bit rolling-style content fingerprint (xxhash64 over normalized text)
-    * — cheaper join key than the md5 string at scale (8 bytes vs 32).
-    */
-  def fingerprint64(text: Column): Column = xxhash64(normalized(text))
 
   /** 60-bit PORTABLE content hash: the integer value of the first 15 hex
     * chars of `md5(s)`. Reproducible by any engine with md5 + hex parsing —

@@ -32,15 +32,5 @@ object VectorFunctions {
     when(nn === 0.0, lit(0.0)).otherwise(d / nn)
   }
 
-  /** Euclidean (L2) distance. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val diff = x.cast("double") - y.cast("double")
-        diff * diff
-      }),
-      lit(0.0),
-      (acc, x) => acc + x))
-
   def dim(a: Column): Column = size(a).cast("long")
 }

@@ -3,6 +3,7 @@ package graft.hedera
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.GraftSession
+import graft.metrics.Metrics
 
 /** The application entry point a reference user switches to — the analog of
   * the reference's two deployables in one process: the ingest pipeline
@@ -67,12 +68,18 @@ object EtlApp {
   }
 
   /** Running handles of the continuous deployable — returned by [[start]]
-    * so callers (main, tests) can await or stop it. */
+    * so callers (main, tests) can await or stop it. `stop` also removes
+    * the ingest metrics listener, so a later start in the same session
+    * counts its rows once. */
   final case class Handles(
       query: org.apache.spark.sql.streaming.StreamingQuery,
       scheduler: DedupeScheduler,
-      table: TransactionsTable) {
-    def stop(): Unit = { scheduler.stop(); query.stop() }
+      table: TransactionsTable,
+      private val listener: Metrics.IngestListener) {
+    def stop(): Unit = {
+      scheduler.stop(); query.stop()
+      query.sparkSession.streams.removeListener(listener)
+    }
   }
 
   private def intakeBound(a: Args): Option[Int] =
@@ -101,11 +108,12 @@ object EtlApp {
     * fixed-rate dedupe scheduler. */
   def start(spark: org.apache.spark.sql.SparkSession, a: Args): Handles = {
     val (table, pipe, job) = wire(spark, a, Deduplication.Config())
+    val listener = Metrics.installListener(spark)
     val q = pipe.startStream(a.input, a.checkpoint,
       Trigger.ProcessingTime(a.triggerMs), intakeBound(a))
     val sched = new DedupeScheduler(job, a.incrementalMs, a.fullMs)
     sched.start()
-    Handles(q, sched, table)
+    Handles(q, sched, table, listener)
   }
 
   def main(argv: Array[String]): Unit = {
@@ -119,6 +127,7 @@ object EtlApp {
       // old windows dirty).
       val (table, pipe, job) = wire(spark, a,
         Deduplication.Config(catchupIntervalUs = Long.MaxValue / 4))
+      Metrics.installListener(spark)
       val q = pipe.startStream(a.input, a.checkpoint, Trigger.AvailableNow(),
         intakeBound(a))
       q.awaitTermination()

@@ -3,7 +3,7 @@ package graft.hedera
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.Fs
+import graft.util.{Fs, SwapDir}
 
 /** Parquet table layer for the warehouse: day-partitioned fact table,
   * append-only errors table, tiny crash-safe state table.
@@ -366,30 +366,26 @@ class ErrorsTable(spark: SparkSession, path: String) {
 /** Key-value job-state table with MERGE-upsert semantics
   * (GetStateQuery/SetStateQuery — AbstractDeduplication.java:99,
   * SetStateQuery.java:34-51). Tiny by construction (a handful of
-  * checkpoints), so each upsert rewrites it whole under a
-  * backup-rename-swap protocol: the previous state is renamed aside before
-  * the new state is renamed into place, and reads roll back to the backup
-  * if a crash left no live dir — losing a `set` is safe (the caller's job
-  * re-runs its window), losing the whole store is not (an O(table)
-  * re-dedupe from timestamp 0).
+  * checkpoints), so each upsert rewrites it whole through
+  * [[graft.util.SwapDir]]'s backup-rename-swap (`<path>.tmp`,
+  * `<path>.bak`): the previous state is renamed aside before the new state
+  * is renamed into place, and reads roll back to the backup if a crash
+  * left no live dir — losing a `set` is safe (the caller's job re-runs its
+  * window), losing the whole store is not (an O(table) re-dedupe from
+  * timestamp 0). Single-writer: one dedupe job owns its store.
   */
 final class StateStore(spark: SparkSession, path: String) {
   import spark.implicits._
 
   private def fs: FileSystem = Fs.of(spark, path)
   private def live = new Path(path)
-  private def bak = new Path(path + ".bak")
 
-  /** Roll back to the backup if a crash between the two renames of [[set]]
-    * left no live dir. (A stale backup NEXT TO a live dir means the crash
-    * was after the new state landed — the live dir wins.) */
-  private def recover(f: FileSystem): Unit =
-    if (!f.exists(live) && f.exists(bak))
-      require(f.rename(bak, live), s"state recover: $bak -> $live failed")
-
+  /** Rolls back to the backup first when a crash between [[set]]'s two
+    * renames left no live dir (a stale backup NEXT TO a live dir means the
+    * crash came after the new state landed — the live dir wins). */
   def readAll(): Map[String, String] = {
     val f = fs
-    recover(f)
+    SwapDir.recover(f, live)
     if (!f.exists(live)) Map.empty
     else spark.read.schema(TransactionSchema.state).parquet(path)
       .as[(String, Option[String])].collect()
@@ -398,21 +394,15 @@ final class StateStore(spark: SparkSession, path: String) {
 
   def get(name: String): Option[String] = readAll().get(name)
 
-  /** MERGE-upsert one key (SetStateQuery.java:34-40 semantics):
-    * write-new → backup-old → rename-new-live → drop-backup, every rename
-    * checked. Crash windows: before the live rename → [[recover]] restores
-    * the backup (the set is lost, callers re-derive it); after → the new
-    * state is live and the stale backup is ignored and replaced next set. */
+  /** MERGE-upsert one key (SetStateQuery.java:34-40 semantics) through
+    * [[SwapDir.swapIn]]. Crash windows: before the live rename → the next
+    * read restores the backup (the set is lost, callers re-derive it);
+    * after → the new state is live and the stale backup is replaced by the
+    * next set. */
   def set(name: String, value: String): Unit = {
-    val updated = readAll() + (name -> value)
-    val df = updated.toSeq.toDF("name", "value")
-    val tmp = new Path(path + ".tmp")
-    val f = fs
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    f.delete(bak, true) // stale backup from a prior crash-after-success
-    if (f.exists(live))
-      require(f.rename(live, bak), s"state set: $live -> $bak failed")
-    require(f.rename(tmp, live), s"state set: $tmp -> $live failed")
-    f.delete(bak, true)
+    val df = (readAll() + (name -> value)).toSeq.toDF("name", "value")
+    SwapDir.swapIn(fs, live) { tmp =>
+      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    }
   }
 }

@@ -62,7 +62,8 @@ object Metrics {
   val global = new MetricsRegistry
 
   /** Streaming ingest progress → metric registry (rows/sec, batch rows). */
-  final class IngestListener(reg: MetricsRegistry = global) extends StreamingQueryListener {
+  final class IngestListener(private[metrics] val reg: MetricsRegistry = global)
+      extends StreamingQueryListener {
     override def onQueryStarted(event: QueryStartedEvent): Unit = ()
     override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(event: QueryProgressEvent): Unit = {
@@ -73,9 +74,18 @@ object Metrics {
     }
   }
 
-  def installListener(spark: SparkSession, reg: MetricsRegistry = global): IngestListener = {
-    val l = new IngestListener(reg)
-    spark.streams.addListener(l)
-    l
-  }
+  /** Registers an [[IngestListener]] feeding `reg` on `spark`'s streams
+    * and returns it — or returns the one already registered there for
+    * `reg`, so a second install in the same session cannot double-count.
+    * Remove it with `spark.streams.removeListener` when its pipeline stops. */
+  def installListener(spark: SparkSession, reg: MetricsRegistry = global): IngestListener =
+    synchronized {
+      spark.streams.listListeners().collectFirst {
+        case l: IngestListener if l.reg eq reg => l
+      }.getOrElse {
+        val l = new IngestListener(reg)
+        spark.streams.addListener(l)
+        l
+      }
+    }
 }

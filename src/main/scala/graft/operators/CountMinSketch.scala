@@ -86,10 +86,12 @@ object CountMinSketch {
   // accounting wraps appends in its own batch ledger (the curateStream
   // marker pattern); the sketch itself stays marker-free.
 
-  /** Append one batch's counts to the sketch at `dir`. */
+  /** Append one batch's counts to the sketch at `dir`, then fold the
+    * partial cells into one file past [[SwapDir.maxFiles]] (`maxFiles`:
+    * 0 = the default threshold, a positive value overrides it). */
   def append(items: DataFrame, itemCol: String, dir: String,
       depth: Int = 4, width: Int = 1024,
-      compactThreshold: Int = 64): Unit = {
+      maxFiles: Int = 0): Unit = {
     val spark = items.sparkSession
     val f = Fs.of(spark, dir)
     f.mkdirs(new Path(dir))
@@ -97,11 +99,8 @@ object CountMinSketch {
       sketch(items, itemCol, depth, width)
         .coalesce(1).write.mode("append")
         .parquet(new Path(dir, "cells").toString)
-      if (SwapDir.fileCount(f, new Path(dir, "cells")) > compactThreshold) {
-        val folded = readSketch(spark, dir).localCheckpoint(true)
-        SwapDir.swapIn(f, new Path(dir, "cells")) { tmp =>
-          folded.coalesce(1).write.parquet(tmp)
-        }
+      SwapDir.compact(spark, s"$dir/cells", SwapDir.maxFiles(spark, maxFiles)) {
+        merged(_).coalesce(1)
       }
     }
   }
@@ -111,6 +110,8 @@ object CountMinSketch {
     * completed prefix of appends is a consistent sketch; mid-compaction
     * they resolve through the swap backup). */
   def readSketch(spark: SparkSession, dir: String): DataFrame =
-    SwapDir.read(spark, s"$dir/cells")
-      .groupBy(col("j"), col("b")).agg(sum(col("cnt")).as("cnt"))
+    merged(SwapDir.read(spark, s"$dir/cells"))
+
+  private def merged(cells: DataFrame): DataFrame =
+    cells.groupBy(col("j"), col("b")).agg(sum(col("cnt")).as("cnt"))
 }

@@ -39,7 +39,7 @@ import graft.util.{FileLease, Fs, SwapDir}
   * Scale: the per-batch cost is one partial aggregate of the BATCH plus a
   * merge bounded by the VIEW's key cardinality — the fact table is never
   * rescanned. The merged state lands as one file per swap (a rollup is
-  * key-bounded); a deployment with a huge key space raises `outFiles`.
+  * key-bounded).
   */
 object IncrementalRollup {
 
@@ -87,8 +87,7 @@ object IncrementalRollup {
     * lines / a few MB, parsed once per apply. A deployment that outgrows
     * that is batching too finely for a persisted-view sink. */
   def applyBatch(spark: SparkSession, dir: String, batch: DataFrame,
-      batchId: Long, keys: Seq[String], valueCol: String,
-      outFiles: Int = 1): Boolean = {
+      batchId: Long, keys: Seq[String], valueCol: String): Boolean = {
     val live = statePath(dir)
     val f = Fs.of(spark, dir)
     new FileLease(dir).withLease(f) {
@@ -103,7 +102,7 @@ object IncrementalRollup {
             .groupBy(keys.map(col): _*)
             .agg(sum(col("n")).as("n"), sum(col("total")).cast(Dec30).as("total"))
         SwapDir.swapIn(f, live) { tmp =>
-          merged.repartition(outFiles)
+          merged.repartition(1)
             .write.mode(SaveMode.Overwrite).parquet(tmp)
           writeLedger(f, new Path(tmp), applied + batchId)
         }

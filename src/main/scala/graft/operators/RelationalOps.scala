@@ -30,13 +30,6 @@ object RelationalOps {
       .agg(count(lit(1)).as("num"))
       .filter(col("num") > 1)
 
-  /** Keep-one-row-per-key, arbitrary survivor — exact contract of the
-    * reference's ARRAY_AGG(t LIMIT 1)[OFFSET(0)]. Cheapest form: partial
-    * aggregation, no sort.
-    */
-  def dedupAny(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** Deterministic keep-one: survivor = first row by `order` within each key
     * group. Costs a shuffle + per-group sort; use when reproducibility
     * matters more than throughput (golden tests, oracle comparison).

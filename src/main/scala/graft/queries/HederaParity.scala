@@ -35,6 +35,14 @@ object HederaParity {
   private def events(s: org.apache.spark.sql.SparkSession, dir: String) =
     Tables.load(s, dir, "events")
 
+  /** The one oracle of h_day_rollup and h_day_rollup_incremental: the
+    * incrementally maintained view must equal the one-shot rollup. */
+  private val DayRollupSql =
+    """SELECT strftime(make_timestamp(epoch_us(ts)), '%Y-%m-%d') AS day,
+      |  event_type, count(*) AS n,
+      |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS total_value
+      |FROM events GROUP BY 1, 2""".stripMargin
+
   val all: Seq[Q] = Seq(
     // P1+P2 (+S1's parse step): JSON-era ingest projection — µs-truncated
     // numeric + timestamp + day partition string derived from the raw ns
@@ -161,10 +169,7 @@ object HederaParity {
           date_format(timestamp_micros(tsUs), "yyyy-MM-dd").as("day"),
           col("event_type"))
         .agg(count(lit(1)).as("n"), exactSum(col("value")).as("total_value")),
-      Some("""SELECT strftime(make_timestamp(epoch_us(ts)), '%Y-%m-%d') AS day,
-             |  event_type, count(*) AS n,
-             |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS total_value
-             |FROM events GROUP BY 1, 2""".stripMargin),
+      Some(DayRollupSql),
       headline = true),
 
     // A5+J1 composed as MAINTENANCE: the day rollup kept current by folding
@@ -180,10 +185,7 @@ object HederaParity {
     // shift every even-batch n and total).
     Q("h_day_rollup_incremental",
       (s, dir) => {
-        val work = s"${sys.props("java.io.tmpdir")}/graft-rindex-rollup-" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        val (f, wp) = graft.util.Fs(s, work)
-        f.delete(wp, true)
+        val work = Q.workDir(s, "rollup", dir)
         val ev = events(s, dir).select(
           date_format(timestamp_micros(tsUs), "yyyy-MM-dd").as("day"),
           col("event_type"), col("value"), col("event_id"))
@@ -196,9 +198,6 @@ object HederaParity {
         graft.operators.IncrementalRollup.read(s, work)
           .select(col("day"), col("event_type"), col("n"), col("total_value"))
       },
-      Some("""SELECT strftime(make_timestamp(epoch_us(ts)), '%Y-%m-%d') AS day,
-             |  event_type, count(*) AS n,
-             |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS total_value
-             |FROM events GROUP BY 1, 2""".stripMargin))
+      Some(DayRollupSql))
   )
 }

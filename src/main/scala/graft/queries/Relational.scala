@@ -25,6 +25,48 @@ object Relational {
   private def decP(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
   private def decR(c: org.apache.spark.sql.Column) = c.cast(DecimalType(5, 3))
 
+  /** Per-customer recency day, order count and exact monetary total —
+    * the input of both RFM segmentations. */
+  private def rfmBase(s: org.apache.spark.sql.SparkSession, dir: String) =
+    t(s, dir, "orders")
+      .groupBy(col("o_custkey").as("custkey"))
+      .agg(
+        max(datediff(col("o_orderdate"), lit("1970-01-01").cast("date")))
+          .cast("long").as("r_day"),
+        count(lit(1)).as("f"),
+        exactSum(col("o_totalprice")).as("m"))
+
+  /** The one oracle of q_rfm_segments and q_rfm_scalable: the two plans
+    * must produce the same quintiles. */
+  private val RfmSql =
+    """WITH rfm AS (
+      |  SELECT o_custkey AS custkey,
+      |    CAST(epoch_us(max(o_orderdate)) // 86400000000 AS BIGINT) AS r_day,
+      |    count(*) AS f,
+      |    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS m
+      |  FROM orders GROUP BY 1)
+      |SELECT custkey, r_day, f, m,
+      |  CAST(r_q AS BIGINT) AS r_q, CAST(f_q AS BIGINT) AS f_q,
+      |  CAST(m_q AS BIGINT) AS m_q,
+      |  CAST(r_q * 100 + f_q * 10 + m_q AS BIGINT) AS rfm_score
+      |FROM (SELECT custkey, r_day, f, m,
+      |        ntile(5) OVER (ORDER BY r_day ASC, custkey ASC) AS r_q,
+      |        ntile(5) OVER (ORDER BY f ASC, custkey ASC) AS f_q,
+      |        ntile(5) OVER (ORDER BY m ASC, custkey ASC) AS m_q
+      |      FROM rfm)""".stripMargin
+
+  /** Events per UTC day `(day, n)` — shared by q_daily_anomaly and
+    * q_decay_volume. */
+  private def dailyCounts(s: org.apache.spark.sql.SparkSession, dir: String) =
+    t(s, dir, "events")
+      .groupBy(expr("(ts div 1000) div 86400000000").as("day"))
+      .agg(count(lit(1)).as("n"))
+
+  /** The DuckDB image of [[dailyCounts]] as CTE `d`. */
+  private val DailyCountCte =
+    """d AS (SELECT epoch_us(ts)//86400000000 AS day, count(*) AS n
+      |          FROM events GROUP BY 1)""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // TPC-H Q1 shape: the classic scan → filter → hash-agg suite. The scan
@@ -720,9 +762,7 @@ object Relational {
     // 1-row stats frame broadcasts back.
     Q("q_daily_anomaly",
       (s, dir) => {
-        val d = t(s, dir, "events")
-          .groupBy(expr("(ts div 1000) div 86400000000").as("day"))
-          .agg(count(lit(1)).as("n"))
+        val d = dailyCounts(s, dir)
         val st = d.agg(count(lit(1)).as("m"), sum(col("n")).as("s1"),
           sum(col("n") * col("n")).as("s2"))
         val mean = col("s1").cast("double") / col("m").cast("double")
@@ -733,8 +773,7 @@ object Relational {
               graft.operators.RelationalOps.round6(
                 (col("n").cast("double") - mean) / sqrt(varp))).as("z"))
       },
-      Some("""WITH d AS (SELECT epoch_us(ts)//86400000000 AS day, count(*) AS n
-             |          FROM events GROUP BY 1),
+      Some(s"""WITH $DailyCountCte,
              |s AS (SELECT count(*) AS m, CAST(sum(n) AS BIGINT) AS s1,
              |        CAST(sum(n*n) AS BIGINT) AS s2 FROM d)
              |SELECT day, n,
@@ -759,13 +798,7 @@ object Relational {
     // sort; documented in SCALING.md §Relational queries.
     Q("q_rfm_segments",
       (s, dir) => {
-        val rfm = t(s, dir, "orders")
-          .groupBy(col("o_custkey").as("custkey"))
-          .agg(
-            max(datediff(col("o_orderdate"), lit("1970-01-01").cast("date")))
-              .cast("long").as("r_day"),
-            count(lit(1)).as("f"),
-            exactSum(col("o_totalprice")).as("m"))
+        val rfm = rfmBase(s, dir)
         def q5(c1: org.apache.spark.sql.Column) = ntile(5)
           .over(Window.orderBy(c1.asc, col("custkey").asc)).cast("long")
         rfm
@@ -774,21 +807,7 @@ object Relational {
           .withColumn("m_q", q5(col("m")))
           .withColumn("rfm_score", col("r_q") * 100 + col("f_q") * 10 + col("m_q"))
       },
-      Some("""WITH rfm AS (
-             |  SELECT o_custkey AS custkey,
-             |    CAST(epoch_us(max(o_orderdate)) // 86400000000 AS BIGINT) AS r_day,
-             |    count(*) AS f,
-             |    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS m
-             |  FROM orders GROUP BY 1)
-             |SELECT custkey, r_day, f, m,
-             |  CAST(r_q AS BIGINT) AS r_q, CAST(f_q AS BIGINT) AS f_q,
-             |  CAST(m_q AS BIGINT) AS m_q,
-             |  CAST(r_q * 100 + f_q * 10 + m_q AS BIGINT) AS rfm_score
-             |FROM (SELECT custkey, r_day, f, m,
-             |        ntile(5) OVER (ORDER BY r_day ASC, custkey ASC) AS r_q,
-             |        ntile(5) OVER (ORDER BY f ASC, custkey ASC) AS f_q,
-             |        ntile(5) OVER (ORDER BY m ASC, custkey ASC) AS m_q
-             |      FROM rfm)""".stripMargin)),
+      Some(RfmSql)),
 
     // The SAME RFM segmentation through the scalable exact-ntile plan
     // (RelationalOps.exactNtile — closes ADVICE r10's single-task-window
@@ -799,13 +818,7 @@ object Relational {
     // customer dimension. PlanShapeSpec pins the no-global-window shape.
     Q("q_rfm_scalable",
       (s, dir) => {
-        val rfm = t(s, dir, "orders")
-          .groupBy(col("o_custkey").as("custkey"))
-          .agg(
-            max(datediff(col("o_orderdate"), lit("1970-01-01").cast("date")))
-              .cast("long").as("r_day"),
-            count(lit(1)).as("f"),
-            exactSum(col("o_totalprice")).as("m"))
+        val rfm = rfmBase(s, dir)
         val ops = graft.operators.RelationalOps
         val withR = ops.exactNtile(rfm, 5,
           Seq(col("r_day").asc, col("custkey").asc), "r_q")
@@ -816,21 +829,7 @@ object Relational {
         withM.withColumn("rfm_score",
           col("r_q") * 100 + col("f_q") * 10 + col("m_q"))
       },
-      Some("""WITH rfm AS (
-             |  SELECT o_custkey AS custkey,
-             |    CAST(epoch_us(max(o_orderdate)) // 86400000000 AS BIGINT) AS r_day,
-             |    count(*) AS f,
-             |    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS m
-             |  FROM orders GROUP BY 1)
-             |SELECT custkey, r_day, f, m,
-             |  CAST(r_q AS BIGINT) AS r_q, CAST(f_q AS BIGINT) AS f_q,
-             |  CAST(m_q AS BIGINT) AS m_q,
-             |  CAST(r_q * 100 + f_q * 10 + m_q AS BIGINT) AS rfm_score
-             |FROM (SELECT custkey, r_day, f, m,
-             |        ntile(5) OVER (ORDER BY r_day ASC, custkey ASC) AS r_q,
-             |        ntile(5) OVER (ORDER BY f ASC, custkey ASC) AS f_q,
-             |        ntile(5) OVER (ORDER BY m ASC, custkey ASC) AS m_q
-             |      FROM rfm)""".stripMargin)),
+      Some(RfmSql)),
 
     // Last-touch conversion attribution: each purchase credited to the
     // user's most recent PRECEDING non-purchase event within a 7-day
@@ -878,9 +877,7 @@ object Relational {
     // (they are sub-ulp anyway).
     Q("q_decay_volume",
       (s, dir) => {
-        val d = t(s, dir, "events")
-          .groupBy(expr("(ts div 1000) div 86400000000").as("day"))
-          .agg(count(lit(1)).as("n"))
+        val d = dailyCounts(s, dir)
         val mx = d.agg(max(col("day")).as("md"))
         val lag = col("md") - col("day")
         val pow2 = expr("shiftleft(1L, cast(30 - (md - day) as int))")
@@ -892,8 +889,7 @@ object Relational {
               pow2.cast("double") / 1073741824.0))
               .otherwise(lit(0.0)).as("decay_w"))
       },
-      Some("""WITH d AS (SELECT epoch_us(ts)//86400000000 AS day, count(*) AS n
-             |          FROM events GROUP BY 1),
+      Some(s"""WITH $DailyCountCte,
              |mx AS (SELECT max(day) AS md FROM d)
              |SELECT day, n,
              |  CASE WHEN md - day <= 30

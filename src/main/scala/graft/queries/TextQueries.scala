@@ -44,22 +44,63 @@ object TextQueries {
   private val Shingles4 =
     "list_transform(generate_series(1, len(ws) - 3), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])"
 
-  /** Deterministic per-(entry, sf) work dir for the persisted-index
-    * registry twins — rebuilt (overwritten) on every call, so repeated
-    * verify/bench passes reuse one path instead of leaking a dir per
-    * run. */
-  private def rindexDir(tag: String, sfDir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-rindex-$tag-" +
-      java.lang.Integer.toHexString(sfDir.hashCode)
+  /** Per-(doc, term) counts `tf`, doc lengths `dlen` and document
+    * frequencies `dft` over the lowered whitespace tokens — the term
+    * statistics under the TF-IDF and BM25 oracles. */
+  private val TermStatsCtes =
+    s"""tok AS (SELECT doc_id, unnest($WSL) AS term FROM documents),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
+       |dlen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_d FROM tf GROUP BY 1),
+       |dft AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1)""".stripMargin
+
+  /** [[TermStatsCtes]] plus the BM25 corpus constants `st` and the
+    * default query `qt` (the 3 highest-mass terms). */
+  private val Bm25BaseCtes =
+    s"""$TermStatsCtes,
+       |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
+       |              (SELECT CAST(sum(n_d) AS BIGINT) FROM dlen) AS tot_tokens),
+       |qt AS (SELECT term FROM (
+       |         SELECT term, sum(tf) AS ttf FROM tf GROUP BY term
+       |         ORDER BY ttf DESC, term ASC LIMIT 3))""".stripMargin
+
+  /** The per-(doc, query-term) BM25 contribution (k1 = 1.2, b = 0.75) as
+    * CTE `name` over the query-term CTE `q`. */
+  private def bm25ContribCte(name: String, q: String): String =
+    s"""$name AS (
+       |  SELECT tf.doc_id,
+       |    ln((CAST(st.n_docs AS DOUBLE) - CAST(dft.df AS DOUBLE) + 0.5) /
+       |       (CAST(dft.df AS DOUBLE) + 0.5) + 1.0) *
+       |    (CAST(tf.tf AS DOUBLE) * 2.2) /
+       |    (CAST(tf.tf AS DOUBLE) +
+       |     1.2 * (0.25 + 0.75 * CAST(dlen.n_d AS DOUBLE) /
+       |            (CAST(st.tot_tokens AS DOUBLE) / CAST(st.n_docs AS DOUBLE)))) AS contrib
+       |  FROM tf JOIN $q USING (term) JOIN dlen USING (doc_id)
+       |       JOIN dft USING (term), st)""".stripMargin
+
+  /** A doc's BM25 score: the contributions summed on the 1e-9 fixed-point
+    * grid (order-insensitive), then rounded to 6 dp. */
+  private val Bm25RoundSql =
+    "floor((CAST(sum(CAST(floor(contrib * 1e9) AS BIGINT)) AS DOUBLE) / 1e9) * 1000000 + 0.5) / 1000000"
+
+  /** A RetrievalIndex in the entry's work dir, built from the even doc ids
+    * and grown by appending the odd ones — the incremental path that the
+    * indexed twins check against the one-shot oracles. */
+  private def halvesIndex(s: org.apache.spark.sql.SparkSession, dir: String,
+      tag: String): String = {
+    val idx = Q.workDir(s, tag, dir)
+    val d = docs(s, dir)
+    graft.retrieval.RetrievalIndex.build(
+      d.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
+    graft.retrieval.RetrievalIndex.appendDocs(
+      d.filter(col("doc_id") % 2 =!= 0), idx, "doc_id", "text")
+    idx
+  }
 
   /** The TF-IDF oracle — shared verbatim by t_tfidf (transient recompute)
     * and t_tfidf_indexed (incrementally built RetrievalIndex): one SQL
     * image, two engine paths that must both match it byte-for-byte. */
   private val TfidfSql =
-    s"""WITH tok AS (SELECT doc_id, unnest($WSL) AS term FROM documents),
-       |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-       |dlen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_d FROM tf GROUP BY 1),
-       |dft AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
+    s"""WITH $TermStatsCtes,
        |n AS (SELECT count(*) AS n_docs FROM documents)
        |SELECT tf.doc_id, tf.term, tf.tf, dft.df,
        |  floor(((CAST(tf.tf AS DOUBLE) / CAST(dlen.n_d AS DOUBLE)) *
@@ -99,6 +140,21 @@ object TextQueries {
        |  FROM isl2 GROUP BY doc_id, island)""".stripMargin
   }
 
+  /** Positional postings `(doc_id, p, term)` over the lowered tokens,
+    * positions 1-based — shared by t_phrase_search and t_proximity_search. */
+  private def postings(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    docs(s, dir).select(col("doc_id"),
+        posexplode(tokens(lower(col("text")))).as(Seq("p0", "term")))
+      .select(col("doc_id"), (col("p0") + 1).cast("long").as("p"), col("term"))
+
+  /** The DuckDB image of [[postings]]: CTE `post(doc_id, p, term)`, plus
+    * the token lists `hd(doc_id, ws)` it unnests. */
+  private val PostingsCtes =
+    s"""hd AS (SELECT doc_id, $WSL AS ws FROM documents),
+       |pos AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS p, ws FROM hd),
+       |post AS (SELECT doc_id, p, ws[p] AS term FROM pos)""".stripMargin
+
   /** Candidate edges of the rare-shingle co-occurrence graph — shared by
     * t_triangle_count and t_graph_degree_assort: distinct doc pairs sharing
     * a trigram with df ∈ [2,4] (the blocking cap: each gram fans out at
@@ -135,27 +191,10 @@ object TextQueries {
     * t_hybrid_rrf's lexical leg (same one-image/N-paths discipline as
     * TfidfSql). */
   private[queries] val Bm25Sql =
-    s"""WITH tok AS (SELECT doc_id, unnest($WSL) AS term FROM documents),
-       |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-       |dlen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_d FROM tf GROUP BY 1),
-       |dft AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-       |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-       |              (SELECT CAST(sum(n_d) AS BIGINT) FROM dlen) AS tot_tokens),
-       |qt AS (SELECT term FROM (
-       |         SELECT term, sum(tf) AS ttf FROM tf GROUP BY term
-       |         ORDER BY ttf DESC, term ASC LIMIT 3)),
-       |c AS (
-       |  SELECT tf.doc_id,
-       |    ln((CAST(st.n_docs AS DOUBLE) - CAST(dft.df AS DOUBLE) + 0.5) /
-       |       (CAST(dft.df AS DOUBLE) + 0.5) + 1.0) *
-       |    (CAST(tf.tf AS DOUBLE) * 2.2) /
-       |    (CAST(tf.tf AS DOUBLE) +
-       |     1.2 * (0.25 + 0.75 * CAST(dlen.n_d AS DOUBLE) /
-       |            (CAST(st.tot_tokens AS DOUBLE) / CAST(st.n_docs AS DOUBLE)))) AS contrib
-       |  FROM tf JOIN qt USING (term) JOIN dlen USING (doc_id)
-       |       JOIN dft USING (term), st)
+    s"""WITH $Bm25BaseCtes,
+       |${bm25ContribCte("c", "qt")}
        |SELECT doc_id, count(*) AS n_query_terms,
-       |  floor((CAST(sum(CAST(floor(contrib * 1e9) AS BIGINT)) AS DOUBLE) / 1e9) * 1000000 + 0.5) / 1000000 AS bm25
+       |  $Bm25RoundSql AS bm25
        |FROM c GROUP BY doc_id""".stripMargin
 
   /** The [[graft.functions.TextFunctions.qualityScore]] formula's 6-dp
@@ -167,6 +206,68 @@ object TextQueries {
       |      + 0.3 * (CAST(len(list_distinct(ws)) AS DOUBLE) / CAST(len(ws) AS DOUBLE))
       |      + 0.3 * least((CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
       |                     / CAST(len(ws) AS DOUBLE)) / 8.0, 1.0)) * 1000000 + 0.5) / 1000000""".stripMargin
+
+  /** The planted md5-pattern image hashes as `sig(doc_id, phash)` — the
+    * pattern DEFINITION behind Multimodal.toPatternImageTable, shared by
+    * m_phash_pairs_portable and m_decode_features_portable. */
+  private val PatternSigCtes =
+    """cb AS (
+       |  SELECT g, c,
+       |    CASE WHEN c = 0 THEN 1
+       |         WHEN ('0x' || substr(md5('img:' || CAST(g AS VARCHAR) || ':' ||
+       |                CAST(c AS VARCHAR)), 1, 15))::BIGINT % 2 = 0 THEN 1
+       |         ELSE 0 END AS bit
+       |  FROM (SELECT unnest(generate_series(0, 15)) AS g),
+       |       (SELECT unnest(generate_series(0, 62)) AS c)),
+       |pat AS (
+       |  SELECT g, CAST(sum(CASE WHEN bit = 1 THEN (1::BIGINT << c) ELSE 0 END)
+       |    AS BIGINT) AS ph
+       |  FROM cb GROUP BY g),
+       |sig AS (
+       |  SELECT d.doc_id,
+       |    CASE WHEN d.doc_id % 3 = 0 THEN p.ph
+       |         WHEN d.doc_id % 3 = 1 THEN xor(p.ph,
+       |           (1::BIGINT << CAST(1 + d.doc_id % 62 AS INT)))
+       |         ELSE xor(p.ph,
+       |           (15::BIGINT << CAST(1 + d.doc_id % 59 AS INT)))
+       |    END AS phash
+       |  FROM documents d JOIN pat p ON p.g = d.doc_id % 16)""".stripMargin
+
+  /** The planted sawtooth PCM as `smp(doc_id, [i,] v, frame_idx)` —
+    * shared by m_audio_features (`extra` = "i, ") and m_audio_fingerprint. */
+  private def audioSampleCtes(extra: String): String =
+    s"""d AS (
+       |  SELECT doc_id, 256 + (doc_id % 5) * 64 AS n,
+       |         13 + (doc_id % 7) AS a, (doc_id * 31) % 65536 AS b
+       |  FROM documents),
+       |smp AS (
+       |  SELECT doc_id, $extra((a * i + b) % 65536) - 32768 AS v, i // 64 AS frame_idx
+       |  FROM d, unnest(generate_series(0, n - 1)) AS u(i))""".stripMargin
+
+  /** The decontamination split: `(trainG(doc_id, g), evalG(g))`, the
+    * distinct 4-grams of the training docs and of the held-out eval slice
+    * (doc_id % 20 = 0) — shared by t_decontaminate and its Bloom twin. */
+  private def decontamGrams(s: org.apache.spark.sql.SparkSession, dir: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val d = docs(s, dir)
+    val evalG = d.filter(col("doc_id") % 20 === 0)
+      .select(explode(array_distinct(shingles(col("text"), 4))).as("g")).distinct()
+    val trainG = d.filter(col("doc_id") % 20 =!= 0)
+      .select(col("doc_id"), explode(array_distinct(shingles(col("text"), 4))).as("g"))
+    (trainG, evalG)
+  }
+
+  /** The one oracle of t_decontaminate and t_decontaminate_bloom: the
+    * prefilter changes the plan, never the result. */
+  private val DecontaminateSql =
+    s"""WITH ev AS (
+       |  SELECT DISTINCT unnest(list_distinct($Shingles4)) AS g
+       |  FROM (SELECT doc_id, $WS AS ws FROM documents) WHERE doc_id % 20 = 0),
+       |tr AS (
+       |  SELECT doc_id, unnest(list_distinct($Shingles4)) AS g
+       |  FROM (SELECT doc_id, $WS AS ws FROM documents) WHERE doc_id % 20 <> 0)
+       |SELECT doc_id, count(*) AS n_contaminated
+       |FROM tr JOIN ev USING (g) GROUP BY doc_id""".stripMargin
 
   /** Guarded eval-side join for decontamination: broadcast the eval n-gram
     * dictionary only while it is PROVABLY small. "Eval ≪ train" is an
@@ -239,13 +340,29 @@ object TextQueries {
       : org.apache.spark.sql.DataFrame =
     build.localCheckpoint(true)
 
+  /** The spread docs' lowered text `t` (at least one trigram long) next
+    * to the `keep` columns — the input of every char-trigram scorer. */
+  private def lowerTexts(s: org.apache.spark.sql.SparkSession, dir: String,
+      keep: String*): org.apache.spark.sql.DataFrame =
+    docsSpread(s, dir).select(keep.map(col) :+ lower(col("text")).as("t"): _*)
+      .filter(length(col("t")) >= 3)
+
+  /** The DuckDB image of the char-trigram model: `tri(doc_id, g)` and its
+    * count table `c(g, c)` — shared by t_trigram_lm and t_ccnet_buckets. */
+  private val CharTrigramCtes =
+    """tri AS (
+       |  SELECT doc_id,
+       |    unnest(list_transform(generate_series(1, length(t) - 2), i -> substr(t, i, 3))) AS g
+       |  FROM (SELECT doc_id, lower(text) AS t FROM documents)
+       |  WHERE length(t) >= 3),
+       |c AS (SELECT g, count(*) AS c FROM tri GROUP BY g)""".stripMargin
+
   /** The corpus char-trigram count table (g, c) — byte-identical to the
     * frame trigramFamiliarity derives internally. */
   private def charTrigramModel(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     lmModel {
-      docsSpread(s, dir).select(col("doc_id"), lower(col("text")).as("t"))
-        .filter(length(col("t")) >= 3)
+      lowerTexts(s, dir, "doc_id")
         .select(explode(expr(
           "transform(sequence(1, length(t) - 2), i -> substring(t, i, 3))")).as("g"))
         .groupBy(col("g")).agg(count(lit(1)).as("c"))
@@ -380,6 +497,77 @@ object TextQueries {
       .drop("gb")
   }
 
+  /** The train/val/test bucket (≈ 80/10/10) of `key`: a pure function of
+    * its md5 hex prefix, so any engine and any partitioning reproduce it —
+    * shared by t_split (per doc) and t_split_leakfree (per cluster). */
+  private def splitOf(key: String): org.apache.spark.sql.Column = {
+    val h = substring(md5(col(key).cast("string")), 1, 4)
+    when(h < "cccc", "train").when(h < "e666", "val").otherwise("test").as("split")
+  }
+
+  /** The DuckDB image of [[splitOf]]. */
+  private def splitSql(key: String): String =
+    s"""CASE WHEN substring(md5(CAST($key AS VARCHAR)), 1, 4) < 'cccc' THEN 'train'
+       |       WHEN substring(md5(CAST($key AS VARCHAR)), 1, 4) < 'e666' THEN 'val'
+       |       ELSE 'test' END AS split""".stripMargin
+
+  /** The DuckDB image of mixSample's per-doc base row `b(doc_id, source,
+    * n_tokens, h)` and its per-source running token offset — shared by
+    * t_mix_sample and t_mix_temperature. */
+  private val MixBaseCte =
+    s"""b AS (
+       |  SELECT doc_id, source,
+       |    CAST(len($WS) AS BIGINT) AS n_tokens,
+       |    ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
+       |  FROM documents)""".stripMargin
+  private val MixStartOffSql =
+    """CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id
+      |        ROWS UNBOUNDED PRECEDING) AS BIGINT) - n_tokens AS start_off""".stripMargin
+
+  /** The `k` docs of highest `score` per `lang`, ranked 1..k (ties to the
+    * lower doc_id), through the bounded-heap TopKByScore aggregate. */
+  private def langTopK(d: org.apache.spark.sql.DataFrame,
+      score: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.DataFrame =
+    d.groupBy(col("lang"))
+      .agg(graft.expressions.TopKByScore(score, col("doc_id"), k).as("picks"))
+      .select(col("lang"), posexplode(col("picks")).as(Seq("pos", "e")))
+      .select(col("lang"), col("e.id").as("doc_id"), (col("pos") + 1L).as("rnk"))
+
+  /** The oracle image of [[langTopK]]: the top `k` of `src` per lang by
+    * ascending `key`. */
+  private def langRankSql(src: String, key: String, k: Int): String =
+    s"""SELECT lang, doc_id, rnk FROM (
+       |  SELECT lang, doc_id,
+       |    CAST(row_number() OVER (PARTITION BY lang ORDER BY $key, doc_id) AS BIGINT) AS rnk
+       |  FROM $src)
+       |WHERE rnk <= $k""".stripMargin
+
+  /** KMV sketch state per source over distinct hashes `h(source, hv)`: the
+    * 64th-smallest hash `hk` and the count `k` up to it (k < 64 when the
+    * source holds fewer distinct hashes). */
+  private def kmvKth(h: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy(col("source")).orderBy(col("hv").asc)
+    h.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= 64)
+      .groupBy(col("source")).agg(max(col("hv")).as("hk"), count(lit(1)).as("k"))
+  }
+
+  /** The KMV distinct estimate (k−1)·2^60/h₍k₎ over [[kmvKth]], exact below k. */
+  private def kmvEstimate: org.apache.spark.sql.Column =
+    when(col("k") < 64, col("k"))
+      .otherwise(floor(lit(63.0) * lit(1152921504606846976.0)
+        / col("hk").cast("double")).cast("long"))
+
+  /** The DuckDB images of [[kmvKth]] (CTE `kth` over `h`) and [[kmvEstimate]]. */
+  private val KmvKthCtes =
+    """rk AS (SELECT source, hv, row_number() OVER (
+      |         PARTITION BY source ORDER BY hv ASC) AS rnk FROM h),
+      |kth AS (SELECT source, max(hv) AS hk, count(*) AS k
+      |        FROM rk WHERE rnk <= 64 GROUP BY 1)""".stripMargin
+  private val KmvEstimateSql =
+    """CASE WHEN k < 64 THEN CAST(k AS BIGINT)
+      |       ELSE CAST(floor(63.0 * 1152921504606846976.0 / CAST(hk AS DOUBLE)) AS BIGINT) END""".stripMargin
+
   /** Token-budget mixture sampling (t_mix_sample's engine), extracted so
     * the spec can drive it over adversarial corpora (hot source). See the
     * registry entry's comment for the two-phase design rationale.
@@ -439,8 +627,8 @@ object TextQueries {
     * exact near-dup family (jaccard pairs, containment pairs): a shingle
     * in > maxDf docs is boilerplate and contributes O(df²) join rows, so
     * it is excluded via a broadcast anti-join (the hot set is tiny by
-    * construction). Returns (pairs(a_id, b_id, inter) with a_id < b_id,
-    * cnt(doc_id, n)). */
+    * construction). Returns the pairs `(a_id, b_id, inter)`, a_id < b_id,
+    * with both docs' set sizes `na`, `nb`. */
   private def shinglePairCounts(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val maxDf = 100
     val sh = docsSpread(s, dir).select(col("doc_id"),
@@ -453,22 +641,20 @@ object TextQueries {
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       .agg(count(lit(1)).as("inter"))
-    (pairs, cnt)
+    pairs
+      .join(cnt.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n", "na"), "a_id")
+      .join(cnt.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n", "nb"), "b_id")
   }
 
   /** Exact 3-gram-jaccard near-dup pairs (df-capped); shared by
     * t_jaccard_pairs (emits the pairs) and t_dup_clusters (uses them as the
     * edge list for connected components). */
-  private def jaccardPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val (pairs, cnt) = shinglePairCounts(s, dir)
-    pairs
-      .join(cnt.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n", "na"), "a_id")
-      .join(cnt.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n", "nb"), "b_id")
+  private def jaccardPairs(s: org.apache.spark.sql.SparkSession, dir: String) =
+    shinglePairCounts(s, dir)
       .withColumn("jaccard", graft.operators.RelationalOps.round6(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")).cast("double")))
       .filter(col("jaccard") >= 0.4)
       .select(col("a_id"), col("b_id"), col("inter"), col("jaccard"))
-  }
 
   /** Every doc labeled with the min doc_id reachable through the exact
     * near-dup graph (singletons label themselves) — shared by
@@ -496,16 +682,21 @@ object TextQueries {
         coalesce(col("component"), col("doc_id")).as("cluster_id"))
   }
 
-  /** The [[shinglePairCounts]] front half as DuckDB CTEs ending in
-    * `pairs0(a_id, b_id, inter)` + `cnt(doc_id, n)` — shared by the
-    * jaccard and containment oracles. */
-  private val ShingleUniverseCtes = s"""sh AS (
+  /** The df-capped (≤ 100 docs) distinct-trigram universe `shc(doc_id, s)`
+    * and per-doc set sizes `cnt(doc_id, n)` — shared by the pair-mining
+    * and t_text_knn oracles. */
+  private val CappedShingleCtes = s"""sh AS (
     |  SELECT doc_id, unnest(list_distinct($Shingles3)) AS s
     |  FROM (SELECT doc_id, $WS AS ws FROM documents)),
     |shc AS (
     |  SELECT * FROM sh
     |  WHERE s NOT IN (SELECT s FROM sh GROUP BY s HAVING count(*) > 100)),
-    |cnt AS (SELECT doc_id, count(*) AS n FROM shc GROUP BY doc_id),
+    |cnt AS (SELECT doc_id, count(*) AS n FROM shc GROUP BY doc_id)""".stripMargin
+
+  /** The [[shinglePairCounts]] front half as DuckDB CTEs ending in
+    * `pairs0(a_id, b_id, inter)` + `cnt(doc_id, n)` — shared by the
+    * jaccard and containment oracles. */
+  private val ShingleUniverseCtes = s"""$CappedShingleCtes,
     |pairs0 AS (
     |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, count(*) AS inter
     |  FROM shc x JOIN shc y ON x.s = y.s AND x.doc_id < y.doc_id
@@ -706,6 +897,49 @@ object TextQueries {
 
   private def lrTrainCtes: String = graft.operators.LogisticRegression
     .trainCtes(LrFeaturesSql, LrFeatNames, LrRounds, LrMicro)
+
+  /** The per-language twin of [[lrTrainCtes]]: `lrf` carries `lang` and
+    * every `w<r>` frame has one row per language. */
+  private def lrGroupedCtes: String = graft.operators.LogisticRegression
+    .trainGroupedCtes(lrFeaturesSqlWith("lang, "), "lang", LrFeatNames, LrRounds, LrMicro)
+
+  /** The oracle's `p_micro` of feature row `f` under final weights `w`. */
+  private val LrPMicroSql = graft.operators.LogisticRegression.pMicroSql(
+    ("w.w0 * 1000000" +: LrFeatNames.zipWithIndex.map {
+      case (c, j) => s"w.w${j + 1} * f.$c" }).mkString(" + "))
+
+  private val LrWeightNames = "intercept" +: LrFeatNames
+
+  /** One `(…, feature, w_micro)` row per final coefficient; `group` is a
+    * leading `lang, ` for the per-language weights, or empty. */
+  private def lrWeightRowsSql(group: String): String =
+    LrWeightNames.zipWithIndex.map { case (n, j) =>
+      s"SELECT $group'$n' AS feature, w$j AS w_micro FROM w$LrRounds" }
+      .mkString("\n UNION ALL ")
+
+  /** The single-model trainer prologue: the feature frame, materialized
+    * once because every epoch re-reads it, and the model trained on it. */
+  private def lrTrained(s: org.apache.spark.sql.SparkSession, dir: String)
+      : (org.apache.spark.sql.DataFrame, graft.operators.LogisticRegression.Model) = {
+    val f = lrFeatures(s, dir).localCheckpoint(true)
+    (f, graft.operators.LogisticRegression.train(f, "y", LrFeatNames, LrRounds, LrMicro))
+  }
+
+  /** Every doc scored by the single trained model (`p_micro`, `keep`). */
+  private def lrScored(s: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame = {
+    val (f, m) = lrTrained(s, dir)
+    graft.operators.LogisticRegression.score(f, m, LrFeatNames)
+  }
+
+  /** The per-language prologue: the `lang`-carrying feature frame and one
+    * model per language, all trained in the same epochs. */
+  private def lrTrainedByLang(s: org.apache.spark.sql.SparkSession, dir: String)
+      : (org.apache.spark.sql.DataFrame, Map[String, Array[Long]]) = {
+    val f = lrFeatures(s, dir, extraCols = Seq("lang")).localCheckpoint(true)
+    (f, graft.operators.LogisticRegression.trainGrouped(
+      f, "lang", "y", LrFeatNames, LrRounds, LrMicro))
+  }
 
   /** The Gopher/MassiveText rule battery as a staged per-row expression
     * frame — shared by t_gopher_rules (the battery itself) and
@@ -1096,21 +1330,11 @@ object TextQueries {
     // all 16 epochs (the KMeans discipline), so a drift in any round's
     // gradient breaks the match.
     Q("t_quality_lr",
-      (s, dir) => {
-        import graft.operators.LogisticRegression
-        val f = lrFeatures(s, dir).localCheckpoint(true)
-        val m = LogisticRegression.train(f, "y", LrFeatNames, LrRounds, LrMicro)
-        LogisticRegression.score(f, m, LrFeatNames)
-          .select(col("doc_id"), col("y"), col("p_micro"), col("keep"))
-      },
-      Some {
-        val zp = ("w.w0 * 1000000" +: LrFeatNames.zipWithIndex.map {
-          case (c, j) => s"w.w${j + 1} * f.$c" }).mkString(" + ")
-        val p = graft.operators.LogisticRegression.pMicroSql(zp)
-        s"""WITH $lrTrainCtes
-           |SELECT f.doc_id, f.y, $p AS p_micro, $p >= 500000 AS keep
-           |FROM lrf f, w$LrRounds w""".stripMargin
-      }),
+      (s, dir) => lrScored(s, dir)
+        .select(col("doc_id"), col("y"), col("p_micro"), col("keep")),
+      Some(s"""WITH $lrTrainCtes
+              |SELECT f.doc_id, f.y, $LrPMicroSql AS p_micro, $LrPMicroSql >= 500000 AS keep
+              |FROM lrf f, w$LrRounds w""".stripMargin)),
 
     // Precision/recall sweep of the trained classifier across the
     // threshold grid — what a curation org reads to PICK the operating
@@ -1121,11 +1345,8 @@ object TextQueries {
     // metrics.
     Q("t_quality_lr_pr",
       (s, dir) => {
-        import graft.operators.{LogisticRegression, RelationalOps}
-        val f = lrFeatures(s, dir).localCheckpoint(true)
-        val m = LogisticRegression.train(f, "y", LrFeatNames, LrRounds, LrMicro)
-        val scored = LogisticRegression.score(f, m, LrFeatNames)
-          .select(col("y"), col("p_micro"))
+        import graft.operators.RelationalOps
+        val scored = lrScored(s, dir).select(col("y"), col("p_micro"))
         val th = broadcast(s.range(0, 11)
           .select((col("id") * 100000L).as("threshold_micro")))
         scored.crossJoin(th)
@@ -1143,44 +1364,31 @@ object TextQueries {
             RelationalOps.round6(col("n_true_kept").cast("double") /
               col("n_pos").cast("double")).as("recall"))
       },
-      Some {
-        val zp = ("w.w0 * 1000000" +: LrFeatNames.zipWithIndex.map {
-          case (c, j) => s"w.w${j + 1} * f.$c" }).mkString(" + ")
-        val p = graft.operators.LogisticRegression.pMicroSql(zp)
-        s"""WITH $lrTrainCtes,
-           |scored AS (SELECT f.y, $p AS p_micro FROM lrf f, w$LrRounds w),
-           |th AS (SELECT CAST(unnest(generate_series(0, 10)) * 100000 AS BIGINT) AS threshold_micro)
-           |SELECT threshold_micro,
-           |  CAST(sum(CASE WHEN p_micro >= threshold_micro THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           |  CAST(sum(CASE WHEN p_micro >= threshold_micro AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_true_kept,
-           |  floor((CASE WHEN sum(CASE WHEN p_micro >= threshold_micro THEN 1 ELSE 0 END) = 0 THEN 0.0
-           |        ELSE CAST(sum(CASE WHEN p_micro >= threshold_micro AND y = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-           |             / CAST(sum(CASE WHEN p_micro >= threshold_micro THEN 1 ELSE 0 END) AS DOUBLE) END)
-           |        * 1000000 + 0.5) / 1000000 AS precision,
-           |  floor((CAST(sum(CASE WHEN p_micro >= threshold_micro AND y = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-           |         / CAST(sum(y) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS recall
-           |FROM scored, th GROUP BY threshold_micro""".stripMargin
-      }),
+      Some(s"""WITH $lrTrainCtes,
+              |scored AS (SELECT f.y, $LrPMicroSql AS p_micro FROM lrf f, w$LrRounds w),
+              |th AS (SELECT CAST(unnest(generate_series(0, 10)) * 100000 AS BIGINT) AS threshold_micro)
+              |SELECT threshold_micro,
+              |  CAST(sum(CASE WHEN p_micro >= threshold_micro THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+              |  CAST(sum(CASE WHEN p_micro >= threshold_micro AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_true_kept,
+              |  floor((CASE WHEN sum(CASE WHEN p_micro >= threshold_micro THEN 1 ELSE 0 END) = 0 THEN 0.0
+              |        ELSE CAST(sum(CASE WHEN p_micro >= threshold_micro AND y = 1 THEN 1 ELSE 0 END) AS DOUBLE)
+              |             / CAST(sum(CASE WHEN p_micro >= threshold_micro THEN 1 ELSE 0 END) AS DOUBLE) END)
+              |        * 1000000 + 0.5) / 1000000 AS precision,
+              |  floor((CAST(sum(CASE WHEN p_micro >= threshold_micro AND y = 1 THEN 1 ELSE 0 END) AS DOUBLE)
+              |         / CAST(sum(y) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS recall
+              |FROM scored, th GROUP BY threshold_micro""".stripMargin)),
 
     // The trained model itself — one row per coefficient, so weight drift
     // across engine versions is visible in the correctness gate, not just
     // end-score drift.
     Q("t_quality_lr_weights",
       (s, dir) => {
-        import graft.operators.LogisticRegression
-        val f = lrFeatures(s, dir).localCheckpoint(true)
-        val m = LogisticRegression.train(f, "y", LrFeatNames, LrRounds, LrMicro)
-        val names = "intercept" +: LrFeatNames
+        val (_, m) = lrTrained(s, dir)
         import s.implicits._
-        names.zip(m.weightsMicro.toSeq).toDF("feature", "w_micro")
+        LrWeightNames.zip(m.weightsMicro.toSeq).toDF("feature", "w_micro")
       },
-      Some {
-        val names = "intercept" +: LrFeatNames
-        val sel = names.zipWithIndex.map { case (n, j) =>
-          s"SELECT '$n' AS feature, w$j AS w_micro FROM w$LrRounds" }
-        s"""WITH $lrTrainCtes
-           |${sel.mkString("\n UNION ALL ")}""".stripMargin
-      }),
+      Some(s"""WITH $lrTrainCtes
+              |${lrWeightRowsSql("")}""".stripMargin)),
 
     // Per-language trained classifiers — ONE model per language, all
     // trained SIMULTANEOUSLY: each epoch is a single groupBy(lang)
@@ -1192,25 +1400,14 @@ object TextQueries {
     // language's slice alone (pinned by LogisticRegressionSpec).
     Q("t_quality_lr_by_lang",
       (s, dir) => {
-        import graft.operators.LogisticRegression
-        val f = lrFeatures(s, dir, extraCols = Seq("lang")).localCheckpoint(true)
-        val wmap = LogisticRegression.trainGrouped(
-          f, "lang", "y", LrFeatNames, LrRounds, LrMicro)
-        val names = "intercept" +: LrFeatNames
+        val (_, wmap) = lrTrainedByLang(s, dir)
         import s.implicits._
         wmap.toSeq.flatMap { case (g, ws) =>
-          names.zip(ws.toSeq).map { case (nm, wv) => (g, nm, wv) }
+          LrWeightNames.zip(ws.toSeq).map { case (nm, wv) => (g, nm, wv) }
         }.toDF("lang", "feature", "w_micro")
       },
-      Some {
-        val ctes = graft.operators.LogisticRegression.trainGroupedCtes(
-          lrFeaturesSqlWith("lang, "), "lang", LrFeatNames, LrRounds, LrMicro)
-        val names = "intercept" +: LrFeatNames
-        val sel = names.zipWithIndex.map { case (n, j) =>
-          s"SELECT lang, '$n' AS feature, w$j AS w_micro FROM w$LrRounds" }
-        s"""WITH $ctes
-           |${sel.mkString("\n UNION ALL ")}""".stripMargin
-      }),
+      Some(s"""WITH $lrGroupedCtes
+              |${lrWeightRowsSql("lang, ")}""".stripMargin)),
 
     // Per-doc scores from the per-language models — the scoreGrouped
     // path end-to-end: each doc's probability under ITS language's
@@ -1218,24 +1415,14 @@ object TextQueries {
     // map; the coverage contract proves no doc silently dropped).
     Q("t_quality_lr_by_lang_scored",
       (s, dir) => {
-        import graft.operators.LogisticRegression
-        val f = lrFeatures(s, dir, extraCols = Seq("lang")).localCheckpoint(true)
-        val wmap = LogisticRegression.trainGrouped(
-          f, "lang", "y", LrFeatNames, LrRounds, LrMicro)
-        LogisticRegression.scoreGrouped(f, "lang", wmap, LrFeatNames)
+        val (f, wmap) = lrTrainedByLang(s, dir)
+        graft.operators.LogisticRegression.scoreGrouped(f, "lang", wmap, LrFeatNames)
           .select(col("doc_id"), col("lang"), col("y"), col("p_micro"),
             col("keep"))
       },
-      Some {
-        val ctes = graft.operators.LogisticRegression.trainGroupedCtes(
-          lrFeaturesSqlWith("lang, "), "lang", LrFeatNames, LrRounds, LrMicro)
-        val zp = ("w.w0 * 1000000" +: LrFeatNames.zipWithIndex.map {
-          case (c, j) => s"w.w${j + 1} * f.$c" }).mkString(" + ")
-        val p = graft.operators.LogisticRegression.pMicroSql(zp)
-        s"""WITH $ctes
-           |SELECT f.doc_id, f.lang, f.y, $p AS p_micro, $p >= 500000 AS keep
-           |FROM lrf f JOIN w$LrRounds w ON f.lang = w.lang""".stripMargin
-      }),
+      Some(s"""WITH $lrGroupedCtes
+              |SELECT f.doc_id, f.lang, f.y, $LrPMicroSql AS p_micro, $LrPMicroSql >= 500000 AS keep
+              |FROM lrf f JOIN w$LrRounds w ON f.lang = w.lang""".stripMargin)),
 
     // Calibration curve of the trained classifier — decile-binned
     // predicted probability vs empirical positive rate (reliability
@@ -1246,10 +1433,8 @@ object TextQueries {
     // integers, ratios 6-dp on the shared grid.
     Q("t_quality_lr_calibration",
       (s, dir) => {
-        import graft.operators.{LogisticRegression, RelationalOps}
-        val f = lrFeatures(s, dir).localCheckpoint(true)
-        val m = LogisticRegression.train(f, "y", LrFeatNames, LrRounds, LrMicro)
-        LogisticRegression.score(f, m, LrFeatNames)
+        import graft.operators.RelationalOps
+        lrScored(s, dir)
           .select(least(floor(col("p_micro").cast("double") / 100000.0)
             .cast("long"), lit(9L)).as("bin"), col("p_micro"), col("y"))
           .groupBy("bin")
@@ -1261,22 +1446,17 @@ object TextQueries {
             RelationalOps.round6(col("n_pos").cast("double") /
               col("n").cast("double")).as("frac_pos"))
       },
-      Some {
-        val zp = ("w.w0 * 1000000" +: LrFeatNames.zipWithIndex.map {
-          case (c, j) => s"w.w${j + 1} * f.$c" }).mkString(" + ")
-        val p = graft.operators.LogisticRegression.pMicroSql(zp)
-        s"""WITH $lrTrainCtes,
-           |scored AS (
-           |  SELECT f.y, $p AS p_micro FROM lrf f, w$LrRounds w)
-           |SELECT least(CAST(floor(CAST(p_micro AS DOUBLE) / 100000.0) AS BIGINT), 9) AS bin,
-           |  CAST(count(*) AS BIGINT) AS n,
-           |  CAST(sum(y) AS BIGINT) AS n_pos,
-           |  floor((CAST(sum(p_micro) AS DOUBLE) / (CAST(count(*) AS DOUBLE) * 1000000.0))
-           |        * 1000000 + 0.5) / 1000000 AS mean_p,
-           |  floor((CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE))
-           |        * 1000000 + 0.5) / 1000000 AS frac_pos
-           |FROM scored GROUP BY 1""".stripMargin
-      }),
+      Some(s"""WITH $lrTrainCtes,
+              |scored AS (
+              |  SELECT f.y, $LrPMicroSql AS p_micro FROM lrf f, w$LrRounds w)
+              |SELECT least(CAST(floor(CAST(p_micro AS DOUBLE) / 100000.0) AS BIGINT), 9) AS bin,
+              |  CAST(count(*) AS BIGINT) AS n,
+              |  CAST(sum(y) AS BIGINT) AS n_pos,
+              |  floor((CAST(sum(p_micro) AS DOUBLE) / (CAST(count(*) AS DOUBLE) * 1000000.0))
+              |        * 1000000 + 0.5) / 1000000 AS mean_p,
+              |  floor((CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE))
+              |        * 1000000 + 0.5) / 1000000 AS frac_pos
+              |FROM scored GROUP BY 1""".stripMargin)),
 
     // Inter-classifier agreement — confusion matrix + Cohen's kappa
     // between the FIXED rule (t_quality_classifier) and the TRAINED model
@@ -1287,14 +1467,12 @@ object TextQueries {
     // arithmetic follows one pinned expression shape on both engines.
     Q("t_label_agreement",
       (s, dir) => {
-        import graft.operators.{LogisticRegression, RelationalOps}
+        import graft.operators.RelationalOps
         val rule = docs(s, dir)
           .select(col("doc_id"), col("text"), tokens(lower(col("text"))).as("ws"))
           .select(col("doc_id"),
             (qualityClassifierLogit(col("text"), col("ws")) >= 0).as("rule_keep"))
-        val f = lrFeatures(s, dir).localCheckpoint(true)
-        val m = LogisticRegression.train(f, "y", LrFeatNames, LrRounds, LrMicro)
-        val trained = LogisticRegression.score(f, m, LrFeatNames)
+        val trained = lrScored(s, dir)
           .select(col("doc_id"), col("keep").as("lr_keep"))
         val conf = rule.join(trained, "doc_id")
           .agg(
@@ -1314,37 +1492,32 @@ object TextQueries {
           RelationalOps.round6(when(pe === 1.0, lit(1.0))
             .otherwise((po - pe) / (lit(1.0) - pe))).as("kappa"))
       },
-      Some {
-        val zp = ("w.w0 * 1000000" +: LrFeatNames.zipWithIndex.map {
-          case (c, j) => s"w.w${j + 1} * f.$c" }).mkString(" + ")
-        val p = graft.operators.LogisticRegression.pMicroSql(zp)
-        s"""WITH $lrTrainCtes,
-           |rule AS (SELECT doc_id, logit >= 0 AS rule_keep FROM (
-           |${qualityLogitSql("documents")})),
-           |trained AS (SELECT f.doc_id, $p >= 500000 AS lr_keep
-           |            FROM lrf f, w$LrRounds w),
-           |conf AS (
-           |  SELECT CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(CASE WHEN rule_keep AND lr_keep THEN 1 ELSE 0 END) AS BIGINT) AS n11,
-           |    CAST(sum(CASE WHEN rule_keep AND NOT lr_keep THEN 1 ELSE 0 END) AS BIGINT) AS n10,
-           |    CAST(sum(CASE WHEN NOT rule_keep AND lr_keep THEN 1 ELSE 0 END) AS BIGINT) AS n01,
-           |    CAST(sum(CASE WHEN NOT rule_keep AND NOT lr_keep THEN 1 ELSE 0 END) AS BIGINT) AS n00
-           |  FROM rule JOIN trained USING (doc_id))
-           |SELECT n, n11, n10, n01, n00,
-           |  floor((CAST(n11 + n00 AS DOUBLE) / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS agreement,
-           |  floor((CASE WHEN (CAST(n11 + n10 AS DOUBLE) * CAST(n11 + n01 AS DOUBLE)
-           |                    + CAST(n01 + n00 AS DOUBLE) * CAST(n10 + n00 AS DOUBLE))
-           |                   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) = 1.0 THEN 1.0
-           |          ELSE (CAST(n11 + n00 AS DOUBLE) / CAST(n AS DOUBLE)
-           |                - (CAST(n11 + n10 AS DOUBLE) * CAST(n11 + n01 AS DOUBLE)
-           |                   + CAST(n01 + n00 AS DOUBLE) * CAST(n10 + n00 AS DOUBLE))
-           |                  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-           |               / (1.0 - (CAST(n11 + n10 AS DOUBLE) * CAST(n11 + n01 AS DOUBLE)
-           |                         + CAST(n01 + n00 AS DOUBLE) * CAST(n10 + n00 AS DOUBLE))
-           |                        / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) END)
-           |        * 1000000 + 0.5) / 1000000 AS kappa
-           |FROM conf""".stripMargin
-      }),
+      Some(s"""WITH $lrTrainCtes,
+              |rule AS (SELECT doc_id, logit >= 0 AS rule_keep FROM (
+              |${qualityLogitSql("documents")})),
+              |trained AS (SELECT f.doc_id, $LrPMicroSql >= 500000 AS lr_keep
+              |            FROM lrf f, w$LrRounds w),
+              |conf AS (
+              |  SELECT CAST(count(*) AS BIGINT) AS n,
+              |    CAST(sum(CASE WHEN rule_keep AND lr_keep THEN 1 ELSE 0 END) AS BIGINT) AS n11,
+              |    CAST(sum(CASE WHEN rule_keep AND NOT lr_keep THEN 1 ELSE 0 END) AS BIGINT) AS n10,
+              |    CAST(sum(CASE WHEN NOT rule_keep AND lr_keep THEN 1 ELSE 0 END) AS BIGINT) AS n01,
+              |    CAST(sum(CASE WHEN NOT rule_keep AND NOT lr_keep THEN 1 ELSE 0 END) AS BIGINT) AS n00
+              |  FROM rule JOIN trained USING (doc_id))
+              |SELECT n, n11, n10, n01, n00,
+              |  floor((CAST(n11 + n00 AS DOUBLE) / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS agreement,
+              |  floor((CASE WHEN (CAST(n11 + n10 AS DOUBLE) * CAST(n11 + n01 AS DOUBLE)
+              |                    + CAST(n01 + n00 AS DOUBLE) * CAST(n10 + n00 AS DOUBLE))
+              |                   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) = 1.0 THEN 1.0
+              |          ELSE (CAST(n11 + n00 AS DOUBLE) / CAST(n AS DOUBLE)
+              |                - (CAST(n11 + n10 AS DOUBLE) * CAST(n11 + n01 AS DOUBLE)
+              |                   + CAST(n01 + n00 AS DOUBLE) * CAST(n10 + n00 AS DOUBLE))
+              |                  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
+              |               / (1.0 - (CAST(n11 + n10 AS DOUBLE) * CAST(n11 + n01 AS DOUBLE)
+              |                         + CAST(n01 + n00 AS DOUBLE) * CAST(n10 + n00 AS DOUBLE))
+              |                        / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) END)
+              |        * 1000000 + 0.5) / 1000000 AS kappa
+              |FROM conf""".stripMargin)),
 
     // Fuzzy record linkage — match noisy keys to a canonical side within
     // Levenshtein distance 1 WITHOUT the all-pairs cross join: the
@@ -1688,18 +1861,13 @@ object TextQueries {
     // jaccard mine is two broadcast-sized joins; a pair is emitted when
     // EITHER side is ≥ 90% contained in the other.
     Q("t_containment_pairs",
-      (s, dir) => {
-        val (pairs, cnt) = shinglePairCounts(s, dir)
-        pairs
-          .join(cnt.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n", "na"), "a_id")
-          .join(cnt.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n", "nb"), "b_id")
+      (s, dir) => shinglePairCounts(s, dir)
           .withColumn("cont_a", graft.operators.RelationalOps.round6(
             col("inter").cast("double") / col("na").cast("double")))
           .withColumn("cont_b", graft.operators.RelationalOps.round6(
             col("inter").cast("double") / col("nb").cast("double")))
           .filter(greatest(col("cont_a"), col("cont_b")) >= 0.9)
-          .select(col("a_id"), col("b_id"), col("inter"), col("cont_a"), col("cont_b"))
-      },
+          .select(col("a_id"), col("b_id"), col("inter"), col("cont_a"), col("cont_b")),
       Some(s"""WITH $ShingleUniverseCtes
               |SELECT a_id, b_id, inter, cont_a, cont_b FROM (
               |  SELECT a_id, b_id, inter,
@@ -1734,13 +1902,7 @@ object TextQueries {
             .select(col("doc_id").as("query_id"), col("text")),
           d, k = 3, excludeSelf = true)
       },
-      Some(s"""WITH sh AS (
-              |  SELECT doc_id, unnest(list_distinct($Shingles3)) AS s
-              |  FROM (SELECT doc_id, $WS AS ws FROM documents)),
-              |shc AS (
-              |  SELECT * FROM sh
-              |  WHERE s NOT IN (SELECT s FROM sh GROUP BY s HAVING count(*) > 100)),
-              |cnt AS (SELECT doc_id, count(*) AS n FROM shc GROUP BY doc_id),
+      Some(s"""WITH $CappedShingleCtes,
               |inter AS (
               |  SELECT q.doc_id AS query_id, c.doc_id AS cand_id, count(*) AS inter
               |  FROM shc q JOIN shc c USING (s)
@@ -1784,9 +1946,7 @@ object TextQueries {
     // candidate join, which must not execute twice.
     Q("t_dup_clusters_incremental",
       (s, dir) => {
-        val work = rindexDir("incc", dir)
-        val (f, wp) = graft.util.Fs(s, work)
-        f.delete(wp, true)
+        val work = Q.workDir(s, "incc", dir)
         val pairs = jaccardPairs(s, dir).select(col("a_id"), col("b_id"))
           .localCheckpoint(true)
         val ids = docs(s, dir).select(col("doc_id"))
@@ -2023,28 +2183,19 @@ object TextQueries {
         val d = docs(s, dir).filter(col("text").isNotNull)
         val h = d.select(col("source"),
           portableHash60(concat(lit("acd:"), col("text"))).as("hv")).distinct()
-        val w = Window.partitionBy(col("source")).orderBy(col("hv").asc)
-        val kth = h.withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 64)
-          .groupBy(col("source")).agg(max(col("hv")).as("hk"), count(lit(1)).as("k"))
+        val kth = kmvKth(h)
         val ex = d.groupBy(col("source")).agg(count(lit(1)).as("exact_rows"))
         kth.join(ex, "source").select(col("source"),
-          when(col("k") < 64, col("k"))
-            .otherwise(floor(lit(63.0) * lit(1152921504606846976.0)
-              / col("hk").cast("double")).cast("long")).as("approx_docs"),
+          kmvEstimate.as("approx_docs"),
           col("exact_rows"))
       },
-      Some("""WITH d AS (SELECT source, text FROM documents WHERE text IS NOT NULL),
+      Some(s"""WITH d AS (SELECT source, text FROM documents WHERE text IS NOT NULL),
              |h AS (SELECT DISTINCT source,
              |        ('0x' || substr(md5('acd:' || text), 1, 15))::BIGINT AS hv FROM d),
-             |rk AS (SELECT source, hv, row_number() OVER (
-             |         PARTITION BY source ORDER BY hv ASC) AS rnk FROM h),
-             |kth AS (SELECT source, max(hv) AS hk, count(*) AS k
-             |        FROM rk WHERE rnk <= 64 GROUP BY 1),
+             |$KmvKthCtes,
              |ex AS (SELECT source, count(*) AS exact_rows FROM d GROUP BY 1)
              |SELECT source,
-             |  CASE WHEN k < 64 THEN CAST(k AS BIGINT)
-             |       ELSE CAST(floor(63.0 * 1152921504606846976.0 / CAST(hk AS DOUBLE)) AS BIGINT) END AS approx_docs,
+             |  $KmvEstimateSql AS approx_docs,
              |  exact_rows
              |FROM kth JOIN ex USING (source)""".stripMargin)),
 
@@ -2053,16 +2204,10 @@ object TextQueries {
     // on any engine, any partitioning — reproduces the same split. Hex
     // thresholds 'cccc' / 'e666' ≈ 80 / 10 / 10.
     Q("t_split",
-      (s, dir) => {
-        val h = substring(md5(col("doc_id").cast("string")), 1, 4)
-        docs(s, dir).select(col("doc_id"),
-          when(h < "cccc", "train").when(h < "e666", "val").otherwise("test").as("split"))
-      },
-      Some("""SELECT doc_id,
-             |  CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc' THEN 'train'
-             |       WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666' THEN 'val'
-             |       ELSE 'test' END AS split
-             |FROM documents""".stripMargin)),
+      (s, dir) => docs(s, dir).select(col("doc_id"), splitOf("doc_id")),
+      Some(s"""SELECT doc_id,
+              |  ${splitSql("doc_id")}
+              |FROM documents""".stripMargin)),
 
     // Repetition signal (quality filtering): frequency of the most repeated
     // token over the token count — boilerplate/spam detector. Array-native
@@ -2145,13 +2290,7 @@ object TextQueries {
     Q("m_audio_features",
       (s, dir) => graft.multimodal.Multimodal.audioFrameFeatures(
         graft.multimodal.Multimodal.toAudioTable(docs(s, dir), "doc_id")).toDF(),
-      Some("""WITH d AS (
-             |  SELECT doc_id, 256 + (doc_id % 5) * 64 AS n,
-             |         13 + (doc_id % 7) AS a, (doc_id * 31) % 65536 AS b
-             |  FROM documents),
-             |smp AS (
-             |  SELECT doc_id, i, ((a * i + b) % 65536) - 32768 AS v, i // 64 AS frame_idx
-             |  FROM d, unnest(generate_series(0, n - 1)) AS u(i)),
+      Some(s"""WITH ${audioSampleCtes("i, ")},
              |x AS (
              |  SELECT doc_id, frame_idx, i, v,
              |         lag(v) OVER (PARTITION BY doc_id, frame_idx ORDER BY i) AS pv
@@ -2197,13 +2336,7 @@ object TextQueries {
           .select(col("doc_id"), col("dominant_dv"), col("n_dominant"),
             col("n_frames"), col("family_size"))
       },
-      Some("""WITH d AS (
-             |  SELECT doc_id, 256 + (doc_id % 5) * 64 AS n,
-             |         13 + (doc_id % 7) AS a, (doc_id * 31) % 65536 AS b
-             |  FROM documents),
-             |smp AS (
-             |  SELECT doc_id, ((a * i + b) % 65536) - 32768 AS v, i // 64 AS frame_idx
-             |  FROM d, unnest(generate_series(0, n - 1)) AS u(i)),
+      Some(s"""WITH ${audioSampleCtes("")},
              |pk AS (SELECT doc_id, frame_idx, CAST(max(v) AS BIGINT) AS vmax
              |       FROM smp GROUP BY 1, 2),
              |dvt AS (SELECT doc_id,
@@ -2245,27 +2378,7 @@ object TextQueries {
     Q("m_phash_pairs_portable",
       (s, dir) => graft.multimodal.Multimodal.imageNearDupPairs(
         graft.multimodal.Multimodal.toPatternImageTable(docs(s, dir), "doc_id")),
-      Some("""WITH cb AS (
-             |  SELECT g, c,
-             |    CASE WHEN c = 0 THEN 1
-             |         WHEN ('0x' || substr(md5('img:' || CAST(g AS VARCHAR) || ':' ||
-             |                CAST(c AS VARCHAR)), 1, 15))::BIGINT % 2 = 0 THEN 1
-             |         ELSE 0 END AS bit
-             |  FROM (SELECT unnest(generate_series(0, 15)) AS g),
-             |       (SELECT unnest(generate_series(0, 62)) AS c)),
-             |pat AS (
-             |  SELECT g, CAST(sum(CASE WHEN bit = 1 THEN (1::BIGINT << c) ELSE 0 END)
-             |    AS BIGINT) AS ph
-             |  FROM cb GROUP BY g),
-             |sig AS (
-             |  SELECT d.doc_id,
-             |    CASE WHEN d.doc_id % 3 = 0 THEN p.ph
-             |         WHEN d.doc_id % 3 = 1 THEN xor(p.ph,
-             |           (1::BIGINT << CAST(1 + d.doc_id % 62 AS INT)))
-             |         ELSE xor(p.ph,
-             |           (15::BIGINT << CAST(1 + d.doc_id % 59 AS INT)))
-             |    END AS phash
-             |  FROM documents d JOIN pat p ON p.g = d.doc_id % 16),
+      Some(s"""WITH $PatternSigCtes,
              |banded AS (
              |  SELECT doc_id, phash,
              |    (CAST(b AS BIGINT) << 16) + ((phash >> (b * 16)) & 65535) AS bk
@@ -2315,27 +2428,7 @@ object TextQueries {
     Q("m_decode_features_portable",
       (s, dir) => graft.multimodal.Multimodal.extractImageFeatures(
         graft.multimodal.Multimodal.toPatternImageTable(docs(s, dir), "doc_id")).toDF(),
-      Some("""WITH cb AS (
-             |  SELECT g, c,
-             |    CASE WHEN c = 0 THEN 1
-             |         WHEN ('0x' || substr(md5('img:' || CAST(g AS VARCHAR) || ':' ||
-             |                CAST(c AS VARCHAR)), 1, 15))::BIGINT % 2 = 0 THEN 1
-             |         ELSE 0 END AS bit
-             |  FROM (SELECT unnest(generate_series(0, 15)) AS g),
-             |       (SELECT unnest(generate_series(0, 62)) AS c)),
-             |pat AS (
-             |  SELECT g, CAST(sum(CASE WHEN bit = 1 THEN (1::BIGINT << c) ELSE 0 END)
-             |    AS BIGINT) AS ph
-             |  FROM cb GROUP BY g),
-             |sig AS (
-             |  SELECT d.doc_id,
-             |    CASE WHEN d.doc_id % 3 = 0 THEN p.ph
-             |         WHEN d.doc_id % 3 = 1 THEN xor(p.ph,
-             |           (1::BIGINT << CAST(1 + d.doc_id % 62 AS INT)))
-             |         ELSE xor(p.ph,
-             |           (15::BIGINT << CAST(1 + d.doc_id % 59 AS INT)))
-             |    END AS phash
-             |  FROM documents d JOIN pat p ON p.g = d.doc_id % 16)
+      Some(s"""WITH $PatternSigCtes
              |SELECT doc_id AS id, CAST(822 AS BIGINT) AS n_bytes,
              |  CAST(16 AS INTEGER) AS width, CAST(16 AS INTEGER) AS height,
              |  floor((CAST(600 * bit_count(phash) + 12800 AS DOUBLE) / 256.0)
@@ -2487,23 +2580,16 @@ object TextQueries {
       (s, dir) => {
         val h = pmod(portableHash60(concat(lit("samplek:"), col("doc_id").cast("string"))),
           lit(1L << 50))
-        val topk = docs(s, dir)
-          .select(col("lang"), col("doc_id"), (-h.cast("double")).as("negh"))
-          .groupBy(col("lang"))
-          .agg(graft.expressions.TopKByScore(col("negh"), col("doc_id"), 20).as("picks"))
-        topk.select(col("lang"), posexplode(col("picks")).as(Seq("pos", "e")))
-          .select(col("lang"), col("e.id").as("doc_id"), (col("pos") + 1L).as("rnk"))
+        langTopK(docs(s, dir)
+          .select(col("lang"), col("doc_id"), (-h.cast("double")).as("negh")),
+          col("negh"), 20)
       },
-      Some("""WITH h AS (
+      Some(s"""WITH h AS (
              |  SELECT lang, doc_id,
              |    ('0x' || substr(md5('samplek:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
              |      % (1::BIGINT << 50) AS hv
              |  FROM documents)
-             |SELECT lang, doc_id, rnk FROM (
-             |  SELECT lang, doc_id,
-             |    CAST(row_number() OVER (PARTITION BY lang ORDER BY hv, doc_id) AS BIGINT) AS rnk
-             |  FROM h)
-             |WHERE rnk <= 20""".stripMargin)),
+             |${langRankSql("h", "hv", 20)}""".stripMargin)),
 
     // WEIGHTED fixed-k per-stratum sampling (priority/bottom-k sampling,
     // Duffield–Lund–Thorup shape): each doc draws a deterministic uniform
@@ -2519,26 +2605,18 @@ object TextQueries {
       (s, dir) => {
         val h = pmod(portableHash60(concat(lit("wsample:"), col("doc_id").cast("string"))),
           lit(1L << 50))
-        val topk = docs(s, dir)
+        langTopK(docs(s, dir)
           .select(col("lang"), col("doc_id"),
             (h + 1).as("h1"), greatest(col("n_chars"), lit(1L)).as("wpos"))
-          .withColumn("k0", expr("h1 div wpos"))
-          .groupBy(col("lang"))
-          .agg(graft.expressions.TopKByScore(
-            -col("k0").cast("double"), col("doc_id"), 10).as("picks"))
-        topk.select(col("lang"), posexplode(col("picks")).as(Seq("pos", "e")))
-          .select(col("lang"), col("e.id").as("doc_id"), (col("pos") + 1L).as("rnk"))
+          .withColumn("k0", expr("h1 div wpos")),
+          -col("k0").cast("double"), 10)
       },
       Some(s"""WITH wk AS (
               |  SELECT lang, doc_id,
               |    (('0x' || substr(md5('wsample:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
               |       % (1::BIGINT << 50) + 1) // greatest(n_chars, 1) AS k0
               |  FROM documents)
-              |SELECT lang, doc_id, rnk FROM (
-              |  SELECT lang, doc_id,
-              |    CAST(row_number() OVER (PARTITION BY lang ORDER BY k0, doc_id) AS BIGINT) AS rnk
-              |  FROM wk)
-              |WHERE rnk <= 10""".stripMargin)),
+              |${langRankSql("wk", "k0", 10)}""".stripMargin)),
 
     // Benchmark decontamination: flag training docs sharing any 4-gram with
     // the held-out eval slice (doc_id % 20 = 0 stands in for the benchmark
@@ -2550,21 +2628,10 @@ object TextQueries {
     // training side stays shuffle-free up to the final per-doc count.
     Q("t_decontaminate",
       (s, dir) => {
-        val d = docs(s, dir)
-        val evalG = d.filter(col("doc_id") % 20 === 0)
-          .select(explode(array_distinct(shingles(col("text"), 4))).as("g")).distinct()
-        val trainG = d.filter(col("doc_id") % 20 =!= 0)
-          .select(col("doc_id"), explode(array_distinct(shingles(col("text"), 4))).as("g"))
+        val (trainG, evalG) = decontamGrams(s, dir)
         contaminationCounts(trainG, evalG)
       },
-      Some(s"""WITH ev AS (
-              |  SELECT DISTINCT unnest(list_distinct($Shingles4)) AS g
-              |  FROM (SELECT doc_id, $WS AS ws FROM documents) WHERE doc_id % 20 = 0),
-              |tr AS (
-              |  SELECT doc_id, unnest(list_distinct($Shingles4)) AS g
-              |  FROM (SELECT doc_id, $WS AS ws FROM documents) WHERE doc_id % 20 <> 0)
-              |SELECT doc_id, count(*) AS n_contaminated
-              |FROM tr JOIN ev USING (g) GROUP BY doc_id""".stripMargin)),
+      Some(DecontaminateSql)),
 
     // FUZZY decontamination — the near-dup leak exact n-gram matching
     // misses: training docs that are paraphrase-level MinHash near-dups
@@ -2614,21 +2681,10 @@ object TextQueries {
     // and asserts the prune actually bites (>50% of grams dropped pre-join).
     Q("t_decontaminate_bloom",
       (s, dir) => {
-        val d = docs(s, dir)
-        val evalG = d.filter(col("doc_id") % 20 === 0)
-          .select(explode(array_distinct(shingles(col("text"), 4))).as("g")).distinct()
-        val trainG = d.filter(col("doc_id") % 20 =!= 0)
-          .select(col("doc_id"), explode(array_distinct(shingles(col("text"), 4))).as("g"))
+        val (trainG, evalG) = decontamGrams(s, dir)
         contaminationCounts(bloomPrefilter(trainG, evalG), evalG)
       },
-      Some(s"""WITH ev AS (
-              |  SELECT DISTINCT unnest(list_distinct($Shingles4)) AS g
-              |  FROM (SELECT doc_id, $WS AS ws FROM documents) WHERE doc_id % 20 = 0),
-              |tr AS (
-              |  SELECT doc_id, unnest(list_distinct($Shingles4)) AS g
-              |  FROM (SELECT doc_id, $WS AS ws FROM documents) WHERE doc_id % 20 <> 0)
-              |SELECT doc_id, count(*) AS n_contaminated
-              |FROM tr JOIN ev USING (g) GROUP BY doc_id""".stripMargin)),
+      Some(DecontaminateSql)),
 
     // Keyword extraction: top-3 distinctive terms per doc ranked by
     // (tf DESC, df ASC, term) — TF-IDF's decision order without the float
@@ -2761,25 +2817,12 @@ object TextQueries {
     // requires actions; the lazy contract is traded for the standing
     // index every later scoring call probes for free.
     Q("t_tfidf_indexed",
-      (s, dir) => {
-        val idx = rindexDir("tfidf", dir)
-        val d = docs(s, dir)
-        graft.retrieval.RetrievalIndex.build(
-          d.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
-        graft.retrieval.RetrievalIndex.appendDocs(
-          d.filter(col("doc_id") % 2 =!= 0), idx, "doc_id", "text")
-        graft.retrieval.RetrievalIndex.tfidf(s, idx)
-      },
+      (s, dir) => graft.retrieval.RetrievalIndex.tfidf(s, halvesIndex(s, dir, "tfidf")),
       Some(TfidfSql)),
 
     Q("t_bm25_indexed",
       (s, dir) => {
-        val idx = rindexDir("bm25", dir)
-        val d = docs(s, dir)
-        graft.retrieval.RetrievalIndex.build(
-          d.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
-        graft.retrieval.RetrievalIndex.appendDocs(
-          d.filter(col("doc_id") % 2 =!= 0), idx, "doc_id", "text")
+        val idx = halvesIndex(s, dir, "bm25")
         graft.retrieval.RetrievalIndex.scoreBm25(s, idx,
           graft.retrieval.RetrievalIndex.topTerms(s, idx, 3))
       },
@@ -2796,7 +2839,7 @@ object TextQueries {
     // RetrievalIndexSpec's; this entry pins the end-state.)
     Q("t_bm25_after_delete",
       (s, dir) => {
-        val idx = rindexDir("bm25del", dir)
+        val idx = Q.workDir(s, "bm25del", dir)
         val d = docs(s, dir)
         graft.retrieval.RetrievalIndex.build(d, "doc_id", "text", idx)
         graft.retrieval.RetrievalIndex.deleteDocs(
@@ -2827,7 +2870,7 @@ object TextQueries {
     // pairs surface in BOTH orientations (mjp is a<b — reorient by union).
     Q("t_dup_after_delete",
       (s, dir) => {
-        val idx = rindexDir("lshdel", dir)
+        val idx = Q.workDir(s, "lshdel", dir)
         val pcfg = graft.dedup.TextDedup.MinHashConfig(
           jaccardThreshold = 0.4, portable = true)
         val d = docs(s, dir).select(col("doc_id"), col("text"))
@@ -3038,16 +3081,11 @@ object TextQueries {
     // measures). Composition of t_dup_clusters and t_split; same md5
     // assignment, same recursive-CTE oracle for the cluster fixpoint.
     Q("t_split_leakfree",
-      (s, dir) => {
-        val h = substring(md5(col("cluster_id").cast("string")), 1, 4)
-        clusteredDocs(s, dir).select(col("doc_id"), col("cluster_id"),
-          when(h < "cccc", "train").when(h < "e666", "val").otherwise("test").as("split"))
-      },
+      (s, dir) => clusteredDocs(s, dir)
+        .select(col("doc_id"), col("cluster_id"), splitOf("cluster_id")),
       Some(s"""WITH RECURSIVE $ClusterCtes
               |SELECT doc_id, cluster_id,
-              |  CASE WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 4) < 'cccc' THEN 'train'
-              |       WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 4) < 'e666' THEN 'val'
-              |       ELSE 'test' END AS split
+              |  ${splitSql("cluster_id")}
               |FROM clustered""".stripMargin)),
 
     // Repeated-passage removal (C4-style intra-corpus dedup, segment
@@ -3235,15 +3273,10 @@ object TextQueries {
     // decomposition must be exactly invisible in the result.
     Q("t_mix_sample",
       (s, dir) => mixSample(docs(s, dir)),
-      Some(s"""WITH b AS (
-              |  SELECT doc_id, source,
-              |    CAST(len($WS) AS BIGINT) AS n_tokens,
-              |    ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
-              |  FROM documents),
+      Some(s"""WITH $MixBaseCte,
               |r AS (
               |  SELECT doc_id, source, n_tokens,
-              |    CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id
-              |        ROWS UNBOUNDED PRECEDING) AS BIGINT) - n_tokens AS start_off,
+              |    $MixStartOffSql,
               |    CAST(('0x' || substr(md5('budget:' || source), 1, 15))::BIGINT % 800
               |         + 200 AS BIGINT) AS budget
               |  FROM b)
@@ -3262,11 +3295,7 @@ object TextQueries {
     Q("t_mix_temperature",
       (s, dir) => mixSample(docs(s, dir),
         budgets = Some(temperatureBudgets(docs(s, dir), 8000L))),
-      Some(s"""WITH b AS (
-              |  SELECT doc_id, source,
-              |    CAST(len($WS) AS BIGINT) AS n_tokens,
-              |    ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
-              |  FROM documents),
+      Some(s"""WITH $MixBaseCte,
               |mw AS (
               |  SELECT source,
               |    CAST(floor(sqrt(CAST(sum(n_tokens) AS DOUBLE))) AS BIGINT) AS w
@@ -3275,8 +3304,7 @@ object TextQueries {
               |bud AS (SELECT source, CAST(8000 * w // tw AS BIGINT) AS budget FROM mw, tw),
               |r AS (
               |  SELECT doc_id, source, n_tokens,
-              |    CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id
-              |        ROWS UNBOUNDED PRECEDING) AS BIGINT) - n_tokens AS start_off
+              |    $MixStartOffSql
               |  FROM b)
               |SELECT r.doc_id, r.source, r.n_tokens, r.start_off, bud.budget
               |FROM r JOIN bud USING (source) WHERE r.start_off < bud.budget""".stripMargin)),
@@ -3296,16 +3324,9 @@ object TextQueries {
     // past the cap (see trigramFamiliarity).
     Q("t_trigram_lm",
       (s, dir) => {
-        val d = docsSpread(s, dir).select(col("doc_id"), lower(col("text")).as("t"))
-          .filter(length(col("t")) >= 3)
-        trigramFamiliarity(d, sharedModel = Some(charTrigramModel(s, dir)))
+        trigramFamiliarity(lowerTexts(s, dir, "doc_id"), sharedModel = Some(charTrigramModel(s, dir)))
       },
-      Some("""WITH tri AS (
-             |  SELECT doc_id,
-             |    unnest(list_transform(generate_series(1, length(t) - 2), i -> substr(t, i, 3))) AS g
-             |  FROM (SELECT doc_id, lower(text) AS t FROM documents)
-             |  WHERE length(t) >= 3),
-             |c AS (SELECT g, count(*) AS c FROM tri GROUP BY g)
+      Some(s"""WITH $CharTrigramCtes
              |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
              |  CAST(sum(c.c) AS BIGINT) AS familiarity
              |FROM tri JOIN c USING (g) GROUP BY doc_id""".stripMargin)),
@@ -3562,10 +3583,7 @@ object TextQueries {
     // langs, top lang — stay on the one-shot t_data_card.)
     Q("t_data_card_incremental",
       (s, dir) => {
-        val work = s"${sys.props("java.io.tmpdir")}/graft-rindex-dcard-" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        val (f, wp) = graft.util.Fs(s, work)
-        f.delete(wp, true)
+        val work = Q.workDir(s, "dcard", dir)
         val d = docs(s, dir).select(col("source"), col("doc_id"),
           tokenCount(col("text")).as("tok"))
         val keys = Seq("source")
@@ -3591,10 +3609,7 @@ object TextQueries {
     // = the one-shot two-key aggregate over the full corpus.
     Q("t_data_card_by_release",
       (s, dir) => {
-        val work = s"${sys.props("java.io.tmpdir")}/graft-rindex-dcardrel-" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        val (f, wp) = graft.util.Fs(s, work)
-        f.delete(wp, true)
+        val work = Q.workDir(s, "dcardrel", dir)
         val d = docs(s, dir).select(col("source"),
           pmod(col("doc_id"), lit(3)).as("release"),
           col("doc_id"), tokenCount(col("text")).as("tok"))
@@ -3655,9 +3670,7 @@ object TextQueries {
     // op that dies first at 100 TB).
     Q("t_ccnet_buckets",
       (s, dir) => {
-        val d0 = docsSpread(s, dir)
-          .select(col("doc_id"), col("lang"), lower(col("text")).as("t"))
-          .filter(length(col("t")) >= 3)
+        val d0 = lowerTexts(s, dir, "doc_id", "lang")
         // MATERIALIZED once (eager localCheckpoint, the trigramFamiliarity
         // discipline): the scored frame feeds BOTH the threshold histogram
         // and the final bucket stamp — left lazy, Spark re-runs the whole
@@ -3684,12 +3697,7 @@ object TextQueries {
               .when(col("score_q") <= col("t2"), "middle")
               .otherwise("head").as("bucket"))
       },
-      Some("""WITH tri AS (
-             |  SELECT doc_id,
-             |    unnest(list_transform(generate_series(1, length(t) - 2), i -> substr(t, i, 3))) AS g
-             |  FROM (SELECT doc_id, lower(text) AS t FROM documents)
-             |  WHERE length(t) >= 3),
-             |c AS (SELECT g, count(*) AS c FROM tri GROUP BY g),
+      Some(s"""WITH $CharTrigramCtes,
              |fam AS (
              |  SELECT doc_id, count(*) AS n_trigrams, CAST(sum(c.c) AS BIGINT) AS familiarity
              |  FROM tri JOIN c USING (g) GROUP BY doc_id),
@@ -3916,15 +3924,10 @@ object TextQueries {
           .localCheckpoint(true)
         val h = dt.select(col("source"),
           portableHash60(concat(lit("kmv:"), col("g"))).as("hv")).distinct()
-        val w = Window.partitionBy(col("source")).orderBy(col("hv").asc)
-        val kth = h.withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 64)
-          .groupBy(col("source")).agg(max(col("hv")).as("hk"), count(lit(1)).as("k"))
+        val kth = kmvKth(h)
         val ex = dt.groupBy(col("source")).agg(count(lit(1)).as("exact_distinct"))
         kth.join(ex, "source").select(col("source"), col("k"),
-          when(col("k") < 64, col("k"))
-            .otherwise(floor(lit(63.0) * lit(1152921504606846976.0)
-              / col("hk").cast("double")).cast("long")).as("est_distinct"),
+          kmvEstimate.as("est_distinct"),
           col("exact_distinct"))
       },
       Some(s"""WITH hd AS (SELECT source, $WS AS ws FROM documents),
@@ -3932,14 +3935,10 @@ object TextQueries {
               |        (SELECT source, unnest($Shingles3) AS g FROM hd)),
               |h AS (SELECT DISTINCT source,
               |        ('0x' || substr(md5('kmv:' || g), 1, 15))::BIGINT AS hv FROM dt),
-              |rk AS (SELECT source, hv, row_number() OVER (
-              |         PARTITION BY source ORDER BY hv ASC) AS rnk FROM h),
-              |kth AS (SELECT source, max(hv) AS hk, count(*) AS k
-              |        FROM rk WHERE rnk <= 64 GROUP BY 1),
+              |$KmvKthCtes,
               |ex AS (SELECT source, count(*) AS exact_distinct FROM dt GROUP BY 1)
               |SELECT source, CAST(k AS BIGINT) AS k,
-              |  CASE WHEN k < 64 THEN CAST(k AS BIGINT)
-              |       ELSE CAST(floor(63.0 * 1152921504606846976.0 / CAST(hk AS DOUBLE)) AS BIGINT) END AS est_distinct,
+              |  $KmvEstimateSql AS est_distinct,
               |  exact_distinct
               |FROM kth JOIN ex USING (source)""".stripMargin)),
 
@@ -3955,9 +3954,7 @@ object TextQueries {
     // plan below is unchanged from the first join on.
     Q("t_phrase_search",
       (s, dir) => {
-        val post = docs(s, dir).select(col("doc_id"),
-            posexplode(tokens(lower(col("text")))).as(Seq("p0", "term")))
-          .select(col("doc_id"), (col("p0") + 1).cast("long").as("p"), col("term"))
+        val post = postings(s, dir)
         val ph = docs(s, dir)
           .select(explode(shingles(lower(col("text")), 3)).as("g"))
           .groupBy(col("g")).agg(count(lit(1)).as("c"))
@@ -3987,9 +3984,7 @@ object TextQueries {
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_occ"), min(col("p")).as("first_pos"))
       },
-      Some(s"""WITH hd AS (SELECT doc_id, $WSL AS ws FROM documents),
-              |pos AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS p, ws FROM hd),
-              |post AS (SELECT doc_id, p, ws[p] AS term FROM pos),
+      Some(s"""WITH $PostingsCtes,
               |tg AS (SELECT g, count(*) AS c FROM
               |        (SELECT unnest($Shingles3) AS g FROM hd)
               |       GROUP BY 1 ORDER BY c DESC, g ASC LIMIT 1),
@@ -4012,9 +4007,7 @@ object TextQueries {
     // join input is two single-term postings lists, not the corpus.
     Q("t_proximity_search",
       (s, dir) => {
-        val post = docs(s, dir).select(col("doc_id"),
-            posexplode(tokens(lower(col("text")))).as(Seq("p0", "term")))
-          .select(col("doc_id"), (col("p0") + 1).cast("long").as("p"), col("term"))
+        val post = postings(s, dir)
         val two = post.groupBy(col("term")).agg(count(lit(1)).as("c"))
           .orderBy(col("c").desc, col("term").asc).limit(2)
         val top2 = two
@@ -4032,9 +4025,7 @@ object TextQueries {
           .agg(count(lit(1)).as("n_pairs"),
             min(abs(col("pa") - col("pb"))).as("min_dist"))
       },
-      Some(s"""WITH hd AS (SELECT doc_id, $WSL AS ws FROM documents),
-              |pos AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS p, ws FROM hd),
-              |post AS (SELECT doc_id, p, ws[p] AS term FROM pos),
+      Some(s"""WITH $PostingsCtes,
               |qt AS (SELECT term, row_number() OVER (ORDER BY c DESC, term ASC) AS rnk
               |       FROM (SELECT term, count(*) AS c FROM post GROUP BY 1)
               |       ORDER BY rnk LIMIT 2),
@@ -4109,27 +4100,10 @@ object TextQueries {
           .select(col("doc_id"), col("rnk"), col("n_query_terms"),
             col("bm25").as("bm25_rm3"))
       },
-      Some(s"""WITH tok AS (SELECT doc_id, unnest($WSL) AS term FROM documents),
-              |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-              |dlen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_d FROM tf GROUP BY 1),
-              |dft AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-              |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-              |              (SELECT CAST(sum(n_d) AS BIGINT) FROM dlen) AS tot_tokens),
-              |qt AS (SELECT term FROM (
-              |         SELECT term, sum(tf) AS ttf FROM tf GROUP BY term
-              |         ORDER BY ttf DESC, term ASC LIMIT 3)),
-              |c1 AS (
-              |  SELECT tf.doc_id,
-              |    ln((CAST(st.n_docs AS DOUBLE) - CAST(dft.df AS DOUBLE) + 0.5) /
-              |       (CAST(dft.df AS DOUBLE) + 0.5) + 1.0) *
-              |    (CAST(tf.tf AS DOUBLE) * 2.2) /
-              |    (CAST(tf.tf AS DOUBLE) +
-              |     1.2 * (0.25 + 0.75 * CAST(dlen.n_d AS DOUBLE) /
-              |            (CAST(st.tot_tokens AS DOUBLE) / CAST(st.n_docs AS DOUBLE)))) AS contrib
-              |  FROM tf JOIN qt USING (term) JOIN dlen USING (doc_id)
-              |       JOIN dft USING (term), st),
+      Some(s"""WITH $Bm25BaseCtes,
+              |${bm25ContribCte("c1", "qt")},
               |s1 AS (SELECT doc_id,
-              |    floor((CAST(sum(CAST(floor(contrib * 1e9) AS BIGINT)) AS DOUBLE) / 1e9) * 1000000 + 0.5) / 1000000 AS bm25
+              |    $Bm25RoundSql AS bm25
               |  FROM c1 GROUP BY doc_id),
               |fbd AS (SELECT doc_id FROM s1 ORDER BY bm25 DESC, doc_id ASC LIMIT 10),
               |exp_ AS (SELECT term FROM (
@@ -4138,18 +4112,9 @@ object TextQueries {
               |    WHERE tf.term NOT IN (SELECT term FROM qt)
               |    GROUP BY tf.term ORDER BY mass DESC, term ASC LIMIT 5)),
               |q2 AS (SELECT term FROM qt UNION ALL SELECT term FROM exp_),
-              |c2 AS (
-              |  SELECT tf.doc_id,
-              |    ln((CAST(st.n_docs AS DOUBLE) - CAST(dft.df AS DOUBLE) + 0.5) /
-              |       (CAST(dft.df AS DOUBLE) + 0.5) + 1.0) *
-              |    (CAST(tf.tf AS DOUBLE) * 2.2) /
-              |    (CAST(tf.tf AS DOUBLE) +
-              |     1.2 * (0.25 + 0.75 * CAST(dlen.n_d AS DOUBLE) /
-              |            (CAST(st.tot_tokens AS DOUBLE) / CAST(st.n_docs AS DOUBLE)))) AS contrib
-              |  FROM tf JOIN q2 USING (term) JOIN dlen USING (doc_id)
-              |       JOIN dft USING (term), st),
+              |${bm25ContribCte("c2", "q2")},
               |s2 AS (SELECT doc_id, count(*) AS n_query_terms,
-              |    floor((CAST(sum(CAST(floor(contrib * 1e9) AS BIGINT)) AS DOUBLE) / 1e9) * 1000000 + 0.5) / 1000000 AS bm25_rm3
+              |    $Bm25RoundSql AS bm25_rm3
               |  FROM c2 GROUP BY doc_id)
               |SELECT doc_id,
               |  CAST(row_number() OVER (ORDER BY bm25_rm3 DESC, doc_id ASC) AS BIGINT) AS rnk,

@@ -43,6 +43,47 @@ object VectorQueries {
   private val DotAB = duckFoldSum("ea", "CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)")
   private val NormA = s"sqrt(${duckFoldSum("ea", "CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)")})"
   private val NormB = s"sqrt(${duckFoldSum("eb", "CAST(eb[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)")})"
+  /** The 6-dp cosine from a pair's folded `d`, `na`, `nb`. */
+  private val CosAB = "floor((CASE WHEN na * nb = 0 THEN 0.0 ELSE d / (na * nb) END) * 1000000 + 0.5) / 1000000"
+
+  /** The all-pairs cosine ≥ 0.4 tail over candidate pairs `p(a_id, b_id,
+    * ea, eb)` — shared by e_dup_pairs_exact and e_dup_pairs_portable. */
+  private val DupPairsTailSql =
+    s"""sc AS (SELECT a_id, b_id, $DotAB AS d, $NormA AS na, $NormB AS nb FROM p)
+       |SELECT a_id, b_id, score FROM (
+       |  SELECT a_id, b_id,
+       |    $CosAB AS score
+       |  FROM sc)
+       |WHERE score >= 0.4""".stripMargin
+
+  /** Per-`key` mean `mu` and population std `sigma` of double column `x`,
+    * from fixed-point (1e-9 grid) BIGINT sums, so the moments are exact
+    * under any merge order — shared by e_standardize and the SemDeDup
+    * outlier z-scores. */
+  private def fixedPointMoments(d: org.apache.spark.sql.DataFrame, key: String,
+      x: String): org.apache.spark.sql.DataFrame =
+    d.groupBy(col(key))
+      .agg(count(lit(1)).as("n"),
+        sum(floor(col(x) * 1e9).cast("long")).as("s1"),
+        sum(floor(col(x) * col(x) * 1e9).cast("long")).as("s2"))
+      .withColumn("mu", col("s1").cast("double") / (col("n").cast("double") * 1e9))
+      .withColumn("sigma", sqrt(greatest(
+        col("s2").cast("double") / (col("n").cast("double") * 1e9) -
+          col("mu") * col("mu"), lit(0.0))))
+      .select(col(key), col("mu"), col("sigma"))
+
+  /** The DuckDB image of [[fixedPointMoments]]: the `n, s1, s2` sums of
+    * `x`, then `mu, sigma` over them. */
+  private def momentSumsSql(x: String): String =
+    s"""count(*) AS n,
+       |    sum(CAST(floor($x * 1e9) AS BIGINT)) AS s1,
+       |    sum(CAST(floor($x * $x * 1e9) AS BIGINT)) AS s2""".stripMargin
+  private val MuSigmaSql =
+    """CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9) AS mu,
+      |    sqrt(greatest(
+      |      CAST(s2 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9) -
+      |        (CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9)) *
+      |        (CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9)), 0.0)) AS sigma""".stripMargin
 
   /** Per-vector max-abs int8 quantization — the integer grid shared by
     * e_quant_topk and e_top_pc (Spark side). */
@@ -202,6 +243,15 @@ object VectorQueries {
   private val MkShort = 32
   private val MkK = 10
 
+  /** The dot and norms of `embedding`·`qv` over the first MkPrefix dims —
+    * the stage-1 score of e_matryoshka_topk and e_eval_metrics. */
+  private val DotQP = duckFoldSumN(MkPrefix,
+    "CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)")
+  private val NormEP = s"sqrt(${duckFoldSumN(MkPrefix,
+    "CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)")})"
+  private val NormQP = s"sqrt(${duckFoldSumN(MkPrefix,
+    "CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)")})"
+
   /** Sizing of the MMR registry slice, shared by the Spark body and the
     * unrolled oracle below. */
   private val MmrQueries = 8
@@ -337,6 +387,58 @@ object VectorQueries {
 
   private val SemCellCtes: String = semCellCtes("embeddings")
 
+  /** SemDeDup's verdict over cell assignment CTE `asg` (cell column
+    * `cell`): within each cell, drop the larger id of every pair at cosine
+    * ≥ 0.4, keep the rest. `prefix` names this chain's CTEs. */
+  private def semDedupKeepSql(asg: String, cell: String, prefix: String): String =
+    s"""${prefix}ps AS (
+       |  SELECT b_id, $DotAB AS d, $NormA AS na, $NormB AS nb FROM (
+       |    SELECT b.vec_id AS b_id, a.embedding AS ea, b.embedding AS eb
+       |    FROM $asg a JOIN $asg b ON a.$cell = b.$cell AND a.vec_id < b.vec_id)),
+       |${prefix}drp AS (
+       |  SELECT DISTINCT b_id AS vec_id FROM ${prefix}ps
+       |  WHERE $CosAB >= 0.4)
+       |SELECT g.vec_id, CAST(g.$cell AS BIGINT) AS cell_id,
+       |  CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
+       |FROM $asg g LEFT JOIN ${prefix}drp d ON d.vec_id = g.vec_id""".stripMargin
+
+  /** Exact top-5 by 6-dp cosine over the candidate pairs `cand(query_id,
+    * cand_id)`: CTE `pairs` fetches both vectors from `src`, `scored`
+    * folds dot and norms, then rank — the tail of every portable k-NN
+    * oracle (IVF, IVF after delete, Rademacher LSH). */
+  private def knnTop5Sql(src: String, pairs: String, scored: String): String =
+    s"""$pairs AS (
+       |  SELECT c.query_id, c.cand_id, eq.embedding AS ea, ec.embedding AS eb
+       |  FROM cand c JOIN $src eq ON eq.vec_id = c.query_id
+       |              JOIN $src ec ON ec.vec_id = c.cand_id),
+       |$scored AS (SELECT query_id, cand_id, $DotAB AS d, $NormA AS na, $NormB AS nb FROM $pairs),
+       |r AS (
+       |  SELECT query_id, cand_id,
+       |    $CosAB AS score
+       |  FROM $scored)
+       |SELECT query_id, cand_id, score, rnk FROM (
+       |  SELECT query_id, cand_id, score,
+       |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rnk
+       |  FROM r)
+       |WHERE rnk <= 5""".stripMargin
+
+  /** The e_knn_ivf_portable chain over `src`: the hash-seeded cells,
+    * nProbe = 4 probed cells per query (vec_id < 20), every other member
+    * of those cells a candidate, exact top-5 within. */
+  private def ivfKnnSql(src: String): String =
+    s"""${semCellCtes(src)},
+       |probe AS (
+       |  SELECT vec_id AS query_id, seed_id AS cell_id FROM (
+       |    SELECT vec_id, seed_id,
+       |      row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, seed_id) AS rn
+       |    FROM sc WHERE vec_id < 20)
+       |  WHERE rn <= 4),
+       |cand AS (
+       |  SELECT p.query_id, a.vec_id AS cand_id
+       |  FROM probe p JOIN asg a ON a.seed_id = p.cell_id
+       |  WHERE a.vec_id <> p.query_id),
+       |${knnTop5Sql(src, "cp", "cs")}""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // Vector stats: dimension + L2 norm.
@@ -430,32 +532,7 @@ object VectorQueries {
           e.filter(col("vec_id") < 20), e, "vec_id", "embedding",
           k = 5, nCells = 16, nProbe = 4)
       },
-      Some(
-        s"""WITH $SemCellCtes,
-           |probe AS (
-           |  SELECT vec_id AS query_id, seed_id AS cell_id FROM (
-           |    SELECT vec_id, seed_id,
-           |      row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, seed_id) AS rn
-           |    FROM sc WHERE vec_id < 20)
-           |  WHERE rn <= 4),
-           |cand AS (
-           |  SELECT p.query_id, a.vec_id AS cand_id
-           |  FROM probe p JOIN asg a ON a.seed_id = p.cell_id
-           |  WHERE a.vec_id <> p.query_id),
-           |cp AS (
-           |  SELECT c.query_id, c.cand_id, eq.embedding AS ea, ec.embedding AS eb
-           |  FROM cand c JOIN embeddings eq ON eq.vec_id = c.query_id
-           |              JOIN embeddings ec ON ec.vec_id = c.cand_id),
-           |cs AS (SELECT query_id, cand_id, $DotAB AS d, $NormA AS na, $NormB AS nb FROM cp),
-           |r AS (
-           |  SELECT query_id, cand_id,
-           |    floor((CASE WHEN na * nb = 0 THEN 0.0 ELSE d / (na * nb) END) * 1000000 + 0.5) / 1000000 AS score
-           |  FROM cs)
-           |SELECT query_id, cand_id, score, rnk FROM (
-           |  SELECT query_id, cand_id, score,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rnk
-           |  FROM r)
-           |WHERE rnk <= 5""".stripMargin)),
+      Some(s"WITH ${ivfKnnSql("embeddings")}")),
 
     // The ANN DELETION lifecycle under a full oracle (right-to-be-forgotten
     // for a standing vector index, the t_bm25_after_delete pattern): build
@@ -471,8 +548,7 @@ object VectorQueries {
     // delete semantics instead.)
     Q("e_knn_after_delete",
       (s, dir) => {
-        val idx = s"${sys.props("java.io.tmpdir")}/graft-ivfdel-" +
-          java.lang.Integer.toHexString(dir.hashCode)
+        val idx = Q.workDir(s, "ivfdel", dir)
         val e = emb(s, dir)
         val survivors = e.filter(col("vec_id") % 5 =!= 0)
         val victims = e.filter(col("vec_id") % 5 === 0)
@@ -489,31 +565,7 @@ object VectorQueries {
       },
       Some(
         s"""WITH surv AS (SELECT * FROM embeddings WHERE vec_id % 5 <> 0),
-           |${semCellCtes("surv")},
-           |probe AS (
-           |  SELECT vec_id AS query_id, seed_id AS cell_id FROM (
-           |    SELECT vec_id, seed_id,
-           |      row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, seed_id) AS rn
-           |    FROM sc WHERE vec_id < 20)
-           |  WHERE rn <= 4),
-           |cand AS (
-           |  SELECT p.query_id, a.vec_id AS cand_id
-           |  FROM probe p JOIN asg a ON a.seed_id = p.cell_id
-           |  WHERE a.vec_id <> p.query_id),
-           |cp AS (
-           |  SELECT c.query_id, c.cand_id, eq.embedding AS ea, ec.embedding AS eb
-           |  FROM cand c JOIN surv eq ON eq.vec_id = c.query_id
-           |              JOIN surv ec ON ec.vec_id = c.cand_id),
-           |cs AS (SELECT query_id, cand_id, $DotAB AS d, $NormA AS na, $NormB AS nb FROM cp),
-           |r AS (
-           |  SELECT query_id, cand_id,
-           |    floor((CASE WHEN na * nb = 0 THEN 0.0 ELSE d / (na * nb) END) * 1000000 + 0.5) / 1000000 AS score
-           |  FROM cs)
-           |SELECT query_id, cand_id, score, rnk FROM (
-           |  SELECT query_id, cand_id, score,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rnk
-           |  FROM r)
-           |WHERE rnk <= 5""".stripMargin)),
+           |${ivfKnnSql("surv")}""".stripMargin)),
 
     // Embedding-cosine near-duplicate pairs (dedup family, embedding space),
     // LSH-bucketed — the 10⁹-row scale path. Threshold 0.4 is tuned to the
@@ -709,20 +761,10 @@ object VectorQueries {
           .filter(col("score") >= 0.4)
           .select(col("a_id"), col("b_id"), col("score"))
       },
-      Some {
-        val dotAB = duckFoldSum("ea", "CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)")
-        val normA = s"sqrt(${duckFoldSum("ea", "CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)")})"
-        val normB = s"sqrt(${duckFoldSum("eb", "CAST(eb[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)")})"
-        s"""WITH p AS (
-           |  SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.embedding AS ea, b.embedding AS eb
-           |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
-           |sc AS (SELECT a_id, b_id, $dotAB AS d, $normA AS na, $normB AS nb FROM p)
-           |SELECT a_id, b_id, score FROM (
-           |  SELECT a_id, b_id,
-           |    floor((CASE WHEN na * nb = 0 THEN 0.0 ELSE d / (na * nb) END) * 1000000 + 0.5) / 1000000 AS score
-           |  FROM sc)
-           |WHERE score >= 0.4""".stripMargin
-      }),
+      Some(s"""WITH p AS (
+              |  SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.embedding AS ea, b.embedding AS eb
+              |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
+              |$DupPairsTailSql""".stripMargin)),
 
     // PORTABLE-oracle twins of the hyperplane-LSH family (e_dup_pairs /
     // e_knn_lsh): the identical banding pipelines with RademacherBands —
@@ -746,12 +788,7 @@ object VectorQueries {
            |  SELECT c.a_id, c.b_id, ea.embedding AS ea, eb.embedding AS eb
            |  FROM cand c JOIN embeddings ea ON ea.vec_id = c.a_id
            |              JOIN embeddings eb ON eb.vec_id = c.b_id),
-           |sc AS (SELECT a_id, b_id, $DotAB AS d, $NormA AS na, $NormB AS nb FROM p)
-           |SELECT a_id, b_id, score FROM (
-           |  SELECT a_id, b_id,
-           |    floor((CASE WHEN na * nb = 0 THEN 0.0 ELSE d / (na * nb) END) * 1000000 + 0.5) / 1000000 AS score
-           |  FROM sc)
-           |WHERE score >= 0.4""".stripMargin)),
+           |$DupPairsTailSql""".stripMargin)),
 
     Q("e_knn_lsh_portable",
       (s, dir) => {
@@ -766,20 +803,7 @@ object VectorQueries {
            |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id
            |  FROM keys q JOIN capped c USING (band_key)
            |  WHERE q.vec_id < 20 AND q.vec_id <> c.vec_id),
-           |p AS (
-           |  SELECT c.query_id, c.cand_id, eq.embedding AS ea, ec.embedding AS eb
-           |  FROM cand c JOIN embeddings eq ON eq.vec_id = c.query_id
-           |              JOIN embeddings ec ON ec.vec_id = c.cand_id),
-           |sc AS (SELECT query_id, cand_id, $DotAB AS d, $NormA AS na, $NormB AS nb FROM p),
-           |r AS (
-           |  SELECT query_id, cand_id,
-           |    floor((CASE WHEN na * nb = 0 THEN 0.0 ELSE d / (na * nb) END) * 1000000 + 0.5) / 1000000 AS score
-           |  FROM sc)
-           |SELECT query_id, cand_id, score, rnk FROM (
-           |  SELECT query_id, cand_id, score,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rnk
-           |  FROM r)
-           |WHERE rnk <= 5""".stripMargin)),
+           |${knnTop5Sql("embeddings", "p", "sc")}""".stripMargin)),
 
     // Per-label centroids (cluster means / label prototypes), one row per
     // (label, dimension). Cross-row float sums are order-dependent in IEEE
@@ -852,16 +876,7 @@ object VectorQueries {
       Some(
         s"""WITH $KMeansCtes,
            |kmasg AS (SELECT vec_id, cid AS cell_id, embedding FROM kasg${KmIters + 1}),
-           |kmps AS (
-           |  SELECT b_id, $DotAB AS d, $NormA AS na, $NormB AS nb FROM (
-           |    SELECT b.vec_id AS b_id, a.embedding AS ea, b.embedding AS eb
-           |    FROM kmasg a JOIN kmasg b ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id)),
-           |kmdrp AS (
-           |  SELECT DISTINCT b_id AS vec_id FROM kmps
-           |  WHERE floor((CASE WHEN na * nb = 0 THEN 0.0 ELSE d / (na * nb) END) * 1000000 + 0.5) / 1000000 >= 0.4)
-           |SELECT g.vec_id, CAST(g.cell_id AS BIGINT) AS cell_id,
-           |  CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
-           |FROM kmasg g LEFT JOIN kmdrp d ON d.vec_id = g.vec_id""".stripMargin)),
+           |${semDedupKeepSql("kmasg", "cell_id", "km")}""".stripMargin)),
 
     // Per-dimension z-score standardization — the feature-normalization
     // pass before distance-based ops on heterogeneous embeddings (a
@@ -879,15 +894,7 @@ object VectorQueries {
           .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
           .select(col("vec_id"), col("pos").cast("long").as("pos"),
             col("v").cast("double").as("v"))
-        val stats = comp.groupBy(col("pos"))
-          .agg(count(lit(1)).as("n"),
-            sum(floor(col("v") * 1e9).cast("long")).as("s1"),
-            sum(floor(col("v") * col("v") * 1e9).cast("long")).as("s2"))
-          .withColumn("mu", col("s1").cast("double") / (col("n").cast("double") * 1e9))
-          .withColumn("sigma", sqrt(greatest(
-            col("s2").cast("double") / (col("n").cast("double") * 1e9) -
-              col("mu") * col("mu"), lit(0.0))))
-          .select(col("pos"), col("mu"), col("sigma"))
+        val stats = fixedPointMoments(comp, "pos", "v")
         comp.filter(col("vec_id") < 10).join(broadcast(stats), "pos")
           .select(col("vec_id"), col("pos"),
             graft.operators.RelationalOps.round6(
@@ -896,23 +903,17 @@ object VectorQueries {
             graft.operators.RelationalOps.round6(col("mu")).as("mu"),
             graft.operators.RelationalOps.round6(col("sigma")).as("sigma"))
       },
-      Some("""WITH comp AS (
+      Some(s"""WITH comp AS (
              |  SELECT vec_id, CAST(idx - 1 AS BIGINT) AS pos, CAST(v AS DOUBLE) AS v
              |  FROM (SELECT vec_id, unnest(embedding) AS v,
              |          generate_subscripts(embedding, 1) AS idx
              |        FROM embeddings)),
              |st AS (
-             |  SELECT pos, count(*) AS n,
-             |    sum(CAST(floor(v * 1e9) AS BIGINT)) AS s1,
-             |    sum(CAST(floor(v * v * 1e9) AS BIGINT)) AS s2
+             |  SELECT pos, ${momentSumsSql("v")}
              |  FROM comp GROUP BY pos),
              |m AS (
              |  SELECT pos,
-             |    CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9) AS mu,
-             |    sqrt(greatest(
-             |      CAST(s2 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9) -
-             |        (CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9)) *
-             |        (CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9)), 0.0)) AS sigma
+             |    $MuSigmaSql
              |  FROM st)
              |SELECT c.vec_id, c.pos,
              |  floor((CASE WHEN m.sigma = 0 THEN 0.0
@@ -942,16 +943,7 @@ object VectorQueries {
         graft.similarity.SemDedup.Config(nCells = 16, threshold = 0.4)),
       Some(
         s"""WITH $SemCellCtes,
-           |ps AS (
-           |  SELECT b_id, $DotAB AS d, $NormA AS na, $NormB AS nb FROM (
-           |    SELECT b.vec_id AS b_id, a.embedding AS ea, b.embedding AS eb
-           |    FROM asg a JOIN asg b ON a.seed_id = b.seed_id AND a.vec_id < b.vec_id)),
-           |drp AS (
-           |  SELECT DISTINCT b_id AS vec_id FROM ps
-           |  WHERE floor((CASE WHEN na * nb = 0 THEN 0.0 ELSE d / (na * nb) END) * 1000000 + 0.5) / 1000000 >= 0.4)
-           |SELECT g.vec_id, CAST(g.seed_id AS BIGINT) AS cell_id,
-           |  CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
-           |FROM asg g LEFT JOIN drp d ON d.vec_id = g.vec_id""".stripMargin)),
+           |${semDedupKeepSql("asg", "seed_id", "")}""".stripMargin)),
 
     // Cell-bounded hard-negative mining — the contrastive-batch upgrade
     // over x_pair_contrastive's random negatives: for each vector, the
@@ -984,7 +976,7 @@ object VectorQueries {
            |    $DotAB AS d, $NormA AS na, $NormB AS nb FROM p),
            |rs AS (
            |  SELECT a_id, cell_id, b_id, neg_label,
-           |    floor((CASE WHEN na * nb = 0 THEN 0.0 ELSE d / (na * nb) END) * 1000000 + 0.5) / 1000000 AS score
+           |    $CosAB AS score
            |  FROM psc)
            |SELECT a_id AS vec_id, CAST(cell_id AS BIGINT) AS cell_id,
            |  b_id AS neg_vec_id, neg_label, score
@@ -1037,15 +1029,7 @@ object VectorQueries {
           .agg(sum(col("t")).as("d2e9"))
           .withColumn("dist", graft.operators.RelationalOps.round6(
             sqrt(col("d2e9").cast("double") / 1e9)))
-        val moms = dist.groupBy(col("cell_id"))
-          .agg(count(lit(1)).as("n"),
-            sum(floor(col("dist") * 1e9).cast("long")).as("s1"),
-            sum(floor(col("dist") * col("dist") * 1e9).cast("long")).as("s2"))
-          .withColumn("mu", col("s1").cast("double") / (col("n").cast("double") * 1e9))
-          .withColumn("sigma", sqrt(greatest(
-            col("s2").cast("double") / (col("n").cast("double") * 1e9) -
-              col("mu") * col("mu"), lit(0.0))))
-          .select(col("cell_id"), col("mu"), col("sigma"))
+        val moms = fixedPointMoments(dist, "cell_id", "dist")
         dist.groupBy(col("cell_id"))
           .agg(graft.expressions.TopKByScore(col("dist"), col("vec_id"), 2).as("topk"))
           .select(col("cell_id"), posexplode(col("topk")).as(Seq("pos", "e")))
@@ -1076,17 +1060,11 @@ object VectorQueries {
            |  FROM ocomp JOIN ocent USING (cell_id, pos)
            |  GROUP BY 1, 2),
            |omom AS (
-           |  SELECT cell_id, count(*) AS n,
-           |    sum(CAST(floor(dist * 1e9) AS BIGINT)) AS s1,
-           |    sum(CAST(floor(dist * dist * 1e9) AS BIGINT)) AS s2
+           |  SELECT cell_id, ${momentSumsSql("dist")}
            |  FROM odist GROUP BY 1),
            |omz AS (
            |  SELECT cell_id,
-           |    CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9) AS mu,
-           |    sqrt(greatest(
-           |      CAST(s2 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9) -
-           |        (CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9)) *
-           |        (CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9)), 0.0)) AS sigma
+           |    $MuSigmaSql
            |  FROM omom)
            |SELECT CAST(cell_id AS BIGINT) AS cell_id, CAST(rn AS BIGINT) AS rnk,
            |  vec_id, dist,
@@ -1200,12 +1178,6 @@ object VectorQueries {
         "vec_id", "embedding", prefixDim = MkPrefix, shortlist = MkShort,
         k = MkK),
       Some {
-        val dotP = duckFoldSumN(MkPrefix,
-          "CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)")
-        val normEP = s"sqrt(${duckFoldSumN(MkPrefix,
-          "CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)")})"
-        val normQP = s"sqrt(${duckFoldSumN(MkPrefix,
-          "CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)")})"
         s"""WITH mkq AS (SELECT vec_id AS query_id, embedding AS qv
            |             FROM embeddings WHERE vec_id < $MkQueries),
            |mk1 AS (
@@ -1213,7 +1185,7 @@ object VectorQueries {
            |    floor((CASE WHEN na * nq = 0 THEN 0.0 ELSE d / (na * nq) END)
            |          * 1000000 + 0.5) / 1000000 AS pscore
            |  FROM (SELECT query_id, cand_id,
-           |          $dotP AS d, $normEP AS na, $normQP AS nq
+           |          $DotQP AS d, $NormEP AS na, $NormQP AS nq
            |        FROM (SELECT mkq.query_id, e.vec_id AS cand_id,
            |                e.embedding, mkq.qv
            |              FROM embeddings e CROSS JOIN mkq
@@ -1274,12 +1246,6 @@ object VectorQueries {
         graft.retrieval.RetrievalMetrics.evaluate(results, qrels, MkK)
       },
       Some {
-        val dotP = duckFoldSumN(MkPrefix,
-          "CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)")
-        val normEP = s"sqrt(${duckFoldSumN(MkPrefix,
-          "CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)")})"
-        val normQP = s"sqrt(${duckFoldSumN(MkPrefix,
-          "CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)")})"
         s"""WITH evq AS (SELECT vec_id AS query_id, embedding AS qv
            |             FROM embeddings WHERE vec_id < $MmrQueries),
            |evb AS MATERIALIZED (
@@ -1295,7 +1261,7 @@ object VectorQueries {
            |                        ELSE d / (na * nq) END) * 1000000 + 0.5)
            |              / 1000000 AS pscore
            |          FROM (SELECT query_id, cand_id,
-           |                  $dotP AS d, $normEP AS na, $normQP AS nq
+           |                  $DotQP AS d, $NormEP AS na, $NormQP AS nq
            |                FROM evb))) WHERE rn <= $MkK),
            |qrels AS MATERIALIZED (
            |  SELECT query_id, cand_id, CAST(${MkK + 1} - rn AS BIGINT) AS rel

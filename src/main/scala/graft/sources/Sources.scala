@@ -15,10 +15,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  /** Batch JSONL lines as a `value` column (feed for TransactionTransform). */
-  def jsonLines(spark: SparkSession, dir: String): DataFrame =
-    spark.read.text(dir)
-
   /** Streaming JSONL lines (exactly-once with a checkpointed writer). */
   def streamJsonLines(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.text(dir)

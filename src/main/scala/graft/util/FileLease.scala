@@ -148,9 +148,10 @@ object FileLease {
   * two metadata renames (milliseconds) — the same plain-parquet bound as
   * the fact table's day swap, and a reader that lists exactly then retries.
   *
-  * Crash repair mirrors [[graft.hedera.StateStore]]: a crash between the
-  * renames leaves no live dir and a backup — [[recover]] (called by every
-  * writer entry point before it reads) renames the backup home. A stale
+  * Crash repair (also [[graft.hedera.StateStore]]'s, which swaps through
+  * here): a crash between the renames leaves no live dir and a backup —
+  * [[recover]] (called by every writer entry point before it reads)
+  * renames the backup home. A stale
   * backup NEXT TO a live dir means the crash was after the swap landed —
   * the live dir wins and the backup is dropped.
   */

@@ -30,6 +30,7 @@ class EtlAppSpec extends AnyFunSuite {
     spark.read.text(staged0).repartition(4).write.text(staged)
     val corpus = spark.read.text(staged)
     val distinctKeys = corpus.distinct().count()
+    val corpusRows = corpus.count()
     val files = new java.io.File(staged).listFiles()
       .filter(_.getName.startsWith("part-")).sortBy(_.getName)
     val (wave1, wave2) = files.splitAt(math.max(1, files.length / 2))
@@ -64,6 +65,7 @@ class EtlAppSpec extends AnyFunSuite {
 
     val invocations0 = graft.metrics.Metrics.global.get(
       graft.metrics.Metrics.DedupeInvocations)
+    val rows0 = graft.metrics.Metrics.global.get("ingest.rows")
     val h = EtlApp.start(spark, EtlApp.Args(
       input = in, warehouse = s"$base/wh", checkpoint = s"$base/wh/checkpoint",
       incrementalMs = 500L, fullMs = 3600000L, triggerMs = 100L))
@@ -86,6 +88,10 @@ class EtlAppSpec extends AnyFunSuite {
       assert(poll()(
         h.table.read().select("consensusTimestamp").distinct().count() == distinctKeys),
         "every distinct key must survive concurrent ingest + dedupe")
+      // the deployable feeds its streaming metrics: every fed line counted once
+      assert(poll()(graft.metrics.Metrics.global.get("ingest.rows") - rows0 == corpusRows),
+        s"ingest.rows must rise by the $corpusRows ingested rows, rose by " +
+          s"${graft.metrics.Metrics.global.get("ingest.rows") - rows0}")
     } finally h.stop()
   }
 

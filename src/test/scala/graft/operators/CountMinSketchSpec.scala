@@ -88,9 +88,11 @@ class CountMinSketchSpec extends AnyFunSuite {
         CountMinSketch.readSketch(spark, dir), width = 64)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(est === estimates(64))
-    // force compaction and re-check the folded state
+    // force compaction (three files > maxFiles 1) and re-check the folded state
     CountMinSketch.append(Seq.empty[String].toDF("t"), "t", dir,
-      width = 64, compactThreshold = 0)
+      width = 64, maxFiles = 1)
+    val (f, cellsDir) = graft.util.Fs(spark, s"$dir/cells")
+    assert(graft.util.SwapDir.fileCount(f, cellsDir) === 1)
     assert(cells(CountMinSketch.readSketch(spark, dir)) === oneShot)
   }
 
