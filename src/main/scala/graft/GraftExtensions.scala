@@ -27,55 +27,16 @@ import graft.expressions._
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  import GraftExtensions.{intLit, longLit}
-
   def apply(e: SparkSessionExtensions): Unit = {
     // Operator-optimization rule: derived-time predicates (unix_micros
     // chains) gain an equivalent raw-column conjunct the parquet scan can
     // prune row groups with — see DerivedTimeFilterPushdown's scaladoc.
     e.injectOptimizerRule(_ => graft.plans.DerivedTimeFilterPushdown)
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash of a token array"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(hashes, numPerm, seed) - MinHash signature"),
-      (args: Seq[Expression]) => MinHashSignature(args(0),
-        intLit(args(1), "numPerm"), longLit(args(2), "seed"))))
-    e.injectFunction((FunctionIdentifier("hyperplane_bands"),
-      info("hyperplane_bands",
-        "hyperplane_bands(vec, dim, bands, bits, seed) - LSH band keys"),
-      (args: Seq[Expression]) => HyperplaneBands(args(0),
-        intLit(args(1), "dim"), intLit(args(2), "bands"),
-        intLit(args(3), "bitsPerBand"), longLit(args(4), "seed"))))
-    e.injectFunction((FunctionIdentifier("rademacher_bands"),
-      info("rademacher_bands",
-        "rademacher_bands(vec, dim, bands, bits) - portable (md5 ±1-plane) LSH band keys"),
-      (args: Seq[Expression]) => RademacherBands(args(0),
-        intLit(args(1), "dim"), intLit(args(2), "bands"),
-        intLit(args(3), "bitsPerBand"))))
-    e.injectFunction((FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize", "nfc_normalize(str) - Unicode NFC canonicalization"),
-      (args: Seq[Expression]) => NfcNormalize(args.head)))
-    e.injectFunction((FunctionIdentifier("topk_by_score"),
-      info("topk_by_score",
-        "topk_by_score(score, id, k) - top-k (score,id) pairs per group, score desc"),
-      (args: Seq[Expression]) => TopKByScore(args(0), args(1), intLit(args(2), "k"))))
-    e.injectFunction((FunctionIdentifier("count_by_key"),
-      info("count_by_key",
-        "count_by_key(key) - per-key row counts as one map<int,bigint> aggregate"),
-      (args: Seq[Expression]) => CountByKey(args.head)))
-    e.injectFunction((FunctionIdentifier("multi_pattern_hits"),
-      info("multi_pattern_hits",
-        "multi_pattern_hits(text, array('p1','p2',...)) - sorted indexes of " +
-          "patterns occurring as substrings (one Aho-Corasick pass)"),
-      (args: Seq[Expression]) => MultiPatternHits(args(0),
-        GraftExtensions.stringSeqLit(args(1), "patterns"))))
+    GraftExtensions.functions.foreach { case (name, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        build))
+    }
   }
 }
 
@@ -114,27 +75,47 @@ object GraftExtensions {
     }
   }
 
+  /** Every SQL function the engine installs, as (name, usage, builder) —
+    * the one table both [[GraftExtensions.apply]] (session extensions) and
+    * [[register]] (an existing session) install from. */
+  private[graft] val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors",
+      args => CosineSimilarity(args(0), args(1))),
+    ("simhash64", "simhash64(tokens) - 64-bit SimHash of a token array",
+      args => SimHash64(args.head)),
+    ("minhash_sig", "minhash_sig(hashes, numPerm, seed) - MinHash signature",
+      args => MinHashSignature(args(0),
+        intLit(args(1), "numPerm"), longLit(args(2), "seed"))),
+    ("hyperplane_bands", "hyperplane_bands(vec, dim, bands, bits, seed) - LSH band keys",
+      args => HyperplaneBands(args(0),
+        intLit(args(1), "dim"), intLit(args(2), "bands"),
+        intLit(args(3), "bitsPerBand"), longLit(args(4), "seed"))),
+    ("rademacher_bands",
+      "rademacher_bands(vec, dim, bands, bits) - portable (md5 ±1-plane) LSH band keys",
+      args => RademacherBands(args(0),
+        intLit(args(1), "dim"), intLit(args(2), "bands"),
+        intLit(args(3), "bitsPerBand"))),
+    ("nfc_normalize", "nfc_normalize(str) - Unicode NFC canonicalization",
+      args => NfcNormalize(args.head)),
+    ("topk_by_score",
+      "topk_by_score(score, id, k) - top-k (score,id) pairs per group, score desc",
+      args => TopKByScore(args(0), args(1), intLit(args(2), "k"))),
+    ("count_by_key",
+      "count_by_key(key) - per-key row counts as one map<int,bigint> aggregate",
+      args => CountByKey(args.head)),
+    ("multi_pattern_hits",
+      "multi_pattern_hits(text, array('p1','p2',...)) - sorted indexes of " +
+        "patterns occurring as substrings (one Aho-Corasick pass)",
+      args => MultiPatternHits(args(0), stringSeqLit(args(1), "patterns"))))
+
   /** Imperative registration on an existing session (tests, REPL). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.DerivedTimeFilterPushdown))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.DerivedTimeFilterPushdown
     val reg: FunctionRegistry = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      args => CosineSimilarity(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      args => SimHash64(args.head), "built-in")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      args => NfcNormalize(args.head), "built-in")
-    reg.createOrReplaceTempFunction("topk_by_score",
-      args => TopKByScore(args(0), args(1), intLit(args(2), "k")), "built-in")
-    reg.createOrReplaceTempFunction("rademacher_bands",
-      args => RademacherBands(args(0), intLit(args(1), "dim"),
-        intLit(args(2), "bands"), intLit(args(3), "bitsPerBand")), "built-in")
-    reg.createOrReplaceTempFunction("count_by_key",
-      args => CountByKey(args.head), "built-in")
-    reg.createOrReplaceTempFunction("multi_pattern_hits",
-      args => MultiPatternHits(args(0), stringSeqLit(args(1), "patterns")),
-      "built-in")
+    functions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

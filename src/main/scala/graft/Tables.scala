@@ -84,7 +84,7 @@ object Tables {
     if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(dataFiles(fs, _))
     else {
       val n = st.getPath.getName
-      if (st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")) Seq(st) else Nil
+      if (st.getLen > 0 && !graft.util.Fs.hidden(n)) Seq(st) else Nil
     }
 
   /** (totalBytes, rowGroups-or-parallelism): probing short-circuits as soon

@@ -108,7 +108,7 @@ object ConnectedComponents {
     val e = edges.select(col(aCol).as("u"), col(bCol).as("v")).localCheckpoint(true)
     val probed = e.limit(cap + 1).collect()
     if (probed.length > cap || probed.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      componentsWithRounds(e, "u", "v", maxIter, None)._1
+      rounds(e, Set.empty, maxIter, new RoundCheckpoints(None))._1
     else driverLabels(edges.sparkSession, probed)
   }
 
@@ -150,64 +150,87 @@ object ConnectedComponents {
   def componentsWithRounds(edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 30, checkpointDir: Option[String] = None): (DataFrame, Int) = {
     val sc = edges.sparkSession.sparkContext
-    // Reliable mode must also CLEAN UP: each round's checkpoint is a full
-    // materialized copy of per-vertex state, nothing deletes them by
-    // default (cleanCheckpoints is off), and an iterative operator that
-    // leaks ~3 copies per round would fill the checkpoint filesystem on a
-    // long-lived cluster. Superseded rounds are deleted as soon as the
-    // round that replaces them has materialized; only the files backing
-    // the RETURNED frame survive the call.
-    // Per-call scope: the listing-diff attribution below is only sound if
-    // nothing else can write into the directory being diffed — and the
-    // SparkContext checkpoint dir is global, so another thread checkpointing
-    // between two snapshots would have its rdd-N dirs claimed (and later
-    // deleted) by this call. A fresh cc-<uuid> subdir makes the diffs
-    // see exactly this call's checkpoints.
-    val ckRoot: Option[(org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path)] =
-      checkpointDir.map { d =>
-        val scoped = d.stripSuffix("/") + "/cc-" + java.util.UUID.randomUUID()
-        sc.setCheckpointDir(scoped)
-        val p = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
-        (p.getFileSystem(sc.hadoopConfiguration), p)
-      }
-    def ckSnapshot(): Set[String] = ckRoot match {
-      case Some((f, root)) if f.exists(root) =>
-        f.listStatus(root).map(_.getPath.toString).toSet
-      case _ => Set.empty
-    }
-    def persistRound(df: DataFrame): (DataFrame, Set[String]) = {
-      val before = ckSnapshot()
-      val out = if (ckRoot.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-      (out, ckSnapshot() -- before)
-    }
-    def dropCk(dirs: Set[String]): Unit = ckRoot.foreach { case (f, _) =>
-      dirs.foreach(d => f.delete(new org.apache.hadoop.fs.Path(d), true))
-    }
-
+    // Per-call scope: the listing-diff attribution in RoundCheckpoints is
+    // only sound if nothing else can write into the directory being diffed
+    // — and the SparkContext checkpoint dir is global, so another thread
+    // checkpointing between two snapshots would have its rdd-N dirs claimed
+    // (and later deleted) by this call. A fresh cc-<uuid> subdir makes the
+    // diffs see exactly this call's checkpoints.
+    val ck = new RoundCheckpoints(checkpointDir.map { d =>
+      val scoped = d.stripSuffix("/") + "/cc-" + java.util.UUID.randomUUID()
+      sc.setCheckpointDir(scoped)
+      val p = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
+      (p.getFileSystem(sc.hadoopConfiguration), p)
+    })
     // Any exit path that is not the success return must not leak checkpoint
     // files: a mid-iteration failure (including the non-convergence require)
     // would otherwise strand several full per-vertex copies in the shared
     // checkpoint filesystem. The per-call cc-<uuid> scope makes the cleanup
     // a single recursive delete that cannot touch anyone else's files.
     try {
-    // The edge projection is materialized ONCE: both the bidirectional edge
-    // frame and the initial labels (which must include self-loop-only
-    // endpoints) derive from it, and upstream `edges` is often an expensive
-    // pipeline (the near-dup candidate join) that must not run twice.
-    val (e, eCk) = persistRound(edges.select(col(aCol).as("u"), col(bCol).as("v")))
+      // The edge projection is materialized ONCE: upstream `edges` is often
+      // an expensive pipeline (the near-dup candidate join) that must not
+      // run twice.
+      val (e, eCk) = ck.persist(edges.select(col(aCol).as("u"), col(bCol).as("v")))
+      rounds(e, eCk, maxIter, ck)
+    } catch {
+      case t: Throwable =>
+        ck.dropScope()
+        throw t
+    }
+  }
+
+  /** Per-round lineage truncation: executor-local blocks, or reliable
+    * checkpoints under `root` (a per-call scope dir) with their files
+    * tracked. Reliable mode must also CLEAN UP: each round's checkpoint is
+    * a full materialized copy of per-vertex state, nothing deletes them by
+    * default (cleanCheckpoints is off), and an iterative operator that
+    * leaks ~3 copies per round would fill the checkpoint filesystem on a
+    * long-lived cluster. Superseded rounds are deleted as soon as the
+    * round that replaces them has materialized; only the files backing the
+    * RETURNED frame survive the call. */
+  private final class RoundCheckpoints(
+      root: Option[(org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path)]) {
+    private def snapshot(): Set[String] = root match {
+      case Some((f, r)) if f.exists(r) => f.listStatus(r).map(_.getPath.toString).toSet
+      case _ => Set.empty
+    }
+    /** `df` materialized, plus the checkpoint dirs that now back it. */
+    def persist(df: DataFrame): (DataFrame, Set[String]) = {
+      val before = snapshot()
+      val out = if (root.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+      (out, snapshot() -- before)
+    }
+    def drop(dirs: Set[String]): Unit = root.foreach { case (f, _) =>
+      dirs.foreach(d => f.delete(new org.apache.hadoop.fs.Path(d), true))
+    }
+    /** Delete the whole cc-<uuid> scope dir (the failure path). */
+    def dropScope(): Unit = root.foreach { case (f, r) =>
+      try f.delete(r.getParent, true)
+      catch { case _: Throwable => () }
+    }
+  }
+
+  /** The label-propagation fixpoint over an already-materialized (u, v)
+    * edge projection `e` whose checkpoint files are `eCk` (dropped once the
+    * round state derived from `e` is materialized). Both the initial labels
+    * (which must include self-loop-only endpoints) and the bidirectional
+    * edge frame derive from `e`. */
+  private def rounds(e: DataFrame, eCk: Set[String], maxIter: Int,
+      ck: RoundCheckpoints): (DataFrame, Int) = {
     // Pre-partitioned BY THE ROUND-JOIN KEY: the checkpoint preserves the
     // hash partitioning (LogicalRDD keeps outputPartitioning), so every
     // round's neighbor join exchanges only the vertex-sized label frame —
     // the 2|E| edge frame is shuffled ONCE here, not once per round.
-    val (bidir, bidirCk) = persistRound(
+    val (bidir, bidirCk) = ck.persist(
       e.union(e.select(col("v").as("u"), col("u").as("v")))
         .filter(col("u") =!= col("v")).distinct()
         .repartition(col("v")))
 
-    var (labels, prevCk) = persistRound(
+    var (labels, prevCk) = ck.persist(
       e.select(col("u").as("id")).union(e.select(col("v").as("id")))
         .distinct().withColumn("component", col("id")))
-    dropCk(eCk) // bidir and initial labels are materialized; e is garbage
+    ck.drop(eCk) // bidir and initial labels are materialized; e is garbage
 
     var iter = 0
     var converged = labels.isEmpty
@@ -231,7 +254,7 @@ object ConnectedComponents {
       // materialization via observe() (count of strictly-improved labels)
       // — the former separate limit(1) probe job per round is gone.
       val obs = Observation()
-      val (doubled, doubledCk) = persistRound(stepped
+      val (doubled, doubledCk) = ck.persist(stepped
         .join(stepped.select(col("id").as("pid"), col("c1").as("pc")),
           stepped("c1") === F.col("pid"), "left")
         .select(col("id"), col("prev"),
@@ -243,20 +266,12 @@ object ConnectedComponents {
       // row always arrives — AQE's empty-relation collapse cannot eat it.
       converged = obs.get("changed").asInstanceOf[Long] == 0L
       labels = doubled
-      dropCk(prevCk)    // the previous round's labels are superseded
+      ck.drop(prevCk)   // the previous round's labels are superseded
       prevCk = doubledCk
       iter += 1
     }
     require(converged, s"connected components did not converge in $maxIter rounds")
-    dropCk(bidirCk) // the loop is done; only the returned labels' files remain
+    ck.drop(bidirCk) // the loop is done; only the returned labels' files remain
     (labels, iter)
-    } catch {
-      case t: Throwable =>
-        ckRoot.foreach { case (f, root) =>
-          try f.delete(root.getParent, true) // the cc-<uuid> scope dir
-          catch { case _: Throwable => () }
-        }
-        throw t
-    }
   }
 }

@@ -134,19 +134,27 @@ object TextDedup {
     * carry no shingle evidence either way). */
   def nearDuplicatePairs(docs: DataFrame, idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame =
-    nearDuplicatePairsWith(docs, idCol, textCol, cfg, _.cache())
+    nearDuplicatePairsFromSigs(cachedSigs(docs, idCol, textCol, cfg), cfg)
 
-  /** [[nearDuplicatePairs]] with the signature-materialization strategy
-    * injected. One-shot callers keep the default `cache()`; per-micro-batch
-    * callers (the curation stream) pass `localCheckpoint()` — a cache entry
-    * per batch accumulates in the CacheManager forever (entries are held
-    * until an explicit unpersist), while locally-checkpointed blocks are
-    * freed by the ContextCleaner once the frame is unreferenced. */
-  private[dedup] def nearDuplicatePairsWith(docs: DataFrame, idCol: String,
-      textCol: String, cfg: MinHashConfig,
-      mat: DataFrame => DataFrame): DataFrame =
-    nearDuplicatePairsFromSigs(mat(signatures(docs, idCol, textCol, cfg)
-      .filter(size(col("sh")) > 0)), cfg)
+  /** Cached non-empty signatures — the one-shot callers' materialization
+    * (per-micro-batch callers sign once and localCheckpoint instead: a
+    * cache entry per batch would accumulate in the CacheManager). */
+  private def cachedSigs(docs: DataFrame, idCol: String, textCol: String,
+      cfg: MinHashConfig): DataFrame =
+    signatures(docs, idCol, textCol, cfg).filter(size(col("sh")) > 0).cache()
+
+  /** Exact-jaccard verification of joined candidate pairs over their
+    * shingle-hash set columns `shA`/`shB`: adds `inter` and the rounded
+    * `jaccard`, keeps pairs at or above `threshold`. A 0/0 NaN (possible
+    * only if empty sets reached here) must never pass the >= threshold via
+    * NaN-max ordering. */
+  private def jaccardVerified(pairs: DataFrame, shA: String, shB: String,
+      threshold: Double): DataFrame =
+    pairs
+      .withColumn("inter", size(array_intersect(col(shA), col(shB))).cast("long"))
+      .withColumn("jaccard", graft.operators.RelationalOps.round6(col("inter").cast("double") /
+        (size(col(shA)) + size(col(shB)) - col("inter")).cast("double")))
+      .filter(!isnan(col("jaccard")) && col("jaccard") >= threshold)
 
   /** [[nearDuplicatePairs]] body over an already-materialized signature
     * frame (doc_id, sh, sig) — the reuse seam for callers that sign a
@@ -156,15 +164,10 @@ object TextDedup {
   private[dedup] def nearDuplicatePairsFromSigs(sigs: DataFrame,
       cfg: MinHashConfig): DataFrame = {
     val sets = sigs.select(col("doc_id"), col("sh"))
-    candidatePairs(sigs, cfg)
+    jaccardVerified(candidatePairs(sigs, cfg)
       .join(sets.withColumnRenamed("doc_id", "a_id").withColumnRenamed("sh", "sh_a"), "a_id")
-      .join(sets.withColumnRenamed("doc_id", "b_id").withColumnRenamed("sh", "sh_b"), "b_id")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("jaccard", graft.operators.RelationalOps.round6(col("inter").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double")))
-      // belt over braces: a 0/0 NaN (possible only if empty sets reached
-      // here) must never pass the >= threshold via NaN-max ordering
-      .filter(!isnan(col("jaccard")) && col("jaccard") >= cfg.jaccardThreshold)
+      .join(sets.withColumnRenamed("doc_id", "b_id").withColumnRenamed("sh", "sh_b"), "b_id"),
+      "sh_a", "sh_b", cfg.jaccardThreshold)
       .select(col("a_id"), col("b_id"), col("inter"), col("jaccard"))
   }
 
@@ -184,8 +187,8 @@ object TextDedup {
     * nearDuplicatePairs NaN guard). */
   def crossNearDupPairs(left: DataFrame, right: DataFrame, idCol: String,
       textCol: String, cfg: MinHashConfig = MinHashConfig()): DataFrame = {
-    val ls = signatures(left, idCol, textCol, cfg).filter(size(col("sh")) > 0).cache()
-    val rs = signatures(right, idCol, textCol, cfg).filter(size(col("sh")) > 0).cache()
+    val ls = cachedSigs(left, idCol, textCol, cfg)
+    val rs = cachedSigs(right, idCol, textCol, cfg)
     val lb = bandRows(ls, cfg).withColumnRenamed("doc_id", "l_id")
     val rb = bandRows(rs, cfg).withColumnRenamed("doc_id", "r_id")
     val ok = lb.select(col("band_key")).unionAll(rb.select(col("band_key")))
@@ -194,13 +197,10 @@ object TextDedup {
     val cand = lb.join(broadcast(ok), Seq("band_key"))
       .join(rb, Seq("band_key"))
       .select(col("l_id"), col("r_id")).distinct()
-    cand
+    jaccardVerified(cand
       .join(ls.select(col("doc_id").as("l_id"), col("sh").as("sh_l")), "l_id")
-      .join(rs.select(col("doc_id").as("r_id"), col("sh").as("sh_r")), "r_id")
-      .withColumn("inter", size(array_intersect(col("sh_l"), col("sh_r"))).cast("long"))
-      .withColumn("jaccard", graft.operators.RelationalOps.round6(col("inter").cast("double") /
-        (size(col("sh_l")) + size(col("sh_r")) - col("inter")).cast("double")))
-      .filter(!isnan(col("jaccard")) && col("jaccard") >= cfg.jaccardThreshold)
+      .join(rs.select(col("doc_id").as("r_id"), col("sh").as("sh_r")), "r_id"),
+      "sh_l", "sh_r", cfg.jaccardThreshold)
       .select(col("l_id"), col("r_id"), col("inter"), col("jaccard"))
   }
 
@@ -213,22 +213,9 @@ object TextDedup {
     * appears on the drop side of a pair). */
   def minHashDedup(docs: DataFrame, idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame =
-    minHashDedupWith(docs, idCol, textCol, cfg, _.cache())
+    minHashDedupFromSigs(docs, idCol, cachedSigs(docs, idCol, textCol, cfg), cfg)
 
-  /** [[minHashDedup]] with the materialization strategy injected — see
-    * [[nearDuplicatePairsWith]]. */
-  private[dedup] def minHashDedupWith(docs: DataFrame, idCol: String,
-      textCol: String, cfg: MinHashConfig,
-      mat: DataFrame => DataFrame): DataFrame = {
-    val pairs = nearDuplicatePairsWith(docs, idCol, textCol, cfg, mat)
-      .select(col("a_id"), col("b_id"))
-    val losers = ConnectedComponents.components(pairs, "a_id", "b_id")
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
-  }
-
-  /** [[minHashDedupWith]] over a pre-materialized signature frame (see
+  /** [[minHashDedup]] over a pre-materialized signature frame (see
     * [[nearDuplicatePairsFromSigs]]). */
   private[dedup] def minHashDedupFromSigs(docs: DataFrame, idCol: String,
       sigs: DataFrame, cfg: MinHashConfig): DataFrame = {

@@ -37,15 +37,8 @@ case class HyperplaneBands(child: Expression, dim: Int, bands: Int, bitsPerBand:
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   @transient private lazy val planes: Array[Array[Double]] = {
-    var x = seed
-    def nextLong(): Long = {
-      x += 0x9e3779b97f4a7c15L
-      var z = x
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    def nextUniform(): Double = (nextLong() >>> 11) * (1.0 / (1L << 53)) // [0,1)
+    val rng = new graft.util.SplitMix64(seed)
+    def nextUniform(): Double = (rng.next() >>> 11) * (1.0 / (1L << 53)) // [0,1)
     def nextGaussian(): Double = {
       val u1 = math.max(nextUniform(), 1e-12)
       val u2 = nextUniform()

@@ -49,16 +49,9 @@ case class MinHashSignature(child: Expression, numPerm: Int, seed: Long,
       (Array.tabulate(numPerm)(p => ((p + 1) * 2654435761L) % P),
        Array.tabulate(numPerm)(p => ((p + 1) * 1779033703L) % P))
     } else {
-      var x = seed
-      def next(): Long = { // splitmix64
-        x += 0x9e3779b97f4a7c15L
-        var z = x
-        z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-        z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-        z ^ (z >>> 31)
-      }
-      val a = Array.fill(numPerm)(next() | 1L) // odd multiplier
-      val b = Array.fill(numPerm)(next())
+      val rng = new graft.util.SplitMix64(seed)
+      val a = Array.fill(numPerm)(rng.next() | 1L) // odd multiplier
+      val b = Array.fill(numPerm)(rng.next())
       (a, b)
     }
 

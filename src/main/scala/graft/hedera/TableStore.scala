@@ -78,9 +78,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
         .map(_.getPath)
     val listing: Map[String, Set[String]] =
       perDay(dayDirs.map(_.getName).toSeq) { name =>
-        name -> f.listStatus(new Path(root, name)).filter(_.isFile)
-          .map(_.getPath.getName)
-          .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+        name -> Fs.dataFiles(f, new Path(root, name)).map(_.getPath.getName).toSet
       }.toMap
     val files = for { (d, names) <- listing.toSeq; n <- names } yield s"$path/$d/$n"
     val df =
@@ -228,8 +226,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
       perDay(days) { d =>
         snapshot.foreach(snap =>
           writeNames(f, manifestPath(d), snap.getOrElse(d, Set.empty)))
-        val staged = f.listStatus(new Path(stageDir, d)).filter(_.isFile)
-          .map(_.getPath.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
+        val staged = Fs.dataFiles(f, new Path(stageDir, d)).map(_.getPath.getName)
         writeNames(f, stagedManifestPath(d), staged)
       }
       perDay(days) { d =>
@@ -292,8 +289,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
     if (!f.exists(mf) || !f.exists(bak)) return
     val known = readNames(f, mf)
     val live = new Path(path, day)
-    f.listStatus(bak).filter(_.isFile).map(_.getPath)
-      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+    Fs.dataFiles(f, bak).map(_.getPath)
       .filterNot(p => known.contains(p.getName))
       .foreach { p =>
         require(f.rename(p, new Path(live, p.getName)),
@@ -338,8 +334,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
           f.listStatus(live).filter(_.isFile).map(_.getPath)
             .filter(p => staged.contains(p.getName))
             .foreach(p => f.delete(p, false))
-          f.listStatus(s.getPath).filter(_.isFile).map(_.getPath)
-            .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+          Fs.dataFiles(f, s.getPath).map(_.getPath)
             .foreach { p =>
               require(f.rename(p, new Path(live, p.getName)),
                 s"recover: restore $p -> $live failed")

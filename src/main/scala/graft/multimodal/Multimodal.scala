@@ -52,19 +52,12 @@ object Multimodal {
     * seed/dims → identical pixels, so every codec encodes the same source. */
   def plantedImage(seed: Long, w: Int, h: Int): BufferedImage = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    var x = seed
-    def next(): Long = { // splitmix64
-      x += 0x9e3779b97f4a7c15L
-      var z = x
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
+    val rng = new graft.util.SplitMix64(seed)
     var py = 0
     while (py < h) {
       var px = 0
       while (px < w) {
-        val noise = (next() & 0x3f).toInt // low 6 bits of the stream
+        val noise = (rng.next() & 0x3f).toInt // low 6 bits of the stream
         val r = (px * 255 / math.max(w - 1, 1) + noise) & 0xff
         val g = (py * 255 / math.max(h - 1, 1) + noise) & 0xff
         val b = ((px + py) * 255 / math.max(w + h - 2, 1) + noise) & 0xff
@@ -104,7 +97,16 @@ object Multimodal {
     * materialized next to typed metadata. `format` picks the codec
     * ("png" default — lossless, byte-deterministic, oracle-stable; "jpg"
     * exercises the second-codec path end-to-end). */
-  def toImageTable(docs: DataFrame, idCol: String, format: String = "png"): DataFrame = {
+  def toImageTable(docs: DataFrame, idCol: String, format: String = "png"): DataFrame =
+    encodedImageTable(docs, idCol, format) { id =>
+      val (w, h) = plantedDims(id)
+      plantedImage(seed = id * 0x9e3779b97f4a7c15L + 17, w, h)
+    }
+
+  /** One `image(id)` per doc id, encoded in `format` executor-side — the
+    * shared body of the planted-image tables. */
+  private def encodedImageTable(docs: DataFrame, idCol: String, format: String)(
+      image: Long => BufferedImage): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val mime = if (format == "jpg") "image/jpeg" else s"image/$format"
@@ -112,9 +114,7 @@ object Multimodal {
       .mapPartitions { it =>
         ImageIO.setUseCache(false)
         it.map { id =>
-          val (w, h) = plantedDims(id)
-          val bytes = encodeImage(
-            plantedImage(seed = id * 0x9e3779b97f4a7c15L + 17, w, h), format)
+          val bytes = encodeImage(image(id), format)
           BlobRow(id, bytes, mime, bytes.length.toLong)
         }
       }.toDF()
@@ -194,19 +194,8 @@ object Multimodal {
     * lossless, and a different ImageIO writer than the PNG path, so the
     * full-oracle query also exercises a second codec end-to-end. */
   def toPatternImageTable(docs: DataFrame, idCol: String,
-      format: String = "bmp"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val mime = if (format == "jpg") "image/jpeg" else s"image/$format"
-    docs.select(col(idCol).cast("long")).as[Long]
-      .mapPartitions { it =>
-        ImageIO.setUseCache(false)
-        it.map { id =>
-          val bytes = encodeImage(patternImage(id), format)
-          BlobRow(id, bytes, mime, bytes.length.toLong)
-        }
-      }.toDF()
-  }
+      format: String = "bmp"): DataFrame =
+    encodedImageTable(docs, idCol, format)(patternImage)
 
   // ---- image decode (the real kernel) -------------------------------------
 
@@ -339,7 +328,31 @@ object Multimodal {
     * speech pipeline runs before VAD/language filters. A real-codec
     * deployment swaps [[decodePcm16le]] for the opus/flac decoder; the
     * plan shape, batching and schema do not change. */
-  def audioFrameFeatures(blobs: DataFrame, frameLen: Int = 64): Dataset[AudioFrame] = {
+  def audioFrameFeatures(blobs: DataFrame, frameLen: Int = 64): Dataset[AudioFrame] =
+    audioFrames(blobs, frameLen) { (id, f, s, start, end) =>
+      var peak = 0L
+      var sumSq = 0L
+      var zc = 0L
+      var i = start
+      while (i < end) {
+        val v = s(i)
+        if (math.abs(v.toLong) > peak) peak = math.abs(v.toLong)
+        sumSq += v.toLong * v
+        if (i > start && ((v >= 0) != (s(i - 1) >= 0))) zc += 1
+        i += 1
+      }
+      AudioFrame(id, f.toLong, (end - start).toLong, peak, sumSq, zc)
+    }
+
+  /** The shared framing of the audio extractors: decode each clip, cut it
+    * into `frameLen`-sample frames and map `frame(id, f, samples, start,
+    * end)` over them. Frame f covers samples [f·frameLen, min((f+1)·frameLen,
+    * n)) — the TRAILING PARTIAL FRAME IS EMITTED, matching the oracle's
+    * `i // frameLen` grouping exactly; a clip whose length is not a frame
+    * multiple loses no audio. */
+  private def audioFrames[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      blobs: DataFrame, frameLen: Int)(
+      frame: (Long, Int, Array[Int], Int, Int) => T): Dataset[T] = {
     val spark = blobs.sparkSession
     import spark.implicits._
     require(frameLen > 0, "frameLen must be positive")
@@ -347,26 +360,10 @@ object Multimodal {
       .mapPartitions { it =>
         it.flatMap { case (id, payload) =>
           val s = decodePcm16le(payload)
-          // frame f covers samples [f·frameLen, min((f+1)·frameLen, n)) —
-          // the TRAILING PARTIAL FRAME IS EMITTED (n_samples < frameLen),
-          // matching the oracle's `i // frameLen` grouping exactly; a
-          // clip whose length is not a frame multiple loses no audio.
           val nFrames = (s.length + frameLen - 1) / frameLen
           (0 until nFrames).iterator.map { f =>
             val start = f * frameLen
-            val end = math.min(start + frameLen, s.length)
-            var peak = 0L
-            var sumSq = 0L
-            var zc = 0L
-            var i = start
-            while (i < end) {
-              val v = s(i)
-              if (math.abs(v.toLong) > peak) peak = math.abs(v.toLong)
-              sumSq += v.toLong * v
-              if (i > start && ((v >= 0) != (s(i - 1) >= 0))) zc += 1
-              i += 1
-            }
-            AudioFrame(id, f.toLong, (end - start).toLong, peak, sumSq, zc)
+            frame(id, f, s, start, math.min(start + frameLen, s.length))
           }
         }
       }
@@ -381,29 +378,16 @@ object Multimodal {
     * [[audioFrameFeatures]]. */
   final case class FramePeak(doc_id: Long, frame_idx: Long, vmax: Long)
 
-  def audioFramePeaks(blobs: DataFrame, frameLen: Int = 64): Dataset[FramePeak] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    require(frameLen > 0, "frameLen must be positive")
-    blobs.select(col("id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, payload) =>
-          val s = decodePcm16le(payload)
-          val nFrames = (s.length + frameLen - 1) / frameLen
-          (0 until nFrames).iterator.map { f =>
-            val start = f * frameLen
-            val end = math.min(start + frameLen, s.length)
-            var vmax = Long.MinValue
-            var i = start
-            while (i < end) {
-              if (s(i).toLong > vmax) vmax = s(i).toLong
-              i += 1
-            }
-            FramePeak(id, f.toLong, vmax)
-          }
-        }
+  def audioFramePeaks(blobs: DataFrame, frameLen: Int = 64): Dataset[FramePeak] =
+    audioFrames(blobs, frameLen) { (id, f, s, start, end) =>
+      var vmax = Long.MinValue
+      var i = start
+      while (i < end) {
+        if (s(i).toLong > vmax) vmax = s(i).toLong
+        i += 1
       }
-  }
+      FramePeak(id, f.toLong, vmax)
+    }
 
   // ---- perceptual hashing (image near-dup) ---------------------------------
 

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Distributed binary logistic regression by full-batch gradient descent —
   * the trainable upgrade of the fixed-weight quality classifier
@@ -69,6 +70,52 @@ object LogisticRegression {
       .map { case (c, j) => col(c) * lit(w(j + 1)) }
       .foldLeft(lit(w(0) * Micro): Column)(_ + _)
 
+  /** The per-row logit over a joined [[weightFrame]]'s `__w0..__wd`. */
+  private def zpJoined(featureCols: Seq[String]): Column =
+    featureCols.zipWithIndex
+      .map { case (c, j) => col(c) * col(s"__w${j + 1}") }
+      .foldLeft(col("__w0") * Micro: Column)(_ + _)
+
+  /** One epoch's gradient aggregates for the logit `zp`: exact integer
+    * sums g0..gd (the intercept gradient uses x0 = 1e6), then the row
+    * count n. */
+  private def gradientAggs(zp: Column, labelCol: String,
+      featureCols: Seq[String]): Seq[Column] = {
+    val resid = pMicro(zp) - col(labelCol).cast("long") * Micro
+    (sum((resid * Micro).cast("decimal(38,0)")).as("g0") +:
+      featureCols.zipWithIndex.map { case (c, j) =>
+        sum((resid * col(c)).cast("decimal(38,0)")).as(s"g${j + 1}")
+      }) :+ count(lit(1)).as("n")
+  }
+
+  /** The fixed-point weight update in place, reading [[gradientAggs]]'s
+    * g0..gd and n from `row` starting at column `offset`. */
+  private def step(w: Array[Long], row: Row, offset: Int, lrMicro: Long): Unit = {
+    val d = w.length - 1
+    val n = row.getLong(offset + d + 1)
+    require(n > 0, "empty training frame")
+    var j = 0
+    while (j <= d) {
+      val g = row.getDecimal(offset + j).doubleValue() // exact below 2^53
+      w(j) = w(j) - math.floor(
+        lrMicro.toDouble * g / (n.toDouble * Micro2) + 0.5).toLong
+      j += 1
+    }
+  }
+
+  /** Per-group weights as a one-partition (__g, __w0..__wd) frame, in
+    * group order — the broadcast dimension the grouped trainer and scorer
+    * join on the group key. */
+  private def weightFrame(spark: SparkSession,
+      weights: scala.collection.Map[String, Array[Long]], d: Int): DataFrame = {
+    val wRows = weights.toSeq.sortBy(_._1).map { case (g, ws) =>
+      Row.fromSeq(g +: ws.toSeq)
+    }
+    val wSchema = StructType(StructField("__g", StringType, nullable = false) +:
+      (0 to d).map(j => StructField(s"__w$j", LongType, nullable = false)))
+    spark.createDataFrame(spark.sparkContext.parallelize(wRows, 1), wSchema)
+  }
+
   /** Train by `rounds` full-batch GD epochs from zero weights.
     *
     * @param features    one row per example: `labelCol` ∈ {0, 1} and each
@@ -81,28 +128,11 @@ object LogisticRegression {
       rounds: Int, lrMicro: Long): Model = {
     require(rounds >= 1 && rounds <= 64, "rounds must be in [1, 64]")
     require(featureCols.nonEmpty, "need at least one feature")
-    val d = featureCols.size
-    val w = Array.fill(d + 1)(0L)
+    val w = Array.fill(featureCols.size + 1)(0L)
     var r = 0
     while (r < rounds) {
-      val resid = pMicro(zpColumn(w, featureCols)) -
-        col(labelCol).cast("long") * Micro
-      // exact integer sums: intercept gradient uses x0 = 1e6
-      val aggs =
-        (sum((resid * Micro).cast("decimal(38,0)")).as("g0") +:
-          featureCols.zipWithIndex.map { case (c, j) =>
-            sum((resid * col(c)).cast("decimal(38,0)")).as(s"g${j + 1}")
-          }) :+ count(lit(1)).as("n")
-      val row = features.agg(aggs.head, aggs.tail: _*).head()
-      val n = row.getLong(d + 1)
-      require(n > 0, "empty training frame")
-      var j = 0
-      while (j <= d) {
-        val g = row.getDecimal(j).doubleValue() // exact below 2^53
-        w(j) = w(j) - math.floor(
-          lrMicro.toDouble * g / (n.toDouble * Micro2) + 0.5).toLong
-        j += 1
-      }
+      val aggs = gradientAggs(zpColumn(w, featureCols), labelCol, featureCols)
+      step(w, features.agg(aggs.head, aggs.tail: _*).head(), 0, lrMicro)
       r += 1
     }
     Model(w)
@@ -143,40 +173,12 @@ object LogisticRegression {
     while (r < rounds) {
       // weights as a broadcast dimension joined on the group key: the
       // per-row logit reads its own group's weights, one map-side join.
-      val wRows = w.toSeq.sortBy(_._1).map { case (g, ws) =>
-        org.apache.spark.sql.Row.fromSeq(g +: ws.toSeq)
-      }
-      val wSchema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("__g",
-          org.apache.spark.sql.types.StringType, nullable = false) +:
-          (0 to d).map(j => org.apache.spark.sql.types.StructField(
-            s"__w$j", org.apache.spark.sql.types.LongType, nullable = false)))
-      val wDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(wRows, 1), wSchema)
+      val wDf = weightFrame(spark, w, d)
       val joined = features.join(broadcast(wDf),
         features(groupCol).cast("string") === wDf("__g"))
-      val zp = featureCols.zipWithIndex
-        .map { case (c, j) => col(c) * col(s"__w${j + 1}") }
-        .foldLeft(col("__w0") * Micro: Column)(_ + _)
-      val resid = pMicro(zp) - col(labelCol).cast("long") * Micro
-      val aggs =
-        (sum((resid * Micro).cast("decimal(38,0)")).as("g0") +:
-          featureCols.zipWithIndex.map { case (c, j) =>
-            sum((resid * col(c)).cast("decimal(38,0)")).as(s"g${j + 1}")
-          }) :+ count(lit(1)).as("n")
+      val aggs = gradientAggs(zpJoined(featureCols), labelCol, featureCols)
       joined.groupBy(col("__g")).agg(aggs.head, aggs.tail: _*)
-        .collect().foreach { row =>
-          val g = row.getString(0)
-          val n = row.getLong(d + 2)
-          val ws = w(g)
-          var j = 0
-          while (j <= d) {
-            val grad = row.getDecimal(j + 1).doubleValue()
-            ws(j) = ws(j) - math.floor(
-              lrMicro.toDouble * grad / (n.toDouble * Micro2) + 0.5).toLong
-            j += 1
-          }
-        }
+        .collect().foreach(row => step(w(row.getString(0)), row, 1, lrMicro))
       r += 1
     }
     w.toMap
@@ -186,45 +188,29 @@ object LogisticRegression {
     * the group's weights join back as a broadcast dimension, then the
     * same per-row fast-sigmoid map as [[score]]. Rows whose group has no
     * model are a CONTRACT VIOLATION (an inner join would silently drop
-    * them; a left join would emit silent nulls) — `requireCoverage`
-    * counts them with one cheap anti-join on the broadcast dimension and
-    * fails loudly (disable only when the caller filters first). */
+    * them; a left join would emit silent nulls) — they are counted with
+    * one cheap anti-join on the broadcast dimension and fail loudly, so a
+    * caller filters to the trained groups first. */
   def scoreGrouped(features: DataFrame, groupCol: String,
       weights: Map[String, Array[Long]], featureCols: Seq[String],
-      thresholdMicro: Long = 500000L,
-      requireCoverage: Boolean = true): DataFrame = {
+      thresholdMicro: Long = 500000L): DataFrame = {
     require(weights.nonEmpty, "no models")
     val d = featureCols.size
     weights.foreach { case (g, ws) =>
       require(ws.length == d + 1,
         s"group $g has ${ws.length} weights for $d features")
     }
-    val spark = features.sparkSession
-    val wRows = weights.toSeq.sortBy(_._1).map { case (g, ws) =>
-      org.apache.spark.sql.Row.fromSeq(g +: ws.toSeq)
-    }
-    val wSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__g",
-        org.apache.spark.sql.types.StringType, nullable = false) +:
-        (0 to d).map(j => org.apache.spark.sql.types.StructField(
-          s"__w$j", org.apache.spark.sql.types.LongType, nullable = false)))
-    val wDf = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(wRows, 1), wSchema))
-    if (requireCoverage) {
-      val missing = features
-        .join(wDf, features(groupCol).cast("string") === wDf("__g"),
-          "left_anti")
-        .limit(1).count()
-      require(missing == 0L,
-        s"feature rows reference a $groupCol with no trained model — " +
-          "train that group or filter before scoring")
-    }
+    val wDf = broadcast(weightFrame(features.sparkSession, weights, d))
+    val missing = features
+      .join(wDf, features(groupCol).cast("string") === wDf("__g"),
+        "left_anti")
+      .limit(1).count()
+    require(missing == 0L,
+      s"feature rows reference a $groupCol with no trained model — " +
+        "train that group or filter before scoring")
     val joined = features.join(wDf,
       features(groupCol).cast("string") === wDf("__g"))
-    val zp = featureCols.zipWithIndex
-      .map { case (c, j) => col(c) * col(s"__w${j + 1}") }
-      .foldLeft(col("__w0") * Micro: Column)(_ + _)
-    joined.withColumn("p_micro", pMicro(zp))
+    joined.withColumn("p_micro", pMicro(zpJoined(featureCols)))
       .withColumn("keep", col("p_micro") >= thresholdMicro)
       .drop("__g" +: (0 to d).map(j => s"__w$j"): _*)
   }
@@ -247,37 +233,8 @@ object LogisticRegression {
     * frames `w0..w<rounds>` with one row per group (columns: groupCol,
     * w0..wd). */
   def trainGroupedCtes(featuresSql: String, groupCol: String,
-      featureCols: Seq[String], rounds: Int, lrMicro: Long): String = {
-    val d = featureCols.size
-    val sb = new StringBuilder
-    sb ++= s"lrf AS MATERIALIZED (\n$featuresSql)"
-    sb ++= s",\nw0 AS MATERIALIZED (SELECT DISTINCT $groupCol, " +
-      (0 to d).map(j => s"CAST(0 AS BIGINT) AS w$j").mkString(", ") +
-      " FROM lrf)"
-    for (r <- 1 to rounds) {
-      val zp = (s"w.w0 * 1000000" +:
-        featureCols.zipWithIndex.map { case (c, j) => s"w.w${j + 1} * f.$c" })
-        .mkString(" + ")
-      sb ++= s""",
-        |p$r AS (
-        |  SELECT f.*, ${pMicroSql(zp)} - f.y * 1000000 AS resid
-        |  FROM lrf f JOIN w${r - 1} w ON f.$groupCol = w.$groupCol),
-        |g$r AS (
-        |  SELECT $groupCol, sum(CAST(resid * 1000000 AS HUGEINT)) AS g0,
-        |    ${featureCols.zipWithIndex.map { case (c, j) =>
-                 s"sum(CAST(resid * $c AS HUGEINT)) AS g${j + 1}" }
-               .mkString(",\n    ")},
-        |    count(*) AS n
-        |  FROM p$r GROUP BY $groupCol),
-        |w$r AS MATERIALIZED (
-        |  SELECT w.$groupCol, ${(0 to d).map(j =>
-                 s"w.w$j - CAST(floor($lrMicro.0 * CAST(g.g$j AS DOUBLE) / " +
-                   s"(CAST(g.n AS DOUBLE) * 1000000000000.0) + 0.5) AS BIGINT) AS w$j")
-               .mkString(",\n    ")}
-        |  FROM w${r - 1} w JOIN g$r g ON w.$groupCol = g.$groupCol)""".stripMargin
-    }
-    sb.toString
-  }
+      featureCols: Seq[String], rounds: Int, lrMicro: Long): String =
+    unrolledCtes(featuresSql, Some(groupCol), featureCols, rounds, lrMicro)
 
   /** The whole unrolled training run as DuckDB CTEs — the oracle
     * counterpart of [[train]] (the KMeans discipline: the oracle replays
@@ -286,16 +243,31 @@ object LogisticRegression {
     * micro-grid BIGINT features. Emits CTEs `lrf` (the feature frame) and
     * `w0..w<rounds>` (1-row weight frames with columns w0..wd). */
   def trainCtes(featuresSql: String, featureCols: Seq[String],
-      rounds: Int, lrMicro: Long): String = {
+      rounds: Int, lrMicro: Long): String =
+    unrolledCtes(featuresSql, None, featureCols, rounds, lrMicro)
+
+  /** The CTE chain of [[trainCtes]] (`group` = None: 1-row weight frames,
+    * cross joins) and [[trainGroupedCtes]] (one weight row per group,
+    * equi-joins and GROUP BY on the group column). */
+  private def unrolledCtes(featuresSql: String, group: Option[String],
+      featureCols: Seq[String], rounds: Int, lrMicro: Long): String = {
     val d = featureCols.size
+    // per-shape fragments: key-column prefixes, GROUP BY suffix, and the
+    // weight-frame joins (cross join of a 1-row frame vs. key equi-join)
+    val key = group.fold("")(g => s"$g, ")
+    val wKey = group.fold("")(g => s"w.$g, ")
+    val groupBy = group.fold("")(g => s" GROUP BY $g")
+    def join(l: String, r: String, la: String, ra: String): String =
+      group.fold(s"$l $la, $r $ra")(g => s"$l $la JOIN $r $ra ON $la.$g = $ra.$g")
     val sb = new StringBuilder
     // MATERIALIZED is load-bearing: every w_{r-1} is referenced twice
     // (by p_r and by w_r's update), so an inlining planner would expand
     // the chain 2^rounds times — materializing pins each round to run
-    // exactly once (they are 1-row frames; lrf is scanned once per round).
+    // exactly once (they are small frames; lrf is scanned once per round).
     sb ++= s"lrf AS MATERIALIZED (\n$featuresSql)"
-    sb ++= s",\nw0 AS MATERIALIZED (SELECT " +
-      (0 to d).map(j => s"CAST(0 AS BIGINT) AS w$j").mkString(", ") + ")"
+    val zeros = (0 to d).map(j => s"CAST(0 AS BIGINT) AS w$j").mkString(", ")
+    sb ++= group.fold(s",\nw0 AS MATERIALIZED (SELECT $zeros)")(g =>
+      s",\nw0 AS MATERIALIZED (SELECT DISTINCT $g, $zeros FROM lrf)")
     for (r <- 1 to rounds) {
       val zp = (s"w.w0 * 1000000" +:
         featureCols.zipWithIndex.map { case (c, j) => s"w.w${j + 1} * f.$c" })
@@ -303,20 +275,20 @@ object LogisticRegression {
       sb ++= s""",
         |p$r AS (
         |  SELECT f.*, ${pMicroSql(zp)} - f.y * 1000000 AS resid
-        |  FROM lrf f, w${r - 1} w),
+        |  FROM ${join("lrf", s"w${r - 1}", "f", "w")}),
         |g$r AS (
-        |  SELECT sum(CAST(resid * 1000000 AS HUGEINT)) AS g0,
+        |  SELECT ${key}sum(CAST(resid * 1000000 AS HUGEINT)) AS g0,
         |    ${featureCols.zipWithIndex.map { case (c, j) =>
                  s"sum(CAST(resid * $c AS HUGEINT)) AS g${j + 1}" }
                .mkString(",\n    ")},
         |    count(*) AS n
-        |  FROM p$r),
+        |  FROM p$r$groupBy),
         |w$r AS MATERIALIZED (
-        |  SELECT ${(0 to d).map(j =>
+        |  SELECT $wKey${(0 to d).map(j =>
                  s"w.w$j - CAST(floor($lrMicro.0 * CAST(g.g$j AS DOUBLE) / " +
                    s"(CAST(g.n AS DOUBLE) * 1000000000000.0) + 0.5) AS BIGINT) AS w$j")
                .mkString(",\n    ")}
-        |  FROM w${r - 1} w, g$r g)""".stripMargin
+        |  FROM ${join(s"w${r - 1}", s"g$r", "w", "g")})""".stripMargin
     }
     sb.toString
   }

@@ -99,8 +99,7 @@ object RetrievalIndex {
     val (f, live) = Fs(spark, s"$dir/commits")
     val p = SwapDir.readPath(f, live)
     if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).filter(_.isFile).map(_.getPath.getName).toSeq
-      .filterNot(n => n.startsWith(".") || n.startsWith("_")).sorted
+    else Fs.dataFiles(f, p).map(_.getPath.getName).toSeq.sorted
   }
 
   /** Parquet under `path` read with an explicit schema: an absent path (a

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.expressions.NearestCentroids
+import graft.operators.RelationalOps.round6
 import graft.util.{FileLease, Fs, SwapDir, Tombstones}
 
 /** IVF (inverted-file) approximate nearest-neighbor index — the coarse-
@@ -177,24 +178,26 @@ object IvfIndex {
   def knnJoinIVFPortable(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    import graft.operators.RelationalOps.round6
     val asg = SemDedup.assignCells(corpus, idCol, vecCol, nCells)
       .select(col("cell_id"), col(idCol).as("cand_id"), col(vecCol).as("cv"))
     val seeds = SemDedup.seeds(corpus, idCol, vecCol, nCells)
+    probeTopK(seedProbe(queries, idCol, vecCol, seeds, nProbe, "cell_id"),
+      asg, "cell_id", k)
+  }
+
+  /** The portable quantizer's probe: each query's `nProbe` highest
+    * rounded-cosine seed cells (seed-id tiebreak), as (query_id, qv,
+    * `cellCol`) rows. */
+  private def seedProbe(queries: DataFrame, idCol: String, vecCol: String,
+      seeds: DataFrame, nProbe: Int, cellCol: String): DataFrame = {
     val qs = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
     val probed = qs.crossJoin(broadcast(seeds))
       .withColumn("ps", round6(SimilaritySearch.cosine(col("qv"), col("sv"))))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("ps").desc, col("seed_id"))
-    val queryCells = probed
+    probed
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("seed_id").as("cell_id"))
-    val scored = queryCells.join(asg, Seq("cell_id"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .withColumn("score", round6(SimilaritySearch.cosine(col("qv"), col("cv"))))
-      .select(col("query_id"), col("cand_id"), col("score"))
-    SimilaritySearch.topKPerKey(scored, "query_id", "score", "cand_id", k)
-      .select(col("query_id"), col("cand_id"), col("score"), col("rnk"))
+      .select(col("query_id"), col("qv"), col("seed_id").as(cellCol))
   }
 
   /** Every corpus vector assigned to its single nearest cell — the inverted
@@ -204,24 +207,36 @@ object IvfIndex {
     corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
       explode(NearestCentroids(col(vecCol), centroids, 1)).as("cell"))
 
-  /** The shared search kernel: probe-cell join → fused-cosine verify →
-    * bounded-heap top-k. Both the transient and the persisted path end
+  /** The trained quantizer's search: each query probes its `nProbe`
+    * nearest centroids. Both the transient and the persisted path end
     * here, so they agree by construction. */
   private def probe(queries: DataFrame, corpusCells: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[Seq[Double]],
       k: Int, nProbe: Int): DataFrame = {
     val queryCells = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       explode(NearestCentroids(col(vecCol), centroids, nProbe)).as("cell"))
-    val scored = queryCells.join(corpusCells, Seq("cell"))
+    probeTopK(queryCells, corpusCells, "cell", k)
+  }
+
+  /** The shared search tail of every quantizer: probe-cell join →
+    * fused-cosine verify → bounded-heap top-k. No (query, cand) duplicates
+    * are possible: a corpus vector lives in exactly one cell, so it meets
+    * each query through at most one probe. */
+  private def probeTopK(queryCells: DataFrame, corpusCells: DataFrame,
+      cellCol: String, k: Int): DataFrame = {
+    val scored = queryCells.join(corpusCells, Seq(cellCol))
       .filter(col("query_id") =!= col("cand_id"))
-      .withColumn("score",
-        graft.operators.RelationalOps.round6(SimilaritySearch.cosine(col("qv"), col("cv"))))
-      // no (query, cand) duplicates possible: a corpus vector lives in
-      // exactly one cell, so it meets each query through at most one probe
+      .withColumn("score", round6(SimilaritySearch.cosine(col("qv"), col("cv"))))
       .select(col("query_id"), col("cand_id"), col("score"))
     SimilaritySearch.topKPerKey(scored, "query_id", "score", "cand_id", k)
       .select(col("query_id"), col("cand_id"), col("score"), col("rnk"))
   }
+
+  /** The inverted file's write layout: hash-clustered and sorted by cell,
+    * so row-group min/max stats skip non-probed cells. */
+  private def clusterByCell(cells: DataFrame): DataFrame =
+    cells.repartition(cells.sparkSession.sparkContext.defaultParallelism, col("cell"))
+      .sortWithinPartitions(col("cell"))
 
   // ---- persisted lifecycle -------------------------------------------------
   //
@@ -266,9 +281,7 @@ object IvfIndex {
       val centroids = trainCentroids(corpus, vecCol, cfg)
       centroids.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-      assignCells(corpus, idCol, vecCol, centroids)
-        .repartition(spark.sparkContext.defaultParallelism, col("cell"))
-        .sortWithinPartitions(col("cell"))
+      clusterByCell(assignCells(corpus, idCol, vecCol, centroids))
         .write.mode("overwrite").parquet(s"$dir/cells")
     }
   }
@@ -297,9 +310,7 @@ object IvfIndex {
       vecCol: String, dir: String): Unit = {
     val spark = newDocs.sparkSession
     val centroids = readCentroids(spark, dir)
-    assignCells(newDocs, idCol, vecCol, centroids)
-      .repartition(spark.sparkContext.defaultParallelism, col("cell"))
-      .sortWithinPartitions(col("cell"))
+    clusterByCell(assignCells(newDocs, idCol, vecCol, centroids))
       .write.mode("append").parquet(s"$dir/cells")
     compactUnlocked(spark, dir, SwapDir.maxFiles(spark))
   }
@@ -323,8 +334,7 @@ object IvfIndex {
     // compaction is where tombstones become physical removal
     val hasTombs = tb.pending
     SwapDir.compact(spark, s"$dir/cells", maxFiles, force = hasTombs)(df =>
-      tb.minus(df).repartition(spark.sparkContext.defaultParallelism, col("cell"))
-        .sortWithinPartitions(col("cell")))
+      clusterByCell(tb.minus(df)))
     if (hasTombs) tb.clear()
   }
 
@@ -381,15 +391,11 @@ object IvfIndex {
   }
 
   private def writePortableCells(docs: DataFrame, idCol: String, vecCol: String,
-      dir: String, seeds: DataFrame, mode: String): Unit = {
-    val spark = docs.sparkSession
-    SemDedup.assignCellsTo(docs, idCol, vecCol, seeds)
+      dir: String, seeds: DataFrame, mode: String): Unit =
+    clusterByCell(SemDedup.assignCellsTo(docs, idCol, vecCol, seeds)
       .select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
-        col("cell_id").as("cell"))
-      .repartition(spark.sparkContext.defaultParallelism, col("cell"))
-      .sortWithinPartitions(col("cell"))
+        col("cell_id").as("cell")))
       .write.mode(mode).parquet(s"$dir/cells")
-  }
 
   /** Assign new vectors with the STORED seeds and append — the portable
     * twin of [[appendVectors]] (no reseed: the quantizer is fixed until the
@@ -411,23 +417,10 @@ object IvfIndex {
     * tombstoned ids anti-joined like every cells reader. */
   def searchIndexPortable(queries: DataFrame, dir: String, idCol: String,
       vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
-    import graft.operators.RelationalOps.round6
     val spark = queries.sparkSession
     val seeds = spark.read.parquet(s"$dir/seeds")
-    val qs = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
-    val probed = qs.crossJoin(broadcast(seeds))
-      .withColumn("ps", round6(SimilaritySearch.cosine(col("qv"), col("sv"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("ps").desc, col("seed_id"))
-    val queryCells = probed
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("seed_id").as("cell"))
-    val scored = queryCells.join(readCells(spark, dir), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .withColumn("score", round6(SimilaritySearch.cosine(col("qv"), col("cv"))))
-      .select(col("query_id"), col("cand_id"), col("score"))
-    SimilaritySearch.topKPerKey(scored, "query_id", "score", "cand_id", k)
-      .select(col("query_id"), col("cand_id"), col("score"), col("rnk"))
+    probeTopK(seedProbe(queries, idCol, vecCol, seeds, nProbe, "cell"),
+      readCells(spark, dir), "cell", k)
   }
 
   /** Search a persisted index: read centroids (driver-side, tiny), scan the
@@ -536,7 +529,7 @@ object IvfIndex {
   def recallEstimate(spark: org.apache.spark.sql.SparkSession, dir: String,
       k: Int = 10, sampleN: Int = 64, nProbe: Int = Config().nProbe): Double = {
     val (probes, exact) = probeTruth(spark, dir, k, sampleN)
-    recallAt(spark, dir, probes, exact, k, nProbe)
+    meanRecall(exact, candSets(searchIndex(probes, dir, "vid", "vec", k, nProbe)))
   }
 
   /** Bounded probe sample of the indexed corpus plus its exact brute-force
@@ -546,7 +539,6 @@ object IvfIndex {
     * and varies only the cheap index searches against it. */
   private def probeTruth(spark: org.apache.spark.sql.SparkSession, dir: String,
       k: Int, sampleN: Int): (DataFrame, Map[String, Set[String]]) = {
-    import spark.implicits._
     val cells = readCells(spark, dir)
     val corpus = cells.select(col("cand_id").as("vid"), col("cv").as("vec"))
     // deterministic bounded probe sample; fall back to the head when the
@@ -556,20 +548,22 @@ object IvfIndex {
     val probes0 = thinned.localCheckpoint()
     val probes = if (probes0.count() >= math.min(sampleN, 8).toLong) probes0
       else corpus.limit(sampleN).localCheckpoint()
-    // ids surface as strings so the estimate stays id-type agnostic
-    val exact = SimilaritySearch.knnJoinBrute(probes, corpus, "vid", "vec", k)
-      .select(col("query_id").cast("string"), col("cand_id").cast("string"))
-      .as[(String, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    (probes, exact)
+    (probes, candSets(SimilaritySearch.knnJoinBrute(probes, corpus, "vid", "vec", k)))
   }
 
-  private def recallAt(spark: org.apache.spark.sql.SparkSession, dir: String,
-      probes: DataFrame, exact: Map[String, Set[String]], k: Int,
-      nProbe: Int): Double = {
+  /** (query_id, cand_id) rows collected as query → candidate set; ids
+    * surface as strings so the estimate stays id-type agnostic. */
+  private def candSets(pairs: DataFrame): Map[String, Set[String]] = {
+    val spark = pairs.sparkSession
     import spark.implicits._
-    val approx = searchIndex(probes, dir, "vid", "vec", k, nProbe)
-      .select(col("query_id").cast("string"), col("cand_id").cast("string"))
+    pairs.select(col("query_id").cast("string"), col("cand_id").cast("string"))
       .as[(String, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+  }
+
+  /** Mean per-query recall of `approx` against `exact` (an empty truth set
+    * counts as fully recalled). */
+  private def meanRecall(exact: Map[String, Set[String]],
+      approx: Map[String, Set[String]]): Double = {
     val recalls = exact.toSeq.map { case (q, truth) =>
       if (truth.isEmpty) 1.0
       else (truth & approx.getOrElse(q, Set.empty)).size.toDouble / truth.size
@@ -590,7 +584,8 @@ object IvfIndex {
     * target is unreachable any cheaper. */
   def calibrateNProbe(spark: org.apache.spark.sql.SparkSession, dir: String,
       target: Double = 0.8, k: Int = 10, sampleN: Int = 64): (Int, Double) = {
-    val nCells = readCentroids(spark, dir).size
+    val centroids = readCentroids(spark, dir)
+    val nCells = centroids.size
     val (probes, exact) = probeTruth(spark, dir, k, sampleN)
     // The doubling ladder the sweep walks: 1, 2, 4, …, capped at nCells.
     val ladder = {
@@ -610,16 +605,13 @@ object IvfIndex {
     // (score desc, id asc) — byte-identical shortlists to running
     // searchIndex at each setting, for one corpus-scored pass and one
     // bounded collect (≤ sampleN · |ladder| · k rows).
-    val centroids = readCentroids(spark, dir)
     val ladderArr = array(ladder.map(lit(_)): _*)
     val qc = probes.select(col("vid").as("query_id"), col("vec").as("qv"),
       posexplode(NearestCentroids(col("vec"), centroids, nCells))
         .as(Seq("cr", "cell")))
     val scored = qc.join(readCells(spark, dir), Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
-      .withColumn("score",
-        graft.operators.RelationalOps.round6(
-          SimilaritySearch.cosine(col("qv"), col("cv"))))
+      .withColumn("score", round6(SimilaritySearch.cosine(col("qv"), col("cv"))))
       .withColumn("np", explode(filter(ladderArr, p => p > col("cr"))))
     import spark.implicits._
     val shortlists = scored
@@ -630,14 +622,8 @@ object IvfIndex {
       .as[(Int, String, Seq[String])].collect()
       .groupBy(_._1).view
       .mapValues(_.map(r => r._2 -> r._3.toSet).toMap).toMap
-    def recallFor(np: Int): Double = {
-      val approx = shortlists.getOrElse(np, Map.empty)
-      val recalls = exact.toSeq.map { case (q, truth) =>
-        if (truth.isEmpty) 1.0
-        else (truth & approx.getOrElse(q, Set.empty)).size.toDouble / truth.size
-      }
-      if (recalls.isEmpty) 1.0 else recalls.sum / recalls.size
-    }
+    def recallFor(np: Int): Double =
+      meanRecall(exact, shortlists.getOrElse(np, Map.empty))
     var np = ladder.head
     var r = recallFor(np)
     val rest = ladder.iterator.drop(1)

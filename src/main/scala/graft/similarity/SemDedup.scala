@@ -110,16 +110,7 @@ object SemDedup {
       maxCellSize: Option[Int] = None): DataFrame = {
     val asgAll = assignCells(emb, idCol, vecCol, nCells)
       .join(emb.select(col(idCol).cast("long").as(idCol), col(labelCol)), Seq(idCol))
-    val asg = maxCellSize match {
-      case None => asgAll
-      case Some(cap) =>
-        // nCells-row census (partial aggregation keeps the exchange at
-        // nCells rows per task) → broadcast left-semi exclusion, the exact
-        // guard shape semDedup uses below
-        val small = asgAll.groupBy(col("cell_id")).agg(count(lit(1)).as("n"))
-          .filter(col("n") <= cap).select(col("cell_id"))
-        asgAll.join(broadcast(small), Seq("cell_id"), "left_semi")
-    }
+    val asg = capCells(asgAll, maxCellSize)
     val a = asg.select(col("cell_id"), col(idCol).as("a_id"),
       col(vecCol).as("va"), col(labelCol).as("la"))
     val b = asg.select(col("cell_id"), col(idCol).as("b_id"),
@@ -141,8 +132,22 @@ object SemDedup {
     * a cell holding a disproportionate share of the corpus is the signal to
     * raise nCells (or re-seed) rather than discover the blowup mid-job. */
   def cellStats(emb: DataFrame, idCol: String, vecCol: String, nCells: Int): DataFrame =
-    assignCells(emb, idCol, vecCol, nCells)
-      .groupBy(col("cell_id")).agg(count(lit(1)).as("n"))
+    census(assignCells(emb, idCol, vecCol, nCells))
+
+  private def census(asg: DataFrame): DataFrame =
+    asg.groupBy(col("cell_id")).agg(count(lit(1)).as("n"))
+
+  /** The hot-cell guard's enforcement, shared by [[hardNegatives]] and
+    * [[semDedupOnAssignment]]: `asgAll` minus the cells holding more than
+    * the cap. nCells-row census (partial aggregation keeps the exchange at
+    * nCells rows per task), then a broadcast left-semi join. */
+  private def capCells(asgAll: DataFrame, maxCellSize: Option[Int]): DataFrame =
+    maxCellSize match {
+      case None => asgAll
+      case Some(cap) =>
+        val small = census(asgAll).filter(col("n") <= cap).select(col("cell_id"))
+        asgAll.join(broadcast(small), Seq("cell_id"), "left_semi")
+    }
 
   /** Per-vector verdict: (id, cell_id, keep 1|0). keep = 0 iff some
     * same-cell vector with a smaller id is cosine-similar past the
@@ -170,15 +175,7 @@ object SemDedup {
     * hash-seeded path (which now delegates here). */
   def semDedupOnAssignment(asgAll: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxCellSize: Option[Int] = None): DataFrame = {
-    val asg = maxCellSize match {
-      case None => asgAll
-      case Some(cap) =>
-        // nCells-row census — partial aggregation keeps the exchange at
-        // nCells rows per task — then a broadcast semi-join
-        val small = asgAll.groupBy(col("cell_id")).agg(count(lit(1)).as("n"))
-          .filter(col("n") <= cap).select(col("cell_id"))
-        asgAll.join(broadcast(small), Seq("cell_id"), "left_semi")
-    }
+    val asg = capCells(asgAll, maxCellSize)
     val a = asg.select(col("cell_id"), col(idCol).as("a_id"), col(vecCol).as("va"))
     val b = asg.select(col("cell_id"), col(idCol).as("b_id"), col(vecCol).as("vb"))
     val dropped = a.join(b, Seq("cell_id"))

@@ -138,12 +138,26 @@ object SimilaritySearch {
     * rises with `bands`, precision (candidate-set tightness) with
     * `bitsPerBand`. */
   def knnJoinLSH(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int, cfg: LshConfig): DataFrame = {
+      idCol: String, vecCol: String, k: Int, cfg: LshConfig): DataFrame =
+    knnJoinBanded(queries, corpus, idCol, vecCol, k, cfg.maxBucket,
+      bandRows(_, idCol, vecCol, _, cfg))
+
+  /** Embedding near-duplicate pairs: cosine ≥ threshold via LSH candidates —
+    * the embedding-space member of the dedup family. */
+  def embeddingDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, cfg: LshConfig): DataFrame =
+    bandedDupPairs(corpus, idCol, vecCol, threshold, cfg.maxBucket,
+      bandRows(_, idCol, vecCol, _, cfg))
+
+  /** The k-NN join pipeline over a band-row function `bands(df, outId)`
+    * yielding (outId, band_key) rows. */
+  private def knnJoinBanded(queries: DataFrame, corpus: DataFrame,
+      idCol: String, vecCol: String, k: Int, maxBucket: Int,
+      bands: (DataFrame, String) => DataFrame): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val cands = bandRows(queries, idCol, vecCol, "query_id", cfg)
-      .join(capBuckets(bandRows(corpus, idCol, vecCol, "cand_id", cfg), cfg.maxBucket),
-        Seq("band_key"))
+    val cands = bands(queries, "query_id")
+      .join(capBuckets(bands(corpus, "cand_id"), maxBucket), Seq("band_key"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"))
       .dropDuplicates("query_id", "cand_id")
@@ -155,13 +169,13 @@ object SimilaritySearch {
       .select(col("query_id"), col("cand_id"), col("score"), col("rnk"))
   }
 
-  /** Embedding near-duplicate pairs: cosine ≥ threshold via LSH candidates —
-    * the embedding-space member of the dedup family. */
-  def embeddingDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, cfg: LshConfig): DataFrame = {
+  /** The near-duplicate pair pipeline over a band-row function. */
+  private def bandedDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, maxBucket: Int,
+      bands: (DataFrame, String) => DataFrame): DataFrame = {
     val va = corpus.select(col(idCol).as("a_id"), col(vecCol).as("va"))
     val vb = corpus.select(col(idCol).as("b_id"), col(vecCol).as("vb"))
-    val banded = capBuckets(bandRows(corpus, idCol, vecCol, "a_id", cfg), cfg.maxBucket)
+    val banded = capBuckets(bands(corpus, "a_id"), maxBucket)
     banded.join(banded.withColumnRenamed("a_id", "b_id"), Seq("band_key"))
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"))
@@ -174,8 +188,8 @@ object SimilaritySearch {
 
   // ---- portable (oracle-carrying) twins -----------------------------------
   //
-  // Same pipelines as above with ONE substitution: HyperplaneBands →
-  // RademacherBands (md5-derived ±1 planes over the integer-quantized
+  // The same private pipelines over a different band function:
+  // HyperplaneBands → RademacherBands (md5-derived ±1 planes over the integer-quantized
   // vector — exact in any engine, see RademacherBands' scaladoc). The
   // production entries keep the tuned Gaussian planes and stay rows-only;
   // these twins give the banding pipeline a full byte-for-byte DuckDB
@@ -198,37 +212,13 @@ object SimilaritySearch {
 
   /** [[embeddingDupPairs]] on portable bands — full-oracle twin. */
   def embeddingDupPairsPortable(corpus: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, cfg: PortableLshConfig): DataFrame = {
-    val va = corpus.select(col(idCol).as("a_id"), col(vecCol).as("va"))
-    val vb = corpus.select(col(idCol).as("b_id"), col(vecCol).as("vb"))
-    val banded = capBuckets(
-      portableBandRows(corpus, idCol, vecCol, "a_id", cfg), cfg.maxBucket)
-    banded.join(banded.withColumnRenamed("a_id", "b_id"), Seq("band_key"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"))
-      .dropDuplicates("a_id", "b_id")
-      .join(va, Seq("a_id")).join(vb, Seq("b_id"))
-      .withColumn("score", graft.operators.RelationalOps.round6(cosine(col("va"), col("vb"))))
-      .filter(col("score") >= threshold)
-      .select(col("a_id"), col("b_id"), col("score"))
-  }
+      threshold: Double, cfg: PortableLshConfig): DataFrame =
+    bandedDupPairs(corpus, idCol, vecCol, threshold, cfg.maxBucket,
+      portableBandRows(_, idCol, vecCol, _, cfg))
 
   /** [[knnJoinLSH]] on portable bands — full-oracle twin. */
   def knnJoinLSHPortable(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int, cfg: PortableLshConfig): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val cands = portableBandRows(queries, idCol, vecCol, "query_id", cfg)
-      .join(capBuckets(portableBandRows(corpus, idCol, vecCol, "cand_id", cfg),
-          cfg.maxBucket),
-        Seq("band_key"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"))
-      .dropDuplicates("query_id", "cand_id")
-    val scored = cands.join(c, Seq("cand_id")).join(q, Seq("query_id"))
-      .withColumn("score", graft.operators.RelationalOps.round6(cosine(col("qv"), col("cv"))))
-      .select(col("query_id"), col("cand_id"), col("score"))
-    topKPerKey(scored, "query_id", "score", "cand_id", k)
-      .select(col("query_id"), col("cand_id"), col("score"), col("rnk"))
-  }
+      idCol: String, vecCol: String, k: Int, cfg: PortableLshConfig): DataFrame =
+    knnJoinBanded(queries, corpus, idCol, vecCol, k, cfg.maxBucket,
+      portableBandRows(_, idCol, vecCol, _, cfg))
 }

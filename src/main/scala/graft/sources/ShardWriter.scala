@@ -131,9 +131,7 @@ object ShardWriter {
       s.isDirectory && s.getPath.getName.startsWith("shard="))
     def countShard(d: org.apache.hadoop.fs.FileStatus): (Int, Long) = {
       val shard = d.getPath.getName.stripPrefix("shard=").toInt
-      val n = f.listStatus(d.getPath)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
+      val n = graft.util.Fs.dataFiles(f, d.getPath)
         .map { file =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf)
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

@@ -195,8 +195,7 @@ object SwapDir {
     * compaction trigger. 0 when the dir does not exist. */
   def fileCount(f: FileSystem, dir: Path): Int =
     if (!f.exists(dir)) 0
-    else f.listStatus(dir).count(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+    else Fs.dataFiles(f, dir).length
 
   /** Read the subtable at `live` as of its last complete swap (the backup,
     * mid-swap — see [[readPath]]). An absent subtable reads as an empty

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one filesystem lookup for engine-managed paths (leases, swap dirs,
@@ -23,4 +23,13 @@ object Fs {
 
   /** The filesystem of `path`. */
   def of(spark: SparkSession, path: String): FileSystem = apply(spark, path)._1
+
+  /** Hadoop's hidden-path convention: names starting with `_` or `.`
+    * (`_SUCCESS`, `_temporary`, `.crc` side files) are markers, not data. */
+  private[graft] def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
+  /** The data files directly under `dir`: one `listStatus`, directories
+    * and hidden entries dropped. */
+  private[graft] def dataFiles(f: FileSystem, dir: Path): Array[FileStatus] =
+    f.listStatus(dir).filter(s => s.isFile && !hidden(s.getPath.getName))
 }

@@ -105,4 +105,36 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(viaSql === viaCol)
   }
+
+  test("register installs exactly the functions the extension injects") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionRegistry}
+    // what apply() injects, read back through the extension's own
+    // registration into an empty registry (registerFunctions is
+    // package-private to Spark, hence the reflective call)
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val injected = new SimpleFunctionRegistry
+    ext.getClass.getMethod("registerFunctions", classOf[FunctionRegistry])
+      .invoke(ext, injected)
+    val injectedNames = injected.listFunction().map(_.funcName).toSet
+    assert(injectedNames.contains("minhash_sig") &&
+      injectedNames.contains("hyperplane_bands"))
+    // a session whose graft functions are dropped: register() must add
+    // back exactly the injected set, nothing more and nothing less
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    injectedNames.foreach(n => reg.dropFunction(FunctionIdentifier(n)))
+    val before = reg.listFunction().map(_.funcName).toSet
+    assert((before & injectedNames).isEmpty)
+    GraftExtensions.register(s)
+    assert(reg.listFunction().map(_.funcName).toSet -- before === injectedNames)
+    // the band and signature functions evaluate through the registered names
+    val row = s.sql(
+      """SELECT size(minhash_sig(array(CAST(1 AS BIGINT), CAST(2 AS BIGINT)), 8, 7)) AS m,
+        |       size(hyperplane_bands(array(CAST(1.0 AS FLOAT), CAST(0.5 AS FLOAT)),
+        |         2, 4, 6, 42)) AS h""".stripMargin).first()
+    assert(row.getInt(0) === 8, "one signature slot per permutation")
+    assert(row.getInt(1) === 4, "one key per band")
+  }
 }
