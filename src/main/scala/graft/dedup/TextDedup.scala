@@ -134,14 +134,16 @@ object TextDedup {
     * carry no shingle evidence either way). */
   def nearDuplicatePairs(docs: DataFrame, idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame =
-    nearDuplicatePairsFromSigs(cachedSigs(docs, idCol, textCol, cfg), cfg)
+    nearDuplicatePairsFromSigs(materializedSigs(docs, idCol, textCol, cfg), cfg)
 
-  /** Cached non-empty signatures — the one-shot callers' materialization
-    * (per-micro-batch callers sign once and localCheckpoint instead: a
-    * cache entry per batch would accumulate in the CacheManager). */
-  private def cachedSigs(docs: DataFrame, idCol: String, textCol: String,
+  /** Non-empty signatures, materialized once with an eager
+    * `localCheckpoint` — the one-shot callers' materialization, the same
+    * as the per-micro-batch callers': the blocks go with the frame
+    * (ContextCleaner), where a `cache()` would pin them in the
+    * CacheManager for the session. */
+  private def materializedSigs(docs: DataFrame, idCol: String, textCol: String,
       cfg: MinHashConfig): DataFrame =
-    signatures(docs, idCol, textCol, cfg).filter(size(col("sh")) > 0).cache()
+    signatures(docs, idCol, textCol, cfg).filter(size(col("sh")) > 0).localCheckpoint()
 
   /** Exact-jaccard verification of joined candidate pairs over their
     * shingle-hash set columns `shA`/`shB`: adds `inter` and the rounded
@@ -187,8 +189,8 @@ object TextDedup {
     * nearDuplicatePairs NaN guard). */
   def crossNearDupPairs(left: DataFrame, right: DataFrame, idCol: String,
       textCol: String, cfg: MinHashConfig = MinHashConfig()): DataFrame = {
-    val ls = cachedSigs(left, idCol, textCol, cfg)
-    val rs = cachedSigs(right, idCol, textCol, cfg)
+    val ls = materializedSigs(left, idCol, textCol, cfg)
+    val rs = materializedSigs(right, idCol, textCol, cfg)
     val lb = bandRows(ls, cfg).withColumnRenamed("doc_id", "l_id")
     val rb = bandRows(rs, cfg).withColumnRenamed("doc_id", "r_id")
     val ok = lb.select(col("band_key")).unionAll(rb.select(col("band_key")))
@@ -213,7 +215,7 @@ object TextDedup {
     * appears on the drop side of a pair). */
   def minHashDedup(docs: DataFrame, idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame =
-    minHashDedupFromSigs(docs, idCol, cachedSigs(docs, idCol, textCol, cfg), cfg)
+    minHashDedupFromSigs(docs, idCol, materializedSigs(docs, idCol, textCol, cfg), cfg)
 
   /** [[minHashDedup]] over a pre-materialized signature frame (see
     * [[nearDuplicatePairsFromSigs]]). */

@@ -148,8 +148,8 @@ object TextDedupIndex {
   def build(corpus: DataFrame, idCol: String, textCol: String, dir: String,
       cfg: MinHashConfig = MinHashConfig()): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    new FileLease(dir).withLease(Fs.of(spark, dir)) {
+    val f = Fs.of(spark, dir)
+    new FileLease(dir).withLease(f) {
       // a rebuild replaces the index: the previous generation's
       // tombstones must not touch the new one
       tombs(spark, dir).clear()
@@ -171,10 +171,10 @@ object TextDedupIndex {
         .select(shortFp(textCol)).distinct()
         .write.mode("overwrite").parquet(s"$dir/shortfp")
       // stamp the hash family so a mismatched search fails loudly instead of
-      // silently joining foreign bucket keys
-      Seq((cfg.shingleK, cfg.numPerm, cfg.bands, cfg.seed, cfg.maxBucket, cfg.portable))
-        .toDF("shingle_k", "num_perm", "bands", "seed", "max_bucket", "portable")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      // silently joining foreign bucket keys (the delete also clears the
+      // `meta/` parquet dir an older version wrote there)
+      f.delete(metaPath(dir), true)
+      Fs.writeText(f, metaPath(dir), stamp(cfg))
     }
   }
 
@@ -195,17 +195,19 @@ object TextDedupIndex {
     }
   }
 
+  /** The one-line hash-family stamp at `$dir/meta`. */
+  private def metaPath(dir: String) = new org.apache.hadoop.fs.Path(dir, "meta")
+
+  private def stamp(cfg: MinHashConfig): String =
+    s"minhash shingle_k=${cfg.shingleK} num_perm=${cfg.numPerm} bands=${cfg.bands} " +
+      s"seed=${cfg.seed} max_bucket=${cfg.maxBucket} portable=${cfg.portable}"
+
+  /** A driver-side file read, no Spark job. A missing stamp, or the
+    * parquet `meta/` dir of an older version, fails as a mismatch. */
   private def requireMatching(spark: SparkSession, dir: String,
-      cfg: MinHashConfig): Unit = {
-    val m = spark.read.parquet(s"$dir/meta").head()
-    require(m.getAs[Int]("shingle_k") == cfg.shingleK
-        && m.getAs[Int]("num_perm") == cfg.numPerm
-        && m.getAs[Int]("bands") == cfg.bands
-        && m.getAs[Long]("seed") == cfg.seed
-        && m.getAs[Int]("max_bucket") == cfg.maxBucket
-        && m.getAs[Boolean]("portable") == cfg.portable,
+      cfg: MinHashConfig): Unit =
+    require(Fs.readText(Fs.of(spark, dir), metaPath(dir)).map(_.trim).contains(stamp(cfg)),
       s"index at $dir was built with a different MinHash family than $cfg")
-  }
 
   /** Near-duplicate pairs of NEW docs against the INDEXED corpus:
     * (new_id, corpus_id, inter, jaccard), jaccard ≥ cfg.jaccardThreshold,
@@ -593,14 +595,9 @@ object TextDedupIndex {
       else cfs.listStatus(ledger).toSeq
         .filter(_.getPath.getName.startsWith("out-"))
         .flatMap { s =>
-          try {
-            val in = cfs.open(s.getPath)
-            val txt =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-              finally in.close()
-            if (txt.isEmpty) None
-            else Some(new org.apache.hadoop.fs.Path(txt).getName)
-          } catch { case _: java.io.IOException => None }
+          try Fs.readText(cfs, s.getPath).map(_.trim).filter(_.nonEmpty)
+            .map(new org.apache.hadoop.fs.Path(_).getName)
+          catch { case _: java.io.IOException => None }
         }.toSet
     new FileLease(dir).withLease(ifs) {
       ifs.listStatus(stagingRoot).map(_.getPath)
@@ -676,13 +673,9 @@ object TextDedupIndex {
         // unreadable (crash mid-write before it was atomically renamed in)
         // or the staged dir is gone (an operator swept `staging/`).
         def replayFromOutMark(): Boolean = {
-          if (!fs.exists(outMark)) return false
           val stage =
-            try {
-              val in = fs.open(outMark)
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-              finally in.close()
-            } catch { case _: java.io.IOException => "" }
+            try Fs.readText(fs, outMark).fold("")(_.trim)
+            catch { case _: java.io.IOException => "" }
           if (stage.isEmpty) return false
           val (sfs, sp) = Fs(spark, stage)
           if (!sfs.exists(sp)) return false
@@ -699,8 +692,7 @@ object TextDedupIndex {
             // mark must never exist under the real name
             fs.mkdirs(ledger)
             val tmp = new org.apache.hadoop.fs.Path(ledger, outMark.getName + ".tmp")
-            val o = fs.create(tmp, true)
-            try o.write(stage.getBytes("UTF-8")) finally o.close()
+            Fs.writeText(fs, tmp, stage)
             fs.delete(outMark, false)
             fs.rename(tmp, outMark)
             appendFromSigsUnlocked(spark.read.parquet(stage), stagedSigs,

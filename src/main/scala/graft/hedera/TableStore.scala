@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.util.{Fs, SwapDir}
 
 /** Parquet table layer for the warehouse: day-partitioned fact table,
-  * append-only errors table, tiny crash-safe state table.
+  * append-only errors table, tiny crash-safe state file.
   *
   * Layout = the reference's physical design re-expressed for parquet
   * (SURVEY.md §1.4): DAY partitions on the truncated timestamp
@@ -20,19 +20,16 @@ import graft.util.{Fs, SwapDir}
 final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay: Int = 4,
     leaseMs: Long = 60000L) {
 
-  /** Serializes live-tree mutations within this process: appends hold it for
-    * their write job, the dedupe swap holds it for its (millisecond) rename
-    * sequence — so a micro-batch append can never interleave with a day swap.
-    * Cross-PROCESS writers (an ops backfill job next to the streaming
-    * `EtlApp`) are serialized by the file lease below, acquired inside this
-    * monitor so only one thread per process ever touches the lease file. */
-  private val writeLock = new Object
-
-  /** Cross-process writer lease ([[graft.util.FileLease]] — extracted in r6
-    * so the persisted index lifecycles reuse the identical mechanism):
-    * atomic-create lock file, heartbeat-renewed, stale-takeover; the
-    * straggler/manifest protocol still bounds any residual interleave to
-    * preserved-but-duplicated rows, never lost rows. */
+  /** Writer lease ([[graft.util.FileLease]]), the one serialization of
+    * live-tree mutations: appends hold it for their write job, the dedupe
+    * swap for its (millisecond) rename sequence, so a micro-batch append
+    * can never interleave with a day swap. Within this process its
+    * per-path gate serializes every thread of every instance on this path;
+    * across processes (an ops backfill job next to the streaming `EtlApp`)
+    * the atomic-create lock file does, heartbeat-renewed with
+    * stale-takeover. The straggler/manifest protocol still bounds any
+    * residual interleave to preserved-but-duplicated rows, never lost
+    * rows. */
   private val lease = new graft.util.FileLease(path, leaseMs)
 
   private def withLease[T](f: FileSystem)(body: => T): T = lease.withLease(f)(body)
@@ -43,7 +40,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
     * the standard plain-parquet-under-compaction behavior; such a reader
     * retries (the swap window is milliseconds). The engine's own
     * read-modify-write paths never race this: they coordinate through
-    * [[readSnapshot]] + the write lock. A deployment needing snapshot
+    * [[readSnapshot]] + the writer lease. A deployment needing snapshot
     * isolation for ad-hoc readers layers a transactional table format on
     * the same layout. */
   def read(): DataFrame = spark.read.schema(TransactionSchema.table).parquet(path)
@@ -77,7 +74,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
           && inRange(s.getPath.getName))
         .map(_.getPath)
     val listing: Map[String, Set[String]] =
-      perDay(dayDirs.map(_.getName).toSeq) { name =>
+      Fs.fanOut(dayDirs.map(_.getName).toSeq) { name =>
         name -> Fs.dataFiles(f, new Path(root, name)).map(_.getPath.getName).toSet
       }.toMap
     val files = for { (d, names) <- listing.toSeq; n <- names } yield s"$path/$d/$n"
@@ -111,10 +108,8 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
       .sortWithinPartitions(col("day"), col("transactionType"))
 
   /** Append a batch, day-partitioned, clustered within partitions. */
-  def append(df: DataFrame): Unit = writeLock.synchronized {
-    withLease(fs) {
-      layout(df).write.mode(SaveMode.Append).partitionBy("day").parquet(path)
-    }
+  def append(df: DataFrame): Unit = withLease(fs) {
+    layout(df).write.mode(SaveMode.Append).partitionBy("day").parquet(path)
   }
 
   /** Append a batch that is ALREADY hash-partitioned by
@@ -124,11 +119,9 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
     * type-clustered files. The files-per-day bound still holds: each
     * (day, salt) combination lives in exactly one upstream task, so a day
     * receives at most `filesPerDay` writers. */
-  def appendPrePartitioned(df: DataFrame): Unit = writeLock.synchronized {
-    withLease(fs) {
-      df.sortWithinPartitions(col("day"), col("transactionType"))
-        .write.mode(SaveMode.Append).partitionBy("day").parquet(path)
-    }
+  def appendPrePartitioned(df: DataFrame): Unit = withLease(fs) {
+    df.sortWithinPartitions(col("day"), col("transactionType"))
+      .write.mode(SaveMode.Append).partitionBy("day").parquet(path)
   }
 
   // Dot-prefixed working dirs inside the table path: Spark's file listing
@@ -156,17 +149,12 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
     * backed-up old day. */
   private def doneMarkerPath(day: String) = new Path(bakDir, s".done-$day")
 
-  private def writeNames(f: FileSystem, p: Path, names: Iterable[String]): Unit = {
-    val out = f.create(p, true)
-    try out.write(names.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def writeNames(f: FileSystem, p: Path, names: Iterable[String]): Unit =
+    Fs.writeText(f, p, names.mkString("\n"))
 
-  private def readNames(f: FileSystem, p: Path): Set[String] = {
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toSet
-    finally in.close()
-  }
+  /** The names of manifest `p`, or `None` when it is absent. */
+  private def readNames(f: FileSystem, p: Path): Option[Set[String]] =
+    Fs.readText(f, p).map(_.split('\n').iterator.filter(_.nonEmpty).toSet)
 
   /** Replace exactly the `day=` partitions present in `df` — the engine's
     * MERGE-ON-FALSE (RemoveDuplicatesTemplateQuery.java:29-43 rewrites only
@@ -176,8 +164,8 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
     * a staging dir BEFORE any live partition is touched, so a plan that
     * reads this table can never be recomputed mid-overwrite (the read
     * finishes when the stage write finishes). The swap is then per-day
-    * metadata renames under a backup protocol (all under [[writeLock]], so
-    * an in-process concurrent append cannot interleave with the renames):
+    * metadata renames under a backup protocol (all under the writer lease,
+    * so a concurrent append cannot interleave with the renames):
     *
     *   0. write `.known-day=D` manifests (caller-snapshot file names)
     *   1. rename live `day=D` → `.graft-bak/day=D`
@@ -213,7 +201,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
 
     val days = f.listStatus(stageDir).filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.startsWith("day="))
-    writeLock.synchronized { withLease(f) {
+    withLease(f) {
       if (days.nonEmpty && !f.exists(bakDir)) f.mkdirs(bakDir)
       // Each day's manifests and swap touch only that day's paths, so both
       // phases fan out over a thread pool: a backfill rewrites EVERY day,
@@ -223,13 +211,13 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
       // round-trip and the sequential form would be minutes). The phase
       // BARRIER is the crash invariant: every manifest lands before any
       // rename, so recovery can always decide a day's direction.
-      perDay(days) { d =>
+      Fs.fanOut(days.toSeq) { d =>
         snapshot.foreach(snap =>
           writeNames(f, manifestPath(d), snap.getOrElse(d, Set.empty)))
         val staged = Fs.dataFiles(f, new Path(stageDir, d)).map(_.getPath.getName)
         writeNames(f, stagedManifestPath(d), staged)
       }
-      perDay(days) { d =>
+      Fs.fanOut(days.toSeq) { d =>
         val live = new Path(path, d)
         val bak = new Path(bakDir, d)
         if (f.exists(live))
@@ -244,57 +232,22 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
       }
       f.delete(stageDir, true)
       f.delete(bakDir, true)
-    } }
-  }
-
-  /** Shared bounded pool for per-day metadata ops — one per table, like
-    * [[leaseBeat]] (a fresh pool per call would churn up to 16 threads
-    * three times per dedupe tick). Daemon threads with an idle timeout, so
-    * an idle table holds no threads and never pins JVM exit. */
-  private lazy val dayPool = {
-    val p = new java.util.concurrent.ThreadPoolExecutor(16, 16, 10,
-      java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-day-ops"); t.setDaemon(true); t
-      })
-    p.allowCoreThreadTimeOut(true)
-    p
-  }
-
-  /** Run `body` for every day on the shared bounded pool (FileSystem
-    * metadata ops are thread-safe and IO-bound). Propagates the first
-    * failure; always awaits all tasks so no day's ops outlive the caller's
-    * lease. Results come back in `days` order. */
-  private def perDay[T](days: Seq[String])(body: String => T): Seq[T] =
-    if (days.size <= 1) days.map(body)
-    else {
-      import scala.jdk.CollectionConverters._
-      val futures = dayPool.invokeAll(
-        days.map(d => new java.util.concurrent.Callable[T] {
-          override def call(): T = body(d)
-        }: java.util.concurrent.Callable[T]).asJava)
-      futures.asScala.toSeq.map { fu =>
-        try fu.get() // rethrow the first failure, unwrapped
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
     }
+  }
 
   /** Step 2b: move backup-day files absent from the day's manifest (i.e.
     * appended after the caller's snapshot) into the new live day. No
     * manifest → legacy full replace, nothing preserved. */
   private def preserveStragglers(f: FileSystem, day: String): Unit = {
-    val mf = manifestPath(day)
     val bak = new Path(bakDir, day)
-    if (!f.exists(mf) || !f.exists(bak)) return
-    val known = readNames(f, mf)
     val live = new Path(path, day)
-    Fs.dataFiles(f, bak).map(_.getPath)
-      .filterNot(p => known.contains(p.getName))
-      .foreach { p =>
-        require(f.rename(p, new Path(live, p.getName)),
-          s"swap: preserve straggler $p -> $live failed")
-      }
+    for (known <- readNames(f, manifestPath(day)) if f.exists(bak))
+      Fs.dataFiles(f, bak).map(_.getPath)
+        .filterNot(p => known.contains(p.getName))
+        .foreach { p =>
+          require(f.rename(p, new Path(live, p.getName)),
+            s"swap: preserve straggler $p -> $live failed")
+        }
   }
 
   /** Repair a swap interrupted by a crash: for every surviving backup day,
@@ -315,7 +268,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
     *    present means the swap completed.
     *
     * Then drop any stage. */
-  def recoverSwaps(): Unit = writeLock.synchronized {
+  def recoverSwaps(): Unit = {
     val f = fs
     if (!f.exists(bakDir) && !f.exists(stageDir)) return // fast path: no lease
     withLease(f) {
@@ -330,7 +283,7 @@ final class TransactionsTable(spark: SparkSession, path: String, val filesPerDay
           preserveStragglers(f, day)
           f.delete(s.getPath, true)
         } else if (f.exists(live)) {
-          val staged = if (f.exists(stagedMf)) readNames(f, stagedMf) else Set.empty[String]
+          val staged = readNames(f, stagedMf).getOrElse(Set.empty[String])
           f.listStatus(live).filter(_.isFile).map(_.getPath)
             .filter(p => staged.contains(p.getName))
             .foreach(p => f.delete(p, false))
@@ -358,46 +311,64 @@ class ErrorsTable(spark: SparkSession, path: String) {
   def append(df: DataFrame): Unit = df.write.mode(SaveMode.Append).parquet(path)
 }
 
-/** Key-value job-state table with MERGE-upsert semantics
+/** Key-value job-state store with MERGE-upsert semantics
   * (GetStateQuery/SetStateQuery — AbstractDeduplication.java:99,
-  * SetStateQuery.java:34-51). Tiny by construction (a handful of
-  * checkpoints), so each upsert rewrites it whole through
+  * SetStateQuery.java:34-51). A handful of checkpoints, so it is one small
+  * text file at `path` (SURVEY.md's "checkpoint file"): one
+  * `name<TAB>value` line per key, sorted by name, read and written on the
+  * driver with no Spark job. Each upsert rewrites the file whole through
   * [[graft.util.SwapDir]]'s backup-rename-swap (`<path>.tmp`,
   * `<path>.bak`): the previous state is renamed aside before the new state
   * is renamed into place, and reads roll back to the backup if a crash
-  * left no live dir — losing a `set` is safe (the caller's job re-runs its
+  * left no live file — losing a `set` is safe (the caller's job re-runs its
   * window), losing the whole store is not (an O(table) re-dedupe from
   * timestamp 0). Single-writer: one dedupe job owns its store.
   */
 final class StateStore(spark: SparkSession, path: String) {
-  import spark.implicits._
 
   private def fs: FileSystem = Fs.of(spark, path)
   private def live = new Path(path)
 
   /** Rolls back to the backup first when a crash between [[set]]'s two
-    * renames left no live dir (a stale backup NEXT TO a live dir means the
-    * crash came after the new state landed — the live dir wins). */
+    * renames left no live file (a stale backup NEXT TO a live file means
+    * the crash came after the new state landed — the live file wins). A
+    * directory at `path` is the parquet state table of an older version:
+    * it fails here, because reading it as empty would restart dedupe from
+    * timestamp 0. */
   def readAll(): Map[String, String] = {
     val f = fs
     SwapDir.recover(f, live)
-    if (!f.exists(live)) Map.empty
-    else spark.read.schema(TransactionSchema.state).parquet(path)
-      .as[(String, Option[String])].collect()
-      .map { case (k, v) => k -> v.orNull }.toMap
+    Fs.readText(f, live) match {
+      case Some(text) =>
+        text.split('\n').iterator.filter(_.nonEmpty).map { line =>
+          val tab = line.indexOf('\t')
+          require(tab > 0, s"state store $path: malformed line '$line'")
+          line.substring(0, tab) -> line.substring(tab + 1)
+        }.toMap
+      case None =>
+        require(!f.exists(live), s"state store $path is a directory: a parquet " +
+          "state table from an older version. The store is now one text file of " +
+          "name<TAB>value lines; move the directory aside and set its keys again")
+        Map.empty
+    }
   }
 
   def get(name: String): Option[String] = readAll().get(name)
 
   /** MERGE-upsert one key (SetStateQuery.java:34-40 semantics) through
-    * [[SwapDir.swapIn]]. Crash windows: before the live rename → the next
-    * read restores the backup (the set is lost, callers re-derive it);
-    * after → the new state is live and the stale backup is replaced by the
-    * next set. */
+    * [[SwapDir.swapIn]]. The name is REQUIRED (state-schema.json), and
+    * neither part may hold the file's separators. Crash windows: before
+    * the live rename → the next read restores the backup (the set is lost,
+    * callers re-derive it); after → the new state is live and the stale
+    * backup is replaced by the next set. */
   def set(name: String, value: String): Unit = {
-    val df = (readAll() + (name -> value)).toSeq.toDF("name", "value")
-    SwapDir.swapIn(fs, live) { tmp =>
-      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
+    require(name.nonEmpty, "state name must be non-empty")
+    require(value != null, s"state value of '$name' must not be null")
+    require(!(name + value).exists(c => c == '\t' || c == '\n'),
+      s"state name and value of '$name' must hold no tab or newline")
+    val text = (readAll() + (name -> value)).toSeq.sortBy(_._1)
+      .map { case (k, v) => s"$k\t$v\n" }.mkString
+    val f = fs
+    SwapDir.swapIn(f, live)(tmp => Fs.writeText(f, new Path(tmp), text))
   }
 }

@@ -97,11 +97,6 @@ object TransactionSchema {
   /** errors dead-letter table (errors-schema.json:1-12). */
   val errors: StructType = s(f("tableRow", StringType), f("errors", StringType))
 
-  /** dedupe_state KV table (state-schema.json:1-13; name REQUIRED). */
-  val state: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("value", StringType, nullable = true)))
-
   /** transaction_types dimension seed
     * (transaction-types.csv:1-21, seeded by scripts/create-tables.sh:32-59). */
   val transactionTypes: Seq[(Long, String)] = Seq(

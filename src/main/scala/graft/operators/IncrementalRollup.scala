@@ -56,22 +56,12 @@ object IncrementalRollup {
 
   private def ledgerPath(stateDir: Path) = new Path(stateDir, LedgerName)
 
-  private def readLedger(f: FileSystem, live: Path): Set[Long] = {
-    val p = ledgerPath(SwapDir.readPath(f, live))
-    if (!f.exists(p)) Set.empty
-    else {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(_.toLong).toSet
-      finally in.close()
-    }
-  }
+  private def readLedger(f: FileSystem, live: Path): Set[Long] =
+    Fs.readText(f, ledgerPath(SwapDir.readPath(f, live))).fold(Set.empty[Long])(
+      _.split('\n').iterator.filter(_.nonEmpty).map(_.toLong).toSet)
 
-  private def writeLedger(f: FileSystem, dir: Path, ids: Set[Long]): Unit = {
-    val out = f.create(ledgerPath(dir), true)
-    try out.write(ids.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def writeLedger(f: FileSystem, dir: Path, ids: Set[Long]): Unit =
+    Fs.writeText(f, ledgerPath(dir), ids.toSeq.sorted.mkString("\n"))
 
   /** The swapped state subdir under the stable view root — the root keeps
     * the lease lock file, so the swap never renames the lock away. */

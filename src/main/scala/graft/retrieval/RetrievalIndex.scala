@@ -24,7 +24,7 @@ import graft.util.{FileLease, Fs, SwapDir}
   *   tomb/   (doc_id)                 tombstone batches ([[deleteDocs]]):
   *                                    readers anti-join, compaction applies
   *   commits/<batch-id>               commit markers (see below)
-  *   meta/                            tokenizer + version stamp
+  *   meta                             one-line tokenizer + version stamp
   * }}}
   *
   * Every subtable is partitioned by an opaque `batch` id, and a batch
@@ -134,11 +134,14 @@ object RetrievalIndex {
       compactUnlocked(spark, dir)
   }
 
-  private def requireMatching(spark: SparkSession, dir: String): Unit = {
-    val m = spark.read.parquet(s"$dir/meta").head()
-    require(m.getAs[String]("tokenizer") == "ws-lower" && m.getAs[Int]("version") == 1,
+  /** The tokenizer + version stamp written at `$dir/meta` by [[build]]. */
+  private val Stamp = "tokenizer=ws-lower version=1"
+
+  /** A driver-side file read, no Spark job. A missing stamp, or the
+    * parquet `meta/` dir of an older version, fails as unknown. */
+  private def requireMatching(spark: SparkSession, dir: String): Unit =
+    require(Fs.readText(Fs.of(spark, dir), new Path(dir, "meta")).map(_.trim).contains(Stamp),
       s"retrieval index at $dir uses an unknown tokenizer/version")
-  }
 
   /** (doc_id, term, tf) rows from ONE text derivation, shuffle-free: the
     * per-row [[graft.expressions.TermCounts]] kernel counts each doc's
@@ -207,16 +210,15 @@ object RetrievalIndex {
     * parquet or a column-pruned count. */
   def build(corpus: DataFrame, idCol: String, textCol: String, dir: String): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     val (f, root) = Fs(spark, dir)
     new FileLease(dir).withLease(f) {
       // tomb included: stale tombstone batches are already invisible once
       // commits/ is wiped, but leaving the dir costs every future read the
-      // exists() probe and leaves dead data for compaction to sweep
-      Seq("tf", "dlen", "df", "stats", "commits", "tomb").foreach(s =>
+      // exists() probe and leaves dead data for compaction to sweep; meta
+      // included: an older version wrote it as a parquet dir
+      Seq("tf", "dlen", "df", "stats", "commits", "tomb", "meta").foreach(s =>
         f.delete(new Path(root, s), true))
-      Seq(("ws-lower", 1)).toDF("tokenizer", "version")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      Fs.writeText(f, new Path(root, "meta"), Stamp)
       appendUnlocked(corpus, dir, idCol, textCol)
     }
   }

@@ -91,47 +91,26 @@ object ShardWriter {
           sharded.drop("__h").limit(0).coalesce(1)
             .write.mode("overwrite").parquet(tmp)
         manifest = Manifest(nShards, salt, rows.values.sum, rows)
-        val out = f.create(new Path(tmp, "_manifest.json"), true)
-        try out.write(renderJson(manifest).getBytes("UTF-8")) finally out.close()
+        Fs.writeText(f, new Path(tmp, "_manifest.json"), renderJson(manifest))
       }
     }
     manifest
   }
 
-  /** Shared bounded pool for per-shard footer reads — the TableStore
-    * `dayPool` discipline (daemon threads, idle timeout, so an idle JVM
-    * holds no threads and exit is never pinned). Pool bound: 16 — each
-    * task is one listStatus + one footer open (IO-bound metadata
-    * round-trips; FileSystem clients are thread-safe), so 16 in flight
-    * saturates an object store's per-client connection budget without
-    * stampeding it. */
-  private lazy val footerPool = {
-    val p = new java.util.concurrent.ThreadPoolExecutor(16, 16, 10,
-      java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-shard-footers"); t.setDaemon(true); t
-      })
-    p.allowCoreThreadTimeOut(true)
-    p
-  }
-
   /** Per-shard row counts from parquet FOOTER metadata under
     * `root/shard=K/` — row-group counts summed per file, no data pages
-    * touched. Hidden/marker files excluded. Shards fan out over the
-    * bounded pool: at the documented 2^14-shard production sizing each
-    * shard costs one listStatus + one footer open, and ~16 k SEQUENTIAL
-    * round-trips against an object store is minutes of driver wait at the
-    * terminal sink; 16-way it is seconds. Propagates the first failure;
-    * always awaits every task (no footer read outlives the caller's
-    * lease). */
+    * touched. Hidden/marker files excluded. Shards fan out over
+    * [[Fs.fanOut]]'s bounded pool: at the documented 2^14-shard production
+    * sizing each shard costs one listStatus + one footer open, and ~16 k
+    * SEQUENTIAL round-trips against an object store is minutes of driver
+    * wait at the terminal sink; 16-way it is seconds. */
   private def footerCounts(f: org.apache.hadoop.fs.FileSystem, root: Path): Map[Int, Long] = {
     val conf = f.getConf
     val shardDirs = f.listStatus(root).filter(s =>
       s.isDirectory && s.getPath.getName.startsWith("shard="))
     def countShard(d: org.apache.hadoop.fs.FileStatus): (Int, Long) = {
       val shard = d.getPath.getName.stripPrefix("shard=").toInt
-      val n = graft.util.Fs.dataFiles(f, d.getPath)
+      val n = Fs.dataFiles(f, d.getPath)
         .map { file =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf)
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -139,18 +118,7 @@ object ShardWriter {
         }.sum
       shard -> n
     }
-    if (shardDirs.length <= 1) shardDirs.map(countShard).toMap
-    else {
-      import scala.jdk.CollectionConverters._
-      val futures = footerPool.invokeAll(
-        shardDirs.toSeq.map(d => new java.util.concurrent.Callable[(Int, Long)] {
-          override def call(): (Int, Long) = countShard(d)
-        }: java.util.concurrent.Callable[(Int, Long)]).asJava)
-      futures.asScala.map { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }.toMap
-    }
+    Fs.fanOut(shardDirs.toSeq)(countShard).toMap
   }
 
   /** One shard, in its deterministic row order (partition pruning keeps
@@ -167,9 +135,8 @@ object ShardWriter {
   def readManifest(spark: SparkSession, dir: String): Manifest = {
     val f = Fs.of(spark, dir)
     val p = new Path(SwapDir.readPath(f, shardsPath(dir)), "_manifest.json")
-    val in = f.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    parseJson(text)
+    parseJson(Fs.readText(f, p).getOrElse(
+      throw new java.io.FileNotFoundException(s"no shard manifest at $p")))
   }
 
   /** Integrity probe: stored manifest vs a recount of the live files. */

@@ -41,11 +41,8 @@ final class FileLease(dirPath: String, leaseMs: Long = 60000L,
   private def leasePath = new Path(dirPath, lockName)
 
   private def readHolder(f: FileSystem): Option[String] =
-    try {
-      val in = f.open(leasePath)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    } catch { case _: java.io.IOException => None }
+    try Fs.readText(f, leasePath).map(_.trim)
+    catch { case _: java.io.IOException => None }
 
   private def acquire(f: FileSystem): Unit = {
     if (!f.exists(new Path(dirPath))) f.mkdirs(new Path(dirPath))
@@ -148,8 +145,9 @@ object FileLease {
   * two metadata renames (milliseconds) — the same plain-parquet bound as
   * the fact table's day swap, and a reader that lists exactly then retries.
   *
-  * Crash repair (also [[graft.hedera.StateStore]]'s, which swaps through
-  * here): a crash between the renames leaves no live dir and a backup —
+  * Crash repair (also [[graft.hedera.StateStore]]'s, which swaps its one
+  * file through here: every step below works on a file as on a dir): a
+  * crash between the renames leaves no live dir and a backup —
   * [[recover]] (called by every writer entry point before it reads)
   * renames the backup home. A stale
   * backup NEXT TO a live dir means the crash was after the swap landed —

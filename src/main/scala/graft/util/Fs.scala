@@ -1,5 +1,8 @@
 package graft.util
 
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -32,4 +35,55 @@ object Fs {
     * and hidden entries dropped. */
   private[graft] def dataFiles(f: FileSystem, dir: Path): Array[FileStatus] =
     f.listStatus(dir).filter(s => s.isFile && !hidden(s.getPath.getName))
+
+  /** The whole UTF-8 text of the small file `p` (a marker, manifest, stamp
+    * or key-value file), or `None` when no file is there: one `open`, no
+    * `exists` probe. Driver-sized metadata is read and written as plain
+    * files through this pair, never as a Spark table. */
+  private[graft] def readText(f: FileSystem, p: Path): Option[String] =
+    try {
+      val in = f.open(p)
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
+    } catch { case _: FileNotFoundException => None }
+
+  /** Write `text` as UTF-8 to `p`, replacing any file there: one
+    * `create(p, overwrite = true)`. Not atomic; callers that need
+    * all-or-nothing write a sibling and rename it in. */
+  private[graft] def writeText(f: FileSystem, p: Path, text: String): Unit = {
+    val out = f.create(p, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** Run `body` over `items` on a shared bounded pool and return the
+    * results in input order: for driver-side FS metadata and footer reads,
+    * which are IO-bound and thread-safe. Every task is awaited, so no task
+    * outlives the caller (or the lease it holds), and the first failure is
+    * rethrown unwrapped. At most one item runs inline. `body` must not
+    * call `fanOut` itself: tasks waiting on tasks could fill the pool. */
+  private[graft] def fanOut[A, T](items: Seq[A])(body: A => T): Seq[T] =
+    if (items.size <= 1) items.map(body)
+    else {
+      val futures = metaPool.invokeAll(items.map(a =>
+        (() => body(a)): java.util.concurrent.Callable[T]).asJava)
+      futures.asScala.toSeq.map { fu =>
+        try fu.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    }
+
+  /** One pool per process for [[fanOut]]: 16 daemon threads, enough
+    * metadata round-trips in flight to hide an object store's latency
+    * without stampeding its per-client connection budget. Idle threads
+    * time out after 10 s, so an idle JVM holds none and exit is never
+    * pinned. */
+  private lazy val metaPool = {
+    val p = new java.util.concurrent.ThreadPoolExecutor(16, 16, 10,
+      java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-metadata"); t.setDaemon(true); t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
 }

@@ -108,4 +108,16 @@ class TextDedupSpec extends AnyFunSuite {
     val j12 = pairs.find(p => p._1 == 1L && p._2 == 2L).get._4
     assert(j12 > 0.3 && j12 < 1.0)
   }
+
+  test("one-shot MinHash entry points leave nothing in the CacheManager") {
+    spark.catalog.clearCache()
+    val cm = spark.sharedState.cacheManager
+    val cfg = MinHashConfig(jaccardThreshold = 0.3)
+    assert(nearDuplicatePairs(corpus(), "doc_id", "text", cfg).count() > 0)
+    assert(cm.isEmpty, "nearDuplicatePairs left a cache entry")
+    assert(minHashDedup(corpus(), "doc_id", "text", cfg).count() > 0)
+    assert(cm.isEmpty, "minHashDedup left a cache entry")
+    assert(crossNearDupPairs(corpus(), corpus(), "doc_id", "text", cfg).count() > 0)
+    assert(cm.isEmpty, "crossNearDupPairs left a cache entry")
+  }
 }

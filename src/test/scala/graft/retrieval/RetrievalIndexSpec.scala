@@ -207,4 +207,26 @@ class RetrievalIndexSpec extends AnyFunSuite {
     RetrievalIndex.appendDocs(corpus.filter(lit(false)), dir, "doc_id", "text")
     assert((tfidfRows(dir), bm25Rows(dir)) === before)
   }
+
+  test("an index whose stamp differs, is missing or is an old meta dir fails loudly") {
+    import spark.implicits._
+    val dir = GraftTestSpark.tmpDir("rindex-stamp")
+    val docs = corpus.filter(col("doc_id") % 7 === 0)
+    RetrievalIndex.build(docs, "doc_id", "text", dir)
+    assert(tfidfRows(dir).nonEmpty)
+    val (f, meta) = graft.util.Fs(spark, s"$dir/meta")
+    def assertRefused(): Unit = {
+      val e1 = intercept[IllegalArgumentException](
+        RetrievalIndex.appendDocs(docs, dir, "doc_id", "text"))
+      val e2 = intercept[IllegalArgumentException](RetrievalIndex.tfidf(spark, dir))
+      Seq(e1, e2).foreach(e =>
+        assert(e.getMessage.contains("unknown tokenizer/version"), e.getMessage))
+    }
+    graft.util.Fs.writeText(f, meta, "tokenizer=ws-lower version=2")
+    assertRefused()
+    f.delete(meta, false)
+    assertRefused()
+    Seq(("ws-lower", 1)).toDF("tokenizer", "version").write.parquet(meta.toString)
+    assertRefused()
+  }
 }
