@@ -31,7 +31,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Operator-optimization rule: derived-time predicates (unix_micros
     // chains) gain an equivalent raw-column conjunct the parquet scan can
     // prune row groups with — see DerivedTimeFilterPushdown's scaladoc.
+    // (On a relation that declares its day image, it also adds the implied
+    // `day` range, so partition discovery lists only the matching days.)
     e.injectOptimizerRule(_ => graft.plans.DerivedTimeFilterPushdown)
+    // Physical rule: filter literals live in the generated class's
+    // references, so a new key reuses the compiled class — see
+    // LiteralHoisting's scaladoc.
+    e.injectColumnar(_ => graft.plans.LiteralHoisting.columnarRule)
     GraftExtensions.functions.foreach { case (name, usage, build) =>
       e.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
@@ -108,7 +114,12 @@ object GraftExtensions {
         "patterns occurring as substrings (one Aho-Corasick pass)",
       args => MultiPatternHits(args(0), stringSeqLit(args(1), "patterns"))))
 
-  /** Imperative registration on an existing session (tests, REPL). */
+  /** Imperative registration on an existing session (tests, REPL): the SQL
+    * functions and the optimizer rule. It cannot add
+    * [[graft.plans.LiteralHoisting]]: a session's columnar rules are fixed
+    * when its state is built, so only a session built with the extension
+    * (`spark.sql.extensions` or `withExtensions`, as `GraftSession` does)
+    * reuses compiled classes across filter literals. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.DerivedTimeFilterPushdown))
       spark.experimental.extraOptimizations =

@@ -69,24 +69,17 @@ object Deduplication {
       a
     }
 
-    /** Day-range image of a µs window, as a predicate on the partition
-      * column. Filtering on `day` DIRECTLY (never through a function of it)
-      * is what engages directory-level partition pruning — the design rule
-      * the reference follows with its partition column (SURVEY.md §4) — so
-      * window jobs list only the window's `day=` directories no matter how
-      * large the table is. The µs filter then bounds rows exactly.
-      */
-    /** The one copy of µs-epoch → partition day (UTC) in this class. */
+    /** µs-epoch → partition day (UTC): the listing bound of [[repair]]'s
+      * snapshot. */
     private def epochDay(us: Long): java.time.LocalDate =
       java.time.LocalDate.ofEpochDay(Math.floorDiv(us, 86400000000L))
 
-    private def dayWindow(startUs: Long, endUs: Long) =
-      col("day").between(lit(java.sql.Date.valueOf(epochDay(startUs))),
-        lit(java.sql.Date.valueOf(epochDay(endUs))))
-
-    /** Window scan: partition-pruned by day, row-bounded by µs. */
+    /** Window scan, row-bounded by µs. The table declares `day` as the UTC
+      * image of `consensusTimestampTruncated`, so DerivedTimeFilterPushdown
+      * adds the window's day range and the scan lists only those `day=`
+      * directories, however large the table is. */
     def windowScan(startUs: Long, endUs: Long) =
-      table.read().filter(dayWindow(startUs, endUs) && tsUs.between(startUs, endUs))
+      table.read().filter(tsUs.between(startUs, endUs))
 
     /** A1: duplicate key groups inside [startUs, endUs]. */
     def detect(startUs: Long, endUs: Long) =
@@ -117,12 +110,11 @@ object Deduplication {
       val w = Window.partitionBy(col("consensusTimestamp"))
         .orderBy(col("consensusTimestamp"))
       // Snapshot only the window's days: they are the only days the swap
-      // below can touch (kept derives from the dayWindow filter), and
-      // listing the whole table per tick would be O(table-days) driver
-      // metadata calls for a fixed-size window.
+      // below can touch, and listing the whole table per tick would be
+      // O(table-days) driver metadata calls for a fixed-size window.
       val (snapDf, snapshot) =
         table.readSnapshot(Some((epochDay(startUs), epochDay(endUs))))
-      val marked = snapDf.filter(dayWindow(startUs, endUs))
+      val marked = snapDf
         .withColumn("_inwin", tsUs.between(startUs, endUs))
         .withColumn("_rn", row_number().over(w))
         .observe(obs,
@@ -139,16 +131,12 @@ object Deduplication {
     /** Window-end selection with steady-state → catch-up escalation, capped
       * at the latest ingested row (the in-flight-data guard).
       *
-      * One aggregate over only `day >= day(checkpoint)` — every row past
-      * the checkpoint lives in those days, and any older row in them is
-      * smaller than the post-checkpoint rows it shares a day with, so the
-      * pruned scan yields BOTH the first timestamp past the checkpoint and
-      * the global max. The probe is therefore O(unprocessed data), never
-      * O(table) — the last full-table scan the incremental job had. */
+      * One aggregate over the rows past the checkpoint, which yields BOTH
+      * the first timestamp past it and the global max. The µs bound prunes
+      * the scan to `day >= day(checkpoint)` (DerivedTimeFilterPushdown), so
+      * the probe is O(unprocessed data), never O(table). */
     def probeEnd(startUs: Long): Long = {
-      val fromDay = epochDay(startUs)
-      val r = table.read()
-        .filter(col("day") >= lit(java.sql.Date.valueOf(fromDay)) && tsUs > startUs)
+      val r = table.read().filter(tsUs > startUs)
         .agg(min(tsUs).as("mn"), max(tsUs).as("mx")).first()
       if (r.isNullAt(0)) return startUs
       val base = r.getLong(0)

@@ -12,8 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * Plan shapes: the dimension is broadcast (21 rows); explodes stay inside
   * whole-stage codegen; day-grouped rollups aggregate partially before the
-  * single shuffle; filters on `day`/`transactionType` prune partitions and
-  * parquet row groups (the write layer clusters by transactionType).
+  * single shuffle. Filters on `day`, and time predicates on
+  * `consensusTimestamp` or `consensusTimestampTruncated` (through the `day`
+  * range DerivedTimeFilterPushdown derives), prune `day` partitions;
+  * filters on `transactionType` prune parquet row groups (the write layer
+  * clusters by transactionType).
   */
 object HederaAnalytics {
 

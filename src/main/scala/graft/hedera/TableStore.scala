@@ -12,7 +12,11 @@ import graft.util.{Fs, SwapDir}
   * (SURVEY.md §1.4): DAY partitions on the truncated timestamp
   * (scripts/create-tables.sh:14-15) become `day=` directory partitions —
   * filters on `day` prune at the source listing, which is the property that
-  * keeps incremental dedupe O(window) instead of O(table) at 100 TB.
+  * keeps incremental dedupe O(window) instead of O(table) at 100 TB. The
+  * read schema declares `day` as the UTC image of the timestamp
+  * (TransactionSchema.table), so time predicates on `consensusTimestamp`
+  * or `consensusTimestampTruncated` prune the listing the same way
+  * (DerivedTimeFilterPushdown adds the implied `day` range).
   * "Clustering on transactionType" (create-tables.sh:16) becomes
   * `sortWithinPartitions(transactionType)` at write: parquet row-group
   * min/max stats then skip row groups for type-filtered queries.

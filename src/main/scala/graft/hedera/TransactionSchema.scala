@@ -16,7 +16,11 @@ import org.apache.spark.sql.types._
   *
   * The engine-side table adds a `day` DATE partition column (reference: DAY
   * partitioning on the truncated timestamp, scripts/create-tables.sh:14-15)
-  * and the `dedupe` INTEGER flag.
+  * and the `dedupe` INTEGER flag. `consensusTimestampTruncated` declares
+  * both images in its field metadata (`DerivedTimeFilterPushdown.
+  * declareImages`), so time predicates on it or on `consensusTimestamp`
+  * prune `day` partitions the way BigQuery prunes the reference's.
+  * (Metadata on `day` itself would not survive partition discovery.)
   */
 object TransactionSchema {
 
@@ -89,7 +93,9 @@ object TransactionSchema {
 
   /** At-rest table schema: payload + derived/partition/bookkeeping columns. */
   val table: StructType = StructType(
-    f("consensusTimestampTruncated", TimestampType) +:
+    StructField("consensusTimestampTruncated", TimestampType, nullable = true,
+      graft.plans.DerivedTimeFilterPushdown.declareImages(
+        day = "day", nanos = "consensusTimestamp")) +:
       payload.fields :+
       f("dedupe", LongType) :+
       f("day", DateType))

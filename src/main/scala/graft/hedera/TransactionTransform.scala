@@ -89,7 +89,7 @@ object TransactionTransform {
         timestamp_micros(expr("consensusTimestamp div 1000")))
       .withColumn("dedupe", lit(null).cast(LongType))
       .withColumn("day", to_date(col("consensusTimestampTruncated")))
-      .select(TransactionSchema.table.fieldNames.map(col): _*)
+      .select(TransactionSchema.table.fields.map(f => col(f.name).as(f.name, f.metadata)): _*)
 
   /** Dead-letter branch of a parsed frame (errors-schema.json shape): the
     * raw line plus a JSON list of {reason, message} mirroring the insert

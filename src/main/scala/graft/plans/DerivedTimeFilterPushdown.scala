@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
@@ -40,6 +40,22 @@ import org.apache.spark.sql.types._
   * wall-clock mapping is not the identity and the rule leaves the filter
   * untouched.
   *
+  * Day pruning. A relation whose µs timestamp column carries the field
+  * metadata of [[declareImages]] declares two images of it: a DATE column
+  * holding its UTC day, and a LONG nanosecond column it truncates
+  * (`timestamp_micros(ns div 1000)`). On such a relation every interval
+  * the rule can bound on the timestamp — a comparison of the timestamp or
+  * of the nanosecond column with a literal, or a raw bound derived from a
+  * chain above — also adds a redundant `day >= d0 AND day <= d1`
+  * conjunct. The nanosecond bound maps to µs by truncation (like
+  * `div 1000`: ns in (-1000, 0) is µs 0), the µs bound to a day by floor
+  * (like UTC `to_date`), so the day bound is implied by the predicate and
+  * partition discovery lists only the days it can match. The day conjunct
+  * is added only to a filter directly over the relation (a leaf), where
+  * both columns are the relation's own, never over a projection that may
+  * have redefined one of them. A relation without the declaration gets no
+  * day conjunct, whatever its column names.
+  *
   * Registered by GraftExtensions as an operator-optimization rule; it runs
   * inside the fixed-point batch AFTER alias inlining has pushed the filter
   * against the relation, and it is convergent: a conjunct it already added
@@ -62,6 +78,15 @@ object DerivedTimeFilterPushdown extends Rule[LogicalPlan] with PredicateHelper 
       case Literal(v: Long, LongType) => Some(v)
       case Literal(v: Short, ShortType) => Some(v.toLong)
       case Literal(v: Byte, ByteType) => Some(v.toLong)
+      case _ => None
+    }
+  }
+
+  /** An integer literal, or a timestamp literal as its µs value. */
+  private object Lit {
+    def unapply(e: Expression): Option[Long] = e match {
+      case IntLit(v) => Some(v)
+      case Literal(v: Long, TimestampType) => Some(v)
       case _ => None
     }
   }
@@ -130,23 +155,27 @@ object DerivedTimeFilterPushdown extends Rule[LogicalPlan] with PredicateHelper 
       invert(rest, B(b.lo.map(ceilDiv(_, mm)), b.hi.map(floorDiv(_, mm))))
   }
 
-  /** Comparison conjunct → interval on the chain's output value. */
-  private def boundsOf(c: Expression): Option[(AttributeReference, List[Step], B)] = {
-    def p(e: Expression, b: B) = parse(e).map { case (a, s) => (a, s, b) }
+  /** `e op literal` (literal on either side) → (e, the interval of e). */
+  private def compared(c: Expression): Option[(Expression, B)] = {
+    def at(v: Long) = Some(BigInt(v))
     c match {
-      case GreaterThanOrEqual(e, IntLit(v)) => p(e, B(Some(BigInt(v)), None))
-      case GreaterThan(e, IntLit(v)) => p(e, B(Some(BigInt(v) + 1), None))
-      case LessThanOrEqual(e, IntLit(v)) => p(e, B(None, Some(BigInt(v))))
-      case LessThan(e, IntLit(v)) => p(e, B(None, Some(BigInt(v) - 1)))
-      case EqualTo(e, IntLit(v)) => p(e, B(Some(BigInt(v)), Some(BigInt(v))))
-      case GreaterThanOrEqual(IntLit(v), e) => p(e, B(None, Some(BigInt(v))))
-      case GreaterThan(IntLit(v), e) => p(e, B(None, Some(BigInt(v) - 1)))
-      case LessThanOrEqual(IntLit(v), e) => p(e, B(Some(BigInt(v)), None))
-      case LessThan(IntLit(v), e) => p(e, B(Some(BigInt(v) + 1), None))
-      case EqualTo(IntLit(v), e) => p(e, B(Some(BigInt(v)), Some(BigInt(v))))
+      case GreaterThanOrEqual(e, Lit(v)) => Some((e, B(at(v), None)))
+      case GreaterThan(e, Lit(v)) => Some((e, B(Some(BigInt(v) + 1), None)))
+      case LessThanOrEqual(e, Lit(v)) => Some((e, B(None, at(v))))
+      case LessThan(e, Lit(v)) => Some((e, B(None, Some(BigInt(v) - 1))))
+      case EqualTo(e, Lit(v)) => Some((e, B(at(v), at(v))))
+      case GreaterThanOrEqual(Lit(v), e) => Some((e, B(None, at(v))))
+      case GreaterThan(Lit(v), e) => Some((e, B(None, Some(BigInt(v) - 1))))
+      case LessThanOrEqual(Lit(v), e) => Some((e, B(at(v), None)))
+      case LessThan(Lit(v), e) => Some((e, B(Some(BigInt(v) + 1), None)))
+      case EqualTo(Lit(v), e) => Some((e, B(at(v), at(v))))
       case _ => None
     }
   }
+
+  /** Comparison conjunct → interval on the chain's output value. */
+  private def boundsOf(c: Expression): Option[(AttributeReference, List[Step], B)] =
+    compared(c).flatMap { case (e, b) => parse(e).map { case (a, s) => (a, s, b) } }
 
   private val MinUs = BigInt(Long.MinValue)
   private val MaxUs = BigInt(Long.MaxValue)
@@ -166,10 +195,54 @@ object DerivedTimeFilterPushdown extends Rule[LogicalPlan] with PredicateHelper 
       lo.toSeq ++ hi.toSeq
     }
 
+  /** Field-metadata keys of the declaration on a µs timestamp column. */
+  private val DayKey = "graft.dayColumn"
+  private val NanosKey = "graft.nanosColumn"
+
+  /** Declares that the µs timestamp column carrying this metadata is
+    * `timestamp_micros(<nanos> div 1000)` and that `<day>` is its UTC date,
+    * so filters on either time column also prune `<day>` partitions. */
+  private[graft] def declareImages(day: String, nanos: String): Metadata =
+    new MetadataBuilder().putString(DayKey, day).putString(NanosKey, nanos).build()
+
+  /** A relation's declared images: (timestamp, day, nanos). */
+  private final case class Images(ts: Attribute, day: Attribute, nanos: Option[Attribute])
+
+  private def images(output: Seq[Attribute]): Option[Images] = {
+    def named(name: String, t: DataType) = output.find(a => a.name == name && a.dataType == t)
+    output.collectFirst {
+      case ts if ts.dataType == TimestampType && ts.metadata.contains(DayKey) => ts
+    }.flatMap { ts =>
+      named(ts.metadata.getString(DayKey), DateType).map(day =>
+        Images(ts, day, named(ts.metadata.getString(NanosKey), LongType)))
+    }
+  }
+
+  private val UsPerDay = BigInt(86400000000L)
+
+  /** Day-partition predicates implied by one conjunct: its µs interval on
+    * the declared timestamp (ns bounds truncate to µs, like `div 1000`),
+    * each side floored to its UTC day (like `to_date`). */
+  private def dayPredicates(im: Images)(c: Expression): Seq[Expression] = {
+    val us = compared(c).collect {
+      case (a: Attribute, b) if a.exprId == im.ts.exprId => b
+      case (a: Attribute, b) if im.nanos.exists(_.exprId == a.exprId) =>
+        B(b.lo.map(_ / 1000), b.hi.map(_ / 1000)) // BigInt `/` truncates
+    }
+    def day(v: BigInt) = Literal(floorDiv(v, UsPerDay).toInt, DateType)
+    us.toSeq.flatMap { b =>
+      b.lo.map(v => GreaterThanOrEqual(im.day, day(v))).toSeq ++
+        b.hi.map(v => LessThanOrEqual(im.day, day(v))).toSeq
+    }
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, child) =>
       val conjuncts = splitConjunctivePredicates(cond)
-      val extras = conjuncts.flatMap(rawPredicates)
+      val raw = conjuncts.flatMap(rawPredicates)
+      val days = Some(child).collect { case leaf: LeafNode => leaf }.flatMap(l => images(l.output))
+        .toSeq.flatMap(im => (conjuncts ++ raw).flatMap(dayPredicates(im)))
+      val extras = (raw ++ days)
         .foldLeft(Vector.empty[Expression]) { (acc, p) =>
           if (acc.exists(_.semanticEquals(p)) || conjuncts.exists(_.semanticEquals(p))) acc
           else acc :+ p

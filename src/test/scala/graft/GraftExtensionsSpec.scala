@@ -36,6 +36,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(viaSql === viaCol)
   }
 
+  test("a GraftSession.local session carries the literal-hoisting columnar rule") {
+    // register() cannot add it to an existing session; the extension must
+    assert(spark.sessionState.columnarRules.map(_.preColumnarTransitions)
+      .contains(graft.plans.LiteralHoisting))
+  }
+
   test("extension injection wires without error") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // must not throw
