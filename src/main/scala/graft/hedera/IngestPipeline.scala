@@ -1,8 +1,11 @@
 package graft.hedera
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.expressions.CollectBounded
 import graft.metrics.{Metrics, MetricsRegistry}
 import graft.util.{BatchLedger, Fs}
 
@@ -29,12 +32,28 @@ import graft.util.{BatchLedger, Fs}
   * Utility.java:40-46): `latestConsensusTimestamp` (max ns key seen),
   * `ingestionDelay` (wall clock at batch commit − latest event time, ms),
   * `jsonToTableRowErrors` (dead-letter rows).
+  *
+  * Dead letters come out of the same parse as the facts, the way the
+  * reference takes them from the insert's own result
+  * (`getFailedInsertsWithErr`, PubSubToBigQueryPipeline.java:53-55): on
+  * the single-shuffle route the rejected rows ride the write pass's
+  * `observe()` too, up to a bound, and land as one small file. See
+  * [[writeBatch]] for the bound and for the `preDedupe` route.
   */
 object IngestPipeline {
   /** Cheap pre-parse extraction of the int64 consensus key from a raw JSON
     * line — shared by the single-shuffle ingest keying below and the
     * stream bench's corpus time-ordering (StreamBench). */
   private[graft] val TsPattern = "\"consensusTimestamp\"\\s*:\\s*\"?(-?\\d+)"
+
+  /** Bound on the dead letters one batch carries to the driver on its
+    * write pass: rows, and bytes of the gathered rows (the raw line plus
+    * its error list). ~1 % of an ~800-row micro-batch is ~8 rows; a batch
+    * past either bound re-parses its input for them instead, the one path
+    * that handles any number without holding them on the driver (the
+    * ConnectedComponents.MaxDriverEdges discipline). */
+  private[hedera] val MaxCapturedDeadLetters: Int = 1024
+  private[hedera] val MaxCapturedDeadLetterBytes: Long = 4L << 20
 }
 
 final class IngestPipeline(
@@ -48,18 +67,39 @@ final class IngestPipeline(
     * event time AND the total line count all ride the write via `observe()`
     * (two CollectMetrics nodes, one above the parse and one above the
     * ok-filter; filters are not pushed through CollectMetrics, so the first
-    * sees every line). A clean batch therefore reads its input exactly
-    * once; the dead-letter branch recomputes with a second full parse ONLY
-    * when the batch actually had failures. The previous shape cached the
-    * full nested parse and re-scanned it three times; columnar-encoding a
-    * wide nested struct into the cache cost more than re-parsing the (rare)
-    * dirty batch does.
+    * sees every line). A clean batch therefore reads its input exactly once
+    * and writes no dead-letter file.
+    *
+    * Dead letters: on the single-shuffle route (`prePartitioned`) the node
+    * above the parse also gathers every rejected row's dead letter
+    * ([[TransactionTransform.deadLetterOrNull]] through
+    * [[graft.expressions.CollectBounded]], bounded by
+    * [[IngestPipeline.MaxCapturedDeadLetters]] rows and
+    * [[IngestPipeline.MaxCapturedDeadLetterBytes]] bytes). That node runs in
+    * the write job's result stage, whose accumulator updates Spark applies
+    * once per partition, so each row is gathered exactly once; a dirty
+    * batch appends them as one local relation written to one file — no
+    * second scan, shuffle or parse. Two cases re-parse the batch for its
+    * dead letters instead (counted by `Metrics.DeadLetterReparses`):
+    *  - more rejected rows than the bound (null capture);
+    *  - `preDedupe`: the parse sits below the dropDuplicates exchange, in a
+    *    shuffle-map stage whose updates a fetch-failure resubmit re-applies,
+    *    so a capture there could gather a row twice.
+    * The re-parse classifies with the SAME full-schema parse as the typed
+    * branch: a row corrupt only under the full schema (scalar where a
+    * nested struct is expected) is clean under a reduced parse and would
+    * silently vanish from both tables.
     */
   private def writeBatch(fanned: DataFrame, prePartitioned: Boolean): (Long, Long) = {
     val obsAll = Observation()
     val obs = Observation()
+    val capture =
+      if (prePartitioned) Seq(CollectBounded(TransactionTransform.deadLetterOrNull,
+        IngestPipeline.MaxCapturedDeadLetters, IngestPipeline.MaxCapturedDeadLetterBytes)
+        .as("dead_letters"))
+      else Nil
     val parsed = TransactionTransform.parseRaw(fanned)
-      .observe(obsAll, count(lit(1)).as("n_lines"))
+      .observe(obsAll, count(lit(1)).as("n_lines"), capture: _*)
     val typed = TransactionTransform.typedRows(parsed)
       .observe(obs,
         count(lit(1)).as("ok_rows"),
@@ -85,14 +125,16 @@ final class IngestPipeline(
         reg.inc(Metrics.ingestRowsDay(java.time.LocalDate.ofEpochDay(day.toLong)), n)
       }
     }
-    val nBad = obsAll.get("n_lines").asInstanceOf[Long] - ok
-    // The dead-letter branch must classify rows with the SAME full-schema
-    // parse as the typed branch: a row corrupt only under the full schema
-    // (scalar where a nested struct is expected) is clean under a reduced
-    // parse and would silently vanish from both tables. The full re-parse
-    // runs only on batches that actually had failures.
-    if (nBad > 0)
-      errors.append(TransactionTransform.errorRows(TransactionTransform.parseRaw(fanned)))
+    val all = obsAll.get
+    val nBad = all("n_lines").asInstanceOf[Long] - ok
+    if (nBad > 0) all.get("dead_letters") match {
+      // a capture that disagrees with the line counts is not trusted
+      case Some(rows: Seq[Row @unchecked]) if rows.length == nBad =>
+        errors.append(spark.createDataFrame(rows.asJava, TransactionSchema.errors).coalesce(1))
+      case _ =>
+        reg.inc(Metrics.DeadLetterReparses)
+        errors.append(TransactionTransform.errorRows(TransactionTransform.parseRaw(fanned)))
+    }
     reg.inc(Metrics.JsonToTableRowErrors, nBad)
     (ok, nBad)
   }

@@ -3,6 +3,7 @@ package graft.hedera
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.expressions.CastToSchema
 
 /** The T of the ETL: raw JSON line → typed nested row + derived columns,
   * with a dead-letter split. Mirrors the semantics of the reference's
@@ -12,12 +13,15 @@ import org.apache.spark.sql.types._
   *
   *  - int64s arrive both quoted and unquoted (the protobuf-JSON convention —
   *    see the reference fixture transactions.txt): parse with a string-leaf
-  *    image of the schema, then cast leaf-by-leaf (`castToSchema`), which
-  *    accepts both forms exactly as BigQuery ingest does.
+  *    image of the schema, then cast it to the payload schema in one
+  *    Catalyst node ([[graft.expressions.CastToSchema]]: Spark's own TRY
+  *    cast per leaf), which accepts both forms exactly as BigQuery ingest
+  *    does.
   *  - unknown fields (sigMap, exchangeRate, generateRecord, …) are silently
   *    dropped (`ignoreUnknownValues` parity, PubSubToBigQueryPipeline.java:46)
   *    — from_json keeps only schema fields.
-  *  - BYTES fields are base64 → `unbase64` to BinaryType.
+  *  - BYTES fields are base64 → Spark's `UnBase64` to BinaryType; a value
+  *    the decoder rejects is null, like a malformed numeric leaf.
   *  - derived: consensusTimestampTruncated = µs-floor of the ns long
   *    (TransactionJsonToTableRow.java:57-58); day = its DATE (the write
   *    partition column); dedupe flag = null.
@@ -25,7 +29,10 @@ import org.apache.spark.sql.types._
   *    shape), never dropped, with the failure CAUSE distinguished the way the
   *    reference surfaces per-row insert errors (BigQueryErrorsSink.java:67-90
   *    carries BigQuery's reason/message pairs): malformed JSON vs missing
-  *    required key vs key cast failure.
+  *    required key vs key cast failure. The same classification and
+  *    message build both the standalone dead-letter branch (`errorRows`) and
+  *    the per-row dead letter the ingest write pass captures
+  *    (`deadLetterOrNull`), so the taxonomy lives in one place.
   */
 object TransactionTransform {
 
@@ -36,23 +43,6 @@ object TransactionTransform {
       StructType(fields.map(f => f.copy(dataType = stringified(f.dataType))))
     case ArrayType(elem, n) => ArrayType(stringified(elem), n)
     case _ => StringType
-  }
-
-  /** Recursive cast from the stringified parse to the target schema. Null
-    * structs stay null (a bare `struct(children)` would resurrect them as
-    * structs-of-nulls). Leaf casts are `try_cast`: under ANSI mode (Spark 4
-    * default) a plain cast THROWS on a malformed numeric, and one bad field
-    * in one row must dead-letter that row (BigQuery insert-error parity),
-    * never kill the batch. The required key field is validated explicitly
-    * in the ok-predicate; other malformed leaves null out, the lenient
-    * half of `ignoreUnknownValues` ingest. */
-  def castToSchema(c: Column, dt: DataType): Column = dt match {
-    case StructType(fields) =>
-      when(c.isNull, lit(null).cast(dt)).otherwise(
-        struct(fields.map(f => castToSchema(c.getField(f.name), f.dataType).as(f.name)): _*))
-    case ArrayType(elem, _) => transform(c, x => castToSchema(x, elem))
-    case BinaryType => unbase64(c)
-    case _ => c.try_cast(dt)
   }
 
   private val parsedSchema: StructType =
@@ -80,10 +70,18 @@ object TransactionTransform {
 
   private def okPredicate = !malformed && !missingKey && !keyCastFails
 
-  /** Typed branch of a parsed frame. */
+  /** Typed branch of a parsed frame. The cast is ONE expression
+    * ([[graft.expressions.CastToSchema]]) whose semantics are the lenient
+    * half of `ignoreUnknownValues` ingest: null structs stay null, arrays
+    * map element by element, and every leaf is Spark's TRY cast (BYTES:
+    * base64 decode), so a malformed leaf is null — under ANSI mode (Spark 4
+    * default) a plain cast THROWS, and one bad field in one row must never
+    * kill the batch. Only the required key is validated, in the
+    * ok-predicate: a row whose key fails the cast is dead-lettered
+    * (BigQuery insert-error parity). */
   def typedRows(parsed: DataFrame): DataFrame =
     parsed.filter(okPredicate)
-      .select(castToSchema(col("j").dropFields("_corrupt"), TransactionSchema.payload).as("t"))
+      .select(CastToSchema(col("j"), TransactionSchema.payload).as("t"))
       .select(col("t.*"))
       .withColumn("consensusTimestampTruncated",
         timestamp_micros(expr("consensusTimestamp div 1000")))
@@ -91,20 +89,27 @@ object TransactionTransform {
       .withColumn("day", to_date(col("consensusTimestampTruncated")))
       .select(TransactionSchema.table.fields.map(f => col(f.name).as(f.name, f.metadata)): _*)
 
-  /** Dead-letter branch of a parsed frame (errors-schema.json shape): the
-    * raw line plus a JSON list of {reason, message} mirroring the insert
-    * errors the reference records (BigQueryErrorsSink.java:67-90). */
-  def errorRows(parsed: DataFrame): DataFrame = {
+  /** A parsed row's dead letter (errors-schema.json shape): the raw line
+    * plus a JSON list of {reason, message} mirroring the insert errors the
+    * reference records (BigQueryErrorsSink.java:67-90). */
+  private def deadLetter: Seq[Column] = {
     val message =
       when(malformed, lit("Unable to parse transaction json"))
         .when(missingKey, lit("Missing required field: consensusTimestamp"))
         .otherwise(concat(lit("Invalid int64 for consensusTimestamp: "),
           col("j.consensusTimestamp")))
-    parsed.filter(!okPredicate)
-      .select(col("value").as("tableRow"),
-        to_json(array(struct(lit("invalid").as("reason"), message.as("message"))))
-          .as("errors"))
+    Seq(col("value").as("tableRow"),
+      to_json(array(struct(lit("invalid").as("reason"), message.as("message")))).as("errors"))
   }
+
+  /** Dead-letter branch of a parsed frame. */
+  def errorRows(parsed: DataFrame): DataFrame =
+    parsed.filter(!okPredicate).select(deadLetter: _*)
+
+  /** A parsed row's dead letter as one struct, null for an accepted row —
+    * the `errorRows` row of a rejected line, in the form a per-row
+    * aggregate can gather ([[graft.expressions.CollectBounded]]). */
+  private[hedera] def deadLetterOrNull: Column = when(!okPredicate, struct(deadLetter: _*))
 
   /** Raw lines (`value` string column) → (typed rows, error rows). */
   def parse(raw: DataFrame): (DataFrame, DataFrame) = {

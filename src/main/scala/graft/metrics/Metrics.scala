@@ -59,6 +59,12 @@ object Metrics {
     * retries; see CountByKey's scaladoc). */
   def ingestRowsDay(day: java.time.LocalDate): String = s"ingest.rows.day.$day"
 
+  /** Dirty ingest batches whose dead letters took the second parse
+    * (extension metric): more rejected rows than the write pass carries to
+    * the driver, or the `preDedupe` route (IngestPipeline.writeBatch). A
+    * rising count on the single-shuffle route means bursts of bad input. */
+  val DeadLetterReparses = "ingest.deadletter.reparses"
+
   val global = new MetricsRegistry
 
   /** Streaming ingest progress → metric registry (rows/sec, batch rows). */
